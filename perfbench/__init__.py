@@ -1,0 +1,1 @@
+"""Benchmark harness for the engine: see README.md in this directory."""
