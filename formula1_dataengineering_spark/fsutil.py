@@ -1,26 +1,22 @@
-"""Cluster-portable filesystem IO for index-layout metadata — the
-``_SUCCESS`` / ``_DELTA_*`` commit markers, ``_META.json`` documents,
-and table-directory walks the dedup/ANN index lifecycles depend on
-(VERDICT r11 item 3).
+"""Cluster-portable Hadoop FileSystem primitives — the IO the
+stored-layout protocol (``operators.store``) is written in.
 
-Earlier rounds did this IO with ``os.path`` / ``open`` / ``glob`` /
-``os.walk`` — correct in a single-box sandbox, but the whole point of
-the stored-index components is the 100 TB production shape, where the
-layout lives on HDFS/S3/ABFS and the driver cannot POSIX-stat it.
-Every helper here goes through the Hadoop FileSystem API instead
-(``Path.getFileSystem(hadoopConf)`` via the session JVM), so the SAME
-code path serves a bare local path (resolved against ``fs.defaultFS``,
-the tested default), an explicit ``file:/`` URI, or any ``hdfs:/`` /
-``s3a:/`` scheme the cluster's classpath provides. Marker and metadata
-files are tiny (bytes), so the per-call Py4J overhead is constant and
+Every helper goes through the Hadoop FileSystem API
+(``Path.getFileSystem(hadoopConf)`` via the session JVM) instead of
+``os.path`` / ``open`` / ``glob``, so the SAME code path serves a bare
+local path (resolved against ``fs.defaultFS``, the tested default),
+an explicit ``file:/`` URI, or any ``hdfs:/`` / ``s3a:/`` scheme the
+cluster's classpath provides — at the 100 TB production shape the
+driver cannot POSIX-stat the layout. Marker and metadata files are
+tiny (bytes), so the per-call Py4J overhead is constant and
 irrelevant next to the table scans they guard.
 
-Determinism/atomicity notes: Hadoop ``create(path, overwrite=True)``
+Atomicity notes: Hadoop ``create(path, overwrite=True)``
 truncates-then-writes (markers are zero-byte, so the visible state is
 exists/not-exists); ``rename`` is the layout-swap primitive (atomic on
-HDFS, best-effort elsewhere — the callers order operations so a crash
-leaves a marker-less, reader-refused layout, never a half-validated
-one).
+HDFS, best-effort elsewhere — ``operators.store`` orders operations
+so a crash leaves a marker-less, reader-refused layout, never a
+half-validated one).
 """
 
 from __future__ import annotations
@@ -158,17 +154,12 @@ def list_names(spark: "SparkSession", path: str) -> list[str]:
 
 
 def committed_delta_batches(spark: "SparkSession", path: str) -> list[str]:
-    """The committed delta batch ids of a delta-bearing stored layout
-    — discovered via their ``_DELTA_<batch_id>._SUCCESS`` commit
-    markers, the shared convention of the dedup / ANN / SCD2-feed
-    writers. ONE copy of the marker-name slicing (round-14 review:
-    five inline copies had appeared in one round); readers, verbs and
-    gates that honor the commit protocol all resolve batches here."""
-    return sorted(
-        name[len("_DELTA_") : -len("._SUCCESS")]
-        for name in list_names(spark, path)
-        if name.startswith("_DELTA_") and name.endswith("._SUCCESS")
-    )
+    """Forwards to :func:`operators.store.committed_delta_batches`,
+    which owns the marker names; kept here because
+    ``perfbench/workloads.py`` imports it from this module."""
+    from .operators.store import committed_delta_batches
+
+    return committed_delta_batches(spark, path)
 
 
 def du(spark: "SparkSession", path: str) -> tuple[int, int]:
@@ -186,7 +177,7 @@ def has_parquet(spark: "SparkSession", path: str) -> bool:
     """True if any ``*.parquet`` file exists under ``path``
     (recursive) — the empty-vs-populated table probe. False for a
     missing directory (callers distinguish missing-vs-empty BEFORE
-    calling; see ``read_dedup_index``)."""
+    calling; see ``operators.store.open_table``)."""
     fs, p = _fs_path(spark, path)
     if not fs.exists(p):
         return False
@@ -195,29 +186,3 @@ def has_parquet(spark: "SparkSession", path: str) -> bool:
         if it.next().getPath().getName().endswith(".parquet"):
             return True
     return False
-
-
-def require_layout_meta(
-    spark: "SparkSession", path: str, what: str, rebuild_hint: str
-) -> dict:
-    """The shared open-guard both index probers run (ADVICE r11: one
-    copy, not two drifting ones): validate the path, refuse a layout
-    with no ``_SUCCESS`` (half-written or missing) or no
-    ``_META.json`` (params unknown — probing with guessed params
-    silently returns wrong answers), and return the parsed metadata."""
-    import json
-    import os
-
-    validate_layout_path(path, what)
-    if not exists(spark, os.path.join(path, "_SUCCESS")):
-        raise ValueError(
-            f"{what} at {path!r} has no _SUCCESS marker "
-            "(half-written or missing index)"
-        )
-    meta_path = os.path.join(path, "_META.json")
-    if not exists(spark, meta_path):
-        raise ValueError(
-            f"{what} at {path!r} has no _META.json — layout "
-            f"params unknown; rebuild with {rebuild_hint}"
-        )
-    return json.loads(read_text(spark, meta_path))

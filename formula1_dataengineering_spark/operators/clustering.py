@@ -725,27 +725,17 @@ def write_ann_index(
     (m·k rows), ``cells/`` (coarse centroids for multiprobe), and
     ``_META.json`` recording the training params.
 
-    Staged rebuild (same protocol as ``write_dedup_index``, ADVICE
-    r11): the tables build under ``<path>/_staging`` while any
-    previous index stays readable; the commit phase (marker removal →
-    old-table delete → rename-in → metadata → marker) is a handful of
-    filesystem ops, all through the Hadoop FileSystem API (``fsutil``)
-    so the layout works on local paths and cluster filesystems alike.
-    A crash mid-build leaves the old index valid; a crash mid-commit
-    leaves a marker-less layout every reader refuses. Re-runs are
-    idempotent. Retraining-per-query ends here: the corpus is encoded
-    once per corpus state, queries pay only the LUT + pruned code
-    scan."""
-    import json
-    import os
-
+    Committed through :func:`operators.store.swap_base` (any previous
+    index stays readable through the build; the rebuild purges every
+    delta). Re-runs are idempotent. Retraining-per-query ends here:
+    the corpus is encoded once per corpus state, queries pay only the
+    LUT + pruned code scan."""
     from .. import fsutil
     from ..caching import cache_scope
+    from . import store
 
     spark = emb.sparkSession
     fsutil.validate_layout_path(path, "ANN index")
-    staging = os.path.join(path, "_staging")
-    fsutil.delete(spark, staging)
     # The writer owns its cache lifecycle: pq_encode caches the final
     # codebook lineage (reused by the writes below), and nothing
     # escapes this function lazily — an unscoped build would pin the
@@ -756,71 +746,38 @@ def write_ann_index(
         coded, codebook, cells = build_ann_index(
             emb, cell_col, m, k, iters, id_col, vec_col
         )
-        # repartition(cell) before partitionBy(cell): one file per cell
-        # instead of (tasks × cells) — probe reads open O(probed cells)
-        # files, not O(tasks × probed cells) (the dedup-index writer's
-        # small-files rule).
-        coded.repartition(cell_col).write.mode("overwrite").partitionBy(
-            cell_col
-        ).parquet(os.path.join(staging, "codes"))
-        codebook.write.mode("overwrite").parquet(
-            os.path.join(staging, "codebook")
-        )
-        cells.write.mode("overwrite").parquet(
-            os.path.join(staging, "cells")
-        )
-        meta_text = json.dumps(
+        store.stage_base(
+            spark,
+            path,
             {
-                "family": "ann_index",
-                "cell_col": cell_col,
-                "m": m,
-                "k": k,
-                "iters": iters,
-                "vec_col": vec_col,
-                # Table schemas: an EMPTY corpus writes part-file-less
-                # dirs parquet cannot infer a schema from; the reader
-                # synthesizes empty frames from these instead (same
-                # bootstrap contract as the dedup index).
-                "codes_schema": coded.schema.jsonValue(),
-                "codebook_schema": codebook.schema.jsonValue(),
-                "cells_schema": cells.schema.jsonValue(),
-                # Trained-codebook row count: refresh_ann_index's
-                # empty-corpus guard reads THIS instead of scanning
-                # the codebook table on every ingest (r16 optimization
-                # pass; the codebook is cached here, so the count is
-                # one cheap job per base rebuild, amortized over every
-                # later refresh).
-                "codebook_rows": codebook.count(),
-            }
+                "codes": store.Table(coded, cell_col),
+                "codebook": store.Table(codebook),
+                "cells": store.Table(cells),
+            },
         )
-    # COMMIT phase — the only unreadable window, a few metadata ops.
-    # A base REBUILD supersedes every prior ingest delta (the dedup
-    # writer's rule): a surviving stale delta would union removed
-    # vectors back into a freshly corrected corpus's view.
-    fsutil.delete(spark, os.path.join(path, "_SUCCESS"))
-    for name in fsutil.list_names(spark, path):
-        # _compact/_COMPACT_MANIFEST.json: a crashed compaction's
-        # staged state — a surviving manifest would let the next
-        # compact_ann_index "resume" pre-rebuild partitions over the
-        # fresh base (round-13 review); _cow_staging/
-        # _COW_MANIFEST.json is the COW swap's equivalent
-        # (round-15 review).
-        if name.startswith(
-            ("codes_delta_", "_DELTA_", "_compact", "_cow_staging", "_MANIFEST_v")
-        ) or name in ("_COMPACT_MANIFEST.json", "_COW_MANIFEST.json"):
-            fsutil.delete(spark, os.path.join(path, name))
-    for name in ("codes", "codebook", "cells"):
-        fsutil.delete(spark, os.path.join(path, name))
-        fsutil.rename(
-            spark, os.path.join(staging, name), os.path.join(path, name)
-        )
-    fsutil.delete(spark, staging)
-    fsutil.write_text(spark, os.path.join(path, "_META.json"), meta_text)
-    # The swap replaces files under an already-listed path: drop the
-    # session's cached listing so a pre-rebuild reader cannot serve
-    # deleted part files.
-    spark.catalog.refreshByPath(path)
-    fsutil.touch(spark, os.path.join(path, "_SUCCESS"))
+        meta = {
+            "family": "ann_index",
+            "cell_col": cell_col,
+            "m": m,
+            "k": k,
+            "iters": iters,
+            "vec_col": vec_col,
+            # Table schemas: an EMPTY corpus writes part-file-less
+            # dirs parquet cannot infer a schema from; the reader
+            # synthesizes empty frames from these instead (same
+            # bootstrap contract as the dedup index).
+            "codes_schema": coded.schema.jsonValue(),
+            "codebook_schema": codebook.schema.jsonValue(),
+            "cells_schema": cells.schema.jsonValue(),
+            # Trained-codebook row count: refresh_ann_index's
+            # empty-corpus guard reads THIS instead of scanning the
+            # codebook table on every ingest (r16 optimization pass;
+            # the codebook is cached here, so the count is one cheap
+            # job per base rebuild, amortized over every later
+            # refresh).
+            "codebook_rows": codebook.count(),
+        }
+    store.swap_base(spark, path, ["codes", "codebook", "cells"], meta)
 
 
 def read_ann_index(
@@ -835,105 +792,36 @@ def read_ann_index(
     with the wrong m/k silently returns wrong neighbors, the same
     silent-miss class the dedup index metadata guards against).
 
-    ``codes`` unions any ``codes_delta_<batch_id>`` directories a
-    :func:`refresh_ann_index` ingest appended — discovered via their
-    commit markers (``_DELTA_<batch_id>._SUCCESS``, written only after
-    the delta landed), and each delta keeps the same cell partition
-    column, so probe-side pruning applies per scan.
-    ``include_deltas=False`` opens the BASE state only (the day-N−1
-    view a retried ingest must probe); ``exclude_deltas`` drops named
-    committed batches from the union (the view
-    :func:`refresh_ann_index`'s disjointness guard needs: a RETRY of
-    batch N must check its ids against base ∪ every-other-delta, not
-    against its own about-to-be-overwritten rows). The codebook and
-    cell centroids are base-trained and never change between rebuilds
-    — see :func:`refresh_ann_index` for the recall-drift contract.
+    ``codes`` unions every committed ``codes_delta_<batch_id>``
+    directory a :func:`refresh_ann_index` ingest appended; each delta
+    keeps the same cell partition column, so probe-side pruning
+    applies per scan. ``include_deltas=False`` opens the BASE state
+    only (the day-N−1 view a retried ingest must probe);
+    ``exclude_deltas`` drops named committed batches from the union
+    (the view :func:`refresh_ann_index`'s disjointness guard needs: a
+    RETRY of batch N must check its ids against base ∪
+    every-other-delta, not against its own about-to-be-overwritten
+    rows). The codebook and cell centroids are base-trained and never
+    change between rebuilds — see :func:`refresh_ann_index` for the
+    recall-drift contract.
 
-    Missing-vs-empty (ADVICE r11): a table directory that does not
-    exist under a marker-bearing layout is CORRUPTION — the writer
-    always creates all three directories — and raises, instead of
-    synthesizing an empty frame that would return zero neighbors with
-    no error; the schema-synthesized empty frame is reserved for
-    directories that exist but hold no part files (an empty corpus at
-    write time)."""
-    import os
+    A missing table directory raises (a pre-round-12 layout without
+    ``cells/`` included) instead of returning zero neighbors with no
+    error — :func:`operators.store.open_table`'s missing-vs-empty
+    rule."""
+    from . import store
 
-    from .. import fsutil
-
-    meta = fsutil.require_layout_meta(
-        spark, path, "ANN index", "write_ann_index"
-    )
-    from . import snapshot
-
-    snap = snapshot.read_snapshot(spark, path)
-
-    committed = sorted(
-        name[len("_DELTA_") : -len("._SUCCESS")]
-        for name in fsutil.list_names(spark, path)
-        if name.startswith("_DELTA_") and name.endswith("._SUCCESS")
-    )
-
-    def _open_dir(d: str, schema_key: str, base: str):
-        if not fsutil.is_dir(spark, d):
-            raise ValueError(
-                f"ANN index at {path!r} is corrupt: {base!r} is "
-                "missing although _SUCCESS is present — the writer "
-                "always creates the table directory, so this is a "
-                "partial delete (or a pre-round-12 layout without "
-                "cells/), not an empty corpus; rebuild with "
-                "write_ann_index"
-            )
-        if fsutil.has_parquet(spark, d):
-            # Recorded schema (when the writer persisted one) skips
-            # Parquet schema inference — one footer-reading driver
-            # job per directory per open; measured ~0.3-0.5 s of the
-            # layout-open latency at sf0.1 (r16 optimization pass).
-            recorded = meta.get(schema_key)
-            stype = None
-            if recorded is not None:
-                from pyspark.sql.types import StructType
-
-                stype = StructType.fromJson(recorded)
-            df = snapshot.snapshot_dir_read(
-                spark, path, os.path.relpath(d, path), snap, schema=stype
-            )
-            if df is not None:
-                return df
-        # Part-file-less table (empty corpus at write time) or a
-        # snapshot that leaves no live rows here: parquet cannot
-        # infer a schema — synthesize the empty frame from the
-        # schema the writer recorded (bootstrap contract).
-        schema = meta.get(schema_key)
-        if schema is None:
-            raise ValueError(
-                f"ANN index at {path!r}: {base} holds no rows and its "
-                "_META.json predates recorded schemas — rebuild with "
-                "write_ann_index"
-            )
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame([], StructType.fromJson(schema))
-
-    def _open(base: str, schema_key: str):
-        return _open_dir(os.path.join(path, base), schema_key, base)
-
-    codes = _open("codes", "codes_schema")
-    if include_deltas:
-        for bid in committed:
-            if bid in exclude_deltas:
-                continue
-            codes = codes.unionByName(
-                _open_dir(
-                    os.path.join(path, f"codes_delta_{bid}"),
-                    "codes_schema",
-                    f"codes_delta_{bid}",
-                )
-            )
+    layout = store.open_layout(spark, path, "ANN index", "write_ann_index")
+    deltas = [
+        store.delta_dir("codes", b)
+        for b in (layout.batches if include_deltas else [])
+        if b not in exclude_deltas
+    ]
     return (
-        codes,
-        _open("codebook", "codebook_schema"),
-        _open("cells", "cells_schema"),
-        meta,
+        store.open_table(spark, layout, ["codes"] + deltas, "codes_schema"),
+        store.open_table(spark, layout, ["codebook"], "codebook_schema"),
+        store.open_table(spark, layout, ["cells"], "cells_schema"),
+        layout.meta,
     )
 
 
@@ -962,12 +850,10 @@ def refresh_ann_index(
     Re-train by rebuilding (:func:`write_ann_index`), which purges all
     deltas.
 
-    Protocol mirrors :func:`refresh_dedup_index`: idempotent per
-    (path, batch_id) (overwrite); the ``_DELTA_<batch_id>._SUCCESS``
-    commit marker is removed before the write and recreated only after
-    the delta landed, so readers never see a half-written batch;
-    refuses a marker-less base, a metadata-less (pre-v2) layout, and a
-    batch_id that could escape the layout or dodge marker discovery.
+    Committed through :func:`operators.store.commit_delta` like the
+    dedup refresh: idempotent per (path, batch_id); refuses a
+    marker-less base, a metadata-less (pre-v2) layout, and a batch_id
+    that could escape the layout or dodge marker discovery.
 
     INSERT-ONLY semantics (ADVICE r12): the append is NOT an upsert.
     A batch id already present in base ∪ committed deltas would leave
@@ -979,28 +865,21 @@ def refresh_ann_index(
     pass over the codes' ``sub_id = 0`` rows — O(index ids), the
     price of the guarantee) and raises on any intersection; the view
     checked excludes THIS batch_id's own prior delta, so the
-    (path, batch_id) retry contract is unaffected. Callers that
-    guarantee disjointness upstream (e.g. a monotonic id allocator)
-    may pass ``check_disjoint=False`` to skip the pass."""
-    import os
-    import re
-
-    from .. import fsutil
-
-    if not re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._-]*", batch_id):
-        raise ValueError(
-            f"refresh_ann_index: batch_id {batch_id!r} must match "
-            "[A-Za-z0-9][A-Za-z0-9._-]* — path separators or glob "
-            "metacharacters would escape the index layout or make the "
-            "delta undiscoverable by the reader"
-        )
+    (path, batch_id) retry contract is unaffected. The check runs
+    side by side with the staged delta write (guide §2.6) and its
+    verdict is read before the commit, so a rejected retry of a
+    committed batch leaves that batch untouched (ADVICE r16 high).
+    Callers that guarantee disjointness upstream (e.g. a monotonic id
+    allocator) may pass ``check_disjoint=False`` to skip the pass."""
+    from . import store
     from .cow import resume_pending_cow
 
+    store.check_batch_id("refresh_ann_index", batch_id)
     spark = new_vectors.sparkSession
     # Complete a pending COW (retraction) commit before writing — see
     # refresh_scd2_feed (round-15 review).
     resume_pending_cow(spark, path)
-    meta = fsutil.require_layout_meta(
+    meta = store.require_layout_meta(
         spark, path, "ANN index", "write_ann_index"
     )
     if meta.get("vec_col") != vec_col:
@@ -1043,25 +922,10 @@ def refresh_ann_index(
         new_vectors, cells, cell_col=cell_col, id_col=id_col,
         vec_col=vec_col,
     )
-    delta = coded.join(celled, id_col)
-    commit_marker = os.path.join(path, f"_DELTA_{batch_id}._SUCCESS")
-    delta_dir = os.path.join(path, f"codes_delta_{batch_id}")
-    # Hidden STAGING dir (r17, ADVICE r16 high): the r16 overlap
-    # deleted the commit marker and overwrote the delta directory
-    # BEFORE the clash verdict arrived, so a rejected retry of a
-    # previously COMMITTED batch destroyed that batch's data. The
-    # overlap stays (guide §2.6 — the disjointness scan and the delta
-    # write are independent jobs), but the write now lands in
-    # ``.spark-staging-delta_<batch_id>`` — invisible to readers
-    # (dot-prefixed), reclaimed by vacuum's class-4 sweep if a crash
-    # strands it — and NOTHING committed is touched until the clash
-    # verdict passes; only then marker-delete → dir swap → marker.
-    staging_dir = os.path.join(path, f".spark-staging-delta_{batch_id}")
-    clash_pool = None
-    clash_future = None
-    if check_disjoint:
-        from concurrent.futures import ThreadPoolExecutor
+    tables = {"codes": store.Table(coded.join(celled, id_col), cell_col)}
+    clashing: list = []
 
+    def _check_disjoint() -> None:
         clash = (
             existing.where(F.col("sub_id") == 0)
             .select(id_col)
@@ -1071,21 +935,14 @@ def refresh_ann_index(
                 "left_semi",
             )
         )
-        clash_pool = ThreadPoolExecutor(max_workers=1)
-        clash_future = clash_pool.submit(
-            lambda: [r[0] for r in clash.limit(5).collect()]
-        )
-    try:
-        # Same one-file-per-cell discipline as the base writer.
-        delta.repartition(cell_col).write.mode("overwrite").partitionBy(
-            cell_col
-        ).parquet(staging_dir)
-        clashing = clash_future.result() if clash_future is not None else []
-    finally:
-        if clash_pool is not None:
-            clash_pool.shutdown(wait=False)
+        clashing.extend(r[0] for r in clash.limit(5).collect())
+
+    store.run_concurrently(
+        [lambda: store.stage_delta(spark, path, batch_id, tables)]
+        + ([_check_disjoint] if check_disjoint else [])
+    )
     if clashing:
-        fsutil.delete(spark, staging_dir)
+        store.discard_delta(spark, path, batch_id)
         raise ValueError(
             f"refresh_ann_index: batch {batch_id!r} contains ids "
             f"already present in the index at {path!r} (e.g. "
@@ -1097,17 +954,7 @@ def refresh_ann_index(
             "check_disjoint=False if disjointness is guaranteed "
             "upstream); the committed index state is untouched"
         )
-    # Verdict passed — swap the staged delta in. Marker first: from
-    # here to the final touch the delta is reader-invisible (the
-    # crash window the protocol already tolerates; a retry re-stages).
-    fsutil.delete(spark, commit_marker)
-    fsutil.delete(spark, delta_dir)
-    fsutil.rename(spark, staging_dir, delta_dir)
-    # An idempotent re-run replaced this batch's delta files: drop
-    # the cached listing so pre-refresh readers re-list, not 404.
-    spark.catalog.refreshByPath(path)
-    # Commit marker LAST: the reader only unions a fully landed delta.
-    fsutil.touch(spark, commit_marker)
+    store.commit_delta(spark, path, batch_id, list(tables))
 
 
 def ivf_pq_topk_from_index(

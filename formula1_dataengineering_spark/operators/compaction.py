@@ -16,7 +16,8 @@ the base is exactly ``base[touched partitions] ∪ deltas`` rewritten
 per partition. Untouched base partitions are never read and never
 written — their part files stay byte-identical (tests pin this).
 
-Protocol (shared engine, :func:`_compact_layout`):
+Protocol (shared engine, :func:`_compact_layout`; names and the
+layout open are ``operators.store``'s):
 
 1. STAGE (layout stays fully readable, ``_SUCCESS`` intact): per
    table, the committed deltas' rows are unioned, their touched
@@ -45,10 +46,6 @@ exactly the batches being folded so an unrelated delta landed before
 the crash survives. This is the recovery the COW refresher only
 approximates: compaction never needs a rebuild to recover.
 
-All filesystem IO goes through the Hadoop FileSystem API
-(``fsutil``), so the same lifecycle serves a local path, a ``file:/``
-URI, or a cluster filesystem.
-
 Concurrency contract (round-14, per ADVICE r13): compaction assumes a
 SINGLE MAINTAINER — one process runs ``compact_*`` / ``write_*`` /
 ``vacuum`` on a layout at a time, the same assumption the COW
@@ -68,16 +65,14 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql import SparkSession
 
 from .. import fsutil
-
-_MANIFEST = "_COMPACT_MANIFEST.json"
-_STAGING = "_compact"
+from . import store
+from .lease import maintainer_verb
 
 
 class _TableSpec(NamedTuple):
@@ -95,48 +90,20 @@ def _is_partition_dir(name: str) -> bool:
     return "=" in name
 
 
-def _open_base(
-    spark: SparkSession, path: str, spec: _TableSpec, meta: dict, what: str
-) -> DataFrame:
-    from . import snapshot
-
-    d = os.path.join(path, spec.table)
-    if not fsutil.is_dir(spark, d):
-        raise ValueError(
-            f"{what} at {path!r} is corrupt: {spec.table!r} is missing "
-            "although the layout's _SUCCESS marker exists — rebuild it"
-        )
-    if fsutil.has_parquet(spark, d):
-        # Snapshot-aware (round 16): the fold must merge against the
-        # CURRENT rows, which a COW erasure may own via version dirs.
-        df = snapshot.snapshot_dir_read(
-            spark, path, spec.table, snapshot.read_snapshot(spark, path)
-        )
-        if df is not None:
-            return df
-    schema = meta.get(spec.schema_key)
-    if schema is None:
-        raise ValueError(
-            f"{what} at {path!r}: {spec.table} holds no rows and its "
-            "_META.json predates recorded schemas — rebuild it"
-        )
-    return spark.createDataFrame([], StructType.fromJson(schema))
-
-
 def _commit(spark: SparkSession, path: str, manifest: dict) -> None:
     """The metadata-only commit/resume phase: swap staged partition
     directories in, drop the folded deltas, restore the marker. Every
     step is idempotent, so a crashed commit re-runs to completion."""
     from . import snapshot
 
-    fsutil.delete(spark, os.path.join(path, "_SUCCESS"))
+    fsutil.delete(spark, os.path.join(path, store.SUCCESS))
     # Fold any COW snapshot state into plain base dirs first (round
     # 16): the swap below writes BASE partition dirs, so a live
     # version assignment would shadow the fold's output. Runs inside
     # this commit's marker-dropped window; state-driven idempotent,
     # so the resume path re-runs it safely.
     snapshot.collapse_snapshot(spark, path)
-    staging_root = os.path.join(path, _STAGING)
+    staging_root = os.path.join(path, store.COMPACT_STAGING)
     for table in manifest["tables"]:
         staged = os.path.join(staging_root, table)
         if not fsutil.is_dir(spark, staged):
@@ -153,9 +120,9 @@ def _commit(spark: SparkSession, path: str, manifest: dict) -> None:
     for bid in manifest["batch_ids"]:
         for table in manifest["tables"]:
             fsutil.delete(
-                spark, os.path.join(path, f"{table}_delta_{bid}")
+                spark, os.path.join(path, store.delta_dir(table, bid))
             )
-        fsutil.delete(spark, os.path.join(path, f"_DELTA_{bid}._SUCCESS"))
+        fsutil.delete(spark, os.path.join(path, store.delta_marker(bid)))
     fsutil.delete(spark, staging_root)
     spark.catalog.refreshByPath(path)
     # Marker BEFORE manifest delete: a crash between the two leaves a
@@ -164,31 +131,21 @@ def _commit(spark: SparkSession, path: str, manifest: dict) -> None:
     # The reverse order would leave a marker-less AND manifest-less
     # layout — bricked until a rebuild, contradicting the module's
     # resume contract (round-13 review).
-    fsutil.touch(spark, os.path.join(path, "_SUCCESS"))
-    fsutil.delete(spark, os.path.join(path, _MANIFEST))
+    fsutil.touch(spark, os.path.join(path, store.SUCCESS))
+    fsutil.delete(spark, os.path.join(path, store.COMPACT_MANIFEST))
 
 
-def _compact_layout(spark, path, *args, **kwargs):
-    """Shared engine entry — runs :func:`_compact_layout_impl` under
-    the maintainer lease (round 16, VERDICT r15 item 3): one live
-    maintainer per layout; a concurrent second is refused loudly, a
-    crashed one is stolen after its TTL."""
-    from .lease import maintenance_lease
-
-    with maintenance_lease(spark, path):
-        return _compact_layout_impl(spark, path, *args, **kwargs)
-
-
-def _compact_layout_impl(
+@maintainer_verb
+def _compact_layout(
     spark: SparkSession,
     path: str,
     what: str,
     writer_name: str,
-    specs: list[_TableSpec],
-    meta: dict | None = None,
+    specs_of: Callable[[store.Layout], list[_TableSpec]],
     on_staged=None,
 ) -> dict:
     """Shared engine — see the module docstring for the protocol.
+    ``specs_of`` maps the opened layout to the tables to fold.
     Returns a summary dict: ``n_deltas_folded``, ``batch_ids``,
     ``touched_partitions`` per table, and ``resumed`` (True when this
     call completed a crashed commit instead of folding new deltas).
@@ -207,11 +164,13 @@ def _compact_layout_impl(
     # name, and a later resume would rename pre-fold staged
     # partitions over them (round-15 review).
     resume_pending_cow(spark, path)
-    manifest_path = os.path.join(path, _MANIFEST)
+    manifest_path = os.path.join(path, store.COMPACT_MANIFEST)
     if fsutil.exists(spark, manifest_path):
         # A prior compaction crashed mid-commit (or between manifest
         # and commit): the manifest guarantees staging is complete,
-        # so finish the commit it describes. Nothing is re-merged.
+        # so finish the commit it describes. Nothing is re-merged —
+        # and no metadata is needed (the crash window it recovers has
+        # no _SUCCESS for the layout open to accept).
         manifest = json.loads(fsutil.read_text(spark, manifest_path))
         _commit(spark, path, manifest)
         return {
@@ -220,13 +179,9 @@ def _compact_layout_impl(
             "touched_partitions": manifest.get("touched_partitions", {}),
             "resumed": True,
         }
-    if meta is None:
-        meta = fsutil.require_layout_meta(spark, path, what, writer_name)
-    committed = sorted(
-        name[len("_DELTA_") : -len("._SUCCESS")]
-        for name in fsutil.list_names(spark, path)
-        if name.startswith("_DELTA_") and name.endswith("._SUCCESS")
-    )
+    layout = store.open_layout(spark, path, what, writer_name)
+    specs = specs_of(layout)
+    committed = layout.batches
     if not committed:
         return {
             "n_deltas_folded": 0,
@@ -234,44 +189,16 @@ def _compact_layout_impl(
             "touched_partitions": {s.table: [] for s in specs},
             "resumed": False,
         }
-    staging_root = os.path.join(path, _STAGING)
+    staging_root = os.path.join(path, store.COMPACT_STAGING)
     fsutil.delete(spark, staging_root)
     touched_values: dict[str, list] = {}
     for spec in specs:
-        delta_dirs = [
-            os.path.join(path, f"{spec.table}_delta_{bid}")
-            for bid in committed
-        ]
-        for d in delta_dirs:
-            if not fsutil.is_dir(spark, d):
-                raise ValueError(
-                    f"{what} at {path!r} is corrupt: "
-                    f"{os.path.basename(d)!r} is missing although its "
-                    "commit marker exists — rebuild the layout"
-                )
-        from . import snapshot as _snapshot
-
-        _snap = _snapshot.read_snapshot(spark, path)
-        frames = [
-            df
-            for d in delta_dirs
-            if fsutil.has_parquet(spark, d)
-            if (
-                df := _snapshot.snapshot_dir_read(
-                    spark, path, os.path.relpath(d, path), _snap
-                )
-            )
-            is not None
-        ]
-        if not frames:
-            # Every delta of this table was a zero-row day: nothing
-            # to merge; the commit still removes the empty dirs.
-            touched_values[spec.table] = []
-            continue
-        deltas = frames[0]
-        for f in frames[1:]:
-            deltas = deltas.unionByName(f)
-        part = F.col(spec.partition_col)
+        deltas = store.open_table(
+            spark,
+            layout,
+            [store.delta_dir(spec.table, b) for b in committed],
+            spec.schema_key,
+        )
         # Bounded driver-side materialization: distinct PARTITION
         # values of the deltas only (≤ n_shards / #cells rows).
         touched = [
@@ -281,23 +208,20 @@ def _compact_layout_impl(
         touched_values[spec.table] = sorted(
             touched, key=lambda v: (v is None, v)
         )
-        non_null = [v for v in touched if v is not None]
-        cond = part.isin(non_null) if non_null else F.lit(False)
-        if len(non_null) != len(touched):
-            # isin() never matches NULL (three-valued logic): include
-            # the base's default partition explicitly or its rows
-            # would be dropped by the swap of that partition.
-            cond = cond | part.isNull()
-        base = _open_base(spark, path, spec, meta, what)
-        merged = base.where(cond).unionByName(deltas)
-        # The base writer's layout discipline: one file per partition
-        # (repartition before partitionBy), writer-declared sort.
-        merged = merged.repartition(spec.partition_col)
-        if spec.sort_cols:
-            merged = merged.sortWithinPartitions(*spec.sort_cols)
-        merged.write.mode("overwrite").partitionBy(
-            spec.partition_col
-        ).parquet(os.path.join(staging_root, spec.table))
+        if not touched:
+            # Every delta of this table was a zero-row day: nothing
+            # to merge; the commit still removes the empty dirs.
+            continue
+        # The fold merges against the CURRENT rows, which a COW
+        # erasure may own via version dirs (round 16).
+        base = store.open_table(spark, layout, [spec.table], spec.schema_key)
+        merged = base.where(
+            store.partition_filter(spec.partition_col, touched)
+        ).unionByName(deltas)
+        store.write_table(
+            store.Table(merged, spec.partition_col, spec.sort_cols),
+            os.path.join(staging_root, spec.table),
+        )
     manifest = {
         "batch_ids": committed,
         "tables": [s.table for s in specs],
@@ -334,12 +258,24 @@ def compact_dedup_index(
         path,
         "dedup index",
         "write_dedup_index",
-        [
+        lambda layout: [
             _TableSpec("content_hashes", "shard", (), "hashes_schema"),
             _TableSpec("band_rows", "shard", (), "bands_schema"),
         ],
         on_staged=on_staged,
     )
+
+
+def _ann_specs(layout: store.Layout) -> list[_TableSpec]:
+    cell_col = layout.meta.get("cell_col")
+    if not cell_col:
+        raise ValueError(
+            f"ANN index at {layout.path!r}: _META.json records no "
+            "cell_col — compacting with a guessed partition column "
+            "would fold codes into the wrong directories; rebuild "
+            "with write_ann_index"
+        )
+    return [_TableSpec("codes", cell_col, (), "codes_schema")]
 
 
 def compact_ann_index(
@@ -352,32 +288,8 @@ def compact_ann_index(
     maintenance of the code layout, not retraining, so it does NOT
     reset ``ann_delta_recall``'s drift accounting — see
     ``write_ann_index`` for the retrain path)."""
-    if fsutil.exists(spark, os.path.join(path, _MANIFEST)):
-        # Resume path: the commit operates on staged dir listings and
-        # manifest-recorded names only — no metadata needed (and the
-        # crash window it recovers has no _SUCCESS for
-        # require_layout_meta to accept).
-        return _compact_layout(
-            spark, path, "ANN index", "write_ann_index", []
-        )
-    meta = fsutil.require_layout_meta(
-        spark, path, "ANN index", "write_ann_index"
-    )
-    cell_col = meta.get("cell_col")
-    if not cell_col:
-        raise ValueError(
-            f"ANN index at {path!r}: _META.json records no cell_col — "
-            "compacting with a guessed partition column would fold "
-            "codes into the wrong directories; rebuild with "
-            "write_ann_index"
-        )
     return _compact_layout(
-        spark,
-        path,
-        "ANN index",
-        "write_ann_index",
-        [_TableSpec("codes", cell_col, (), "codes_schema")],
-        meta=meta,
+        spark, path, "ANN index", "write_ann_index", _ann_specs,
         on_staged=on_staged,
     )
 
@@ -392,26 +304,18 @@ def compact_scd2_feed(
     groups. The stored history layout needs no compaction twin: it is
     maintained copy-on-write (``scd2_refresh_in_place``) and never
     grows deltas."""
-    if fsutil.exists(spark, os.path.join(path, _MANIFEST)):
-        return _compact_layout(
-            spark, path, "scd2 feed layout", "write_scd2_feed", []
-        )
-    meta = fsutil.require_layout_meta(
-        spark, path, "scd2 feed layout", "write_scd2_feed"
-    )
     return _compact_layout(
         spark,
         path,
         "scd2 feed layout",
         "write_scd2_feed",
-        [
+        lambda layout: [
             _TableSpec(
                 "feed_rows",
                 "shard",
-                (meta["key_col"], meta["ts_col"]),
+                (layout.meta["key_col"], layout.meta["ts_col"]),
                 "feed_schema",
             )
         ],
-        meta=meta,
         on_staged=on_staged,
     )

@@ -22,13 +22,11 @@ deletion-family verbs the same protocol:
    deleted), plus the post-commit ``_META.json`` body when the verb
    updates metadata (deletion accounting). Its existence is the
    resume guarantee: everything after it is idempotent metadata ops.
-3. **COMMIT** — marker drops; per partition: swap = delete old dir +
-   rename staged in (skipped when the staged dir is already gone — a
-   prior crashed commit swapped it), drop = delete old dir (plain
-   re-runnable delete). Then metadata, staging-root sweep, marker,
-   manifest delete — the compaction ``_commit`` ordering, including
-   marker-BEFORE-manifest-delete so no crash window is both
-   marker-less and manifest-less.
+3. **COMMIT** — staged partitions rename into a hidden version
+   directory beside the live ones (skipped when the staged dir is
+   already gone — a prior crashed commit moved it), then the next
+   snapshot manifest is published (:mod:`operators.snapshot`). Readers
+   are never refused: ``_SUCCESS`` is not touched.
 
 Recovery from ANY crash: call :func:`resume_pending_cow` (every verb
 in the family does, first thing) — a manifest-less crash left only
@@ -53,13 +51,10 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import fsutil
 from . import snapshot
-
-COW_MANIFEST = "_COW_MANIFEST.json"
-COW_STAGING = "_cow_staging"
+from .store import COW_MANIFEST, COW_STAGING, META, SUCCESS, Table, write_table
 
 
 def partition_dir_name(partition_col: str, value) -> str:
@@ -78,21 +73,6 @@ def partition_dir_name(partition_col: str, value) -> str:
     return f"{partition_col}={value}"
 
 
-def partition_filter(partition_col: str, values: list) -> F.Column:
-    """Membership predicate over partition values with an explicit
-    NULL arm: ``isin()`` never matches NULL (three-valued logic), so
-    a NULL partition value — the ``__HIVE_DEFAULT_PARTITION__``
-    directory a null-key row lands in — needs its own branch or
-    null-partition rows silently escape the rewrite (the round-14
-    data-loss finding)."""
-    part = F.col(partition_col)
-    non_null = [v for v in values if v is not None]
-    cond = part.isin(non_null) if non_null else F.lit(False)
-    if len(non_null) != len(values):
-        cond = cond | part.isNull()
-    return cond
-
-
 def stage_partition_rewrite(
     spark: SparkSession,
     layout_path: str,
@@ -109,10 +89,7 @@ def stage_partition_rewrite(
     staged dir and land on the job's ``drop`` list."""
     rel = os.path.relpath(table_dir, layout_path)
     staged = os.path.join(layout_path, COW_STAGING, rel)
-    out = keep.repartition(partition_col)
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
-    out.write.mode("overwrite").partitionBy(partition_col).parquet(staged)
+    write_table(Table(keep, partition_col, sort_cols), staged)
     staged_names = {
         n for n in fsutil.list_names(spark, staged) if "=" in n
     }
@@ -155,7 +132,7 @@ def commit_cow(spark: SparkSession, path: str, manifest: dict) -> None:
     snap = manifest.get("snap")
     if snap is None:
         # Legacy in-place replay (round-15 manifests).
-        fsutil.delete(spark, os.path.join(path, "_SUCCESS"))
+        fsutil.delete(spark, os.path.join(path, SUCCESS))
         for job in manifest["jobs"]:
             d = os.path.join(path, job["dir"])
             staged = os.path.join(staging_root, job["dir"])
@@ -170,12 +147,12 @@ def commit_cow(spark: SparkSession, path: str, manifest: dict) -> None:
         if manifest.get("meta") is not None:
             fsutil.write_text(
                 spark,
-                os.path.join(path, "_META.json"),
+                os.path.join(path, META),
                 json.dumps(manifest["meta"]),
             )
         fsutil.delete(spark, staging_root)
         spark.catalog.refreshByPath(path)
-        fsutil.touch(spark, os.path.join(path, "_SUCCESS"))
+        fsutil.touch(spark, os.path.join(path, SUCCESS))
         fsutil.delete(spark, os.path.join(path, COW_MANIFEST))
         return
     version = int(snap["version"])
@@ -195,7 +172,7 @@ def commit_cow(spark: SparkSession, path: str, manifest: dict) -> None:
     if manifest.get("meta") is not None:
         fsutil.write_text(
             spark,
-            os.path.join(path, "_META.json"),
+            os.path.join(path, META),
             json.dumps(manifest["meta"]),
         )
     snapshot.publish_snapshot(spark, path, snap)  # THE commit point
@@ -240,7 +217,6 @@ __all__ = [
     "COW_STAGING",
     "commit_cow",
     "partition_dir_name",
-    "partition_filter",
     "resume_pending_cow",
     "run_cow_swap",
     "stage_partition_rewrite",

@@ -64,53 +64,48 @@ verb is idempotent and cheap.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsutil
+from . import store
 from .cow import (
-    COW_STAGING,
-    partition_filter,
     resume_pending_cow,
     run_cow_swap,
     stage_partition_rewrite,
 )
+from .lease import maintainer_verb
 
 
-def _open_meta(spark: SparkSession, path: str, what: str) -> dict:
-    """Marker-tolerant metadata open: deletes must be re-runnable
-    through their own crash window (marker dropped mid-commit), so
-    only ``_META.json`` is required here; external READERS keep
-    refusing marker-less layouts. A pending COW manifest is resumed
-    to completion FIRST — its commit may rewrite the metadata this
+def _open(
+    spark: SparkSession, path: str, what: str, writer: str
+) -> store.Layout:
+    """Marker-tolerant layout open. An erasure never drops
+    ``_SUCCESS`` itself (its commit publishes a snapshot version), but
+    another verb's crash window may have — the SCD2 in-place refresher,
+    a compaction fold, a base rebuild — and an erasure request must
+    still land there instead of waiting on that verb's recovery; so
+    only ``_META.json`` is required. External READERS keep refusing
+    marker-less layouts. A pending COW manifest is resumed to
+    completion FIRST — its commit may rewrite the metadata this
     returns."""
     fsutil.validate_layout_path(path, what)
     resume_pending_cow(spark, path)
-    meta_path = os.path.join(path, "_META.json")
-    if not fsutil.exists(spark, meta_path):
-        raise ValueError(
-            f"{what} at {path!r} has no _META.json — not a stored "
-            "layout this build wrote; nothing to delete from"
-        )
-    return json.loads(fsutil.read_text(spark, meta_path))
+    return store.open_layout(spark, path, what, writer, require_success=False)
 
 
-def _table_dirs(spark: SparkSession, path: str, table: str) -> list[str]:
-    """The base table directory + every COMMITTED delta's directory
-    for ``table`` (marker-discovered, the readers' rule)."""
-    return [os.path.join(path, table)] + [
-        os.path.join(path, f"{table}_delta_{bid}")
-        for bid in fsutil.committed_delta_batches(spark, path)
-    ]
+def _table_rels(layout: store.Layout, table: str) -> list[str]:
+    """The base table + every COMMITTED delta of ``table``."""
+    return [table] + [store.delta_dir(table, b) for b in layout.batches]
 
 
 def _stage_delete(
     spark: SparkSession,
-    path: str,
-    d: str,
+    layout: store.Layout,
+    rel: str,
+    schema_key: str,
     ids: DataFrame,
     id_col: str,
     partition_col: str,
@@ -125,23 +120,10 @@ def _stage_delete(
     key-sharded feed/history) — the scan then reads only those
     partitions; the per-directory refinement keeps the rewrite and
     the accounting exact."""
-    if not fsutil.has_parquet(spark, d):
-        return None, 0, 0
-    # Snapshot-aware current rows (round 16): a prior COW rewrite may
-    # own some partitions via version directories.
-    from . import snapshot
-
-    rows = snapshot.snapshot_dir_read(
-        spark,
-        path,
-        os.path.relpath(d, path),
-        snapshot.read_snapshot(spark, path),
-    )
-    if rows is None:
-        return None, 0, 0
+    rows = store.open_table(spark, layout, [rel], schema_key)
     bids = F.broadcast(ids.select(id_col).distinct())
     scope = (
-        rows.where(partition_filter(partition_col, touched_hint))
+        rows.where(store.partition_filter(partition_col, touched_hint))
         if touched_hint is not None
         else rows
     )
@@ -161,48 +143,44 @@ def _stage_delete(
     if not touched:
         return None, 0, 0
     n_del = int(sum(r[1] for r in per_part))
-    slice_ = rows.where(partition_filter(partition_col, touched))
+    slice_ = rows.where(store.partition_filter(partition_col, touched))
     keep = slice_.join(bids, id_col, "left_anti")
     job = stage_partition_rewrite(
-        spark, path, d, keep, partition_col, touched, sort_cols
+        spark,
+        layout.path,
+        os.path.join(layout.path, rel),
+        keep,
+        partition_col,
+        touched,
+        sort_cols,
     )
     return job, n_del, len(touched)
 
 
+@maintainer_verb
 def _run_delete(
     spark: SparkSession,
     path: str,
-    meta: dict,
-    jobs: list[tuple[str, str, DataFrame, str, str, tuple, list | None]],
+    layout: store.Layout,
+    jobs: list[tuple[str, str, str, DataFrame, str, str, tuple, list | None]],
 ) -> dict:
     """STAGE every job, then swap via one manifest-bracketed commit
     that also lands the cumulative deletion accounting in
-    ``_META.json``. Jobs are (table, dir, ids, id_col, partition_col,
-    sort_cols, touched_hint). A no-match delete touches nothing — not
-    even the marker. Runs under the maintainer lease (round 16): a
-    second concurrent maintainer is refused loudly mid-STAGE."""
-    from .lease import maintenance_lease
-
-    with maintenance_lease(spark, path):
-        return _run_delete_impl(spark, path, meta, jobs)
-
-
-def _run_delete_impl(
-    spark: SparkSession,
-    path: str,
-    meta: dict,
-    jobs: list[tuple[str, str, DataFrame, str, str, tuple, list | None]],
-) -> dict:
+    ``_META.json``. Jobs are (table, rel, schema_key, ids, id_col,
+    partition_col, sort_cols, touched_hint). A no-match delete
+    touches nothing — not even the marker. A second concurrent
+    maintainer is refused loudly mid-STAGE."""
     # Clear residue of a manifest-less crashed STAGE (dead by
     # protocol; vacuum would sweep it too).
-    fsutil.delete(spark, os.path.join(path, COW_STAGING))
+    fsutil.delete(spark, os.path.join(path, store.COW_STAGING))
     staged: list[dict] = []
     rows_deleted = 0
     partitions = 0
     per_table: dict[str, int] = {}
-    for table, d, ids, id_col, pcol, sort_cols, hint in jobs:
+    for table, rel, schema_key, ids, id_col, pcol, sort_cols, hint in jobs:
         job, n, p = _stage_delete(
-            spark, path, d, ids, id_col, pcol, sort_cols, hint
+            spark, layout, rel, schema_key, ids, id_col, pcol, sort_cols,
+            hint,
         )
         if job is None:
             continue
@@ -212,6 +190,7 @@ def _run_delete_impl(
         per_table[table] = per_table.get(table, 0) + n
     if not staged:
         return {"rows_deleted": 0, "partitions_rewritten": 0}
+    meta = layout.meta
     acc = dict(meta.get("rows_deleted", {}))
     for table, n in per_table.items():
         acc[table] = int(acc.get(table, 0)) + n
@@ -233,17 +212,21 @@ def delete_from_dedup_index(
     match against the retracted docs (the gate pins the flag flips).
     Returns ``{"rows_deleted", "partitions_rewritten"}`` summed over
     content_hashes + band_rows."""
-    meta = _open_meta(spark, path, "dedup index")
+    layout = _open(spark, path, "dedup index", "write_dedup_index")
     # Materialized once: every (table × directory) job re-executes the
     # ids plan 3-4 times (discovery, count, keep, stage) — for a
     # computed id set (the retraction gate's corpus-wide twin join)
     # that re-run would dominate the delete (round-14 review).
     doc_ids = doc_ids.select(id_col).distinct().localCheckpoint(eager=True)
-    jobs = []
-    for table in ("content_hashes", "band_rows"):
-        for d in _table_dirs(spark, path, table):
-            jobs.append((table, d, doc_ids, id_col, "shard", (), None))
-    return _run_delete(spark, path, meta, jobs)
+    jobs = [
+        (table, rel, schema_key, doc_ids, id_col, "shard", (), None)
+        for table, schema_key in (
+            ("content_hashes", "hashes_schema"),
+            ("band_rows", "bands_schema"),
+        )
+        for rel in _table_rels(layout, table)
+    ]
+    return _run_delete(spark, path, layout, jobs)
 
 
 def delete_from_ann_index(
@@ -257,8 +240,8 @@ def delete_from_ann_index(
     stay (training statistics, not per-row state); a deletion-heavy
     layout retrains through the maintenance loop's rebuild arm (its
     measured recall SEES deletions, unlike row counters)."""
-    meta = _open_meta(spark, path, "ANN index")
-    cell_col = meta.get("cell_col")
+    layout = _open(spark, path, "ANN index", "write_ann_index")
+    cell_col = layout.meta.get("cell_col")
     if not cell_col:
         raise ValueError(
             f"ANN index at {path!r}: _META.json records no cell_col — "
@@ -266,10 +249,10 @@ def delete_from_ann_index(
         )
     vec_ids = vec_ids.select(id_col).distinct().localCheckpoint(eager=True)
     jobs = [
-        ("codes", d, vec_ids, id_col, cell_col, (), None)
-        for d in _table_dirs(spark, path, "codes")
+        ("codes", rel, "codes_schema", vec_ids, id_col, cell_col, (), None)
+        for rel in _table_rels(layout, "codes")
     ]
-    return _run_delete(spark, path, meta, jobs)
+    return _run_delete(spark, path, layout, jobs)
 
 
 def _erasure_keys(
@@ -320,23 +303,25 @@ def delete_scd2_feed_keys(
     pruning): a handful of erasure requests against a 100 TB feed
     reads only the shards those keys live in, in every directory
     generation."""
-    meta = _open_meta(spark, path, "scd2 feed layout")
+    layout = _open(spark, path, "scd2 feed layout", "write_scd2_feed")
+    meta = layout.meta
     key_col = meta["key_col"]
     keys = _erasure_keys(keys, key_col, "delete_scd2_feed_keys")
     touched = _hrw_touched_shards(keys, key_col, int(meta["n_shards"]))
     jobs = [
         (
             "feed_rows",
-            d,
+            rel,
+            "feed_schema",
             keys,
             key_col,
             "shard",
             (key_col, meta["ts_col"]),
             touched,
         )
-        for d in _table_dirs(spark, path, "feed_rows")
+        for rel in _table_rels(layout, "feed_rows")
     ]
-    return _run_delete(spark, path, meta, jobs)
+    return _run_delete(spark, path, layout, jobs)
 
 
 def delete_scd2_history_keys(
@@ -355,14 +340,18 @@ def delete_scd2_history_keys(
     HRW(key)); one ``history_rows`` directory — the history is
     maintained copy-on-write, so there are no deltas to reach.
     Returns ``{"rows_deleted", "partitions_rewritten"}``."""
-    meta = _open_meta(spark, path, "scd2 history layout")
+    layout = _open(
+        spark, path, "scd2 history layout", "write_scd2_history"
+    )
+    meta = layout.meta
     key_col = meta["key_col"]
     keys = _erasure_keys(keys, key_col, "delete_scd2_history_keys")
     touched = _hrw_touched_shards(keys, key_col, int(meta["n_shards"]))
     jobs = [
         (
             "history_rows",
-            os.path.join(path, "history_rows"),
+            "history_rows",
+            "history_schema",
             keys,
             key_col,
             "shard",
@@ -370,7 +359,7 @@ def delete_scd2_history_keys(
             touched,
         )
     ]
-    return _run_delete(spark, path, meta, jobs)
+    return _run_delete(spark, path, layout, jobs)
 
 
 __all__ = [

@@ -39,6 +39,7 @@ documented since round 11.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -185,11 +186,26 @@ class maintenance_lease:
         release_lease(self._spark, self._path)
 
 
+def maintainer_verb(verb):
+    """Decorate ``verb(spark, path, ...)`` to run under the maintainer
+    lease on ``path``: one live maintainer per layout; a concurrent
+    second is refused loudly, a crashed one is stolen after its TTL.
+    The wrapper keeps the verb's name, docstring and signature."""
+
+    @functools.wraps(verb)
+    def leased(spark: SparkSession, path: str, *args, **kwargs):
+        with maintenance_lease(spark, path):
+            return verb(spark, path, *args, **kwargs)
+
+    return leased
+
+
 __all__ = [
     "DEFAULT_TTL_S",
     "LEASE_FILE",
     "acquire_lease",
     "current_holder",
+    "maintainer_verb",
     "maintenance_lease",
     "read_lease",
     "release_lease",

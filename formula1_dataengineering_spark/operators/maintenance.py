@@ -41,23 +41,16 @@ part of the engine's training-data-pipeline surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import fsutil
+from . import store
 from .compaction import (
     compact_ann_index,
     compact_dedup_index,
     compact_scd2_feed,
 )
-
-
-#: Canonical marker discovery lives in fsutil (one copy — round-14
-#: review); re-exported here because the policy verbs' callers and
-#: gates reach it through the maintenance namespace.
-committed_delta_batches = fsutil.committed_delta_batches
+from .lease import maintainer_verb
 
 
 def referee_sample_pred(
@@ -187,18 +180,8 @@ def _recall_scalars(row_df: DataFrame) -> tuple[int, int, float]:
     )
 
 
-
-def maintain_ann_index(spark, path, *args, **kwargs):
-    """Public verb — runs :func:`_maintain_ann_index_impl` under the maintainer
-    lease (round 16, VERDICT r15 item 3): one live maintainer per
-    layout; a concurrent second is refused loudly, a crashed one is
-    stolen after its TTL. See the impl for the verb's own contract."""
-    from .lease import maintenance_lease
-
-    with maintenance_lease(spark, path):
-        return _maintain_ann_index_impl(spark, path, *args, **kwargs)
-
-def _maintain_ann_index_impl(
+@maintainer_verb
+def maintain_ann_index(
     spark: SparkSession,
     path: str,
     queries: DataFrame,
@@ -248,10 +231,10 @@ def _maintain_ann_index_impl(
     # _META.json deletion counters this tick acts on (round-15
     # review).
     resume_pending_cow(spark, path)
-    meta = fsutil.require_layout_meta(
+    meta = store.require_layout_meta(
         spark, path, "ANN index", "write_ann_index"
     )
-    n_deltas = len(committed_delta_batches(spark, path))
+    n_deltas = len(store.committed_delta_batches(spark, path))
     measure = lambda sample=referee_sample: _recall_scalars(  # noqa: E731
         ann_recall_at_k(
             spark,
@@ -293,44 +276,28 @@ def _maintain_ann_index_impl(
         "n_hits": n_hits,
         "recall_before": recall,
         "recall_after": recall_after,
-        "deltas_remaining": len(committed_delta_batches(spark, path)),
+        "deltas_remaining": len(store.committed_delta_batches(spark, path)),
     }
 
 
 def _delta_base_rows(
-    spark: SparkSession, path: str, table: str, batch_ids: list[str]
+    spark: SparkSession, layout: store.Layout, table: str, schema_key: str
 ) -> tuple[int, int]:
-    """(base_rows, delta_rows) of one layout table — columnar count
-    scans (parquet row-group metadata), not data reads. Snapshot-aware
-    (round 16): counts the CURRENT version's rows, so the drift
-    conditionals never price superseded partition copies."""
-    from .snapshot import read_snapshot, snapshot_dir_read
-
-    snap = read_snapshot(spark, path)
-
-    def _count(rel: str) -> int:
-        if not fsutil.has_parquet(spark, os.path.join(path, rel)):
-            return 0
-        df = snapshot_dir_read(spark, path, rel, snap)
-        return df.count() if df is not None else 0
-
-    base_rows = _count(table)
-    delta_rows = sum(_count(f"{table}_delta_{bid}") for bid in batch_ids)
+    """(base_rows, delta_rows) of one layout table at its current
+    snapshot — columnar count scans (parquet row-group metadata), not
+    data reads, and never pricing superseded partition copies."""
+    deltas = [store.delta_dir(table, b) for b in layout.batches]
+    base_rows = store.open_table(spark, layout, [table], schema_key).count()
+    delta_rows = (
+        store.open_table(spark, layout, deltas, schema_key).count()
+        if deltas
+        else 0
+    )
     return base_rows, delta_rows
 
 
-
-def maintain_dedup_index(spark, path, *args, **kwargs):
-    """Public verb — runs :func:`_maintain_dedup_index_impl` under the maintainer
-    lease (round 16, VERDICT r15 item 3): one live maintainer per
-    layout; a concurrent second is refused loudly, a crashed one is
-    stolen after its TTL. See the impl for the verb's own contract."""
-    from .lease import maintenance_lease
-
-    with maintenance_lease(spark, path):
-        return _maintain_dedup_index_impl(spark, path, *args, **kwargs)
-
-def _maintain_dedup_index_impl(
+@maintainer_verb
+def maintain_dedup_index(
     spark: SparkSession,
     path: str,
     corpus: DataFrame | None = None,
@@ -372,12 +339,12 @@ def _maintain_dedup_index_impl(
     from .cow import resume_pending_cow
 
     resume_pending_cow(spark, path)  # see maintain_ann_index
-    meta = fsutil.require_layout_meta(
+    layout = store.open_layout(
         spark, path, "dedup index", "write_dedup_index"
     )
-    batches = committed_delta_batches(spark, path)
+    meta, batches = layout.meta, layout.batches
     base_rows, delta_rows = _delta_base_rows(
-        spark, path, "content_hashes", batches
+        spark, layout, "content_hashes", "hashes_schema"
     )
     rows_deleted = int(
         meta.get("rows_deleted", {}).get("content_hashes", 0)
@@ -433,22 +400,12 @@ def _maintain_dedup_index_impl(
         "base_rows": base_rows,
         "delta_rows": delta_rows,
         "rows_deleted": rows_deleted,
-        "deltas_remaining": len(committed_delta_batches(spark, path)),
+        "deltas_remaining": len(store.committed_delta_batches(spark, path)),
     }
 
 
-
-def maintain_scd2_feed(spark, path, *args, **kwargs):
-    """Public verb — runs :func:`_maintain_scd2_feed_impl` under the maintainer
-    lease (round 16, VERDICT r15 item 3): one live maintainer per
-    layout; a concurrent second is refused loudly, a crashed one is
-    stolen after its TTL. See the impl for the verb's own contract."""
-    from .lease import maintenance_lease
-
-    with maintenance_lease(spark, path):
-        return _maintain_scd2_feed_impl(spark, path, *args, **kwargs)
-
-def _maintain_scd2_feed_impl(
+@maintainer_verb
+def maintain_scd2_feed(
     spark: SparkSession,
     path: str,
     rebuild_rows_per_shard: int | None = None,
@@ -485,13 +442,13 @@ def _maintain_scd2_feed_impl(
     from .scd import read_scd2_feed, write_scd2_feed
 
     resume_pending_cow(spark, path)  # see maintain_ann_index
-    meta = fsutil.require_layout_meta(
+    layout = store.open_layout(
         spark, path, "scd2 feed layout", "write_scd2_feed"
     )
+    meta, batches = layout.meta, layout.batches
     n_shards = int(meta["n_shards"])
-    batches = committed_delta_batches(spark, path)
     base_rows, delta_rows = _delta_base_rows(
-        spark, path, "feed_rows", batches
+        spark, layout, "feed_rows", "feed_schema"
     )
     total_rows = base_rows + delta_rows
     rows_deleted = int(meta.get("rows_deleted", {}).get("feed_rows", 0))
@@ -538,7 +495,7 @@ def _maintain_scd2_feed_impl(
         "rows_deleted": rows_deleted,
         "n_shards_before": n_shards,
         "n_shards_after": n_shards_after,
-        "deltas_remaining": len(committed_delta_batches(spark, path)),
+        "deltas_remaining": len(store.committed_delta_batches(spark, path)),
     }
 
 
@@ -568,18 +525,8 @@ def layout_family(meta: dict) -> str:
     )
 
 
-
-def maintain_layout(spark, path, *args, **kwargs):
-    """Public verb — runs :func:`_maintain_layout_impl` under the maintainer
-    lease (round 16, VERDICT r15 item 3): one live maintainer per
-    layout; a concurrent second is refused loudly, a crashed one is
-    stolen after its TTL. See the impl for the verb's own contract."""
-    from .lease import maintenance_lease
-
-    with maintenance_lease(spark, path):
-        return _maintain_layout_impl(spark, path, *args, **kwargs)
-
-def _maintain_layout_impl(
+@maintainer_verb
+def maintain_layout(
     spark: SparkSession,
     path: str,
     ann: dict | None = None,
@@ -618,7 +565,7 @@ def _maintain_layout_impl(
     # maintains solely via COW verbs (scd2_history, whose tick below
     # never calls a resuming verb) is the one it cannot recover.
     resume_pending_cow(spark, path)
-    meta = fsutil.require_layout_meta(
+    meta = store.require_layout_meta(
         spark, path, "stored layout", "a layout writer"
     )
     fam = layout_family(meta)
@@ -644,7 +591,6 @@ def _maintain_layout_impl(
 
 __all__ = [
     "ann_recall_at_k",
-    "committed_delta_batches",
     "layout_family",
     "maintain_ann_index",
     "maintain_dedup_index",

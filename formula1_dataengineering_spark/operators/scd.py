@@ -101,75 +101,39 @@ def write_scd2_feed(
     handful of shard directories, not the feed (see
     :func:`_touched_feed_slice` for why static, not DPP).
 
-    Layout contract mirrors ``write_dedup_index``: the writer's
-    (n_shards, salt, mode, column names, schema) persist in
-    ``_META.json``; the refresh validates its params against the
-    recorded values and fails loudly instead of silently scanning
-    the wrong shards. Staged rebuild: the table builds under
-    ``<path>/_staging`` while a previous layout stays readable; the
-    commit phase is a handful of filesystem ops through the Hadoop
-    FileSystem API (``fsutil``), so the same lifecycle serves a local
-    path, a ``file:/`` URI, or a cluster filesystem."""
-    import json
-    import os
-
+    The writer's (n_shards, salt, mode, column names, schema) persist
+    in ``_META.json``; the refresh validates its params against the
+    recorded values and fails loudly instead of silently scanning the
+    wrong shards. Committed through
+    :func:`operators.store.swap_base`. Rows are key-sorted within
+    each shard: a shuffled-random order writes ~1.5× the bytes and
+    leaves per-row-group key min/max useless for the pruned read."""
     from .. import fsutil
+    from . import store
 
     spark = feed.sparkSession
     fsutil.validate_layout_path(path, "scd2 feed layout")
-    staging = os.path.join(path, "_staging")
-    fsutil.delete(spark, staging)
     sharded = feed.select(key_col, ts_col, value_col).withColumn(
         "shard", _feed_shard(F.col(key_col), n_shards)
     )
-    # repartition("shard") before partitionBy("shard"): one file per
-    # shard instead of (tasks × shards) small files — the same layout
-    # health note as the index writers. sortWithinPartitions(key, ts):
-    # a shuffled-random row order writes ~1.5× the bytes (no RLE runs)
-    # and leaves per-row-group key min/max useless; key-sorted files
-    # keep each key's rows contiguous, so the pruned read decodes
-    # tight row groups.
-    sharded.repartition("shard").sortWithinPartitions(
-        key_col, ts_col
-    ).write.mode("overwrite").partitionBy("shard").parquet(
-        os.path.join(staging, "feed_rows")
-    )
-    meta_text = json.dumps(
-        {
-            "family": "scd2_feed",
-            "n_shards": n_shards,
-            "shard_salt": _FEED_SHARD_SALT,
-            "shard_mode": "fast",
-            "key_col": key_col,
-            "ts_col": ts_col,
-            "value_col": value_col,
-            # Schema recorded so an EMPTY feed (bootstrap) round-trips
-            # through part-file-less directories.
-            "feed_schema": sharded.schema.jsonValue(),
-        }
-    )
-    fsutil.delete(spark, os.path.join(path, "_SUCCESS"))
-    # A base REBUILD supersedes every prior daily append: a surviving
-    # stale delta would union removed changes back into a freshly
-    # corrected feed. Likewise a crashed compaction's or COW swap's
-    # staged state (_compact/_COMPACT_MANIFEST.json, _cow_staging/
-    # _COW_MANIFEST.json) — a surviving manifest would let the next
-    # compact_scd2_feed / deletion verb "resume" pre-rebuild
-    # partitions over the fresh base (round-13/round-15 reviews).
-    for name in fsutil.list_names(spark, path):
-        if name.startswith(
-            ("feed_rows", "_DELTA_", "_compact", "_cow_staging", "_MANIFEST_v")
-        ) or name in ("_COMPACT_MANIFEST.json", "_COW_MANIFEST.json"):
-            fsutil.delete(spark, os.path.join(path, name))
-    fsutil.rename(
+    store.stage_base(
         spark,
-        os.path.join(staging, "feed_rows"),
-        os.path.join(path, "feed_rows"),
+        path,
+        {"feed_rows": store.Table(sharded, "shard", (key_col, ts_col))},
     )
-    fsutil.delete(spark, staging)
-    fsutil.write_text(spark, os.path.join(path, "_META.json"), meta_text)
-    spark.catalog.refreshByPath(path)
-    fsutil.touch(spark, os.path.join(path, "_SUCCESS"))
+    meta = {
+        "family": "scd2_feed",
+        "n_shards": n_shards,
+        "shard_salt": _FEED_SHARD_SALT,
+        "shard_mode": "fast",
+        "key_col": key_col,
+        "ts_col": ts_col,
+        "value_col": value_col,
+        # Schema recorded so an EMPTY feed (bootstrap) round-trips
+        # through part-file-less directories.
+        "feed_schema": sharded.schema.jsonValue(),
+    }
+    store.swap_base(spark, path, ["feed_rows"], meta)
 
 
 def read_scd2_feed(
@@ -180,17 +144,12 @@ def read_scd2_feed(
 ) -> tuple[DataFrame, dict]:
     """Open a :func:`write_scd2_feed` layout: ``(feed, meta)`` where
     ``feed`` carries the ``shard`` partition column the pruned
-    refresh joins on. The frame unions any
-    ``feed_rows_delta_<batch_id>`` directories a
-    :func:`refresh_scd2_feed` daily append landed — discovered via
-    their ``_DELTA_<batch_id>._SUCCESS`` commit markers, each delta
-    keeping the shard partition column so static pruning applies per
-    scan; ``include_deltas=False`` opens the base state only.
-    Refuses a marker-less or metadata-less layout; a missing
-    ``feed_rows/`` directory under an intact marker is CORRUPTION
-    (raises), while a present-but-part-file-less directory is a
-    legitimately empty feed (schema-synthesized empty frame) — the
-    same missing-vs-empty contract as the index readers.
+    refresh joins on. The frame unions every committed
+    ``feed_rows_delta_<batch_id>`` directory a
+    :func:`refresh_scd2_feed` daily append landed, each keeping the
+    shard partition column so static pruning applies per scan;
+    ``include_deltas=False`` opens the base state only. Refusals and
+    missing-vs-empty are the store's, as for the index readers.
 
     ``snapshot_version`` (round 16) pins the read to a specific
     published snapshot manifest — time travel across COW deletion /
@@ -199,54 +158,16 @@ def read_scd2_feed(
     marker-based (the single-maintainer window sequences refreshes
     against erasures, so a pinned reader composes with at most the
     maintenance tick it raced)."""
-    import os
+    from . import store
 
-    from pyspark.sql.types import StructType
-
-    from .. import fsutil
-    from . import snapshot
-
-    meta = fsutil.require_layout_meta(
-        spark, path, "scd2 feed layout", "write_scd2_feed"
+    layout = store.open_layout(
+        spark, path, "scd2 feed layout", "write_scd2_feed", snapshot_version
     )
-    snap = snapshot.read_snapshot(spark, path, snapshot_version)
-
-    def _open(d: str, what: str) -> DataFrame:
-        if not fsutil.is_dir(spark, d):
-            raise ValueError(
-                f"scd2 feed layout at {path!r} is corrupt: {what} is "
-                "missing although the layout's _SUCCESS marker exists "
-                "— rebuild with write_scd2_feed"
-            )
-        if fsutil.has_parquet(spark, d):
-            # Supplying the recorded schema skips Parquet schema
-            # inference (a footer-reading driver job per directory per
-            # open) — r16 optimization pass, guide §6.
-            df = snapshot.snapshot_dir_read(
-                spark, path, os.path.relpath(d, path), snap,
-                schema=StructType.fromJson(meta["feed_schema"]),
-            )
-            if df is not None:
-                return df
-        return spark.createDataFrame(
-            [], StructType.fromJson(meta["feed_schema"])
-        )
-
-    feed = _open(os.path.join(path, "feed_rows"), "feed_rows/")
-    if include_deltas:
-        committed = sorted(
-            name[len("_DELTA_") : -len("._SUCCESS")]
-            for name in fsutil.list_names(spark, path)
-            if name.startswith("_DELTA_") and name.endswith("._SUCCESS")
-        )
-        for bid in committed:
-            feed = feed.unionByName(
-                _open(
-                    os.path.join(path, f"feed_rows_delta_{bid}"),
-                    f"feed_rows_delta_{bid}/",
-                )
-            )
-    return feed, meta
+    rels = ["feed_rows"] + [
+        store.delta_dir("feed_rows", b)
+        for b in (layout.batches if include_deltas else [])
+    ]
+    return store.open_table(spark, layout, rels, "feed_schema"), layout.meta
 
 
 def refresh_scd2_feed(
@@ -256,32 +177,23 @@ def refresh_scd2_feed(
     — the step that closes the daily SCD2 cycle: tomorrow's refresh
     re-windows its touched keys from the FEED, so today's changes
     must land there or a key touched two days running silently loses
-    day one (the two-day cycle gate pins exactly that). Protocol is
-    the index-delta contract: ``feed_rows_delta_<batch_id>/`` sharded
-    with the layout's OWN metadata params, idempotent per
-    (path, batch_id), ``_DELTA_<batch_id>._SUCCESS`` marker written
-    last, O(batch) — the base feed is never read or rewritten."""
-    import os
-    import re
-
-    from .. import fsutil
-
-    if not re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._-]*", batch_id):
-        raise ValueError(
-            f"refresh_scd2_feed: batch_id {batch_id!r} must match "
-            "[A-Za-z0-9][A-Za-z0-9._-]* — path separators or glob "
-            "metacharacters would escape the layout or make the "
-            "delta undiscoverable by the reader"
-        )
+    day one (the two-day cycle gate pins exactly that).
+    ``feed_rows_delta_<batch_id>/`` is sharded with the layout's OWN
+    metadata params and committed through
+    :func:`operators.store.commit_delta` (idempotent per
+    (path, batch_id)); O(batch) — the base feed is never read or
+    rewritten."""
+    from . import store
     from .cow import resume_pending_cow
 
+    store.check_batch_id("refresh_scd2_feed", batch_id)
     spark = new_changes.sparkSession
     # A pending COW manifest (deletion swap crashed inside its
     # marker-intact windows) is completed before any delta write —
     # else a later resume could replay stale staged partitions over
     # this batch's own delta overwrite (round-15 review).
     resume_pending_cow(spark, path)
-    meta = fsutil.require_layout_meta(
+    meta = store.require_layout_meta(
         spark, path, "scd2 feed layout", "write_scd2_feed"
     )
     if (
@@ -297,20 +209,16 @@ def refresh_scd2_feed(
         )
     key_col = meta["key_col"]
     ts_col = meta["ts_col"]
-    value_col = meta["value_col"]
-    n_shards = int(meta["n_shards"])
-    commit_marker = os.path.join(path, f"_DELTA_{batch_id}._SUCCESS")
-    fsutil.delete(spark, commit_marker)
-    sharded = new_changes.select(key_col, ts_col, value_col).withColumn(
-        "shard", _feed_shard(F.col(key_col), n_shards)
+    sharded = new_changes.select(
+        key_col, ts_col, meta["value_col"]
+    ).withColumn("shard", _feed_shard(F.col(key_col), int(meta["n_shards"])))
+    store.stage_delta(
+        spark,
+        path,
+        batch_id,
+        {"feed_rows": store.Table(sharded, "shard", (key_col, ts_col))},
     )
-    sharded.repartition("shard").sortWithinPartitions(
-        key_col, ts_col
-    ).write.mode("overwrite").partitionBy("shard").parquet(
-        os.path.join(path, f"feed_rows_delta_{batch_id}")
-    )
-    spark.catalog.refreshByPath(path)
-    fsutil.touch(spark, commit_marker)
+    store.commit_delta(spark, path, batch_id, ["feed_rows"])
 
 
 def _touched_feed_slice(
@@ -427,73 +335,36 @@ def write_scd2_history(
     """Persist an SCD2 history table (the :func:`scd2_history` output
     shape) as the sharded layout :func:`scd2_refresh_in_place`
     maintains: ``history_rows/`` partitioned by ``shard`` = HRW(key),
-    same protocol as :func:`write_scd2_feed` (staged build,
-    ``_META.json`` params + schema, Hadoop FS lifecycle, one
-    key-sorted file per shard)."""
-    import json
-    import os
-
+    one key-sorted file per shard, committed like
+    :func:`write_scd2_feed`. This layout is the reason the store
+    stages ``_META.json`` and renames it in after the data: its
+    refresher opens it marker-less."""
     from .. import fsutil
+    from . import store
 
     spark = history.sparkSession
     fsutil.validate_layout_path(path, "scd2 history layout")
-    staging = os.path.join(path, "_staging")
-    fsutil.delete(spark, staging)
     sharded = history.withColumn(
         "shard", _feed_shard(F.col(key_col), n_shards)
     )
-    sharded.repartition("shard").sortWithinPartitions(
-        key_col, "effective_from_us"
-    ).write.mode("overwrite").partitionBy("shard").parquet(
-        os.path.join(staging, "history_rows")
-    )
-    meta_text = json.dumps(
+    store.stage_base(
+        spark,
+        path,
         {
-            "family": "scd2_history",
-            "n_shards": n_shards,
-            "shard_salt": _FEED_SHARD_SALT,
-            "shard_mode": "fast",
-            "key_col": key_col,
-            "history_schema": sharded.schema.jsonValue(),
-        }
+            "history_rows": store.Table(
+                sharded, "shard", (key_col, "effective_from_us")
+            )
+        },
     )
-    # Meta is STAGED and renamed in only after the data rename: this
-    # layout is the one the refresher may open MARKER-LESS (its crash
-    # recovery), so no crash point may leave new-params metadata
-    # beside old-params data or vice versa — e.g. a rebuild changing
-    # n_shards that dies between the data swap and a late meta write
-    # would hand the recovering refresher 4-sharded data under
-    # 16-shard metadata, and its dynamic overwrite would duplicate
-    # touched keys' rows (round-13 review). With the staged order,
-    # every crash window is either old-consistent, META-LESS (the
-    # refresher refuses; recovery = re-run the rebuild), or
-    # new-consistent.
-    fsutil.write_text(spark, os.path.join(staging, "_META.json"), meta_text)
-    fsutil.delete(spark, os.path.join(path, "_SUCCESS"))
-    fsutil.delete(spark, os.path.join(path, "_META.json"))
-    for name in fsutil.list_names(spark, path):
-        # _cow_staging/_COW_MANIFEST.json: a crashed deletion/expiry
-        # swap's state — the rebuild supersedes it; a surviving COW
-        # manifest would let the next deletion-family verb replay
-        # pre-rebuild staged shards over the fresh history
-        # (round-15 review).
-        if name.startswith(("history_rows", "_cow_staging", "_MANIFEST_v")) or (
-            name == "_COW_MANIFEST.json"
-        ):
-            fsutil.delete(spark, os.path.join(path, name))
-    fsutil.rename(
-        spark,
-        os.path.join(staging, "history_rows"),
-        os.path.join(path, "history_rows"),
-    )
-    fsutil.rename(
-        spark,
-        os.path.join(staging, "_META.json"),
-        os.path.join(path, "_META.json"),
-    )
-    fsutil.delete(spark, staging)
-    spark.catalog.refreshByPath(path)
-    fsutil.touch(spark, os.path.join(path, "_SUCCESS"))
+    meta = {
+        "family": "scd2_history",
+        "n_shards": n_shards,
+        "shard_salt": _FEED_SHARD_SALT,
+        "shard_mode": "fast",
+        "key_col": key_col,
+        "history_schema": sharded.schema.jsonValue(),
+    }
+    store.swap_base(spark, path, ["history_rows"], meta)
 
 
 def read_scd2_history(
@@ -515,38 +386,19 @@ def read_scd2_history(
     history (crash mid-COW) is refused here; recovery is re-running
     the same refresh, which opens the layout through the
     marker-tolerant :func:`_open_history_for_refresh`."""
-    import os
+    from . import store
 
-    from pyspark.sql.types import StructType
-
-    from .. import fsutil
-
-    meta = fsutil.require_layout_meta(
-        spark, path, "scd2 history layout", "write_scd2_history"
+    layout = store.open_layout(
+        spark,
+        path,
+        "scd2 history layout",
+        "write_scd2_history",
+        snapshot_version,
     )
-    from . import snapshot
-
-    snap = snapshot.read_snapshot(spark, path, snapshot_version)
-    d = os.path.join(path, "history_rows")
-    if not fsutil.is_dir(spark, d):
-        raise ValueError(
-            f"scd2 history layout at {path!r} is corrupt: "
-            "history_rows/ is missing although the layout's _SUCCESS "
-            "marker exists — rebuild with write_scd2_history"
-        )
-    hist = None
-    if fsutil.has_parquet(spark, d):
-        # Recorded schema supplied → no Parquet schema-inference job
-        # at open time (r16 optimization pass, guide §6).
-        hist = snapshot.snapshot_dir_read(
-            spark, path, "history_rows", snap,
-            schema=StructType.fromJson(meta["history_schema"]),
-        )
-    if hist is None:
-        hist = spark.createDataFrame(
-            [], StructType.fromJson(meta["history_schema"])
-        )
-    return hist, meta
+    hist = store.open_table(
+        spark, layout, ["history_rows"], "history_schema"
+    )
+    return hist, layout.meta
 
 
 def _open_history_for_refresh(
@@ -573,47 +425,23 @@ def _open_history_for_refresh(
     refresher is the one marker-tolerant WRITER outside the deletion
     family, and overwriting shards the manifest still names would let
     a later resume rename stale staged shards over the refreshed
-    data."""
-    import json
-    import os
-
-    from pyspark.sql.types import StructType
-
-    from .. import fsutil
+    data. The open is snapshot-aware (round 16): staging from it sees
+    the CURRENT rows, not base copies a COW commit superseded."""
+    from . import store
     from .cow import resume_pending_cow
 
     resume_pending_cow(spark, path)
-    meta_path = os.path.join(path, "_META.json")
-    if not fsutil.exists(spark, meta_path):
-        raise ValueError(
-            f"scd2 history layout at {path!r} has no _META.json — "
-            "not a write_scd2_history layout (or one from before the "
-            "metadata contract); rebuild with write_scd2_history"
-        )
-    meta = json.loads(fsutil.read_text(spark, meta_path))
-    d = os.path.join(path, "history_rows")
-    if not fsutil.is_dir(spark, d):
-        raise ValueError(
-            f"scd2 history layout at {path!r} is corrupt: "
-            "history_rows/ is missing — rebuild with "
-            "write_scd2_history"
-        )
-    # Snapshot-aware (round 16): a COW erasure/retention commit may
-    # own touched shards via version directories — the maintenance
-    # verbs staging from this open must see the CURRENT rows, not the
-    # superseded base copies.
-    from . import snapshot
-
-    hist = None
-    if fsutil.has_parquet(spark, d):
-        hist = snapshot.snapshot_dir_read(
-            spark, path, "history_rows", snapshot.read_snapshot(spark, path)
-        )
-    if hist is None:
-        hist = spark.createDataFrame(
-            [], StructType.fromJson(meta["history_schema"])
-        )
-    return hist, meta
+    layout = store.open_layout(
+        spark,
+        path,
+        "scd2 history layout",
+        "write_scd2_history",
+        require_success=False,
+    )
+    hist = store.open_table(
+        spark, layout, ["history_rows"], "history_schema"
+    )
+    return hist, layout.meta
 
 
 def scd2_refresh_in_place(
@@ -667,11 +495,14 @@ def scd2_refresh_in_place(
     anyway (:func:`scd2_history` excludes it) — filtering at entry
     keeps the touched/rebuilt/keeper sides consistent instead of
     letting a NULL shard leak into the dynamic overwrite."""
+    import os
+
     from pyspark.sql.functions import broadcast
 
     from .. import fsutil
     from . import snapshot
     from .cow import resume_pending_cow
+    from .store import SUCCESS
 
     spark = feed.sparkSession
     new_changes = new_changes.where(F.col(key_col).isNotNull())
@@ -681,11 +512,9 @@ def scd2_refresh_in_place(
     # assignment would shadow this refresh — fold the version state
     # into base first, inside this verb's own marker-dropped window
     # (collapse is state-driven idempotent; a crash re-runs it).
-    import os as _os
-
     resume_pending_cow(spark, path)
     if snapshot.current_version(spark, path) > 0:
-        fsutil.delete(spark, _os.path.join(path, "_SUCCESS"))
+        fsutil.delete(spark, os.path.join(path, SUCCESS))
         snapshot.collapse_snapshot(spark, path)
     hist, meta = _open_history_for_refresh(spark, path)
     if meta.get("key_col") != key_col:
@@ -749,16 +578,14 @@ def scd2_refresh_in_place(
         broadcast(touched), key_col, "left_anti"
     )
     out = keepers.unionByName(rebuilt)
-    import os
-
-    fsutil.delete(spark, os.path.join(path, "_SUCCESS"))
+    fsutil.delete(spark, os.path.join(path, SUCCESS))
     out.repartition("shard").sortWithinPartitions(
         key_col, "effective_from_us"
     ).write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("shard").parquet(os.path.join(path, "history_rows"))
     spark.catalog.refreshByPath(path)
-    fsutil.touch(spark, os.path.join(path, "_SUCCESS"))
+    fsutil.touch(spark, os.path.join(path, SUCCESS))
 
 
 def scd2_refresh(

@@ -58,21 +58,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsutil
+from .store import MANIFEST_PREFIX, partition_filter
 
-MANIFEST_PREFIX = "_MANIFEST_v"
 VERSION_DIR_PREFIX = "__v"
-_MANIFEST_RE = re.compile(r"^_MANIFEST_v(\d+)\.json$")
+_MANIFEST_RE = re.compile(rf"^{MANIFEST_PREFIX}(\d+)\.json$")
 _NULL_PART = "__HIVE_DEFAULT_PARTITION__"
+
+
+def versions_in(names) -> list[int]:
+    """Sorted snapshot versions among a layout root's child names."""
+    return sorted(
+        int(m.group(1)) for m in map(_MANIFEST_RE.match, names) if m
+    )
 
 
 def manifest_versions(spark: SparkSession, path: str) -> list[int]:
     """Sorted snapshot versions with a published manifest."""
-    out = []
-    for name in fsutil.list_names(spark, path):
-        m = _MANIFEST_RE.match(name)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    return versions_in(fsutil.list_names(spark, path))
 
 
 def current_version(spark: SparkSession, path: str) -> int:
@@ -92,17 +94,30 @@ def read_snapshot(
     current snapshot; an explicit version is time travel and raises
     if that manifest was vacuumed away. Version 0 is the implicit
     empty snapshot (plain directories)."""
+    return resolve_snapshot(
+        spark, path, manifest_versions(spark, path), version
+    )
+
+
+def resolve_snapshot(
+    spark: SparkSession,
+    path: str,
+    versions: list[int],
+    version: int | None = None,
+) -> dict:
+    """:func:`read_snapshot` against an already-listed ``versions``."""
+    current = versions[-1] if versions else 0
     if version is None:
-        version = current_version(spark, path)
+        version = current
     if version == 0:
         return {"version": 0, "dirs": {}}
-    mp = os.path.join(path, f"{MANIFEST_PREFIX}{version}.json")
-    if not fsutil.exists(spark, mp):
+    if version not in versions:
         raise ValueError(
             f"stored layout at {path!r} has no snapshot manifest "
             f"v{version} — vacuumed away or never published; current "
-            f"version is {current_version(spark, path)}"
+            f"version is {current}"
         )
+    mp = os.path.join(path, f"{MANIFEST_PREFIX}{version}.json")
     return json.loads(fsutil.read_text(spark, mp))
 
 
@@ -207,7 +222,7 @@ def snapshot_dir_read(
         shadowed_vals = [parse_partition_value(n) for n in shadowed_names]
         base = _read(d)
         if shadowed_vals:
-            cond = _membership(pcol, shadowed_vals)
+            cond = partition_filter(pcol, shadowed_vals)
             # coalesce: a NULL-partition row must KEEP when NULL is
             # not shadowed (three-valued ~isin would drop it).
             base = base.where(~F.coalesce(cond, F.lit(False)))
@@ -217,24 +232,13 @@ def snapshot_dir_read(
         by_tag.setdefault(int(tag), []).append(parse_partition_value(name))
     for tag in sorted(by_tag):
         vd = os.path.join(d, f"{VERSION_DIR_PREFIX}{tag}")
-        parts.append(_read(vd).where(_membership(pcol, by_tag[tag])))
+        parts.append(_read(vd).where(partition_filter(pcol, by_tag[tag])))
     if not parts:
         return None
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def _membership(pcol: str, values: list) -> F.Column:
-    """isin with an explicit NULL arm (cow.partition_filter's rule,
-    restated here to avoid a circular import)."""
-    part = F.col(pcol)
-    non_null = [v for v in values if v is not None]
-    cond = part.isin(non_null) if non_null else F.lit(False)
-    if len(non_null) != len(values):
-        cond = cond | part.isNull()
-    return cond
 
 
 def collapse_snapshot(spark: SparkSession, path: str) -> bool:
@@ -297,5 +301,7 @@ __all__ = [
     "publish_snapshot",
     "read_snapshot",
     "referenced_tags",
+    "resolve_snapshot",
     "snapshot_dir_read",
+    "versions_in",
 ]

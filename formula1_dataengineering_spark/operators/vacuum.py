@@ -49,31 +49,17 @@ from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import fsutil
-from . import snapshot
+from . import snapshot, store
 from .cow import (
-    COW_MANIFEST,
-    COW_STAGING,
-    partition_filter,
     resume_pending_cow,
     run_cow_swap,
     stage_partition_rewrite,
 )
-
-_MANIFEST = "_COMPACT_MANIFEST.json"
-
+from .lease import maintainer_verb
 
 
-def vacuum_layout(spark, path, *args, **kwargs):
-    """Public verb — runs :func:`_vacuum_layout_impl` under the maintainer
-    lease (round 16, VERDICT r15 item 3): one live maintainer per
-    layout; a concurrent second is refused loudly, a crashed one is
-    stolen after its TTL. See the impl for the verb's own contract."""
-    from .lease import maintenance_lease
-
-    with maintenance_lease(spark, path):
-        return _vacuum_layout_impl(spark, path, *args, **kwargs)
-
-def _vacuum_layout_impl(
+@maintainer_verb
+def vacuum_layout(
     spark: SparkSession, path: str, what: str = "stored layout"
 ) -> dict:
     """Sweep a delta-bearing stored layout's physical garbage. Only
@@ -111,18 +97,18 @@ def _vacuum_layout_impl(
     "staging_removed", "spark_staging_removed", "snapshots_retired",
     "version_dirs_removed", "pinned"}``."""
     fsutil.validate_layout_path(path, what)
-    if not fsutil.exists(spark, os.path.join(path, "_SUCCESS")):
+    names = fsutil.list_names(spark, path)
+    if store.SUCCESS not in names:
         raise ValueError(
             f"{what} at {path!r} has no _SUCCESS marker — a crashed "
             "or in-flight write; recover it (re-run the writer or "
             "resume the compaction) before vacuuming"
         )
-    committed = set(fsutil.committed_delta_batches(spark, path))
+    committed = set(store.batches_in(names))
     pins = {
-        "_compact": fsutil.exists(spark, os.path.join(path, _MANIFEST)),
-        COW_STAGING: fsutil.exists(spark, os.path.join(path, COW_MANIFEST)),
+        store.COMPACT_STAGING: store.COMPACT_MANIFEST in names,
+        store.COW_STAGING: store.COW_MANIFEST in names,
     }
-    names = fsutil.list_names(spark, path)
 
     def _spark_written(d: str) -> bool:
         # A directory belongs to the layout only if its DIRECT
@@ -134,7 +120,7 @@ def _vacuum_layout_impl(
         # A hidden child (.spark-staging residue INSIDE scratch) is
         # deliberately not evidence of ownership.
         return any(
-            c == "_SUCCESS" or c.endswith(".parquet") or "=" in c
+            c == store.SUCCESS or c.endswith(".parquet") or "=" in c
             for c in fsutil.list_names(spark, d)
             if not c.startswith(".")
         )
@@ -163,7 +149,7 @@ def _vacuum_layout_impl(
         return n, b
 
     for name in names:
-        if name == "_staging" or (
+        if name == store.STAGING or (
             name in pins and not pins[name]
         ):
             n, b = sweep(os.path.join(path, name))
@@ -211,15 +197,11 @@ def _vacuum_layout_impl(
     # dropped) — is reclaimable garbage. This is exactly "old
     # snapshots readable until vacuumed": time-travel reads work up
     # to this sweep, never after it.
-    versions = snapshot.manifest_versions(spark, path)
-    snap = (
-        snapshot.read_snapshot(spark, path, versions[-1])
-        if versions
-        else {"version": 0, "dirs": {}}
-    )
+    versions = snapshot.versions_in(names)
+    snap = snapshot.resolve_snapshot(spark, path, versions)
     pending_snap: dict = {"version": 0, "dirs": {}}
-    cow_mp = os.path.join(path, COW_MANIFEST)
-    if fsutil.exists(spark, cow_mp):
+    if pins[store.COW_STAGING]:
+        cow_mp = os.path.join(path, store.COW_MANIFEST)
         pending_snap = json.loads(fsutil.read_text(spark, cow_mp)).get(
             "snap"
         ) or {"version": 0, "dirs": {}}
@@ -273,18 +255,8 @@ def _vacuum_layout_impl(
     }
 
 
-
-def expire_scd2_history(spark, path, *args, **kwargs):
-    """Public verb — runs :func:`_expire_scd2_history_impl` under the maintainer
-    lease (round 16, VERDICT r15 item 3): one live maintainer per
-    layout; a concurrent second is refused loudly, a crashed one is
-    stolen after its TTL. See the impl for the verb's own contract."""
-    from .lease import maintenance_lease
-
-    with maintenance_lease(spark, path):
-        return _expire_scd2_history_impl(spark, path, *args, **kwargs)
-
-def _expire_scd2_history_impl(
+@maintainer_verb
+def expire_scd2_history(
     spark: SparkSession, path: str, retain_versions: int
 ) -> dict:
     """RETENTION over a stored SCD2 history layout: per key, keep the
@@ -333,7 +305,7 @@ def _expire_scd2_history_impl(
     if not touched:
         return {"rows_expired": 0, "shards_rewritten": 0}
     rows_expired = sum(r["count"] for r in per_shard)
-    slice_ = hist.where(partition_filter("shard", touched))
+    slice_ = hist.where(store.partition_filter("shard", touched))
     keep_current = slice_.where(F.col("is_current"))
     keep_closed = (
         slice_.where(~F.col("is_current"))
@@ -342,7 +314,7 @@ def _expire_scd2_history_impl(
         .drop("__rk")
     )
     out = keep_current.unionByName(keep_closed)
-    fsutil.delete(spark, os.path.join(path, COW_STAGING))
+    fsutil.delete(spark, os.path.join(path, store.COW_STAGING))
     job = stage_partition_rewrite(
         spark,
         path,

@@ -7584,8 +7584,9 @@ def layout_vacuum_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     _gate_chain(spark, path, fresh, mutate, state)
     feed, _ = read_scd2_feed(spark, path)
     from .. import fsutil
+    from ..operators.store import committed_delta_batches
 
-    kept = len(fsutil.committed_delta_batches(spark, path))
+    kept = len(committed_delta_batches(spark, path))
     decoy_survived = fsutil.exists(
         spark, os.path.join(path, "notes_delta_old", "keep.bin")
     )
@@ -7756,7 +7757,7 @@ def compaction_ingest_interleave(
         refresh_dedup_index,
         write_dedup_index,
     )
-    from ..operators.maintenance import committed_delta_batches
+    from ..operators.store import committed_delta_batches
     from ..sources.catalog import layout_artifact
 
     d = load(spark, sf_dir, "documents")

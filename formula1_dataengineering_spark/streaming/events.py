@@ -842,6 +842,7 @@ def stream_feed_ingest_deltas(
         refresh_scd2_feed,
         write_scd2_feed,
     )
+    from ..operators.store import committed_delta_batches
     from ..sources.catalog import load
 
     src = os.path.join(feed_path, "_stream_source")
@@ -943,7 +944,7 @@ def stream_feed_ingest_deltas(
         )
     run()  # run 2: replays batch 1 idempotently, finishes the rest
 
-    n_deltas = len(fsutil.committed_delta_batches(spark, feed_path))
+    n_deltas = len(committed_delta_batches(spark, feed_path))
     feed, _ = read_scd2_feed(spark, feed_path)
     return {
         "n_deltas": n_deltas,
@@ -1031,6 +1032,7 @@ def stream_dedup_ingest_deltas(
         refresh_dedup_index,
         write_dedup_index,
     )
+    from ..operators.store import committed_delta_batches
     from ..sources.catalog import load
 
     src = os.path.join(index_path, "_stream_source")
@@ -1110,7 +1112,7 @@ def stream_dedup_ingest_deltas(
         )
     run()  # run 2: replays batch 1 idempotently, finishes the rest
 
-    n_deltas = len(fsutil.committed_delta_batches(spark, index_path))
+    n_deltas = len(committed_delta_batches(spark, index_path))
     hashes, _, _ = read_dedup_index(spark, index_path)
     return {
         "n_deltas": n_deltas,

@@ -18,10 +18,12 @@ from pyspark.sql import functions as F
 
 from formula1_dataengineering_spark.operators.maintenance import (
     ann_recall_at_k,
-    committed_delta_batches,
     maintain_ann_index,
     maintain_dedup_index,
     maintain_scd2_feed,
+)
+from formula1_dataengineering_spark.operators.store import (
+    committed_delta_batches,
 )
 
 _D = 8
