@@ -15,8 +15,9 @@ Atomicity notes: Hadoop ``create(path, overwrite=True)``
 truncates-then-writes (markers are zero-byte, so the visible state is
 exists/not-exists); ``rename`` is the layout-swap primitive (atomic on
 HDFS, best-effort elsewhere — ``operators.store`` orders operations
-so a crash leaves a marker-less, reader-refused layout, never a
-half-validated one).
+so a crash inside a base swap leaves a marker-less, reader-refused
+layout and a crash inside any other commit leaves the previous
+snapshot current, never a half-validated one).
 """
 
 from __future__ import annotations

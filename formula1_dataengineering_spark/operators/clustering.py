@@ -851,7 +851,8 @@ def refresh_ann_index(
     deltas.
 
     Committed through :func:`operators.store.commit_delta` like the
-    dedup refresh: idempotent per (path, batch_id); refuses a
+    dedup refresh: idempotent per (path, batch_id), a folded batch's
+    retry a no-op; refuses a
     marker-less base, a metadata-less (pre-v2) layout, and a batch_id
     that could escape the layout or dodge marker discovery.
 
@@ -872,16 +873,19 @@ def refresh_ann_index(
     Callers that guarantee disjointness upstream (e.g. a monotonic id
     allocator) may pass ``check_disjoint=False`` to skip the pass."""
     from . import store
-    from .cow import resume_pending_cow
 
-    store.check_batch_id("refresh_ann_index", batch_id)
     spark = new_vectors.sparkSession
-    # Complete a pending COW (retraction) commit before writing — see
-    # refresh_scd2_feed (round-15 review).
-    resume_pending_cow(spark, path)
-    meta = store.require_layout_meta(
-        spark, path, "ANN index", "write_ann_index"
+    layout = store.open_for_delta(
+        spark,
+        path,
+        "refresh_ann_index",
+        batch_id,
+        "ANN index",
+        "write_ann_index",
     )
+    if layout is None:
+        return
+    meta = layout.meta
     if meta.get("vec_col") != vec_col:
         raise ValueError(
             f"refresh_ann_index: layout metadata declares "

@@ -16,61 +16,38 @@ the base is exactly ``base[touched partitions] ∪ deltas`` rewritten
 per partition. Untouched base partitions are never read and never
 written — their part files stay byte-identical (tests pin this).
 
-Protocol (shared engine, :func:`_compact_layout`; names and the
-layout open are ``operators.store``'s):
+Protocol (shared engine, :func:`_compact_layout`): per table, the live
+deltas' rows are unioned, their touched partition values collected
+(bounded by n_shards / #cells — the same bounded-driver-materialization
+rule as the SCD2 refresh), and ``base[touched] ∪ deltas`` is staged
+into the table's next version directory with the base writer's own
+one-file-per-partition discipline; then one manifest publishes the
+new partitions and the folded batch ids together
+(``operators.store``'s partition rewrite), and :func:`store.retire`
+deletes the superseded copies, the folded deltas and their markers.
+The layout stays readable throughout: a reader sees either base ∪
+deltas or the folded base, never both and never neither, and a crash
+at any point is recovered by re-running the call (or by vacuum, for
+a retire cut short).
 
-1. STAGE (layout stays fully readable, ``_SUCCESS`` intact): per
-   table, the committed deltas' rows are unioned, their touched
-   partition values collected (bounded by n_shards / #cells — the
-   same bounded-driver-materialization rule as the SCD2 refresh),
-   and ``base[touched] ∪ deltas`` is written under
-   ``<path>/_compact/<table>/`` with the base writer's own
-   one-file-per-partition discipline.
-2. MANIFEST: ``_COMPACT_MANIFEST.json`` (the folded batch_ids + table
-   names) lands only after ALL staging completed — its existence
-   means every staged partition directory is complete.
-3. COMMIT (the only unreadable window, pure filesystem metadata ops):
-   drop ``_SUCCESS``; per staged partition directory, delete the base
-   partition and rename the staged one in; delete the folded deltas'
-   directories and commit markers; sweep staging + manifest; restore
-   ``_SUCCESS``.
-
-Crash contract — strictly stronger than the rebuild path's: a crash
-during STAGE leaves the old layout valid (stale staging swept by the
-next run); a crash during COMMIT leaves a marker-less layout every
-reader refuses, and RE-RUNNING the same ``compact_*`` call detects
-the manifest and RESUMES the commit — each swap is idempotent (a
-partition already renamed in has no staged directory left and is
-skipped), delta/marker deletes are idempotent, and the manifest names
-exactly the batches being folded so an unrelated delta landed before
-the crash survives. This is the recovery the COW refresher only
-approximates: compaction never needs a rebuild to recover.
-
-Concurrency contract (round-14, per ADVICE r13): compaction assumes a
-SINGLE MAINTAINER — one process runs ``compact_*`` / ``write_*`` /
-``vacuum`` on a layout at a time, the same assumption the COW
-refresher documents. Concurrent INGEST is the one interleave that is
+Concurrency contract: compaction assumes a SINGLE MAINTAINER (the
+lease enforces it). Concurrent INGEST is the one interleave that is
 supported and proven: a ``refresh_*`` delta landing at any point
 during compaction survives, because the manifest names exactly the
-batches being folded and the commit deletes only those — a delta
-committed after the listing is untouched by the swap and stays
-probe-able (the ``on_staged`` hook exists so tests and the
-``compaction_ingest_interleave`` gate can land a delta inside the
-STAGE→COMMIT window and hash the post-state). Two concurrent
-``compact_*`` calls, or a compaction racing a base REBUILD, are NOT
-supported — serialize maintenance.
+batches being folded — a delta committed after the open stays live
+(the ``on_staged`` hook exists so tests and the
+``compaction_ingest_interleave`` gate can land a delta between stage
+and publish and hash the post-state). A compaction racing a base
+REBUILD is NOT supported — serialize maintenance.
 """
 
 from __future__ import annotations
 
-import json
-import os
 from collections.abc import Callable
 from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
-from .. import fsutil
 from . import store
 from .lease import maintainer_verb
 
@@ -80,59 +57,6 @@ class _TableSpec(NamedTuple):
     partition_col: str
     sort_cols: tuple[str, ...]  # () = keep the writer's plain layout
     schema_key: str  # _META.json key holding the table schema
-
-
-def _is_partition_dir(name: str) -> bool:
-    """A parquet partition directory is ``col=value`` — including the
-    null-key default partition, which materializes as
-    ``col=__HIVE_DEFAULT_PARTITION__`` (so the "=" test covers it;
-    null-ROW handling lives in the merge's explicit isNull arm)."""
-    return "=" in name
-
-
-def _commit(spark: SparkSession, path: str, manifest: dict) -> None:
-    """The metadata-only commit/resume phase: swap staged partition
-    directories in, drop the folded deltas, restore the marker. Every
-    step is idempotent, so a crashed commit re-runs to completion."""
-    from . import snapshot
-
-    fsutil.delete(spark, os.path.join(path, store.SUCCESS))
-    # Fold any COW snapshot state into plain base dirs first (round
-    # 16): the swap below writes BASE partition dirs, so a live
-    # version assignment would shadow the fold's output. Runs inside
-    # this commit's marker-dropped window; state-driven idempotent,
-    # so the resume path re-runs it safely.
-    snapshot.collapse_snapshot(spark, path)
-    staging_root = os.path.join(path, store.COMPACT_STAGING)
-    for table in manifest["tables"]:
-        staged = os.path.join(staging_root, table)
-        if not fsutil.is_dir(spark, staged):
-            continue  # already fully swapped by a prior (crashed) run
-        for name in fsutil.list_names(spark, staged):
-            if not _is_partition_dir(name):
-                continue  # the staged write's own _SUCCESS marker
-            fsutil.delete(spark, os.path.join(path, table, name))
-            fsutil.rename(
-                spark,
-                os.path.join(staged, name),
-                os.path.join(path, table, name),
-            )
-    for bid in manifest["batch_ids"]:
-        for table in manifest["tables"]:
-            fsutil.delete(
-                spark, os.path.join(path, store.delta_dir(table, bid))
-            )
-        fsutil.delete(spark, os.path.join(path, store.delta_marker(bid)))
-    fsutil.delete(spark, staging_root)
-    spark.catalog.refreshByPath(path)
-    # Marker BEFORE manifest delete: a crash between the two leaves a
-    # readable layout plus a spent manifest, and the next compact_*
-    # call re-enters this (idempotent) commit and finishes the sweep.
-    # The reverse order would leave a marker-less AND manifest-less
-    # layout — bricked until a rebuild, contradicting the module's
-    # resume contract (round-13 review).
-    fsutil.touch(spark, os.path.join(path, store.SUCCESS))
-    fsutil.delete(spark, os.path.join(path, store.COMPACT_MANIFEST))
 
 
 @maintainer_verb
@@ -146,52 +70,25 @@ def _compact_layout(
 ) -> dict:
     """Shared engine — see the module docstring for the protocol.
     ``specs_of`` maps the opened layout to the tables to fold.
-    Returns a summary dict: ``n_deltas_folded``, ``batch_ids``,
-    ``touched_partitions`` per table, and ``resumed`` (True when this
-    call completed a crashed commit instead of folding new deltas).
+    Returns a summary dict: ``n_deltas_folded``, ``batch_ids`` and
+    ``touched_partitions`` per table.
 
-    ``on_staged`` (None in production) is called between MANIFEST and
-    COMMIT — the widest concurrent-ingest window. Tests and the
+    ``on_staged`` (None in production) is called between stage and
+    publish — the widest concurrent-ingest window. Tests and the
     interleave gate use it to land a delta mid-compaction (the
-    manifest pins exactly the batches being folded, so the injected
-    delta must survive the commit) or to raise and simulate a crash
-    whose re-run resumes the commit."""
-    from .cow import resume_pending_cow
-
-    fsutil.validate_layout_path(path, what)
-    # Complete a pending COW (deletion-family) commit first: the fold
-    # rewrites base partitions a stale _COW_MANIFEST.json may still
-    # name, and a later resume would rename pre-fold staged
-    # partitions over them (round-15 review).
-    resume_pending_cow(spark, path)
-    manifest_path = os.path.join(path, store.COMPACT_MANIFEST)
-    if fsutil.exists(spark, manifest_path):
-        # A prior compaction crashed mid-commit (or between manifest
-        # and commit): the manifest guarantees staging is complete,
-        # so finish the commit it describes. Nothing is re-merged —
-        # and no metadata is needed (the crash window it recovers has
-        # no _SUCCESS for the layout open to accept).
-        manifest = json.loads(fsutil.read_text(spark, manifest_path))
-        _commit(spark, path, manifest)
-        return {
-            "n_deltas_folded": len(manifest["batch_ids"]),
-            "batch_ids": list(manifest["batch_ids"]),
-            "touched_partitions": manifest.get("touched_partitions", {}),
-            "resumed": True,
-        }
+    manifest folds exactly the batches opened here, so the injected
+    delta must stay live) or to raise and simulate a crash."""
     layout = store.open_layout(spark, path, what, writer_name)
     specs = specs_of(layout)
     committed = layout.batches
+    touched_values: dict[str, list] = {s.table: [] for s in specs}
     if not committed:
         return {
             "n_deltas_folded": 0,
             "batch_ids": [],
-            "touched_partitions": {s.table: [] for s in specs},
-            "resumed": False,
+            "touched_partitions": touched_values,
         }
-    staging_root = os.path.join(path, store.COMPACT_STAGING)
-    fsutil.delete(spark, staging_root)
-    touched_values: dict[str, list] = {}
+    jobs = []
     for spec in specs:
         deltas = store.open_table(
             spark,
@@ -201,43 +98,38 @@ def _compact_layout(
         )
         # Bounded driver-side materialization: distinct PARTITION
         # values of the deltas only (≤ n_shards / #cells rows).
-        touched = [
-            r[0]
-            for r in deltas.select(spec.partition_col).distinct().collect()
-        ]
-        touched_values[spec.table] = sorted(
-            touched, key=lambda v: (v is None, v)
+        touched = sorted(
+            (
+                r[0]
+                for r in deltas.select(spec.partition_col)
+                .distinct()
+                .collect()
+            ),
+            key=lambda v: (v is None, v),
         )
+        touched_values[spec.table] = touched
         if not touched:
             # Every delta of this table was a zero-row day: nothing
-            # to merge; the commit still removes the empty dirs.
+            # to merge; the fold only retires the empty dirs.
             continue
-        # The fold merges against the CURRENT rows, which a COW
-        # erasure may own via version dirs (round 16).
         base = store.open_table(spark, layout, [spec.table], spec.schema_key)
         merged = base.where(
             store.partition_filter(spec.partition_col, touched)
         ).unionByName(deltas)
-        store.write_table(
-            store.Table(merged, spec.partition_col, spec.sort_cols),
-            os.path.join(staging_root, spec.table),
+        jobs.append(
+            store.stage_rewrite(
+                spark, layout, spec.table, merged, spec.partition_col,
+                touched, spec.sort_cols,
+            )
         )
-    manifest = {
-        "batch_ids": committed,
-        "tables": [s.table for s in specs],
-        "touched_partitions": touched_values,
-    }
-    # Manifest lands ONLY after all staging completed: its existence
-    # is the resume guarantee.
-    fsutil.write_text(spark, manifest_path, json.dumps(manifest))
     if on_staged is not None:
         on_staged()
-    _commit(spark, path, manifest)
+    store.commit_rewrite(spark, layout, jobs, folded=committed)
+    store.retire(spark, path, [s.table for s in specs])
     return {
         "n_deltas_folded": len(committed),
         "batch_ids": committed,
         "touched_partitions": touched_values,
-        "resumed": False,
     }
 
 

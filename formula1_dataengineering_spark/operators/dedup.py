@@ -1459,8 +1459,9 @@ def refresh_dedup_index(
     scratch over the grown corpus (tests assert it).
 
     Committed through :func:`operators.store.commit_delta`: idempotent
-    per (path, batch_id), and the two delta tables become visible
-    together or not at all. Reader handles opened BEFORE a re-run of
+    per (path, batch_id) — a batch a compaction already folded is a
+    no-op — and the two delta tables become visible together or not
+    at all. Reader handles opened BEFORE a re-run of
     the same batch_id are invalidated by it — re-open via
     :func:`read_dedup_index` after a refresh. Cost is O(batch): the
     base tables are not read or rewritten (at 100 TB that asymmetry —
@@ -1472,16 +1473,19 @@ def refresh_dedup_index(
     validates against the same metadata — would never probe: the
     silent-miss class again, failed loudly instead)."""
     from . import store
-    from .cow import resume_pending_cow
 
-    store.check_batch_id("refresh_dedup_index", batch_id)
     spark = new_docs.sparkSession
-    # Complete a pending COW (retraction) commit before writing — see
-    # refresh_scd2_feed (round-15 review).
-    resume_pending_cow(spark, path)
-    meta = store.require_layout_meta(
-        spark, path, "dedup index", "write_dedup_index"
+    layout = store.open_for_delta(
+        spark,
+        path,
+        "refresh_dedup_index",
+        batch_id,
+        "dedup index",
+        "write_dedup_index",
     )
+    if layout is None:
+        return
+    meta = layout.meta
     if (
         meta.get("shard_salt") != _INDEX_SHARD_SALT
         or meta.get("shard_mode") != "fast"

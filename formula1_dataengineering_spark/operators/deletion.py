@@ -33,67 +33,39 @@ the ids' rows:
   window, so the post-delete layout equals the full rebuild over the
   surviving keys (the gate hashes exactly that).
 
-Shared discipline (:func:`_stage_delete` + :mod:`operators.cow`):
-per table directory, find touched partitions (bounded driver
-collect, ≤ n_shards / #cells), STAGE the kept rows beside the layout,
-then swap partitions in via the manifest-bracketed COMMIT — the
-compaction protocol, closing the round-14 in-place overwrite's
-survivor-loss crash window (ADVICE r14, medium). Untouched partitions
-are never read and never written — their part files stay
-byte-identical (tests pin this). A partition whose every row was
-deleted is dropped, including the NULL default partition (its
-bystander rows re-stage; the round-14 review's data-loss arm).
+Shared discipline (:func:`_stage_delete`): per table directory, find
+touched partitions (bounded driver collect, ≤ n_shards / #cells),
+stage the kept rows into the directory's next version, then publish
+one manifest for every directory (``operators.store``'s partition
+rewrite). Untouched partitions are never read and never written —
+their part files stay byte-identical (tests pin this). A partition
+whose every row was deleted is dropped, including the NULL default
+partition (its bystander rows re-stage).
 
-Deletion accounting: every commit also rewrites ``_META.json`` with
-cumulative per-table ``rows_deleted`` counters — the signal the
-maintenance loop's deletion-drift arm reads (VERDICT r14 item 2); a
-full rebuild writes fresh metadata and thereby resets them.
+Deletion accounting: every commit's manifest carries the layout
+metadata with cumulative per-table ``rows_deleted`` counters — the
+signal the maintenance loop's deletion-drift arm reads — so the
+counters land atomically with the rows; a full rebuild writes fresh
+metadata and thereby resets them.
 
-Crash contract: STAGE leaves the live layout readable; from MANIFEST
-on, every step is idempotent metadata ops — any verb in the family
-(or :func:`operators.cow.resume_pending_cow` directly) finishes a
-crashed commit first, then proceeds. Re-running the same delete is
-idempotent: already-removed rows simply match nothing.
+Crash contract: the layout stays readable throughout, and a crash
+before the publish leaves the old snapshot current; re-running the
+same delete is idempotent (already-removed rows match nothing). The
+pre-erasure snapshot stays readable for time travel until vacuum.
 
-Replay caveat (documented, by design): deltas are rewritten in
-place, so a crashed INGEST of batch N replayed AFTER a delete of ids
-that rode in batch N resurrects them — sequence deletes after ingest
-settles (the single-maintainer window), or re-issue the delete; the
-verb is idempotent and cheap.
+Replay caveat (documented, by design): a crashed INGEST of batch N
+replayed AFTER a delete of ids that rode in batch N resurrects them
+— sequence deletes after ingest settles (the single-maintainer
+window), or re-issue the delete; the verb is idempotent and cheap.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import fsutil
 from . import store
-from .cow import (
-    resume_pending_cow,
-    run_cow_swap,
-    stage_partition_rewrite,
-)
 from .lease import maintainer_verb
-
-
-def _open(
-    spark: SparkSession, path: str, what: str, writer: str
-) -> store.Layout:
-    """Marker-tolerant layout open. An erasure never drops
-    ``_SUCCESS`` itself (its commit publishes a snapshot version), but
-    another verb's crash window may have — the SCD2 in-place refresher,
-    a compaction fold, a base rebuild — and an erasure request must
-    still land there instead of waiting on that verb's recovery; so
-    only ``_META.json`` is required. External READERS keep refusing
-    marker-less layouts. A pending COW manifest is resumed to
-    completion FIRST — its commit may rewrite the metadata this
-    returns."""
-    fsutil.validate_layout_path(path, what)
-    resume_pending_cow(spark, path)
-    return store.open_layout(spark, path, what, writer, require_success=False)
 
 
 def _table_rels(layout: store.Layout, table: str) -> list[str]:
@@ -112,9 +84,9 @@ def _stage_delete(
     sort_cols: tuple[str, ...] = (),
     touched_hint: list | None = None,
 ) -> tuple[dict | None, int, int]:
-    """STAGE the COW-delete of ``ids``' rows from one table
+    """Stage the copy-on-write delete of ``ids``' rows from one table
     directory: returns (manifest job | None, rows_deleted,
-    partitions_touched). The live directory is not modified here.
+    partitions_touched). Nothing a reader lists is modified here.
     ``touched_hint`` statically prunes the discovery scan when the
     caller can bound the partition set from the ids alone (the
     key-sharded feed/history) — the scan then reads only those
@@ -145,14 +117,8 @@ def _stage_delete(
     n_del = int(sum(r[1] for r in per_part))
     slice_ = rows.where(store.partition_filter(partition_col, touched))
     keep = slice_.join(bids, id_col, "left_anti")
-    job = stage_partition_rewrite(
-        spark,
-        layout.path,
-        os.path.join(layout.path, rel),
-        keep,
-        partition_col,
-        touched,
-        sort_cols,
+    job = store.stage_rewrite(
+        spark, layout, rel, keep, partition_col, touched, sort_cols
     )
     return job, n_del, len(touched)
 
@@ -164,15 +130,11 @@ def _run_delete(
     layout: store.Layout,
     jobs: list[tuple[str, str, str, DataFrame, str, str, tuple, list | None]],
 ) -> dict:
-    """STAGE every job, then swap via one manifest-bracketed commit
-    that also lands the cumulative deletion accounting in
-    ``_META.json``. Jobs are (table, rel, schema_key, ids, id_col,
-    partition_col, sort_cols, touched_hint). A no-match delete
-    touches nothing — not even the marker. A second concurrent
-    maintainer is refused loudly mid-STAGE."""
-    # Clear residue of a manifest-less crashed STAGE (dead by
-    # protocol; vacuum would sweep it too).
-    fsutil.delete(spark, os.path.join(path, store.COW_STAGING))
+    """Stage every job, then publish one manifest that also carries
+    the cumulative deletion accounting. Jobs are (table, rel,
+    schema_key, ids, id_col, partition_col, sort_cols, touched_hint).
+    A no-match delete publishes nothing. A second concurrent
+    maintainer is refused loudly mid-stage."""
     staged: list[dict] = []
     rows_deleted = 0
     partitions = 0
@@ -194,7 +156,7 @@ def _run_delete(
     acc = dict(meta.get("rows_deleted", {}))
     for table, n in per_table.items():
         acc[table] = int(acc.get(table, 0)) + n
-    run_cow_swap(spark, path, staged, {**meta, "rows_deleted": acc})
+    store.commit_rewrite(spark, layout, staged, {**meta, "rows_deleted": acc})
     return {
         "rows_deleted": rows_deleted,
         "partitions_rewritten": partitions,
@@ -212,7 +174,9 @@ def delete_from_dedup_index(
     match against the retracted docs (the gate pins the flag flips).
     Returns ``{"rows_deleted", "partitions_rewritten"}`` summed over
     content_hashes + band_rows."""
-    layout = _open(spark, path, "dedup index", "write_dedup_index")
+    layout = store.open_layout(
+        spark, path, "dedup index", "write_dedup_index"
+    )
     # Materialized once: every (table × directory) job re-executes the
     # ids plan 3-4 times (discovery, count, keep, stage) — for a
     # computed id set (the retraction gate's corpus-wide twin join)
@@ -240,7 +204,7 @@ def delete_from_ann_index(
     stay (training statistics, not per-row state); a deletion-heavy
     layout retrains through the maintenance loop's rebuild arm (its
     measured recall SEES deletions, unlike row counters)."""
-    layout = _open(spark, path, "ANN index", "write_ann_index")
+    layout = store.open_layout(spark, path, "ANN index", "write_ann_index")
     cell_col = layout.meta.get("cell_col")
     if not cell_col:
         raise ValueError(
@@ -303,7 +267,9 @@ def delete_scd2_feed_keys(
     pruning): a handful of erasure requests against a 100 TB feed
     reads only the shards those keys live in, in every directory
     generation."""
-    layout = _open(spark, path, "scd2 feed layout", "write_scd2_feed")
+    layout = store.open_layout(
+        spark, path, "scd2 feed layout", "write_scd2_feed"
+    )
     meta = layout.meta
     key_col = meta["key_col"]
     keys = _erasure_keys(keys, key_col, "delete_scd2_feed_keys")
@@ -334,13 +300,13 @@ def delete_scd2_history_keys(
     holding the erased keys' versions). Whole-key erasure commutes
     with the per-key SCD2 window, so the result equals the full
     rebuild over the surviving keys — no window recomputation needed,
-    just the COW partition swap.
+    just the partition rewrite.
 
     Same static HRW pruning as the feed twin (the layout shards by
     HRW(key)); one ``history_rows`` directory — the history is
     maintained copy-on-write, so there are no deltas to reach.
     Returns ``{"rows_deleted", "partitions_rewritten"}``."""
-    layout = _open(
+    layout = store.open_layout(
         spark, path, "scd2 history layout", "write_scd2_history"
     )
     meta = layout.meta

@@ -17,11 +17,10 @@ expire) runs under a ``_MAINTAINER_LEASE.json`` at the layout root:
 - **Expiry steal**: a lease whose ``expires_unix`` passed belongs to
   a crashed maintainer — the next acquire deletes it and retries the
   exclusive create. Crash recovery is therefore bounded by the TTL
-  (default 15 min), and the crashed verb's own resume machinery
-  (pending COW / compaction manifests) finishes its work under the
-  NEW lease.
+  (default 15 min): a crashed verb left the previous snapshot
+  current, and re-running it under the NEW lease completes it.
 - **Re-entrant per process**: the umbrella tick calls family verbs,
-  which call compaction, which resumes COW — one logical maintainer.
+  which call compaction and vacuum — one logical maintainer.
   A process-local depth counter keeps one on-disk lease for the
   whole nesting; only the outermost release deletes the file. The
   holder id is stable per process (pid + random suffix), so a

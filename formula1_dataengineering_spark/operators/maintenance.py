@@ -224,17 +224,9 @@ def maintain_ann_index(
     corpus-sized read is paid exactly when a corpus-sized rebuild
     already was)."""
     from .clustering import write_ann_index
-    from .cow import resume_pending_cow
 
-    # Complete a pending COW (retraction) commit before measuring —
-    # the commit may rewrite the partitions the probe reads and the
-    # _META.json deletion counters this tick acts on (round-15
-    # review).
-    resume_pending_cow(spark, path)
-    meta = store.require_layout_meta(
-        spark, path, "ANN index", "write_ann_index"
-    )
-    n_deltas = len(store.committed_delta_batches(spark, path))
+    layout = store.open_layout(spark, path, "ANN index", "write_ann_index")
+    meta, n_deltas = layout.meta, len(layout.batches)
     measure = lambda sample=referee_sample: _recall_scalars(  # noqa: E731
         ann_recall_at_k(
             spark,
@@ -322,7 +314,7 @@ def maintain_dedup_index(
 
     Deletion drift (VERDICT r14 item 2): the retraction verb
     (``delete_from_dedup_index``) records cumulative per-table
-    ``rows_deleted`` counters in ``_META.json`` — row counts alone
+    ``rows_deleted`` counters in the layout metadata — row counts alone
     never see deletions (the deleted rows are physically gone), so a
     retraction-heavy layout would otherwise accumulate near-empty
     partitions and stale sharding with no trip wire. When the
@@ -336,9 +328,7 @@ def maintain_dedup_index(
     Returns ``decision``, ``n_deltas``, ``base_rows``,
     ``delta_rows``, ``rows_deleted``, ``deltas_remaining``."""
     from .dedup import write_dedup_index
-    from .cow import resume_pending_cow
 
-    resume_pending_cow(spark, path)  # see maintain_ann_index
     layout = store.open_layout(
         spark, path, "dedup index", "write_dedup_index"
     )
@@ -426,7 +416,7 @@ def maintain_scd2_feed(
     Deletion drift (VERDICT r14 item 2): rows-per-shard never SEES
     deletions — a delete-heavy feed erodes toward near-empty
     partitions with no trip wire. The erasure verb records cumulative
-    ``rows_deleted`` in ``_META.json``; when it crosses
+    ``rows_deleted`` in the layout metadata; when it crosses
     ``rebuild_deleted_over`` × the CURRENT total rows (fires AT the
     exact threshold, ``>=`` — the shared deletion-drift boundary
     contract, ADVICE r15), the tick
@@ -438,10 +428,8 @@ def maintain_scd2_feed(
     Returns ``decision``, ``n_deltas``, ``total_rows``,
     ``rows_deleted``, ``n_shards_before`` / ``n_shards_after``,
     ``deltas_remaining``."""
-    from .cow import resume_pending_cow
     from .scd import read_scd2_feed, write_scd2_feed
 
-    resume_pending_cow(spark, path)  # see maintain_ann_index
     layout = store.open_layout(
         spark, path, "scd2 feed layout", "write_scd2_feed"
     )
@@ -549,25 +537,16 @@ def maintain_layout(
     explicit POLICY verb — an umbrella must never delete visible
     rows by default.
 
-    Vacuum ordering: AFTER the family verb — a compact just retired
-    its folded deltas' markers, and the sweep then reclaims crashed
+    Vacuum ordering: AFTER the family verb — a compact already retired
+    its folded deltas, and the sweep then reclaims crashed
     staging/orphans in the same window the single-maintainer contract
     already reserves. Returns the family verb's decision row plus
     ``family`` and the flattened ``vacuum_*`` accounting columns."""
-    from .cow import resume_pending_cow
     from .vacuum import vacuum_layout
 
-    # Resume BEFORE the marker check (ADVICE r15, medium): a COW
-    # deletion/expiry commit that crashed mid-commit left the layout
-    # marker-less with a pending _COW_MANIFEST — exactly the state
-    # require_layout_meta refuses. The per-family verbs resume first
-    # and self-heal; the umbrella must too, or the one family it
-    # maintains solely via COW verbs (scd2_history, whose tick below
-    # never calls a resuming verb) is the one it cannot recover.
-    resume_pending_cow(spark, path)
-    meta = store.require_layout_meta(
+    meta = store.open_layout(
         spark, path, "stored layout", "a layout writer"
-    )
+    ).meta
     fam = layout_family(meta)
     if fam == "ann_index":
         if not ann:

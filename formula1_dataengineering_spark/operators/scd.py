@@ -152,12 +152,12 @@ def read_scd2_feed(
     missing-vs-empty are the store's, as for the index readers.
 
     ``snapshot_version`` (round 16) pins the read to a specific
-    published snapshot manifest — time travel across COW deletion /
-    retention commits; None reads the current snapshot. The snapshot
-    pins COW-rewritten partitions only; delta VISIBILITY stays
-    marker-based (the single-maintainer window sequences refreshes
-    against erasures, so a pinned reader composes with at most the
-    maintenance tick it raced)."""
+    published snapshot manifest — time travel across erasure
+    commits; None reads the current snapshot. The snapshot pins
+    rewritten partitions and the folded batches; which deltas exist
+    stays marker-based (the single-maintainer window sequences
+    refreshes against erasures, so a pinned reader composes with at
+    most the maintenance tick it raced)."""
     from . import store
 
     layout = store.open_layout(
@@ -181,21 +181,22 @@ def refresh_scd2_feed(
     ``feed_rows_delta_<batch_id>/`` is sharded with the layout's OWN
     metadata params and committed through
     :func:`operators.store.commit_delta` (idempotent per
-    (path, batch_id)); O(batch) — the base feed is never read or
-    rewritten."""
+    (path, batch_id); a batch a compaction already folded is a
+    no-op); O(batch) — the base feed is never read or rewritten."""
     from . import store
-    from .cow import resume_pending_cow
 
-    store.check_batch_id("refresh_scd2_feed", batch_id)
     spark = new_changes.sparkSession
-    # A pending COW manifest (deletion swap crashed inside its
-    # marker-intact windows) is completed before any delta write —
-    # else a later resume could replay stale staged partitions over
-    # this batch's own delta overwrite (round-15 review).
-    resume_pending_cow(spark, path)
-    meta = store.require_layout_meta(
-        spark, path, "scd2 feed layout", "write_scd2_feed"
+    layout = store.open_for_delta(
+        spark,
+        path,
+        "refresh_scd2_feed",
+        batch_id,
+        "scd2 feed layout",
+        "write_scd2_feed",
     )
+    if layout is None:
+        return
+    meta = layout.meta
     if (
         meta.get("shard_salt") != _FEED_SHARD_SALT
         or meta.get("shard_mode") != "fast"
@@ -336,9 +337,7 @@ def write_scd2_history(
     shape) as the sharded layout :func:`scd2_refresh_in_place`
     maintains: ``history_rows/`` partitioned by ``shard`` = HRW(key),
     one key-sorted file per shard, committed like
-    :func:`write_scd2_feed`. This layout is the reason the store
-    stages ``_META.json`` and renames it in after the data: its
-    refresher opens it marker-less."""
+    :func:`write_scd2_feed`."""
     from .. import fsutil
     from . import store
 
@@ -379,13 +378,9 @@ def read_scd2_history(
     Delta-read asymmetry (by design, documented per VERDICT r12): the
     FEED reader unions ``feed_rows_delta_*`` directories because the
     feed is maintained by delta APPEND (:func:`refresh_scd2_feed`);
-    the history layout is maintained by copy-on-write
-    (:func:`scd2_refresh_in_place` rewrites touched shards in place),
-    so there are no history deltas to union — ``history_rows/`` IS
-    the current state whenever ``_SUCCESS`` exists. A marker-less
-    history (crash mid-COW) is refused here; recovery is re-running
-    the same refresh, which opens the layout through the
-    marker-tolerant :func:`_open_history_for_refresh`."""
+    the history layout is maintained by partition rewrites
+    (:func:`scd2_refresh_in_place`), so there are no history deltas
+    to union."""
     from . import store
 
     layout = store.open_layout(
@@ -394,49 +389,6 @@ def read_scd2_history(
         "scd2 history layout",
         "write_scd2_history",
         snapshot_version,
-    )
-    hist = store.open_table(
-        spark, layout, ["history_rows"], "history_schema"
-    )
-    return hist, layout.meta
-
-
-def _open_history_for_refresh(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, dict]:
-    """:func:`read_scd2_history` minus the ``_SUCCESS`` requirement —
-    the refresher's OWN open path (ADVICE r12, medium):
-    :func:`scd2_refresh_in_place` removes the marker before its
-    non-atomic dynamic partition overwrite, and its documented crash
-    recovery is re-running the same refresh — which must therefore be
-    able to OPEN a marker-less layout, or a crash mid-write bricks it
-    until a full rebuild. Recovery on a half-overwritten layout is
-    sound because the rebuilt side derives from feed ∪ batch (never
-    from the history) and the keeper side carries untouched keys'
-    rows, which are value-identical in the old and new partition
-    files. ``_META.json`` is still required (params are not
-    guessable), and a missing ``history_rows/`` directory is still
-    corruption. External READERS keep refusing marker-less layouts
-    via :func:`read_scd2_history` — only the idempotent writer may
-    look past its own crash window.
-
-    A pending COW manifest (a deletion/expiry swap that crashed
-    mid-commit) is resumed to completion FIRST (round-15 review): the
-    refresher is the one marker-tolerant WRITER outside the deletion
-    family, and overwriting shards the manifest still names would let
-    a later resume rename stale staged shards over the refreshed
-    data. The open is snapshot-aware (round 16): staging from it sees
-    the CURRENT rows, not base copies a COW commit superseded."""
-    from . import store
-    from .cow import resume_pending_cow
-
-    resume_pending_cow(spark, path)
-    layout = store.open_layout(
-        spark,
-        path,
-        "scd2 history layout",
-        "write_scd2_history",
-        require_success=False,
     )
     hist = store.open_table(
         spark, layout, ["history_rows"], "history_schema"
@@ -459,8 +411,7 @@ def scd2_refresh_in_place(
     operator returns ``untouched history ∪ rebuilt``, which forces a
     full history scan (and a full rewrite, if the caller persists the
     result) even when 0.01% of keys changed. This one rewrites ONLY
-    the touched shards of a :func:`write_scd2_history` layout via
-    dynamic partition overwrite:
+    the touched shards of a :func:`write_scd2_history` layout:
 
     1. touched keys ← the new batch (distinct, null-free); touched
        SHARDS ← collected (bounded by ``n_shards``) — the same
@@ -471,52 +422,36 @@ def scd2_refresh_in_place(
     3. keepers ← rows of UNTOUCHED keys inside the touched shards
        (static shard filter + broadcast anti-join: a shard rewrite
        must carry its unchanged keys forward);
-    4. write keepers ∪ rebuilt with ``partitionOverwriteMode=dynamic``
-       — untouched shards are never read, never written.
+    4. keepers ∪ rebuilt is staged and published through
+       ``operators.store``'s partition rewrite, then the superseded
+       shard copies are retired — untouched shards are never read,
+       never written.
 
     Per-batch cost is O(touched shards' history + touched keys' feed
     + batch): with a trickle batch against fine shards, the corpus
     term vanishes — the Hudi/Iceberg copy-on-write shape in plain
-    parquet + Spark dynamic overwrite.
+    parquet.
 
-    Crash contract: dynamic overwrite is not atomic across shards, so
-    ``_SUCCESS`` is removed before the write and recreated after —
-    a crash mid-write leaves a marker-less layout every EXTERNAL
-    reader refuses, and the refresh is IDEMPOTENT (the rebuilt side
-    derives from feed ∪ batch, the keeper side from untouched keys
-    only), so recovery is re-running the same refresh: the refresher
-    opens the layout through :func:`_open_history_for_refresh`, which
-    tolerates exactly that missing marker (ADVICE r12 — a strict open
-    here would brick the layout the moment its own crash window hit).
+    Readers are never refused: a crash before the publish leaves the
+    old history current, and the refresh is idempotent (the rebuilt
+    side derives from feed ∪ batch, the keeper side from untouched
+    keys only), so recovery is re-running it.
 
     Null-key batch rows are dropped up front (ADVICE r12):
     :func:`rendezvous_shard`'s contract is that callers route null
     keys explicitly, and a null key is unrepresentable in the history
     anyway (:func:`scd2_history` excludes it) — filtering at entry
-    keeps the touched/rebuilt/keeper sides consistent instead of
-    letting a NULL shard leak into the dynamic overwrite."""
-    import os
-
+    keeps the touched/rebuilt/keeper sides consistent."""
     from pyspark.sql.functions import broadcast
 
-    from .. import fsutil
-    from . import snapshot
-    from .cow import resume_pending_cow
-    from .store import SUCCESS
+    from . import store
 
     spark = feed.sparkSession
     new_changes = new_changes.where(F.col(key_col).isNotNull())
-    # Round 16: a COW erasure/retention commit may have left touched
-    # shards owned by hidden version directories. The dynamic
-    # overwrite below writes BASE shard dirs, so a live snapshot
-    # assignment would shadow this refresh — fold the version state
-    # into base first, inside this verb's own marker-dropped window
-    # (collapse is state-driven idempotent; a crash re-runs it).
-    resume_pending_cow(spark, path)
-    if snapshot.current_version(spark, path) > 0:
-        fsutil.delete(spark, os.path.join(path, SUCCESS))
-        snapshot.collapse_snapshot(spark, path)
-    hist, meta = _open_history_for_refresh(spark, path)
+    layout = store.open_layout(
+        spark, path, "scd2 history layout", "write_scd2_history"
+    )
+    meta = layout.meta
     if meta.get("key_col") != key_col:
         raise ValueError(
             "scd2 history layout param mismatch: "
@@ -524,6 +459,9 @@ def scd2_refresh_in_place(
             f"refresh was called with {key_col!r} — rebuild with "
             "write_scd2_history"
         )
+    hist = store.open_table(
+        spark, layout, ["history_rows"], "history_schema"
+    )
     n_shards = int(meta["n_shards"])
     cols = [key_col, ts_col, value_col]
     # Materialize the changed-key set ONCE (guide §2.4/§5): it feeds
@@ -531,7 +469,8 @@ def scd2_refresh_in_place(
     # semi-join broadcast — without the pin each consumer re-scans the
     # batch source to re-derive the distinct. O(batch distinct keys)
     # by contract, so the checkpoint stays batch-sized; an RDD pin
-    # also survives the refreshByPath below (a .cache() would not).
+    # also survives the refreshByPath of the commit (a .cache() would
+    # not).
     touched = (
         new_changes.select(key_col)
         .where(F.col(key_col).isNotNull())
@@ -542,8 +481,8 @@ def scd2_refresh_in_place(
     # batch's shard set in ONE job (:func:`touched_shard_sets`)
     # instead of one distinct+collect per refresh; the caller owns
     # the contract that the list is THIS layout's HRW set for THIS
-    # batch (a wrong set silently mis-scopes keepers and the pruned
-    # feed read — the metadata-mismatch failure class).
+    # batch (a wrong set fails the stage's touched-set check or
+    # mis-scopes keepers — the metadata-mismatch failure class).
     if touched_shards is None:
         touched_sharded = touched.withColumn(
             "shard", _feed_shard(F.col(key_col), n_shards)
@@ -552,6 +491,8 @@ def scd2_refresh_in_place(
             r["shard"]
             for r in touched_sharded.select("shard").distinct().collect()
         ]
+    if not touched_shards:
+        return
     feed_slice = _touched_feed_slice(
         feed,
         touched,
@@ -577,15 +518,17 @@ def scd2_refresh_in_place(
     keepers = hist.where(F.col("shard").isin(touched_shards)).join(
         broadcast(touched), key_col, "left_anti"
     )
-    out = keepers.unionByName(rebuilt)
-    fsutil.delete(spark, os.path.join(path, SUCCESS))
-    out.repartition("shard").sortWithinPartitions(
-        key_col, "effective_from_us"
-    ).write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("shard").parquet(os.path.join(path, "history_rows"))
-    spark.catalog.refreshByPath(path)
-    fsutil.touch(spark, os.path.join(path, SUCCESS))
+    job = store.stage_rewrite(
+        spark,
+        layout,
+        "history_rows",
+        keepers.unionByName(rebuilt),
+        "shard",
+        touched_shards,
+        (key_col, "effective_from_us"),
+    )
+    store.commit_rewrite(spark, layout, [job])
+    store.retire(spark, path, ["history_rows"])
 
 
 def scd2_refresh(

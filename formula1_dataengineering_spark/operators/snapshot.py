@@ -1,51 +1,23 @@
-"""Versioned-manifest snapshot layer for stored layouts (round 16,
-VERDICT r15 item 2) — Delta/Iceberg-style snapshot-isolated reads
-over the COW rewrite protocol, without a transaction log service.
+"""Snapshot reads of stored layouts: resolve one published
+``_MANIFEST_v{N}.json`` and read each table directory as of it, in
+the style of Delta Lake and Iceberg, without a transaction log
+service. How manifests are staged, published and retired is
+``operators.store``'s; this module is the read side plus the manifest
+body algebra.
 
-The round-15 COW commit deleted ``_SUCCESS``, swapped partition
-directories in place, then restored the marker: correct and
-crash-resumable, but a reader concurrent with the commit fail-louds
-for the whole window. At 100 TB with a nightly maintenance tick that
-is a blocking window per layout per tick. This module removes it:
+- The current snapshot is the highest-numbered manifest; version 0
+  is the implicit empty snapshot (plain directories are the whole
+  truth), so there is no pointer file and no flip window.
+- A table directory reads as its base partitions minus those the
+  snapshot shadows, unioned with each owning version directory
+  filtered to the partitions it owns (:func:`snapshot_dir_read`).
+  Resolving an older manifest is time travel: superseded partition
+  copies stay on disk until retired.
 
-- A COW rewrite of partition ``k=3`` of table directory ``rel`` no
-  longer replaces ``rel/k=3``; it renames the staged copy to
-  ``rel/__v{N}/k=3`` — a version directory Spark's file index treats
-  as hidden (``_``-prefixed), so plain reads and old snapshots never
-  see it.
-- The layout-level manifest ``_MANIFEST_v{N}.json`` records, per
-  table directory, which partitions are OWNED by which version
-  directory (``assign``) and which are DROPPED (every row deleted).
-  It is published atomically (write to a temp name, rename into
-  place — rename to a fresh name is atomic on the Hadoop FS API);
-  the CURRENT snapshot is simply the highest-numbered manifest, so
-  there is no pointer file and no flip window at all. ``_SUCCESS``
-  is never touched by a versioned commit.
-- Readers resolve ONE manifest up front (:func:`read_snapshot`) and
-  assemble each table directory as: the base read minus shadowed
-  partitions, unioned with each owning version directory filtered to
-  the partitions it owns (:func:`snapshot_dir_read`). Resolving an
-  OLDER manifest gives time travel: superseded partition copies stay
-  on disk until vacuumed, so a snapshot resolved before a COW commit
-  remains exactly readable after it.
-- :func:`collapse_snapshot` folds the version state back into plain
-  base directories — state-driven and idempotent, so the in-place
-  maintenance verbs (compaction's fold, the SCD2 in-place refresher)
-  run it inside their existing marker-dropped windows and a crash at
-  ANY point re-runs to completion: a partition is pending exactly
-  while its owning version copy still exists.
-- Vacuum reclaims version directories no manifest-of-record
-  references and manifests older than the current one (sweep class
-  5) — "old snapshots readable until vacuumed", verbatim.
-
-Scale note: the manifest is O(#rewritten partitions) — bounded by
-n_shards / #cells per layout family, bytes not megabytes — and is
-read once per query on the driver. The read plan adds one filtered
-scan per LIVE version tag (vacuum keeps that at ~1), not per
-partition.
-
-No reference analog (the reference keeps everything in memory); this
-is the engine's own §2.11 storage contract maturing.
+Scale note: a manifest is O(#rewritten partitions) — bounded by
+n_shards / #cells per layout family — and is read once per open on
+the driver. The read plan adds one filtered scan per live version
+tag, not per partition.
 """
 
 from __future__ import annotations
@@ -58,9 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsutil
-from .store import MANIFEST_PREFIX, partition_filter
+from .store import MANIFEST_PREFIX, VERSION_DIR_PREFIX, partition_filter
 
-VERSION_DIR_PREFIX = "__v"
 _MANIFEST_RE = re.compile(rf"^{MANIFEST_PREFIX}(\d+)\.json$")
 _NULL_PART = "__HIVE_DEFAULT_PARTITION__"
 
@@ -125,8 +96,8 @@ def publish_snapshot(spark: SparkSession, path: str, body: dict) -> None:
     """Atomically publish ``body`` as ``_MANIFEST_v{N}.json`` (N =
     ``body['version']``). Write-to-temp + rename: the manifest either
     exists complete or not at all, and readers listing manifests
-    never see a torn file. Idempotent — re-publishing an existing
-    version is a no-op (the resume path)."""
+    never see a torn file. A published manifest is never
+    overwritten: re-publishing an existing version is a no-op."""
     final = os.path.join(path, f"{MANIFEST_PREFIX}{body['version']}.json")
     if fsutil.exists(spark, final):
         return
@@ -137,18 +108,27 @@ def publish_snapshot(spark: SparkSession, path: str, body: dict) -> None:
 
 def parse_partition_value(name: str):
     """Partition directory name → value (int or None), the inverse
-    of ``cow.partition_dir_name`` — only integral and NULL partition
-    values exist in this build's layouts (enforced at COW stage)."""
+    of ``store.partition_dir_name`` — only integral and NULL partition
+    values exist in this build's layouts (enforced at stage time)."""
     _, _, raw = name.partition("=")
     return None if raw == _NULL_PART else int(raw)
 
 
-def apply_cow_jobs(snap: dict, jobs: list[dict], new_version: int) -> dict:
-    """The NEXT snapshot body after a COW commit of ``jobs`` (each
-    ``{"dir", "partition_col", "swap": [names], "drop": [names]}``)
-    at ``new_version``: swapped partitions become owned by the new
-    version directory, dropped partitions join the dropped set, and
-    everything else carries forward."""
+def next_snapshot(
+    snap: dict,
+    jobs: list[dict],
+    version: int,
+    meta: dict,
+    folded=(),
+) -> dict:
+    """The manifest body after a rewrite of ``jobs`` (each ``{"dir",
+    "partition_col", "swap": [names], "drop": [names]}``) at
+    ``version``: swapped partitions become owned by the new version
+    directory, dropped ones join the dropped set, the entries of the
+    delta dirs of ``folded`` batches go, and everything else carries
+    forward. ``meta`` is the full post-commit layout metadata;
+    ``folded`` joins the cumulative folded batch ids."""
+    gone = set(folded)
     dirs = {
         rel: {
             "partition_col": e["partition_col"],
@@ -156,6 +136,7 @@ def apply_cow_jobs(snap: dict, jobs: list[dict], new_version: int) -> dict:
             "dropped": list(e.get("dropped", [])),
         }
         for rel, e in snap.get("dirs", {}).items()
+        if rel.partition("_delta_")[2] not in gone
     }
     for job in jobs:
         e = dirs.setdefault(
@@ -168,13 +149,18 @@ def apply_cow_jobs(snap: dict, jobs: list[dict], new_version: int) -> dict:
         )
         dropped = set(e["dropped"])
         for name in job["swap"]:
-            e["assign"][name] = new_version
+            e["assign"][name] = version
             dropped.discard(name)
         for name in job["drop"]:
             e["assign"].pop(name, None)
             dropped.add(name)
         e["dropped"] = sorted(dropped)
-    return {"version": new_version, "dirs": dirs}
+    return {
+        "version": version,
+        "dirs": dirs,
+        "meta": meta,
+        "folded": sorted(gone | set(snap.get("folded", ()))),
+    }
 
 
 def snapshot_dir_read(
@@ -241,66 +227,15 @@ def snapshot_dir_read(
     return out
 
 
-def collapse_snapshot(spark: SparkSession, path: str) -> bool:
-    """Fold the CURRENT snapshot's version state back into plain base
-    directories and retire every manifest — the bridge the in-place
-    maintenance verbs (compaction fold, SCD2 in-place refresh) run
-    inside their marker-dropped windows before touching base
-    partitions directly, so their rewrites are never shadowed by a
-    version assignment.
-
-    State-driven and idempotent at every crash point: a partition is
-    pending exactly while its owning version copy still exists —
-    delete-base happens only when the version copy is present, so a
-    re-run after ANY kill resumes where it stopped and finishes with
-    the same directories. Callers own the reader-exclusion window
-    (their ``_SUCCESS`` drop); this function never touches markers.
-    Returns True when there was version state to fold."""
-    versions = manifest_versions(spark, path)
-    if not versions:
-        return False
-    snap = read_snapshot(spark, path, versions[-1])
-    for rel, entry in snap.get("dirs", {}).items():
-        d = os.path.join(path, rel)
-        for name, tag in entry["assign"].items():
-            src = os.path.join(d, f"{VERSION_DIR_PREFIX}{int(tag)}", name)
-            if fsutil.is_dir(spark, src):
-                fsutil.delete(spark, os.path.join(d, name))
-                fsutil.rename(spark, src, os.path.join(d, name))
-            # else: already folded by a prior (crashed) run
-        for name in entry["dropped"]:
-            fsutil.delete(spark, os.path.join(d, name))
-        for child in fsutil.list_names(spark, d):
-            if child.startswith(VERSION_DIR_PREFIX):
-                fsutil.delete(spark, os.path.join(d, child))
-    for v in versions:
-        fsutil.delete(
-            spark, os.path.join(path, f"{MANIFEST_PREFIX}{v}.json")
-        )
-    spark.catalog.refreshByPath(path)
-    return True
-
-
-def referenced_tags(snap: dict, rel: str) -> set[int]:
-    """Version-directory tags the snapshot still references for
-    ``rel`` — the vacuum sweep's keep-set."""
-    entry = snap.get("dirs", {}).get(rel)
-    if not entry:
-        return set()
-    return {int(t) for t in entry["assign"].values()}
-
-
 __all__ = [
     "MANIFEST_PREFIX",
     "VERSION_DIR_PREFIX",
-    "apply_cow_jobs",
-    "collapse_snapshot",
     "current_version",
     "manifest_versions",
+    "next_snapshot",
     "parse_partition_value",
     "publish_snapshot",
     "read_snapshot",
-    "referenced_tags",
     "resolve_snapshot",
     "snapshot_dir_read",
     "versions_in",

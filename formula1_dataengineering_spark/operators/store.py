@@ -5,52 +5,71 @@ commit, and the names they commit under.
 A layout root holds:
 
 - ``_SUCCESS`` — the base commit marker. Public readers refuse a
-  layout without it (half-written, or inside a commit window).
-- ``_META.json`` — the writer's params and recorded table schemas.
-  Probing with guessed params silently returns wrong answers, so
-  every open requires it.
-- ``<table>/`` — the base tables, one file per partition.
+  layout without it: only a crashed base rebuild leaves one, and
+  re-running the writer recovers it.
+- ``_META.json`` — the base writer's params and recorded table
+  schemas. Probing with guessed params silently returns wrong
+  answers, so every open requires it.
+- ``<table>/`` — the base tables, one file per partition, and inside
+  each table directory the hidden version directories
+  ``__v<N>/`` that partition rewrites stage into.
 - ``<table>_delta_<batch_id>/`` plus ``_DELTA_<batch_id>._SUCCESS``
-  — one ingest batch and its commit marker. Readers union only the
-  deltas whose marker exists.
-- ``_staging/`` — a base rebuild's staged tables and metadata.
-- ``.spark-staging-delta_<batch_id>/`` — a refresh's staged delta
-  tables (hidden: Spark's file index never lists dot-prefixed dirs).
-- ``_compact/`` + ``_COMPACT_MANIFEST.json`` — a compaction fold
-  (``operators.compaction``); ``_cow_staging/`` +
-  ``_COW_MANIFEST.json`` — a copy-on-write rewrite
-  (``operators.cow``); ``_MANIFEST_v<N>.json`` — published snapshots
-  (``operators.snapshot``); ``_MAINTAINER_LEASE.json`` — the
+  — one ingest batch and its commit marker.
+- ``_MANIFEST_v<N>.json`` — published snapshots; the highest N is
+  the current one.
+- ``_staging/`` — a base rebuild's staged tables and metadata;
+  ``.spark-staging-delta_<batch_id>/`` — a refresh's staged delta
+  tables (hidden: Spark's file index never lists dot- or
+  underscore-prefixed dirs); ``_MAINTAINER_LEASE.json`` — the
   maintainer lease (``operators.lease``).
+
+**Partition rewrite** (:func:`stage_rewrite`, :func:`commit_rewrite`,
+:func:`retire`) — the only way any verb rewrites partitions:
+compaction, the four ``delete_*`` verbs, ``expire_scd2_history`` and
+``scd2_refresh_in_place``. Each touched table directory's new
+partitions are written into ``<table>/__v<N>/`` (N = current + 1),
+which no reader lists. The commit point is the publish of
+``_MANIFEST_v<N>.json``: a temp-file write plus a rename. The
+manifest records, per table directory, which partitions version N
+owns (``assign``) or empties (``dropped``), the full post-commit
+layout metadata (so erasure accounting lands atomically with the
+rows) and the cumulative list of batch ids a compaction folded into
+the base (``folded``). Readers resolve one manifest: base partitions
+the manifest does not shadow, plus each owning version directory
+filtered to its partitions (``operators.snapshot``). A crash before
+the rename leaves the old snapshot current and an unreferenced
+version directory; a crash after it leaves the new snapshot current.
+``_SUCCESS`` is never touched, so no reader is refused during
+maintenance, and a snapshot resolved before a commit stays readable
+after it.
+
+- Why compaction and the in-place SCD2 refresh :func:`retire` after
+  publishing and erasure and expiry do not: the first two are the
+  routine daily verbs, so their superseded bytes (older manifests,
+  unreferenced version dirs, shadowed base partitions, folded deltas
+  and their markers) go at once; an erasure's old snapshot stays
+  readable for time travel until ``vacuum_layout`` runs the same
+  :func:`retire`.
+- Why ingest deltas stay on markers: concurrent ingest during
+  maintenance is the supported interleave. Moving batches into the
+  manifest would need a compare-and-swap on the manifest name, and
+  Hadoop's local-FS rename does not give one. Live batches are the
+  markers minus the manifest's ``folded`` ids, so a retry of a folded
+  batch is a no-op instead of a double count.
 
 **Base swap** (:func:`stage_base` then :func:`swap_base`). The new
 tables build under ``_staging/`` while the previous layout stays
-fully readable — a daily pipeline keeps serving probes through a
-long rebuild. The commit window is a handful of metadata ops: stage
-``_META.json`` beside the tables, drop ``_SUCCESS``, delete what the
-rebuild supersedes (the old tables and every delta, marker, pending
-compaction or COW state and snapshot manifest), rename the staged
-tables and then the staged metadata in, refresh the session's file
-listing, touch ``_SUCCESS``. A crash while building leaves the old
-layout valid; a crash inside the window leaves a marker-less layout
-every public reader refuses, and re-running the writer completes it.
-
-- Why every delta and pending manifest goes: the new base supersedes
-  all prior ingests. A surviving delta would union removed rows back
-  in; a surviving compaction or COW manifest would let the next
-  resume rename pre-rebuild partitions over the fresh base.
-- Why the metadata is staged and renamed in after the tables: the
-  SCD2 history refresher opens its layout marker-less (that is its
-  crash recovery), so no crash point may pair new-params metadata
-  with old-params data or the reverse — a rebuild changing
-  ``n_shards`` that died between the data swap and a late metadata
-  write would hand the refresher 4-sharded data under 16-shard
-  metadata, and its dynamic overwrite would duplicate touched keys.
-  Every crash point is old-consistent, metadata-less (refused) or
-  new-consistent.
-- Why the lease survives: the maintenance verbs' rebuild arm calls
-  the writers while holding ``_MAINTAINER_LEASE.json``; deleting it
-  would hand the layout to a second maintainer mid-tick.
+fully readable. The commit window is a handful of metadata ops:
+stage ``_META.json`` beside the tables, drop ``_SUCCESS``, delete
+what the rebuild supersedes (the old tables with their version dirs,
+every delta and marker, every manifest, dead staging and the old
+metadata), rename the staged tables and then the staged metadata in,
+refresh the session's file listing, touch ``_SUCCESS``. A crash
+inside the window leaves a marker-less layout every reader refuses;
+re-running the writer completes it. The new base supersedes all
+prior ingests and rewrites, so a surviving delta or manifest would
+union removed rows back in. The lease survives: the maintenance
+verbs' rebuild arm calls the writers while holding it.
 
 **Delta commit** (:func:`stage_delta` then :func:`commit_delta`).
 A refresh writes its tables under the batch's hidden staging dir,
@@ -61,17 +80,17 @@ never loses it, and a crash inside the commit leaves the batch
 invisible until the retry lands. Idempotent per (path, batch_id).
 
 **Open** (:func:`open_layout` then :func:`open_table`). One root
-listing yields the marker, the metadata, the snapshot versions and
-the committed batches. A table directory that is missing is
-corruption — writers always create it — while one that exists but
-holds no part files is a legitimately empty table, opened from the
-schema the writer recorded.
+listing plus one manifest read yields the snapshot, the metadata
+(the manifest's, else ``_META.json``) and the live batches. A table
+directory that is missing is corruption — writers always create it —
+while one that exists but holds no part files is a legitimately
+empty table, opened from the schema the writer recorded.
 
 Single maintainer, as everywhere in the stored-layout family: one
-process writes, compacts, erases or vacuums a layout at a time;
-concurrent ingest is safe because each batch commits by its own
-marker. All IO goes through the Hadoop FileSystem API (``fsutil``),
-so the same protocol serves local paths and cluster filesystems.
+process rebuilds, compacts, erases or vacuums a layout at a time
+(``operators.lease`` enforces it for the maintenance verbs). All IO
+goes through the Hadoop FileSystem API (``fsutil``), so the same
+protocol serves local paths and cluster filesystems.
 """
 
 from __future__ import annotations
@@ -90,11 +109,11 @@ from .. import fsutil
 SUCCESS = "_SUCCESS"
 META = "_META.json"
 STAGING = "_staging"
-COMPACT_MANIFEST = "_COMPACT_MANIFEST.json"
-COMPACT_STAGING = "_compact"
-COW_MANIFEST = "_COW_MANIFEST.json"
-COW_STAGING = "_cow_staging"
 MANIFEST_PREFIX = "_MANIFEST_v"
+VERSION_DIR_PREFIX = "__v"
+#: Staging dirs of retired commit protocols: dead by definition, swept
+#: by base rebuilds and by vacuum.
+DEAD_STAGING = ("_compact", "_cow_staging")
 
 _BATCH_ID = re.compile(r"[A-Za-z0-9][A-Za-z0-9._-]*")
 
@@ -108,7 +127,8 @@ def delta_marker(batch_id: str) -> str:
 
 
 def batches_in(names: Iterable[str]) -> list[str]:
-    """The committed batch ids among a layout root's child names."""
+    """The batch ids with a commit marker among a layout root's child
+    names (folded ones included)."""
     return sorted(
         name[len("_DELTA_") : -len("._SUCCESS")]
         for name in names
@@ -117,8 +137,18 @@ def batches_in(names: Iterable[str]) -> list[str]:
 
 
 def committed_delta_batches(spark: SparkSession, path: str) -> list[str]:
-    """The committed delta batch ids of a stored layout."""
-    return batches_in(fsutil.list_names(spark, path))
+    """The live delta batch ids of a stored layout: committed and not
+    yet folded into the base."""
+    from . import snapshot
+
+    names = fsutil.list_names(spark, path)
+    snap = snapshot.resolve_snapshot(spark, path, snapshot.versions_in(names))
+    return _live(names, snap)
+
+
+def _live(names: list[str], snap: dict) -> list[str]:
+    folded = set(snap.get("folded", ()))
+    return [b for b in batches_in(names) if b not in folded]
 
 
 def check_batch_id(verb: str, batch_id: str) -> None:
@@ -143,6 +173,23 @@ def partition_filter(partition_col: str, values: list) -> Column:
     if len(non_null) != len(values):
         cond = cond | part.isNull()
     return cond
+
+
+def partition_dir_name(partition_col: str, value) -> str:
+    """The directory name Spark's partitioned writer gives
+    ``partition_col=value``. Only integers and NULL are accepted:
+    every layout partitions by an int shard or cell, and any other
+    type would need Hive path escaping to match the on-disk name."""
+    if value is None:
+        return f"{partition_col}=__HIVE_DEFAULT_PARTITION__"
+    if isinstance(value, bool) or not isinstance(value, int):
+        raise ValueError(
+            f"partition rewrite: partition value {value!r} of column "
+            f"{partition_col!r} is not an integer — deriving its "
+            "directory name would need Hive path escaping; rebuild "
+            "the layout with an integral partition column"
+        )
+    return f"{partition_col}={value}"
 
 
 # -- writing ---------------------------------------------------------------
@@ -173,29 +220,28 @@ def write_table(table: Table, d: str) -> None:
     w.parquet(d)
 
 
-def run_concurrently(thunks: list[Callable[[], None]]) -> None:
-    """Run independent Spark jobs side by side and re-raise the first
-    failure after all have finished. Each thunk runs in its own
-    ``cache_scope``: the scope stack is thread-local, so a
-    ``managed_cache`` taken in a worker would otherwise land in the
-    session fallback registry and outlive the call. A lone thunk runs
-    inline, in the caller's thread and scope."""
+def run_concurrently(thunks: list[Callable[[], object]]) -> list:
+    """Run independent Spark jobs side by side and return their
+    results in order, re-raising the first failure after all have
+    finished. Each thunk runs in its own ``cache_scope``: the scope
+    stack is thread-local, so a ``managed_cache`` taken in a worker
+    would otherwise land in the session fallback registry and outlive
+    the call. A lone thunk runs inline, in the caller's thread and
+    scope."""
     from concurrent.futures import ThreadPoolExecutor
 
     from ..caching import cache_scope
 
     if len(thunks) == 1:
-        thunks[0]()
-        return
+        return [thunks[0]()]
 
-    def scoped(fn: Callable[[], None]) -> None:
+    def scoped(fn: Callable[[], object]) -> object:
         with cache_scope():
-            fn()
+            return fn()
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(scoped, fn) for fn in thunks]
-        for f in futures:
-            f.result()
+        return [f.result() for f in futures]
 
 
 def _write_all(root: str, tables: dict[str, Table]) -> None:
@@ -222,10 +268,8 @@ def _superseded(name: str, tables: list[str]) -> bool:
     return (
         name in tables
         or name.startswith(tuple(f"{t}_delta_" for t in tables))
-        or name.startswith(
-            ("_DELTA_", COMPACT_STAGING, COW_STAGING, MANIFEST_PREFIX)
-        )
-        or name in (META, COMPACT_MANIFEST, COW_MANIFEST)
+        or name.startswith(("_DELTA_", MANIFEST_PREFIX) + DEAD_STAGING)
+        or name == META
     )
 
 
@@ -299,18 +343,24 @@ class Layout(NamedTuple):
     rebuild_hint: str
     meta: dict
     snap: dict
-    batches: list[str]
+    batches: list[str]  # live: committed and not folded
 
 
-def _meta(
+def open_layout(
     spark: SparkSession,
     path: str,
-    names: list[str],
     what: str,
     rebuild_hint: str,
-    require_success: bool = True,
-) -> dict:
-    if require_success and SUCCESS not in names:
+    snapshot_version: int | None = None,
+) -> Layout:
+    """Resolve the snapshot (``snapshot_version``, else the current
+    one), its metadata and live batches from one root listing. Refuses
+    a layout without ``_SUCCESS`` or ``_META.json``."""
+    from . import snapshot
+
+    fsutil.validate_layout_path(path, what)
+    names = fsutil.list_names(spark, path)
+    if SUCCESS not in names:
         raise ValueError(
             f"{what} at {path!r} has no _SUCCESS marker "
             "(half-written or missing index)"
@@ -320,44 +370,33 @@ def _meta(
             f"{what} at {path!r} has no _META.json — layout "
             f"params unknown; rebuild with {rebuild_hint}"
         )
-    return json.loads(fsutil.read_text(spark, os.path.join(path, META)))
-
-
-def require_layout_meta(
-    spark: SparkSession, path: str, what: str, rebuild_hint: str
-) -> dict:
-    """Validate the path, refuse a layout without ``_SUCCESS`` or
-    ``_META.json``, and return the parsed metadata."""
-    fsutil.validate_layout_path(path, what)
-    return _meta(
-        spark, path, fsutil.list_names(spark, path), what, rebuild_hint
-    )
-
-
-def open_layout(
-    spark: SparkSession,
-    path: str,
-    what: str,
-    rebuild_hint: str,
-    snapshot_version: int | None = None,
-    require_success: bool = True,
-) -> Layout:
-    """Resolve metadata, snapshot (``snapshot_version``, else the
-    current one) and committed batches from one root listing.
-
-    ``require_success=False`` is for the verbs that must run through
-    another verb's marker-less crash window (the SCD2 history
-    refresher's recovery, the erasure verbs); public readers always
-    require the marker."""
-    from . import snapshot
-
-    fsutil.validate_layout_path(path, what)
-    names = fsutil.list_names(spark, path)
-    meta = _meta(spark, path, names, what, rebuild_hint, require_success)
     snap = snapshot.resolve_snapshot(
         spark, path, snapshot.versions_in(names), snapshot_version
     )
-    return Layout(path, what, rebuild_hint, meta, snap, batches_in(names))
+    # Manifests published before they carried metadata have none.
+    meta = snap.get("meta") or json.loads(
+        fsutil.read_text(spark, os.path.join(path, META))
+    )
+    return Layout(path, what, rebuild_hint, meta, snap, _live(names, snap))
+
+
+def open_for_delta(
+    spark: SparkSession,
+    path: str,
+    verb: str,
+    batch_id: str,
+    what: str,
+    rebuild_hint: str,
+) -> Layout | None:
+    """A refresher's open: validate ``batch_id`` and open the layout,
+    or return None when a compaction already folded that batch into
+    the base — a retry is then a no-op, never a second copy of its
+    rows."""
+    check_batch_id(verb, batch_id)
+    layout = open_layout(spark, path, what, rebuild_hint)
+    if batch_id in layout.snap.get("folded", ()):
+        return None
+    return layout
 
 
 def open_table(
@@ -409,31 +448,160 @@ def open_table(
     return out
 
 
+# -- partition rewrites ----------------------------------------------------
+
+
+def _next_version(layout: Layout) -> int:
+    return int(layout.snap["version"]) + 1
+
+
+def stage_rewrite(
+    spark: SparkSession,
+    layout: Layout,
+    rel: str,
+    keep: DataFrame,
+    partition_col: str,
+    touched: list,
+    sort_cols: tuple[str, ...] = (),
+) -> dict:
+    """Write ``keep`` — the new rows of the ``touched`` partitions of
+    table directory ``rel`` — into its next version directory and
+    return the manifest job. Nothing a reader lists is modified.
+    Touched partitions left without rows are ``drop``-ped."""
+    vd = os.path.join(
+        layout.path, rel, f"{VERSION_DIR_PREFIX}{_next_version(layout)}"
+    )
+    write_table(Table(keep, partition_col, sort_cols), vd)
+    staged = {n for n in fsutil.list_names(spark, vd) if "=" in n}
+    touched_names = {partition_dir_name(partition_col, v) for v in touched}
+    stray = staged - touched_names
+    if stray:
+        raise AssertionError(
+            f"partition rewrite of {rel!r}: staged partitions {stray} "
+            "are outside the touched set — keep frame wider than the "
+            "touched slice"
+        )
+    return {
+        "dir": rel,
+        "partition_col": partition_col,
+        "swap": sorted(touched_names & staged),
+        "drop": sorted(touched_names - staged),
+    }
+
+
+def commit_rewrite(
+    spark: SparkSession,
+    layout: Layout,
+    jobs: list[dict],
+    meta: dict | None = None,
+    folded: Iterable[str] = (),
+) -> dict:
+    """Publish the next manifest over the staged ``jobs`` — the one
+    commit point (module docstring). ``meta`` is the post-commit
+    metadata (None keeps the layout's), ``folded`` the batch ids this
+    commit folds into the base. Returns the published body."""
+    from . import snapshot
+
+    body = snapshot.next_snapshot(
+        layout.snap,
+        jobs,
+        _next_version(layout),
+        layout.meta if meta is None else meta,
+        folded,
+    )
+    snapshot.publish_snapshot(spark, layout.path, body)
+    spark.catalog.refreshByPath(layout.path)
+    return body
+
+
+def retire(spark: SparkSession, path: str, tables: Iterable[str]) -> dict:
+    """Delete what the current snapshot no longer references:
+    manifests below it, version dirs it does not name, base
+    partitions it shadows, and folded delta dirs with their markers.
+    ``tables`` are the layout's own table directories; their delta
+    dirs are found from the root listing. Idempotent. Returns
+    ``{"files_removed", "bytes_reclaimed", "snapshots_retired",
+    "version_dirs_removed"}``."""
+    from . import snapshot
+
+    names = fsutil.list_names(spark, path)
+    versions = snapshot.versions_in(names)
+    snap = snapshot.resolve_snapshot(spark, path, versions)
+    folded = set(snap.get("folded", ()))
+    out = {
+        "files_removed": 0,
+        "bytes_reclaimed": 0,
+        "snapshots_retired": 0,
+        "version_dirs_removed": 0,
+    }
+
+    def sweep(p: str, key: str | None = None) -> None:
+        n, b = fsutil.du(spark, p)
+        fsutil.delete(spark, p)
+        out["files_removed"] += n
+        out["bytes_reclaimed"] += b
+        if key is not None:
+            out[key] += 1
+
+    for v in versions[:-1]:
+        manifest = os.path.join(path, f"{MANIFEST_PREFIX}{v}.json")
+        sweep(manifest, "snapshots_retired")
+    tables = set(tables)
+    rels = sorted(tables) + [
+        n
+        for n in names
+        if "_delta_" in n and n.partition("_delta_")[0] in tables
+    ]
+    for rel in rels:
+        d = os.path.join(path, rel)
+        if rel.partition("_delta_")[2] in folded:
+            sweep(d)
+            continue
+        if not fsutil.is_dir(spark, d):
+            continue
+        entry = snap.get("dirs", {}).get(rel, {})
+        assign = entry.get("assign", {})
+        keep = {f"{VERSION_DIR_PREFIX}{int(t)}" for t in assign.values()}
+        shadowed = set(assign) | set(entry.get("dropped", ()))
+        for child in fsutil.list_names(spark, d):
+            if (
+                child.startswith(VERSION_DIR_PREFIX) and child not in keep
+            ) or child in shadowed:
+                sweep(os.path.join(d, child), "version_dirs_removed")
+    for b in folded & set(batches_in(names)):
+        sweep(os.path.join(path, delta_marker(b)))
+    if out["files_removed"]:
+        spark.catalog.refreshByPath(path)
+    return out
+
+
 __all__ = [
-    "COMPACT_MANIFEST",
-    "COMPACT_STAGING",
-    "COW_MANIFEST",
-    "COW_STAGING",
+    "DEAD_STAGING",
     "Layout",
     "MANIFEST_PREFIX",
     "META",
     "STAGING",
     "SUCCESS",
     "Table",
+    "VERSION_DIR_PREFIX",
     "batches_in",
     "check_batch_id",
     "commit_delta",
+    "commit_rewrite",
     "committed_delta_batches",
     "delta_dir",
     "delta_marker",
     "discard_delta",
+    "open_for_delta",
     "open_layout",
     "open_table",
+    "partition_dir_name",
     "partition_filter",
-    "require_layout_meta",
+    "retire",
     "run_concurrently",
     "stage_base",
     "stage_delta",
+    "stage_rewrite",
     "swap_base",
     "write_table",
 ]

@@ -1,32 +1,23 @@
 """Retention / vacuum — the reclamation verbs: a year-long deployment
 accumulates garbage no other verb reclaims — staging left by crashed
-writers, compaction staging whose run died before its manifest, delta
-directories whose refresh died before the commit marker — plus, for
-the SCD2 history layout, superseded closed versions that retention
-policy says to expire.
+writers, delta directories whose refresh died before the commit
+marker, superseded snapshots — plus, for the SCD2 history layout,
+superseded closed versions that retention policy says to expire.
 
 Two verbs:
 
 - :func:`vacuum_layout` removes PHYSICAL garbage only — the layout's
-  logical content (what any reader returns) is before==after by
-  contract, because everything swept is already invisible: readers
+  current logical content (what any reader returns) is before==after
+  by contract, because everything swept is already invisible: readers
   union deltas via commit markers (an unmarked delta dir is a crashed
-  refresh), ``_staging`` belongs to a writer that will recreate it,
-  ``_compact`` / ``_cow_staging`` without their manifest are a
-  compaction / COW swap that never reached its resume point, and
-  ``.spark-staging-*`` residue is a killed Spark write job's own
-  scratch. A manifest PINS its staging (``_COMPACT_MANIFEST.json`` →
-  ``_compact``, ``_COW_MANIFEST.json`` → ``_cow_staging``): that
-  staging is a committed-to rewrite mid-recovery, and sweeping it
-  would break the crash-resume contract — vacuum refuses (reported
-  as ``pinned``), finish the pending commit first.
+  refresh), staging belongs to a writer that will recreate it or to
+  a retired protocol, ``.spark-staging-*`` residue is a killed Spark
+  write job's own scratch, and superseded snapshot state is what
+  :func:`operators.store.retire` deletes after compaction.
 - :func:`expire_scd2_history` changes logical content BY POLICY:
   per key it keeps the current row plus the ``retain_versions`` most
   recent closed versions and deletes older ones, copy-on-write over
-  touched shards only — via the staged manifest swap of
-  :mod:`operators.cow` (round 15: the round-14 in-place dynamic
-  overwrite shared the deletion verbs' survivor-loss crash window,
-  ADVICE r14 medium).
+  touched shards only (``operators.store``'s partition rewrite).
 
 Concurrency: single maintainer, same as ``operators.compaction``.
 Concurrent INGEST during :func:`vacuum_layout` is NOT safe for the
@@ -42,19 +33,13 @@ shards holding them.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import fsutil
-from . import snapshot, store
-from .cow import (
-    resume_pending_cow,
-    run_cow_swap,
-    stage_partition_rewrite,
-)
+from . import store
 from .lease import maintainer_verb
 
 
@@ -62,63 +47,54 @@ from .lease import maintainer_verb
 def vacuum_layout(
     spark: SparkSession, path: str, what: str = "stored layout"
 ) -> dict:
-    """Sweep a delta-bearing stored layout's physical garbage. Only
-    five classes are removed — anything else under the root
-    (committed deltas and their markers, base tables, metadata,
-    gate sentinels, cached "_"-prefixed siblings like a stream
-    source) is left untouched, deliberately: vacuum deletes only
-    what the layout's own protocols define as dead.
+    """Sweep a stored layout's physical garbage. Only four classes
+    are removed — anything else under the root (live deltas and their
+    markers, base tables, metadata, gate sentinels, cached
+    "_"-prefixed siblings like a stream source) is left untouched,
+    deliberately: vacuum deletes only what the layout's own protocols
+    define as dead.
 
-    1. ``_staging/`` — a crashed base rebuild's residue (the next
-       writer would sweep it anyway; vacuum reclaims it now);
-    2. ``_compact/`` / ``_cow_staging/`` — a compaction or COW swap
-       that died during STAGE, iff no matching manifest exists (a
-       manifest pins its staging for resume: reported via
-       ``pinned=True``, nothing of that staging is touched);
-    3. ``<table>_delta_<bid>/`` directories whose
+    1. staging — ``_staging/`` (a crashed base rebuild's residue; the
+       next writer would sweep it anyway) and the ``_compact/`` /
+       ``_cow_staging/`` dirs of retired commit protocols;
+    2. ``<table>_delta_<bid>/`` directories whose
        ``_DELTA_<bid>._SUCCESS`` commit marker is missing — a
        refresh that died between the delta write and the marker
        (readers already ignore them). The ``<table>`` prefix must
-       name an existing table directory of THIS layout (ADVICE r14:
-       the round-14 substring match would have destroyed an
-       unrelated sibling like ``notes_delta_old``);
-    4. ``.spark-staging-*`` residue — a killed Spark write job's own
+       name an existing table directory of THIS layout, so an
+       unrelated sibling like ``notes_delta_old`` survives;
+    3. ``.spark-staging-*`` residue — a killed Spark write job's own
        scratch, at the layout root and one level down inside each
        table/delta directory (where partitioned writers put it);
-    5. superseded SNAPSHOT state (round 16): manifests below the
-       current version, ``__v*`` version directories neither the
-       current snapshot nor a pending COW commit references, and base
-       partition copies the current snapshot shadows. Time-travel
-       reads of old snapshots work until this sweep, never after.
+    4. superseded snapshot state — :func:`operators.store.retire`:
+       manifests below the current version, version directories the
+       current snapshot does not reference (a crashed rewrite's
+       staging included), base partitions it shadows, and folded
+       deltas with their markers. Time-travel reads of old snapshots
+       work until this sweep, never after.
 
     Requires a readable layout (``_SUCCESS`` present): vacuuming
-    under a writer's commit window would race the swap. Returns
+    under a rebuild's commit window would race the swap. Returns
     ``{"files_removed", "bytes_reclaimed", "orphan_deltas_removed",
     "staging_removed", "spark_staging_removed", "snapshots_retired",
-    "version_dirs_removed", "pinned"}``."""
+    "version_dirs_removed"}``."""
     fsutil.validate_layout_path(path, what)
     names = fsutil.list_names(spark, path)
     if store.SUCCESS not in names:
         raise ValueError(
             f"{what} at {path!r} has no _SUCCESS marker — a crashed "
-            "or in-flight write; recover it (re-run the writer or "
-            "resume the compaction) before vacuuming"
+            "or in-flight rebuild; re-run the writer before vacuuming"
         )
-    committed = set(store.batches_in(names))
-    pins = {
-        store.COMPACT_STAGING: store.COMPACT_MANIFEST in names,
-        store.COW_STAGING: store.COW_MANIFEST in names,
-    }
+    marked = set(store.batches_in(names))
 
     def _spark_written(d: str) -> bool:
         # A directory belongs to the layout only if its DIRECT
         # children look like a Spark-written table: its own _SUCCESS
         # marker, a *.parquet part file, or an '='-partition dir
         # (ADVICE r15: the bare name heuristic treated user scratch
-        # like notes/ as a table, so the class-4 sweep descended into
-        # it and the class-3 prefix match could reclaim its deltas).
-        # A hidden child (.spark-staging residue INSIDE scratch) is
-        # deliberately not evidence of ownership.
+        # like notes/ as a table). A hidden child (.spark-staging
+        # residue INSIDE scratch) is deliberately not evidence of
+        # ownership.
         return any(
             c == store.SUCCESS or c.endswith(".parquet") or "=" in c
             for c in fsutil.list_names(spark, d)
@@ -127,7 +103,7 @@ def vacuum_layout(
 
     # The layout's own table directories: non-hidden dirs that are
     # neither deltas nor partition dirs AND carry Spark-written
-    # content — the anchor classes 3 and 4 require.
+    # content — the anchor classes 2 and 3 require.
     tables = {
         n
         for n in names
@@ -137,42 +113,33 @@ def vacuum_layout(
         and fsutil.is_dir(spark, os.path.join(path, n))
         and _spark_written(os.path.join(path, n))
     }
-    files_removed = 0
-    bytes_reclaimed = 0
-    orphan_deltas = 0
-    staging_removed = 0
-    spark_staging = 0
+    out = {
+        "files_removed": 0,
+        "bytes_reclaimed": 0,
+        "orphan_deltas_removed": 0,
+        "staging_removed": 0,
+        "spark_staging_removed": 0,
+    }
 
-    def sweep(d: str) -> tuple[int, int]:
+    def sweep(d: str, key: str) -> None:
         n, b = fsutil.du(spark, d)
         fsutil.delete(spark, d)
-        return n, b
+        out["files_removed"] += n
+        out["bytes_reclaimed"] += b
+        out[key] += 1
 
     for name in names:
-        if name == store.STAGING or (
-            name in pins and not pins[name]
-        ):
-            n, b = sweep(os.path.join(path, name))
-            files_removed += n
-            bytes_reclaimed += b
-            staging_removed += 1
+        if name in (store.STAGING,) + store.DEAD_STAGING:
+            sweep(os.path.join(path, name), "staging_removed")
         elif name.startswith(".spark-staging"):
-            n, b = sweep(os.path.join(path, name))
-            files_removed += n
-            bytes_reclaimed += b
-            spark_staging += 1
+            sweep(os.path.join(path, name), "spark_staging_removed")
         elif "_delta_" in name:
             table, _, bid = name.partition("_delta_")
-            if table in tables and bid not in committed:
-                n, b = sweep(os.path.join(path, name))
-                files_removed += n
-                bytes_reclaimed += b
-                orphan_deltas += 1
-    # Class 4, one level down: partitioned writers create their job
-    # scratch INSIDE the output directory. Same anchor as class 3
-    # (round-15 review): descend only into the layout's OWN table and
-    # delta directories — never into user scratch whose name merely
-    # contains '_delta_'.
+            if table in tables and bid not in marked:
+                sweep(os.path.join(path, name), "orphan_deltas_removed")
+    # Class 3, one level down: partitioned writers create their job
+    # scratch INSIDE the output directory. Same anchor as class 2:
+    # descend only into the layout's OWN table and delta directories.
     own_deltas = {
         n
         for n in names
@@ -184,75 +151,13 @@ def vacuum_layout(
             continue
         for child in fsutil.list_names(spark, d):
             if child.startswith(".spark-staging"):
-                n, b = sweep(os.path.join(d, child))
-                files_removed += n
-                bytes_reclaimed += b
-                spark_staging += 1
-    # Class 5 (round 16, VERDICT r15 item 2): retire superseded
-    # snapshot state. Keep-set = everything the CURRENT snapshot
-    # references plus everything a PENDING COW commit will reference;
-    # everything older — manifests below the current version, version
-    # directories no manifest-of-record names, and base partition
-    # copies the current snapshot shadows (assigned elsewhere or
-    # dropped) — is reclaimable garbage. This is exactly "old
-    # snapshots readable until vacuumed": time-travel reads work up
-    # to this sweep, never after it.
-    versions = snapshot.versions_in(names)
-    snap = snapshot.resolve_snapshot(spark, path, versions)
-    pending_snap: dict = {"version": 0, "dirs": {}}
-    if pins[store.COW_STAGING]:
-        cow_mp = os.path.join(path, store.COW_MANIFEST)
-        pending_snap = json.loads(fsutil.read_text(spark, cow_mp)).get(
-            "snap"
-        ) or {"version": 0, "dirs": {}}
-    snapshots_retired = 0
-    version_dirs_removed = 0
-    for v in versions[:-1]:
-        n, b = sweep(
-            os.path.join(path, f"{snapshot.MANIFEST_PREFIX}{v}.json")
-        )
-        files_removed += n
-        bytes_reclaimed += b
-        snapshots_retired += 1
-    for rel in sorted(tables | own_deltas):
-        d = os.path.join(path, rel)
-        if not fsutil.is_dir(spark, d):
-            continue
-        keep_tags = snapshot.referenced_tags(
-            snap, rel
-        ) | snapshot.referenced_tags(pending_snap, rel)
-        entry = snap.get("dirs", {}).get(rel, {})
-        shadowed = set(entry.get("assign", {})) | set(
-            entry.get("dropped", [])
-        )
-        for child in fsutil.list_names(spark, d):
-            if child.startswith(snapshot.VERSION_DIR_PREFIX):
-                try:
-                    tag = int(child[len(snapshot.VERSION_DIR_PREFIX):])
-                except ValueError:
-                    continue  # not a version dir of this protocol
-                if tag not in keep_tags:
-                    n, b = sweep(os.path.join(d, child))
-                    files_removed += n
-                    bytes_reclaimed += b
-                    version_dirs_removed += 1
-            elif child in shadowed:
-                n, b = sweep(os.path.join(d, child))
-                files_removed += n
-                bytes_reclaimed += b
-                version_dirs_removed += 1
-    if files_removed:
+                sweep(os.path.join(d, child), "spark_staging_removed")
+    if out["files_removed"]:
         spark.catalog.refreshByPath(path)
-    return {
-        "files_removed": files_removed,
-        "bytes_reclaimed": bytes_reclaimed,
-        "orphan_deltas_removed": orphan_deltas,
-        "staging_removed": staging_removed,
-        "spark_staging_removed": spark_staging,
-        "snapshots_retired": snapshots_retired,
-        "version_dirs_removed": version_dirs_removed,
-        "pinned": any(pins.values()),
-    }
+    retired = store.retire(spark, path, tables)
+    out["files_removed"] += retired.pop("files_removed")
+    out["bytes_reclaimed"] += retired.pop("bytes_reclaimed")
+    return {**out, **retired}
 
 
 @maintainer_verb
@@ -264,29 +169,30 @@ def expire_scd2_history(
     versions (by ``effective_from_us`` descending — unique per key by
     the :func:`operators.scd.scd2_history` tie contract) and delete
     everything older. Copy-on-write: only shards holding at least one
-    expirable row are rewritten, through the staged manifest swap of
-    :mod:`operators.cow` (untouched shards never read or written);
-    the touched-shard set is a bounded driver collect (≤ n_shards),
-    the same static-pruning discipline as the COW refresh.
+    expirable row are rewritten, through ``operators.store``'s
+    partition rewrite (untouched shards never read or written); the
+    touched-shard set is a bounded driver collect (≤ n_shards), the
+    same static-pruning discipline as the in-place refresh.
 
-    Crash contract = the COW swap's: the live layout stays readable
-    through STAGE; from the manifest on, the commit is idempotent
-    metadata ops that ANY family verb (or re-running this expiry)
-    resumes to completion first. A re-run after full commit is a
-    clean no-op (already-swept shards have nothing left to expire).
+    The layout stays readable throughout and the pre-expiry snapshot
+    stays readable until vacuum. A crash before the publish leaves
+    the old snapshot current; a re-run after a full commit is a clean
+    no-op (already-swept shards have nothing left to expire).
 
     Returns ``{"rows_expired", "shards_rewritten"}`` (both 0 = clean
-    no-op, marker untouched)."""
-    from .scd import _open_history_for_refresh
-
+    no-op, nothing published)."""
     if retain_versions < 0:
         raise ValueError(
             f"expire_scd2_history: retain_versions={retain_versions} "
             "must be >= 0 (0 keeps only each key's current row)"
         )
-    resume_pending_cow(spark, path)
-    hist, meta = _open_history_for_refresh(spark, path)
-    key_col = meta["key_col"]
+    layout = store.open_layout(
+        spark, path, "scd2 history layout", "write_scd2_history"
+    )
+    hist = store.open_table(
+        spark, layout, ["history_rows"], "history_schema"
+    )
+    key_col = layout.meta["key_col"]
     w = Window.partitionBy(key_col).orderBy(
         F.col("effective_from_us").desc()
     )
@@ -314,17 +220,16 @@ def expire_scd2_history(
         .drop("__rk")
     )
     out = keep_current.unionByName(keep_closed)
-    fsutil.delete(spark, os.path.join(path, store.COW_STAGING))
-    job = stage_partition_rewrite(
+    job = store.stage_rewrite(
         spark,
-        path,
-        os.path.join(path, "history_rows"),
+        layout,
+        "history_rows",
         out,
         "shard",
         touched,
         (key_col, "effective_from_us"),
     )
-    run_cow_swap(spark, path, [job], None)
+    store.commit_rewrite(spark, layout, [job])
     return {
         "rows_expired": rows_expired,
         "shards_rewritten": len(touched),

@@ -6256,8 +6256,8 @@ def scd2_cow_refresh_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     the round-12 completion of the refresh story: scd2_refresh still
     scans (and, if persisted, rewrites) the full history for the
     untouched pass-through; scd2_refresh_in_place rewrites ONLY the
-    touched shards of a write_scd2_history layout via dynamic
-    partition overwrite (keepers = untouched keys inside touched
+    touched shards of a write_scd2_history layout via a versioned
+    partition rewrite (keepers = untouched keys inside touched
     shards carried forward; untouched shards never read, never
     written — the Hudi/Iceberg COW shape in plain parquet). The
     refreshed LAYOUT read back must hash-equal the full rebuild over
@@ -6827,8 +6827,9 @@ def dedup_index_compaction_probe(
     100 TB story: a year of daily ingests is 365 delta directories —
     365 extra scans unioned into every probe. Compaction reclaims
     them for the cost of rewriting only the shards the deltas
-    actually touch, while the layout stays readable through staging
-    and a crash mid-commit is resumable (the manifest protocol)."""
+    actually touch, while the layout stays readable throughout (the
+    fold publishes one snapshot manifest; a crash leaves the old
+    snapshot current and a re-run completes it)."""
     from ..operators.compaction import compact_dedup_index
     from ..operators.dedup import (
         incremental_dedup_from_index,
@@ -7538,8 +7539,8 @@ def layout_vacuum_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB story: the sweep is pure filesystem metadata (listing +
     content summaries + recursive deletes); nothing is read. The
-    manifest-pins-staging refusal (crash-resume contract) is pinned
-    in tests."""
+    ``_compact`` plant is staging of a retired commit protocol, dead
+    by definition; the snapshot-retire class is pinned in tests."""
     from ..operators.scd import read_scd2_feed, refresh_scd2_feed, scd2_history, write_scd2_feed
     from ..operators.vacuum import vacuum_layout
     from ..sources.catalog import layout_artifact
@@ -7736,9 +7737,9 @@ def compaction_ingest_interleave(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """COMPACTION × CONCURRENT INGEST interleave (VERDICT r13
-    item 5): the manifest names exactly the batches being folded, so
-    a delta landing DURING compaction — between STAGE and COMMIT, the
-    widest window — must survive the commit and stay probe-able. The
+    item 5): the manifest folds exactly the batches the compaction
+    opened, so a delta landing DURING compaction — between stage and
+    publish, the widest window — must stay live and probe-able. The
     module claimed it; this gate PROVES it: day1+day2 fold while
     day3's refresh lands inside the window (via the compaction
     engine's ``on_staged`` hook, the supported-interleave seam), and
@@ -7746,10 +7747,10 @@ def compaction_ingest_interleave(
     e2e chain's one-truth reprobe (base ∪ ALL THREE days' accepted
     docs — a commit that swept or half-saw day3 would flip its docs'
     flags back to 'ingest'). Proof columns: ``n_folded`` (exactly the
-    2 manifest-named batches), ``interleaved_committed`` (day3's
-    commit marker survived: 1), ``fold_resumed`` (false — this is the
-    no-crash interleave; the crash+resume interleave is pinned in
-    tests/test_compaction.py)."""
+    2 folded batches), ``interleaved_committed`` (day3 is still a
+    live batch: 1), ``fold_resumed`` (always false: a crashed fold
+    is recovered by a plain re-run, there is no resume path; the
+    crash interleave is pinned in tests/test_compaction.py)."""
     from ..operators.compaction import compact_dedup_index
     from ..operators.dedup import (
         incremental_dedup_from_index,
@@ -7766,7 +7767,7 @@ def compaction_ingest_interleave(
     path, fresh = layout_artifact(
         sf_dir, "spark_graft_interleave_v1", "documents"
     )
-    state: dict = {"n_folded": 0, "resumed": False}
+    state: dict = {"n_folded": 0}
 
     def mutate() -> None:
         write_dedup_index(corpus, path)
@@ -7787,14 +7788,12 @@ def compaction_ingest_interleave(
         info = compact_dedup_index(
             spark,
             path,
-            # The concurrent ingest: day3 lands after the manifest is
-            # written, before the commit swaps partitions — the
-            # layout is still fully readable here (_SUCCESS intact
-            # through STAGE), exactly a refresh racing the fold.
+            # The concurrent ingest: day3 lands after the fold is
+            # staged, before its manifest is published — exactly a
+            # refresh racing the fold.
             on_staged=lambda: refresh_dedup_index(day(2), path, "day3"),
         )
         state["n_folded"] = info["n_deltas_folded"]
-        state["resumed"] = info["resumed"]
 
     _gate_chain(spark, path, fresh, mutate, state)
     surviving = committed_delta_batches(spark, path)
@@ -7805,7 +7804,7 @@ def compaction_ingest_interleave(
         F.col("action").alias("final_action"),
         F.lit(state["n_folded"]).cast("int").alias("n_folded"),
         F.lit(len(surviving)).cast("int").alias("interleaved_committed"),
-        F.lit(state["resumed"]).alias("fold_resumed"),
+        F.lit(False).alias("fold_resumed"),
     )
 
 
@@ -8274,13 +8273,12 @@ def ann_sampled_recall_referee(
     # same committed index state — overlap them (guide §2.6) so the
     # sampled referee's tasks back-fill the full referee's stragglers
     # instead of paying the two chains' latencies end to end (r17).
-    from concurrent.futures import ThreadPoolExecutor
+    # Each runs in its own cache scope.
+    from ..operators.store import run_concurrently
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_full = pool.submit(row, "full", None)
-        f_sampled = pool.submit(row, "sampled", (1, 2))
-        full = f_full.result()
-        sampled = f_sampled.result()
+    full, sampled = run_concurrently(
+        [lambda: row("full", None), lambda: row("sampled", (1, 2))]
+    )
     schema = StructType(
         [
             StructField("mode", StringType()),

@@ -1,7 +1,8 @@
 """Delta compaction of the stored layouts (operators/compaction.py,
 VERDICT r12 item 1): (base ∪ deltas) before == base after, delta
 directories and commit markers gone, untouched base partitions
-byte-identical, crash-mid-commit resumable, no-op without deltas."""
+byte-identical, a crash leaves the layout readable and a re-run
+completes it, no-op without deltas."""
 
 from __future__ import annotations
 
@@ -92,7 +93,6 @@ def test_compact_dedup_index_folds_deltas(spark, tmp_path):
     summary = compact_dedup_index(spark, path)
     assert summary["n_deltas_folded"] == 2
     assert summary["batch_ids"] == ["day1", "day2"]
-    assert not summary["resumed"]
     assert _delta_residue(path) == []
     h_after, b_after, meta2 = read_dedup_index(spark, path)
     assert _rows(h_after) == want_h
@@ -107,7 +107,8 @@ def test_compact_dedup_untouched_partitions_byte_identical(
     spark, tmp_path
 ):
     """The partitions the deltas do not touch are never read and
-    never written: their part files keep names and bytes."""
+    never written: their part files keep names and bytes (the folded
+    partitions live in the new version directory)."""
     from formula1_dataengineering_spark.operators.compaction import (
         compact_dedup_index,
     )
@@ -142,6 +143,7 @@ def test_compact_dedup_untouched_partitions_byte_identical(
             p: h
             for p, h in after.items()
             if p.split(os.sep)[0] not in touched
+            and not p.startswith("__v")
         }
         assert untouched_before, "need untouched shards for the claim"
         assert untouched_before == untouched_after
@@ -240,9 +242,9 @@ def test_compact_scd2_feed_folds_daily_appends(spark, tmp_path):
 
 
 def test_compact_crash_mid_commit_resumes(spark, tmp_path, monkeypatch):
-    """A crash during the COMMIT phase leaves a marker-less layout
-    (readers refuse) plus the manifest; re-running the same compact_*
-    call resumes the commit and completes it."""
+    """A crash at the commit point (the manifest rename) leaves the
+    layout readable — marker intact, base ∪ deltas still served — and
+    re-running the same compact_* call completes the fold."""
     from formula1_dataengineering_spark import fsutil
     from formula1_dataengineering_spark.operators.compaction import (
         compact_dedup_index,
@@ -263,11 +265,9 @@ def test_compact_crash_mid_commit_resumes(spark, tmp_path, monkeypatch):
     want_h, want_b = _rows(h_before), _rows(b_before)
 
     real_rename = fsutil.rename
-    calls = {"n": 0}
 
     def crashing_rename(spark_, src, dst):
-        calls["n"] += 1
-        if calls["n"] == 3:
+        if "_MANIFEST_v" in dst:
             raise RuntimeError("simulated crash mid-commit")
         return real_rename(spark_, src, dst)
 
@@ -275,17 +275,13 @@ def test_compact_crash_mid_commit_resumes(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="simulated crash"):
         compact_dedup_index(spark, path)
     monkeypatch.setattr(fsutil, "rename", real_rename)
-    # The crash window: marker-less, manifest present, readers refuse.
-    assert not os.path.exists(os.path.join(path, "_SUCCESS"))
-    assert os.path.exists(os.path.join(path, "_COMPACT_MANIFEST.json"))
-    with pytest.raises(ValueError, match="no _SUCCESS marker"):
-        read_dedup_index(spark, path)
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    h_mid, b_mid, _ = read_dedup_index(spark, path)
+    assert _rows(h_mid) == want_h and _rows(b_mid) == want_b
     # Recovery = re-running the same call.
     summary = compact_dedup_index(spark, path)
-    assert summary["resumed"]
     assert summary["batch_ids"] == ["day1"]
     assert _delta_residue(path) == []
-    assert not os.path.exists(os.path.join(path, "_COMPACT_MANIFEST.json"))
     h_after, b_after, _ = read_dedup_index(spark, path)
     assert _rows(h_after) == want_h
     assert _rows(b_after) == want_b
@@ -323,8 +319,8 @@ def test_compact_zero_row_delta_days(spark, tmp_path):
 def test_compact_refuses_markerless_layout_without_manifest(
     spark, tmp_path
 ):
-    """Marker-less WITHOUT a manifest is someone else's crash (a
-    half-written rebuild), not a resumable compaction — refuse."""
+    """A marker-less layout is a crashed rebuild — refuse; re-running
+    the writer recovers it."""
     from formula1_dataengineering_spark.operators.compaction import (
         compact_dedup_index,
     )
@@ -341,7 +337,7 @@ def test_compact_refuses_markerless_layout_without_manifest(
 
 
 def test_compact_file_scheme_uri_roundtrip(spark, tmp_path):
-    """The whole lifecycle (stage, manifest, commit) through a
+    """The whole lifecycle (stage, publish, retire) through a
     file:/-scheme URI — the Hadoop-FS portability witness."""
     from formula1_dataengineering_spark.operators.compaction import (
         compact_dedup_index,
@@ -376,7 +372,7 @@ def test_compact_preserves_null_key_default_partition(spark, tmp_path):
     doesn't touch it and (b) must merge correctly when a delta DOES
     carry null-key rows — isin() never matches NULL, so the engine
     adds an explicit isNull arm, and the "_"-prefixed partition dir
-    must not be mistaken for a marker during the swap."""
+    must not be mistaken for a version dir."""
     from datetime import datetime, timezone
 
     from formula1_dataengineering_spark.operators.compaction import (
@@ -432,15 +428,12 @@ def test_compact_preserves_null_key_default_partition(spark, tmp_path):
 
 
 def test_base_rebuild_purges_crashed_compaction_state(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path
 ):
-    """Round-13 review (critical): if a compaction crashes mid-commit
-    and the operator recovers by REBUILDING the base instead of
-    re-running compact_*, the rebuild must purge the stale manifest
-    and staged partitions — otherwise the next compact_* call would
-    'resume' pre-rebuild staged data over the fresh base under a
-    valid marker."""
-    from formula1_dataengineering_spark import fsutil
+    """Round-13 review (critical): if a compaction crashes after
+    staging and the operator recovers by REBUILDING the base instead
+    of re-running compact_*, the rebuild must purge the staged
+    version dirs, and the next compaction is a harmless no-op."""
     from formula1_dataengineering_spark.operators.compaction import (
         compact_dedup_index,
     )
@@ -457,40 +450,31 @@ def test_base_rebuild_purges_crashed_compaction_state(
     write_dedup_index(corpus, path, n_shards=8)
     refresh_dedup_index(day1, path, "day1")
 
-    real_rename = fsutil.rename
-    calls = {"n": 0}
+    def crash():
+        raise RuntimeError("simulated crash before the publish")
 
-    def crashing_rename(spark_, src, dst):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise RuntimeError("simulated crash mid-commit")
-        return real_rename(spark_, src, dst)
-
-    monkeypatch.setattr(fsutil, "rename", crashing_rename)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        compact_dedup_index(spark, path)
-    monkeypatch.setattr(fsutil, "rename", real_rename)
-    assert os.path.exists(os.path.join(path, "_COMPACT_MANIFEST.json"))
+        compact_dedup_index(spark, path, on_staged=crash)
+    assert "__v1" in os.listdir(os.path.join(path, "content_hashes"))
 
     # Recovery path B: full base rebuild over the corrected corpus.
     corpus2 = d.where("doc_id % 5 != 0").unionByName(day1)
     write_dedup_index(corpus2, path, n_shards=8)
-    assert not os.path.exists(os.path.join(path, "_COMPACT_MANIFEST.json"))
-    assert not os.path.exists(os.path.join(path, "_compact"))
+    for t in ("content_hashes", "band_rows"):
+        assert "__v1" not in os.listdir(os.path.join(path, t))
     want_h, want_b, _ = read_dedup_index(spark, path)
     want_h, want_b = _rows(want_h), _rows(want_b)
-    # The next compaction is a harmless no-op, never a stale resume.
     summary = compact_dedup_index(spark, path)
-    assert summary["n_deltas_folded"] == 0 and not summary["resumed"]
+    assert summary["n_deltas_folded"] == 0
     h, b, _ = read_dedup_index(spark, path)
     assert _rows(h) == want_h and _rows(b) == want_b
 
 
 def test_compact_interleaved_ingest_survives_commit(spark, tmp_path):
-    """A delta landing between STAGE and COMMIT (the on_staged seam —
-    a refresh racing the fold) survives: the manifest names exactly
-    the folded batches, so the commit deletes only those, and the
-    post-fold read is base(folded) ∪ the interleaved delta."""
+    """A delta landing between stage and publish (the on_staged seam
+    — a refresh racing the fold) survives: the manifest folds exactly
+    the batches the compaction opened, retire deletes only those, and
+    the post-fold read is base(folded) ∪ the interleaved delta."""
     from formula1_dataengineering_spark.operators.compaction import (
         compact_dedup_index,
     )
@@ -539,15 +523,14 @@ def test_compact_interleaved_ingest_survives_commit(spark, tmp_path):
 
 
 def test_compact_crash_after_manifest_with_interleaved_delta(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
-    """Crash in the manifest→commit window WITH a concurrent delta
-    landed inside it: the re-run resumes the commit from the
-    manifest (folding only the named batches) and the interleaved
-    delta still survives, probe-able throughout."""
-    from formula1_dataengineering_spark.operators.compaction import (
-        compact_dedup_index,
-    )
+    """Crash after the manifest publish, before retire, WITH a
+    concurrent delta landed inside the fold: readers already see the
+    folded base plus the interleaved delta — the folded batches'
+    markers are still on disk but no longer live — and the next
+    compaction folds the interleaved delta and retires everything."""
+    from formula1_dataengineering_spark.operators import compaction, store
     from formula1_dataengineering_spark.operators.dedup import (
         read_dedup_index,
         refresh_dedup_index,
@@ -565,25 +548,22 @@ def test_compact_crash_after_manifest_with_interleaved_delta(
     refresh_dedup_index(day2, path, "day2")
     want_all = None
 
-    class Boom(RuntimeError):
-        pass
-
-    def land_then_crash():
+    def land():
         nonlocal want_all
         refresh_dedup_index(day3, path, "day3")
         want_all = _rows(read_dedup_index(spark, path)[0])
-        raise Boom("crash between manifest and commit")
 
-    with pytest.raises(Boom):
-        compact_dedup_index(spark, path, on_staged=land_then_crash)
-    # The crashed window left the manifest; the re-run RESUMES the
-    # commit it describes instead of re-staging.
-    summary = compact_dedup_index(spark, path)
-    assert summary["resumed"]
-    assert summary["batch_ids"] == ["day1", "day2"]
-    assert sorted(_delta_residue(path)) == [
-        "_DELTA_day3._SUCCESS",
-        "band_rows_delta_day3",
-        "content_hashes_delta_day3",
-    ]
+    def crash(*_):
+        raise RuntimeError("crash between publish and retire")
+
+    with monkeypatch.context() as m:
+        m.setattr(store, "retire", crash)
+        with pytest.raises(RuntimeError, match="crash between"):
+            compaction.compact_dedup_index(spark, path, on_staged=land)
+    assert "_DELTA_day1._SUCCESS" in os.listdir(path)
+    assert store.committed_delta_batches(spark, path) == ["day3"]
+    assert _rows(read_dedup_index(spark, path)[0]) == want_all
+    summary = compaction.compact_dedup_index(spark, path)
+    assert summary["batch_ids"] == ["day3"]
+    assert _delta_residue(path) == []
     assert _rows(read_dedup_index(spark, path)[0]) == want_all

@@ -1,8 +1,9 @@
 """Targeted deletion / retraction (operators/deletion.py): rows
 physically gone from base AND committed deltas, untouched partitions
 byte-identical, emptied partition directories removed, static HRW
-pruning for key-sharded layouts, idempotent re-runs, and recovery
-through the marker-less crash window."""
+pruning for key-sharded layouts, idempotent re-runs, a crash that
+leaves the old snapshot current, and refusal of a marker-less
+layout."""
 
 from __future__ import annotations
 
@@ -177,35 +178,26 @@ def test_feed_key_delete_static_pruning_and_empty_partitions(
     assert os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def test_delete_recovers_through_markerless_window(spark, tmp_path):
-    from formula1_dataengineering_spark.operators.scd import (
-        read_scd2_feed,
-        write_scd2_feed,
-    )
+def test_delete_refuses_markerless_layout(spark, tmp_path):
+    """A marker-less layout is a crashed rebuild: the erasure refuses
+    it like every reader does, and re-running the writer recovers
+    it."""
+    from formula1_dataengineering_spark.operators.scd import write_scd2_feed
 
     rows = [(i % 4, 1000 + i, "x") for i in range(16)]
     feed = spark.createDataFrame(rows, "k long, ts long, v string")
     path = str(tmp_path / "feed")
     write_scd2_feed(feed, path, "k", "ts", "v", n_shards=2)
-    # Another verb's crash window left the marker missing (e.g. the
-    # in-place refresher). The delete must still open
-    # marker-tolerantly and land; under the round-16 versioned
-    # protocol it no longer touches the marker at all — recovery of
-    # the marker belongs to re-running the verb that dropped it
-    # (emulated by the touch below).
     os.remove(os.path.join(path, "_SUCCESS"))
     erased = spark.createDataFrame([(1,)], "k long")
-    info = delete_scd2_feed_keys(spark, path, erased)
-    assert info["rows_deleted"] == 4
-    assert not os.path.exists(os.path.join(path, "_SUCCESS"))
-    open(os.path.join(path, "_SUCCESS"), "w").close()
-    after, _ = read_scd2_feed(spark, path)
-    assert after.where("k = 1").count() == 0
+    with pytest.raises(ValueError, match="no _SUCCESS marker"):
+        delete_scd2_feed_keys(spark, path, erased)
 
 
 def test_delete_refuses_metaless_layout(spark, tmp_path):
     path = str(tmp_path / "nothing")
     os.makedirs(path)
+    open(os.path.join(path, "_SUCCESS"), "w").close()
     ids = spark.createDataFrame([(1,)], "doc_id long")
     with pytest.raises(ValueError, match="no _META.json"):
         delete_from_dedup_index(spark, path, ids)
@@ -327,12 +319,11 @@ def test_history_key_delete_matches_filtered_rebuild(spark, tmp_path):
 def test_delete_commit_crash_resumes_without_survivor_loss(
     spark, tmp_path, monkeypatch
 ):
-    """The ADVICE r14 (medium) scenario: a kill inside the commit's
-    delete-old -> rename-staged window. With the staged manifest
-    protocol, the re-run resumes the commit and the touched
-    partition's KEPT rows come back from staging — no silent
-    survivor loss."""
-    from formula1_dataengineering_spark.operators import cow
+    """The ADVICE r14 (medium) scenario: a kill inside the commit.
+    The old snapshot stays current — marker intact, erased key still
+    visible, no refusal — and re-running the same delete lands it
+    with every survivor intact."""
+    from formula1_dataengineering_spark import fsutil
     from formula1_dataengineering_spark.operators.scd import (
         read_scd2_feed,
         write_scd2_feed,
@@ -349,32 +340,22 @@ def test_delete_commit_crash_resumes_without_survivor_loss(
     )
     erased = spark.createDataFrame([(1,)], "k long")
 
-    real_rename = cow.fsutil.rename
-    state = {"fired": False}
+    real_rename = fsutil.rename
 
     def dying_rename(spark_, src, dst):
-        if not state["fired"] and cow.COW_STAGING in src:
-            state["fired"] = True
-            raise RuntimeError("simulated kill between delete and rename")
+        if "_MANIFEST_v" in dst:
+            raise RuntimeError("simulated kill at the commit point")
         return real_rename(spark_, src, dst)
 
-    monkeypatch.setattr(cow.fsutil, "rename", dying_rename)
+    monkeypatch.setattr(fsutil, "rename", dying_rename)
     with pytest.raises(RuntimeError, match="simulated kill"):
         delete_scd2_feed_keys(spark, path, erased)
-    monkeypatch.setattr(cow.fsutil, "rename", real_rename)
-    # The round-16 crash state: the marker SURVIVES (the versioned
-    # commit never touches it), the pending manifest is present, and
-    # a reader lands on the still-published old snapshot — the full
-    # PRE-delete content, not a refusal (VERDICT r15 item 2).
+    monkeypatch.setattr(fsutil, "rename", real_rename)
     assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    assert os.path.exists(os.path.join(path, cow.COW_MANIFEST))
     pre = _rows(read_scd2_feed(spark, path)[0].select("k", "ts", "v"))
-    assert [r for r in pre if r[0] == 1]  # erased key still visible
-    # Re-running the SAME delete resumes the commit first, then finds
-    # nothing left to delete — survivors intact.
+    assert len([r for r in pre if r[0] == 1]) == 8  # erased key visible
     info = delete_scd2_feed_keys(spark, path, erased)
-    assert info == {"rows_deleted": 0, "partitions_rewritten": 0}
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert info["rows_deleted"] == 8
     got = _rows(read_scd2_feed(spark, path)[0].select("k", "ts", "v"))
     assert got == want
 
@@ -382,12 +363,11 @@ def test_delete_commit_crash_resumes_without_survivor_loss(
 def test_delete_accounting_accumulates_and_rebuild_resets(
     spark, tmp_path
 ):
-    """_META.json carries cumulative per-table rows_deleted — the
-    deletion-drift signal the maintenance loop reads; a full rebuild
-    writes fresh metadata and resets it."""
-    import json
-
+    """The layout metadata carries cumulative per-table rows_deleted —
+    the deletion-drift signal the maintenance loop reads; a full
+    rebuild writes fresh metadata and resets it."""
     from formula1_dataengineering_spark.operators.dedup import (
+        read_dedup_index,
         write_dedup_index,
     )
 
@@ -396,8 +376,7 @@ def test_delete_accounting_accumulates_and_rebuild_resets(
     write_dedup_index(d, path, n_shards=4)
 
     def meta():
-        with open(os.path.join(path, "_META.json")) as fh:
-            return json.load(fh)
+        return read_dedup_index(spark, path)[2]
 
     assert "rows_deleted" not in meta()
     delete_from_dedup_index(
@@ -412,96 +391,3 @@ def test_delete_accounting_accumulates_and_rebuild_resets(
     assert m2["content_hashes"] == 3 and m2["band_rows"] == 12
     write_dedup_index(d.where("doc_id > 9"), path, n_shards=4)
     assert "rows_deleted" not in meta()
-
-
-def test_writer_rebuild_supersedes_pending_cow_manifest(
-    spark, tmp_path, monkeypatch
-):
-    """Round-15 review finding 1: a full rebuild over a layout whose
-    deletion swap crashed mid-commit must PURGE the pending
-    _COW_MANIFEST + staging — otherwise the next deletion verb would
-    'resume' pre-rebuild staged partitions over the fresh base."""
-    from formula1_dataengineering_spark.operators import cow
-    from formula1_dataengineering_spark.operators.dedup import (
-        read_dedup_index,
-        write_dedup_index,
-    )
-
-    d = _docs(spark)
-    path = str(tmp_path / "idx")
-    write_dedup_index(d, path, n_shards=4)
-    real_rename = cow.fsutil.rename
-    state = {"fired": False}
-
-    def dying_rename(spark_, src, dst):
-        if not state["fired"] and cow.COW_STAGING in src:
-            state["fired"] = True
-            raise RuntimeError("kill")
-        return real_rename(spark_, src, dst)
-
-    monkeypatch.setattr(cow.fsutil, "rename", dying_rename)
-    with pytest.raises(RuntimeError, match="kill"):
-        delete_from_dedup_index(
-            spark, path, spark.createDataFrame([(3,)], "doc_id long")
-        )
-    monkeypatch.setattr(cow.fsutil, "rename", real_rename)
-    assert os.path.exists(os.path.join(path, cow.COW_MANIFEST))
-    # Recovery-by-rebuild: the fresh base must not carry the stale
-    # manifest or its staging.
-    write_dedup_index(d.where("doc_id >= 10"), path, n_shards=4)
-    assert not os.path.exists(os.path.join(path, cow.COW_MANIFEST))
-    assert not os.path.exists(os.path.join(path, cow.COW_STAGING))
-    want = _rows(read_dedup_index(spark, path)[0])
-    # A later delete must find nothing to resume and act on the
-    # FRESH layout only.
-    info = delete_from_dedup_index(
-        spark, path, spark.createDataFrame([(3,)], "doc_id long")
-    )
-    assert info == {"rows_deleted": 0, "partitions_rewritten": 0}
-    assert _rows(read_dedup_index(spark, path)[0]) == want
-
-
-def test_refresh_resumes_pending_cow_before_writing(
-    spark, tmp_path, monkeypatch
-):
-    """Round-15 review finding 3: a delta refresher entering a layout
-    with a pending COW manifest completes that commit FIRST, so no
-    later resume can replay stale staged partitions over the
-    refresher's own delta."""
-    from formula1_dataengineering_spark.operators import cow
-    from formula1_dataengineering_spark.operators.scd import (
-        read_scd2_feed,
-        refresh_scd2_feed,
-        write_scd2_feed,
-    )
-
-    rows = [(i % 4, 1000 + i, "x") for i in range(32)]
-    feed = spark.createDataFrame(rows, "k long, ts long, v string")
-    path = str(tmp_path / "feed")
-    write_scd2_feed(feed, path, "k", "ts", "v", n_shards=2)
-    real_rename = cow.fsutil.rename
-    state = {"fired": False}
-
-    def dying_rename(spark_, src, dst):
-        if not state["fired"] and cow.COW_STAGING in src:
-            state["fired"] = True
-            raise RuntimeError("kill")
-        return real_rename(spark_, src, dst)
-
-    monkeypatch.setattr(cow.fsutil, "rename", dying_rename)
-    with pytest.raises(RuntimeError, match="kill"):
-        delete_scd2_feed_keys(
-            spark, path, spark.createDataFrame([(1,)], "k long")
-        )
-    monkeypatch.setattr(cow.fsutil, "rename", real_rename)
-    assert os.path.exists(os.path.join(path, cow.COW_MANIFEST))
-    day = spark.createDataFrame([(1, 9000, "y")], "k long, ts long, v string")
-    refresh_scd2_feed(day, path, "day1")
-    # The refresher completed the crashed erasure first...
-    assert not os.path.exists(os.path.join(path, cow.COW_MANIFEST))
-    after, _ = read_scd2_feed(spark, path)
-    got = _rows(after.select("k", "ts", "v"))
-    # ...so key 1's old rows are gone while ITS OWN delta row (a
-    # post-erasure re-appearance of the key) survives.
-    assert (1, 9000, "y") in got
-    assert [r for r in got if r[0] == 1] == [(1, 9000, "y")]

@@ -431,70 +431,3 @@ def test_maintain_layout_umbrella_dispatch_and_vacuum(spark, tmp_path):
     assert layout_family({"bands": 4}) == "dedup_index"
     with pytest.raises(ValueError, match="no family"):
         layout_family({"mystery": 1})
-
-
-def test_maintain_layout_resumes_crashed_cow_before_marker_check(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r15 (medium): the umbrella must resume a pending COW
-    swap BEFORE reading layout state — scd2_history is the one family
-    whose tick calls no resuming verb. Under the round-16 versioned
-    protocol the crash keeps the marker AND the old snapshot readable;
-    the tick must still finish the pending commit first so it
-    maintains (and vacuums) the POST-erasure state, not the stale
-    snapshot. (Pre-round-16 marker-less crash states resume through
-    the same call — the legacy branch of commit_cow.)"""
-    from formula1_dataengineering_spark.operators import cow
-    from formula1_dataengineering_spark.operators.deletion import (
-        delete_scd2_history_keys,
-    )
-    from formula1_dataengineering_spark.operators.maintenance import (
-        maintain_layout,
-    )
-    from formula1_dataengineering_spark.operators.scd import (
-        read_scd2_history,
-        scd2_history,
-        write_scd2_history,
-    )
-
-    rows = [(i % 4, 1000 + i, "x") for i in range(32)]
-    feed = spark.createDataFrame(
-        rows, "k long, ts long, v string"
-    ).withColumn("ts", F.timestamp_micros(F.col("ts") * 1_000_000))
-    hp = str(tmp_path / "hist")
-    # 2 shards over 4 keys: the touched shard keeps survivors, so
-    # the commit takes the SWAP (rename) path the crash targets.
-    write_scd2_history(
-        scd2_history(feed, "k", "ts", "v"), hp, "k", n_shards=2
-    )
-    want = (
-        read_scd2_history(spark, hp)[0].where("k != 1").count()
-    )
-
-    real_rename = cow.fsutil.rename
-    state = {"fired": False}
-
-    def dying_rename(spark_, src, dst):
-        if not state["fired"] and cow.COW_STAGING in src:
-            state["fired"] = True
-            raise RuntimeError("simulated kill mid-commit")
-        return real_rename(spark_, src, dst)
-
-    monkeypatch.setattr(cow.fsutil, "rename", dying_rename)
-    with pytest.raises(RuntimeError, match="simulated kill"):
-        delete_scd2_history_keys(
-            spark, hp, spark.createDataFrame([(1,)], "k long")
-        )
-    monkeypatch.setattr(cow.fsutil, "rename", real_rename)
-    # Round-16 crash state: marker intact, pending manifest present,
-    # readers still see the pre-erasure snapshot.
-    assert os.path.exists(os.path.join(hp, "_SUCCESS"))
-    assert os.path.exists(os.path.join(hp, cow.COW_MANIFEST))
-    assert read_scd2_history(spark, hp)[0].count() > want
-    # The umbrella tick finishes the pending commit, then holds +
-    # vacuums — and the post-tick read is the POST-erasure state.
-    r = maintain_layout(spark, hp)
-    assert r["family"] == "scd2_history" and r["decision"] == "hold"
-    assert os.path.exists(os.path.join(hp, "_SUCCESS"))
-    assert not os.path.exists(os.path.join(hp, cow.COW_MANIFEST))
-    assert read_scd2_history(spark, hp)[0].count() == want

@@ -520,6 +520,8 @@ def test_scd2_cow_refresh_key_mismatch_and_markerless_refused(
     os.remove(os.path.join(path, "_SUCCESS"))
     with pytest.raises(ValueError, match="_SUCCESS"):
         read_scd2_history(spark, path)
+    with pytest.raises(ValueError, match="_SUCCESS"):
+        scd2_refresh_in_place(path, feed, feed, "k", "ts", "v")
 
 
 def test_scd2_cow_refresh_through_keyed_feed_layout(spark, tmp_path):
@@ -724,18 +726,18 @@ def test_scd2_cow_refresh_with_mismatched_layout_shard_counts(
     assert _hist_cols(got) == want
 
 
-def test_scd2_cow_crash_recovery_rerun_completes(spark, tmp_path):
+def test_scd2_cow_crash_recovery_rerun_completes(
+    spark, tmp_path, monkeypatch
+):
     """The crash-recovery contract the docstring promises (ADVICE r12,
-    medium): scd2_refresh_in_place removes _SUCCESS before its
-    non-atomic dynamic overwrite, so a crash mid-write leaves a
-    marker-less layout. External readers must refuse it — but
-    RE-RUNNING the refresh must open it, complete the rewrite, and
-    restore the marker; anything else bricks the layout until a full
-    rebuild."""
+    medium): a crash at the refresh's commit point leaves the old
+    history current and readable — marker intact, no refusal — and
+    RE-RUNNING the refresh completes the rewrite."""
     import os
 
     import pytest as _pytest
 
+    from formula1_dataengineering_spark import fsutil
     from formula1_dataengineering_spark.operators.scd import (
         read_scd2_history,
         scd2_history,
@@ -748,14 +750,21 @@ def test_scd2_cow_crash_recovery_rerun_completes(spark, tmp_path):
     feed = spark.createDataFrame(rows, _SCHEMA)
     new_df = spark.createDataFrame(new_rows, _SCHEMA)
     path = str(tmp_path / "hist")
-    write_scd2_history(
-        scd2_history(feed, "k", "ts", "v"), path, "k", n_shards=4
-    )
-    # Simulate the crash window: marker gone, layout half-written
-    # (here: still the pre-refresh state, the worst recoverable case).
-    os.remove(os.path.join(path, "_SUCCESS"))
-    with _pytest.raises(ValueError, match="no _SUCCESS marker"):
-        read_scd2_history(spark, path)
+    old = scd2_history(feed, "k", "ts", "v")
+    write_scd2_history(old, path, "k", n_shards=4)
+    real_rename = fsutil.rename
+
+    def dying_rename(spark_, src, dst):
+        if "_MANIFEST_v" in dst:
+            raise RuntimeError("simulated crash at the commit point")
+        return real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(fsutil, "rename", dying_rename)
+    with _pytest.raises(RuntimeError, match="simulated crash"):
+        scd2_refresh_in_place(path, feed, new_df, "k", "ts", "v")
+    monkeypatch.setattr(fsutil, "rename", real_rename)
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert _hist_cols(read_scd2_history(spark, path)[0]) == _hist_cols(old)
     # Recovery = re-running the same refresh.
     scd2_refresh_in_place(path, feed, new_df, "k", "ts", "v")
     got, _ = read_scd2_history(spark, path)
@@ -763,7 +772,6 @@ def test_scd2_cow_crash_recovery_rerun_completes(spark, tmp_path):
         scd2_history(feed.unionByName(new_df), "k", "ts", "v")
     )
     assert _hist_cols(got) == want
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 def test_scd2_cow_refresh_drops_null_key_batch_rows(spark, tmp_path):

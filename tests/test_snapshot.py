@@ -1,8 +1,8 @@
-"""Versioned-manifest snapshot layer (operators/snapshot.py, round 16
-— VERDICT r15 item 2): COW commits publish a new manifest instead of
-swapping partition dirs in place, so readers NEVER hit a marker
-outage — a snapshot resolved before a commit stays exactly readable
-after it, until vacuum retires it."""
+"""Versioned-manifest snapshots (operators/snapshot.py and
+operators/store.py's partition rewrite): erasure commits publish a
+new manifest instead of swapping partition dirs in place, so readers
+NEVER hit a marker outage — a snapshot resolved before a commit stays
+exactly readable after it, until vacuum retires it."""
 
 from __future__ import annotations
 
@@ -108,80 +108,6 @@ def test_vacuum_class5_retires_old_snapshots_only(spark, tmp_path):
     assert info2["version_dirs_removed"] == 0
 
 
-def test_collapse_folds_versions_into_plain_dirs(spark, tmp_path):
-    path = str(tmp_path / "feed")
-    _feed(spark, path)
-    delete_scd2_feed_keys(spark, path, _keys(spark, 1))
-    want = sorted(
-        map(
-            tuple,
-            read_scd2_feed(spark, path)[0]
-            .select("k", "ts", "v")
-            .collect(),
-        )
-    )
-    assert snapshot.collapse_snapshot(spark, path)
-    assert snapshot.current_version(spark, path) == 0
-    # Plain directories now hold the whole truth.
-    names = os.listdir(os.path.join(path, "feed_rows"))
-    assert not any(
-        n.startswith(snapshot.VERSION_DIR_PREFIX) for n in names
-    )
-    got = sorted(
-        map(
-            tuple,
-            read_scd2_feed(spark, path)[0]
-            .select("k", "ts", "v")
-            .collect(),
-        )
-    )
-    assert got == want
-    # Idempotent re-run: nothing to fold.
-    assert not snapshot.collapse_snapshot(spark, path)
-
-
-def test_collapse_resumes_after_mid_fold_crash(
-    spark, tmp_path, monkeypatch
-):
-    """State-driven resume: a kill between delete-base and
-    rename-version leaves the version copy in place (the pending
-    marker), so a re-run finishes the fold with identical rows."""
-    path = str(tmp_path / "feed")
-    _feed(spark, path, n_shards=2)
-    delete_scd2_feed_keys(spark, path, _keys(spark, 1))
-    want = sorted(
-        map(
-            tuple,
-            read_scd2_feed(spark, path)[0]
-            .select("k", "ts", "v")
-            .collect(),
-        )
-    )
-    real_rename = snapshot.fsutil.rename
-    state = {"fired": False}
-
-    def dying_rename(spark_, src, dst):
-        if not state["fired"] and snapshot.VERSION_DIR_PREFIX in src:
-            state["fired"] = True
-            raise RuntimeError("simulated kill mid-fold")
-        return real_rename(spark_, src, dst)
-
-    monkeypatch.setattr(snapshot.fsutil, "rename", dying_rename)
-    with pytest.raises(RuntimeError, match="simulated kill"):
-        snapshot.collapse_snapshot(spark, path)
-    monkeypatch.setattr(snapshot.fsutil, "rename", real_rename)
-    assert snapshot.collapse_snapshot(spark, path)
-    got = sorted(
-        map(
-            tuple,
-            read_scd2_feed(spark, path)[0]
-            .select("k", "ts", "v")
-            .collect(),
-        )
-    )
-    assert got == want
-
-
 def test_read_snapshot_raises_on_vacuumed_version(spark, tmp_path):
     path = str(tmp_path / "feed")
     _feed(spark, path)
@@ -202,10 +128,7 @@ def test_null_partition_rows_survive_versioning(spark, tmp_path):
     """The NULL shard arm: rows in the default partition keep reading
     when OTHER partitions are versioned, and a versioned rewrite OF
     the default partition resolves to the version copy."""
-    from formula1_dataengineering_spark.operators.cow import (
-        run_cow_swap,
-        stage_partition_rewrite,
-    )
+    from formula1_dataengineering_spark.operators import store
 
     path = str(tmp_path / "lay")
     rows = [(i, i % 2 if i % 5 else None, 10 * i) for i in range(20)]
@@ -213,20 +136,51 @@ def test_null_partition_rows_survive_versioning(spark, tmp_path):
     df.repartition("shard").write.partitionBy("shard").parquet(
         os.path.join(path, "t")
     )
-    open(os.path.join(path, "_SUCCESS"), "w").close()
-    snap0 = snapshot.read_snapshot(spark, path)
+    for name in ("_SUCCESS", "_META.json"):
+        with open(os.path.join(path, name), "w") as fh:
+            fh.write("{}")
+    layout = store.open_layout(spark, path, "test layout", "a writer")
+    snap0 = layout.snap
     base = snapshot.snapshot_dir_read(spark, path, "t", snap0)
     assert base.count() == 20
-    # COW-rewrite shard 0 (all even ids), keeping multiples of 4.
+    # Rewrite shard 0 (all even ids), keeping multiples of 4.
     keep = base.where(
         (F.col("shard") == 0) & (F.col("id") % 4 == 0)
     )
-    job = stage_partition_rewrite(
-        spark, path, os.path.join(path, "t"), keep, "shard", [0]
-    )
-    run_cow_swap(spark, path, [job], None)
+    job = store.stage_rewrite(spark, layout, "t", keep, "shard", [0])
+    store.commit_rewrite(spark, layout, [job])
     snap1 = snapshot.read_snapshot(spark, path)
     out = snapshot.snapshot_dir_read(spark, path, "t", snap1)
     assert out.where("shard is null").count() == 4  # untouched NULLs
     assert out.where("shard = 0").count() == 4  # ids 4,8,12,16
     assert out.where("shard = 1").count() == 8  # untouched
+
+
+def test_manifest_without_meta_or_folded_still_reads(spark, tmp_path):
+    """Manifests published before they carried the layout metadata
+    and the folded batch ids: the open falls back to _META.json and
+    every marked batch is live."""
+    import json
+
+    from formula1_dataengineering_spark.operators import store
+    from formula1_dataengineering_spark.operators.scd import refresh_scd2_feed
+
+    path = str(tmp_path / "feed")
+    _feed(spark, path)
+    refresh_scd2_feed(
+        spark.createDataFrame([(9, 5000, "y")], "k long, ts long, v string"),
+        path,
+        "day1",
+    )
+    delete_scd2_feed_keys(spark, path, _keys(spark, 1))
+    manifest = os.path.join(path, "_MANIFEST_v1.json")
+    with open(manifest) as fh:
+        body = json.load(fh)
+    assert body["meta"]["rows_deleted"] == {"feed_rows": 8}
+    with open(manifest, "w") as fh:
+        json.dump({"version": 1, "dirs": body["dirs"]}, fh)
+    layout = store.open_layout(spark, path, "scd2 feed layout", "writer")
+    assert layout.batches == ["day1"]
+    assert "rows_deleted" not in layout.meta
+    after, _ = read_scd2_feed(spark, path)
+    assert after.count() == 25 and after.where("k = 1").count() == 0

@@ -1,10 +1,14 @@
 """The stored-layout commit protocol (operators/store.py) under fault
-injection: every base writer and every delta refresher is crashed at
-each of its filesystem mutations in turn. A crash may leave the old
-rows or a marker-less layout the public reader refuses — never a mix —
-and re-running the verb always lands the new rows. Also pins that a
-failed retry of a committed batch keeps that batch, and that caches
-taken inside the store's concurrent writes are released with them."""
+injection: every base writer, delta refresher and partition-rewrite
+verb is crashed at each of its filesystem mutations in turn. A base
+rebuild may leave the old rows or a marker-less layout the public
+reader refuses; every other verb leaves the reader serving exactly
+the old or the new rows (a multiset: a fold keeps the row set, so
+only counts catch a double-counted delta) with ``_SUCCESS`` untouched.
+Re-running the verb always lands the new rows. Also pins that a
+failed retry of a committed batch keeps that batch, that a retry of
+a folded batch is a no-op, and that caches taken inside the store's
+concurrent writes are released with them."""
 
 from __future__ import annotations
 
@@ -22,19 +26,29 @@ from formula1_dataengineering_spark.operators.clustering import (
     refresh_ann_index,
     write_ann_index,
 )
+from formula1_dataengineering_spark.operators.compaction import (
+    compact_dedup_index,
+    compact_scd2_feed,
+)
 from formula1_dataengineering_spark.operators.dedup import (
     read_dedup_index,
     refresh_dedup_index,
     write_dedup_index,
+)
+from formula1_dataengineering_spark.operators.deletion import (
+    delete_from_dedup_index,
+    delete_scd2_history_keys,
 )
 from formula1_dataengineering_spark.operators.scd import (
     read_scd2_feed,
     read_scd2_history,
     refresh_scd2_feed,
     scd2_history,
+    scd2_refresh_in_place,
     write_scd2_feed,
     write_scd2_history,
 )
+from formula1_dataengineering_spark.operators.vacuum import expire_scd2_history
 
 _MUTATORS = ("rename", "delete", "touch", "write_text")
 _WORDS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta"]
@@ -69,13 +83,20 @@ def _feed_rows(spark, lo, hi):
     return spark.createDataFrame(rows, "k long, ts long, v string")
 
 
-def _history(spark, lo, hi):
+def _changes(spark, lo, hi):
     rows = [
         (i % 3, datetime(2024, 1, 1) + timedelta(seconds=i), f"v{i % 2}")
         for i in range(lo, hi)
     ]
-    changes = spark.createDataFrame(rows, "k long, ts timestamp, v string")
-    return scd2_history(changes, "k", "ts", "v")
+    return spark.createDataFrame(rows, "k long, ts timestamp, v string")
+
+
+def _history(spark, lo, hi):
+    return scd2_history(_changes(spark, lo, hi), "k", "ts", "v")
+
+
+def _ids(spark, *ids):
+    return spark.createDataFrame([(i,) for i in ids], "doc_id long")
 
 
 def _dedup_ids(spark, path):
@@ -96,6 +117,38 @@ def _feed_set(spark, path):
 def _history_set(spark, path):
     hist, _ = read_scd2_history(spark, path)
     return {tuple(r) for r in hist.select("k", "effective_from_us").collect()}
+
+
+def _multiset(df):
+    return sorted(map(tuple, df.select(sorted(df.columns)).collect()), key=repr)
+
+
+def _dedup_rows(spark, path):
+    hashes, bands, _ = read_dedup_index(spark, path)
+    return _multiset(hashes), _multiset(bands)
+
+
+def _feed_rows_all(spark, path):
+    return _multiset(read_scd2_feed(spark, path)[0])
+
+
+def _history_rows(spark, path):
+    return _multiset(read_scd2_history(spark, path)[0])
+
+
+def _one_day_index(s, p):
+    write_dedup_index(_docs(s, 0, 8), p, n_shards=2)
+    refresh_dedup_index(_docs(s, 8, 10), p, "d1")
+
+
+def _two_day_feed(s, p):
+    write_scd2_feed(_feed_rows(s, 0, 8), p, "k", "ts", "v", n_shards=2)
+    refresh_scd2_feed(_feed_rows(s, 8, 10), p, "d1")
+    refresh_scd2_feed(_feed_rows(s, 10, 12), p, "d2")
+
+
+def _history_layout(s, p):
+    write_scd2_history(_history(s, 0, 8), p, "k", n_shards=2)
 
 
 #: name -> (build the old layout, the verb under test, public reader)
@@ -154,31 +207,77 @@ _CASES = {
         lambda s, p: refresh_scd2_feed(_feed_rows(s, 8, 11), p, "d1"),
         _feed_set,
     ),
+    # Partition rewrites: one manifest publish each.
+    "dedup_compact": (
+        _one_day_index,
+        lambda s, p: compact_dedup_index(s, p),
+        _dedup_rows,
+    ),
+    "feed_compact": (
+        _two_day_feed,
+        lambda s, p: compact_scd2_feed(s, p),
+        _feed_rows_all,
+    ),
+    "dedup_delete": (
+        lambda s, p: write_dedup_index(_docs(s, 0, 8), p, n_shards=2),
+        lambda s, p: delete_from_dedup_index(s, p, _ids(s, 3, 5)),
+        _dedup_rows,
+    ),
+    "history_delete": (
+        _history_layout,
+        lambda s, p: delete_scd2_history_keys(
+            s, p, s.createDataFrame([(1,)], "k long")
+        ),
+        _history_rows,
+    ),
+    "history_expire": (
+        _history_layout,
+        lambda s, p: expire_scd2_history(s, p, 0),
+        _history_rows,
+    ),
+    "history_refresh_in_place": (
+        _history_layout,
+        lambda s, p: scd2_refresh_in_place(
+            p, _changes(s, 0, 8), _changes(s, 8, 11), "k", "ts", "v"
+        ),
+        _history_rows,
+    ),
 }
+_BASE_REBUILDS = {"dedup_base", "ann_base", "feed_base", "history_base"}
+_FOLDS = {"dedup_compact", "feed_compact"}
 
 
 def _instrument(monkeypatch, layout: str, replay: dict, crash_at=None) -> list:
     """Count the filesystem mutations a verb makes on ``layout`` and
-    raise at call ``crash_at``.
+    raise at call ``crash_at``. Mutations are the fsutil mutators plus
+    the table writes into version dirs, which are written in place;
+    a write into a staging dir only becomes visible through a later
+    rename, which is counted.
 
     The verb's Spark outputs — its table writes and the index builds —
     run for real once and are recorded in ``replay``; later runs
     replay them. They are the same every run, and the jobs would
     otherwise dominate the test's wall time."""
     calls: list = []
+
+    def count(name: str, args: tuple) -> None:
+        calls.append((name, args))
+        if len(calls) == crash_at:
+            raise _Crash(f"crash at {name}{args}")
+
     for name in _MUTATORS:
         real = getattr(fsutil, name)
 
         def mutate(*args, _real=real, _name=name):
-            calls.append((_name, args[1:]))
-            if len(calls) == crash_at:
-                raise _Crash(f"crash at {_name}{args[1:]}")
+            count(_name, args[1:])
             return _real(*args)
 
         monkeypatch.setattr(fsutil, name, mutate)
     real_write = store.write_table
 
     def write(table, d):
+        if os.path.basename(d).startswith(store.VERSION_DIR_PREFIX):
+            count("write_table", (d,))
         copy = os.path.join(replay["dir"], os.path.relpath(d, layout))
         if not os.path.isdir(copy):
             real_write(table, d)
@@ -211,6 +310,7 @@ def test_crash_at_every_mutation_leaves_old_rows_or_refusal(
     template = str(tmp_path / "template")
     build_old(spark, template)
     old = read(spark, template)
+    marker_mtime = os.path.getmtime(os.path.join(template, store.SUCCESS))
     replay = {"dir": str(tmp_path / "replay")}
 
     def run(name: str, crash_at=None) -> tuple[str, list]:
@@ -227,16 +327,28 @@ def test_crash_at_every_mutation_leaves_old_rows_or_refusal(
 
     path, calls = run("clean")
     new = read(spark, path)
-    assert new != old and calls
+    assert calls
+    # A fold keeps the rows; it must retire every folded delta.
+    if case in _FOLDS:
+        assert new == old
+        assert store.committed_delta_batches(spark, path) == []
+    else:
+        assert new != old
     for k in range(1, len(calls) + 1):
         where = (k, calls[k - 1])
         path, _ = run(f"crash{k}", crash_at=k)
-        try:
-            seen = read(spark, path)
-        except ValueError as e:
-            assert "no _SUCCESS marker" in str(e), (where, e)
+        if case in _BASE_REBUILDS:
+            try:
+                seen = read(spark, path)
+            except ValueError as e:
+                assert "no _SUCCESS marker" in str(e), (where, e)
+            else:
+                assert seen == old, where
         else:
-            assert seen == old, where
+            # Never refused, never a mix, the marker never rewritten.
+            assert read(spark, path) in (old, new), where
+            marker = os.path.join(path, store.SUCCESS)
+            assert os.path.getmtime(marker) == marker_mtime, where
         with monkeypatch.context() as m:
             _instrument(m, path, replay)
             verb(spark, path)
@@ -263,6 +375,31 @@ def test_failed_retry_keeps_committed_batch(spark, tmp_path, case):
     assert read(spark, path) == committed
 
 
+@pytest.mark.parametrize("case", ["dedup", "feed"])
+def test_retry_of_folded_batch_is_a_noop(spark, tmp_path, case):
+    """Compaction retires a folded batch's marker; the manifest's
+    folded list keeps a retry of that batch from committing its rows a
+    second time (the per-(path, batch_id) idempotence the stream
+    replay relies on)."""
+    build, compact, refresh, batch, read = {
+        "dedup": (
+            _one_day_index, compact_dedup_index, refresh_dedup_index,
+            _docs(spark, 8, 10), _dedup_rows,
+        ),
+        "feed": (
+            _two_day_feed, compact_scd2_feed, refresh_scd2_feed,
+            _feed_rows(spark, 8, 10), _feed_rows_all,
+        ),
+    }[case]
+    path = str(tmp_path / "layout")
+    build(spark, path)
+    compact(spark, path)
+    folded = read(spark, path)
+    refresh(batch, path, "d1")
+    assert read(spark, path) == folded
+    assert store.committed_delta_batches(spark, path) == []
+
+
 def test_concurrent_writes_release_their_thunk_caches(spark):
     from formula1_dataengineering_spark import caching
 
@@ -273,7 +410,11 @@ def test_concurrent_writes_release_their_thunk_caches(spark):
         df.count()
         taken.append(df)
 
-    store.run_concurrently([thunk, thunk])
+    assert store.run_concurrently([thunk, lambda: 7, thunk]) == [
+        None,
+        7,
+        None,
+    ]
     assert len(taken) == 2
     for df in taken:
         assert not df.storageLevel.useMemory and not df.storageLevel.useDisk

@@ -1,13 +1,12 @@
 """Retention / vacuum verbs (operators/vacuum.py, VERDICT r13
-item 2): physical-garbage sweep is invisible to readers, the
-manifest pins compaction staging (crash-resume contract), unmarked
-deltas go while committed ones stay, and SCD2 history expiry keeps
-exactly current + N most recent closed versions per key, COW over
-touched shards, idempotent through its crash window."""
+item 2): physical-garbage sweep is invisible to readers, staging of
+crashed writers and retired protocols goes, unmarked deltas go while
+committed ones stay, and SCD2 history expiry keeps exactly current +
+N most recent closed versions per key, COW over touched shards,
+idempotent through a crash."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -55,40 +54,24 @@ def test_vacuum_sweeps_garbage_keeps_content(spark, feed_layout):
     # lost (crash between delta write and marker).
     refresh_scd2_feed(_feed(spark, 50).where(F.unix_seconds(F.col("ts")) >= 1048), path, "day2")
     os.remove(os.path.join(path, "_DELTA_day2._SUCCESS"))
-    # Stale writer staging + manifest-less compaction staging.
-    os.makedirs(os.path.join(path, "_staging", "feed_rows"))
-    with open(os.path.join(path, "_staging", "feed_rows", "x.bin"), "wb") as fh:
-        fh.write(b"a" * 10)
-    os.makedirs(os.path.join(path, "_compact", "feed_rows"))
-    with open(os.path.join(path, "_compact", "feed_rows", "y.bin"), "wb") as fh:
-        fh.write(b"b" * 20)
+    # Stale writer staging + staging of the retired compaction and
+    # copy-on-write protocols.
+    for rel, size in (("_staging", 10), ("_compact", 20), ("_cow_staging", 5)):
+        os.makedirs(os.path.join(path, rel, "feed_rows"))
+        with open(os.path.join(path, rel, "feed_rows", "x.bin"), "wb") as fh:
+            fh.write(b"a" * size)
 
     info = vacuum_layout(spark, path)
     assert info["orphan_deltas_removed"] == 1
-    assert info["staging_removed"] == 2
-    assert info["files_removed"] >= 3  # orphan parquet files + 2 bins
-    assert info["bytes_reclaimed"] >= 30
-    assert not info["pinned"]
+    assert info["staging_removed"] == 3
+    assert info["files_removed"] >= 4  # orphan parquet files + 3 bins
+    assert info["bytes_reclaimed"] >= 35
     names = os.listdir(path)
-    assert "_staging" not in names and "_compact" not in names
+    assert not {"_staging", "_compact", "_cow_staging"} & set(names)
     assert not any("day2" in n for n in names)
     # Committed delta and logical content untouched.
     assert "_DELTA_day1._SUCCESS" in names
     assert _rows(read_scd2_feed(spark, path)[0].select("k", "ts", "v")) == before
-
-
-def test_vacuum_manifest_pins_staging(spark, feed_layout):
-    path, _ = feed_layout
-    os.makedirs(os.path.join(path, "_compact", "feed_rows"))
-    with open(os.path.join(path, "_compact", "feed_rows", "s.bin"), "wb") as fh:
-        fh.write(b"c" * 8)
-    with open(os.path.join(path, "_COMPACT_MANIFEST.json"), "w") as fh:
-        json.dump({"batch_ids": ["day1"], "tables": ["feed_rows"]}, fh)
-    info = vacuum_layout(spark, path)
-    assert info["pinned"]
-    assert info["staging_removed"] == 0
-    # The pinned staging survives byte for byte.
-    assert os.path.exists(os.path.join(path, "_compact", "feed_rows", "s.bin"))
 
 
 def test_vacuum_refuses_markerless_layout(spark, feed_layout):
@@ -151,24 +134,15 @@ def test_expire_zero_keeps_only_current(spark, hist_layout):
         expire_scd2_history(spark, path, retain_versions=-1)
 
 
-def test_expire_recovers_through_crash_window(spark, hist_layout):
+def test_expire_refuses_markerless_layout(spark, hist_layout):
+    """A marker-less layout is a crashed rebuild: the expiry refuses it
+    like every reader does, and re-running the writer recovers it."""
     path, hist = hist_layout
-    # Simulate the worst window: the marker is already gone (the
-    # in-place refresher's crash window — the round-16 versioned COW
-    # commit itself never drops it). External readers refuse; the
-    # expiry must still open marker-tolerantly and land. The marker
-    # belongs to the verb that dropped it (re-run = recovery);
-    # emulate with the touch below.
     os.remove(os.path.join(path, "_SUCCESS"))
-    with pytest.raises(ValueError, match="_SUCCESS"):
+    with pytest.raises(ValueError, match="no _SUCCESS marker"):
+        expire_scd2_history(spark, path, retain_versions=1)
+    with pytest.raises(ValueError, match="no _SUCCESS marker"):
         read_scd2_history(spark, path)
-    info = expire_scd2_history(spark, path, retain_versions=1)
-    assert info["rows_expired"] > 0
-    open(os.path.join(path, "_SUCCESS"), "w").close()
-    after, _ = read_scd2_history(spark, path)
-    assert after.where("is_current").count() == hist.where(
-        "is_current"
-    ).count()
 
 
 def test_vacuum_anchored_orphan_match_and_spark_staging(
@@ -205,58 +179,29 @@ def test_vacuum_anchored_orphan_match_and_spark_staging(
     assert _rows(read_scd2_feed(spark, path)[0].select("k", "ts", "v")) == before
 
 
-def test_vacuum_cow_manifest_pins_cow_staging(spark, feed_layout):
-    """A _COW_MANIFEST.json pins _cow_staging (a committed-to swap
-    mid-recovery); without it the staging is crashed-STAGE garbage
-    and sweeps."""
-    from formula1_dataengineering_spark.operators.cow import (
-        COW_MANIFEST,
-        COW_STAGING,
-    )
-
-    path, _ = feed_layout
-    os.makedirs(os.path.join(path, COW_STAGING, "feed_rows"))
-    with open(
-        os.path.join(path, COW_STAGING, "feed_rows", "s.bin"), "wb"
-    ) as fh:
-        fh.write(b"c" * 8)
-    with open(os.path.join(path, COW_MANIFEST), "w") as fh:
-        json.dump({"jobs": [], "meta": None}, fh)
-    info = vacuum_layout(spark, path)
-    assert info["pinned"]
-    assert os.path.exists(os.path.join(path, COW_STAGING, "feed_rows", "s.bin"))
-    # Manifest gone (swap resumed/committed elsewhere) -> sweeps.
-    os.remove(os.path.join(path, COW_MANIFEST))
-    info2 = vacuum_layout(spark, path)
-    assert not info2["pinned"]
-    assert info2["staging_removed"] == 1
-    assert not os.path.exists(os.path.join(path, COW_STAGING))
-
-
 def test_expire_commit_crash_resumes(spark, hist_layout, monkeypatch):
-    """expire_scd2_history shares the staged swap: a kill inside the
-    commit's delete->rename window loses nothing — the re-run resumes
-    the manifest first and the expiry lands exactly once."""
-    from formula1_dataengineering_spark.operators import cow
+    """A kill at the expiry's commit point loses nothing: the old
+    history stays current and readable, and the re-run lands the
+    expiry exactly once."""
+    from formula1_dataengineering_spark import fsutil
 
     path, hist = hist_layout
     n_current = hist.where("is_current").count()
-    real_rename = cow.fsutil.rename
-    state = {"fired": False}
+    total = hist.count()
+    real_rename = fsutil.rename
 
     def dying_rename(spark_, src, dst):
-        if not state["fired"] and cow.COW_STAGING in src:
-            state["fired"] = True
+        if "_MANIFEST_v" in dst:
             raise RuntimeError("simulated kill")
         return real_rename(spark_, src, dst)
 
-    monkeypatch.setattr(cow.fsutil, "rename", dying_rename)
+    monkeypatch.setattr(fsutil, "rename", dying_rename)
     with pytest.raises(RuntimeError, match="simulated kill"):
         expire_scd2_history(spark, path, retain_versions=0)
-    monkeypatch.setattr(cow.fsutil, "rename", real_rename)
-    assert os.path.exists(os.path.join(path, cow.COW_MANIFEST))
+    monkeypatch.setattr(fsutil, "rename", real_rename)
+    assert read_scd2_history(spark, path)[0].count() == total
     info = expire_scd2_history(spark, path, retain_versions=0)
-    assert info == {"rows_expired": 0, "shards_rewritten": 0}
+    assert info["rows_expired"] == total - n_current
     after, _ = read_scd2_history(spark, path)
     assert after.count() == n_current
     assert after.where("not is_current").count() == 0
