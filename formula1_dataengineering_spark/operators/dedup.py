@@ -1301,6 +1301,14 @@ def _index_shard(key: Column, n_shards: int) -> Column:
     )
 
 
+def _band_shard(n_shards: int) -> Column:
+    """The shard of a (band, key) LSH row: ``band_rows``' partition
+    column, computed the same way by the writer and the probers."""
+    return _index_shard(
+        F.concat_ws(":", F.col("band"), F.col("key")), n_shards
+    )
+
+
 def _index_tables(
     corpus: DataFrame,
     n_shards: int,
@@ -1325,12 +1333,7 @@ def _index_tables(
             "shard",
         ),
         "band_rows": Table(
-            band_rows.withColumn(
-                "shard",
-                _index_shard(
-                    F.concat_ws(":", F.col("band"), F.col("key")), n_shards
-                ),
-            ),
+            band_rows.withColumn("shard", _band_shard(n_shards)),
             "shard",
         ),
     }
@@ -1514,6 +1517,76 @@ def refresh_dedup_index(
     store.commit_delta(spark, path, batch_id, list(tables))
 
 
+def _check_probe_meta(caller: str, index_meta: dict | None, **params) -> None:
+    """Refuse to probe a stored dedup index with params its
+    ``_META.json`` disagrees with (ADVICE r10): a writer/prober layout
+    mismatch — different n_shards, shard salt, shingle topology or
+    hash mode — makes the (shard, key) equi-joins silently miss hits.
+    ``index_meta=None`` skips the check."""
+    if index_meta is None:
+        return
+    expected = {
+        "shard_salt": _INDEX_SHARD_SALT,
+        "shard_mode": "fast",
+        **params,
+    }
+    bad = {
+        k: (index_meta.get(k), v)
+        for k, v in expected.items()
+        if index_meta.get(k) != v
+    }
+    if bad:
+        raise ValueError(
+            f"{caller}: probe params disagree with the index layout's "
+            f"_META.json (index, probe): {bad} — probing with "
+            "mismatched params silently misses hits; rebuild the index "
+            "or match its params"
+        )
+
+
+def _batch_band_rows(
+    batch: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    bands: int,
+    shingle_k: int,
+    mode: str,
+) -> DataFrame:
+    """The batch side's (id, band, key) LSH rows — hashed per probe,
+    never read from the index."""
+    return _band_rows(
+        minhash_signatures(
+            batch, id_col, text_col, num_hashes, shingle_k, mode
+        ),
+        id_col,
+        num_hashes,
+        bands,
+    )
+
+
+def _shard_probe(
+    index_table: DataFrame,
+    index_cols: list,
+    batch_keys: DataFrame,
+    on: list[str],
+    shard: Column,
+) -> tuple[DataFrame, DataFrame, list[str]]:
+    """Both sides of an index probe join: the index table projected to
+    ``index_cols``, the batch keys, and the equi-join columns. When
+    the index frame carries the writer's ``shard`` partition column,
+    the batch side computes it (``shard``, the writer's HRW
+    assignment) and the join includes it, so dynamic partition
+    pruning reads only the shards the batch hits."""
+    if "shard" not in index_table.columns:
+        return index_table.select(*index_cols), batch_keys, on
+    return (
+        index_table.select(*index_cols, "shard"),
+        batch_keys.withColumn("shard", shard),
+        ["shard", *on],
+    )
+
+
 def incremental_dedup_from_index(
     batch: DataFrame,
     corpus_hashes: DataFrame,
@@ -1551,42 +1624,25 @@ def incremental_dedup_from_index(
     mode — makes the (shard, key) equi-joins silently miss every hit
     and flag real duplicates as 'ingest', so the prober FAILS LOUDLY
     on any disagreement instead (ADVICE r10)."""
-    if index_meta is not None:
-        expected = {
-            "n_shards": n_shards,
-            "shard_salt": _INDEX_SHARD_SALT,
-            "shard_mode": "fast",
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "shingle_k": shingle_k,
-            "mode": mode,
-        }
-        bad = {
-            k: (index_meta.get(k), v)
-            for k, v in expected.items()
-            if index_meta.get(k) != v
-        }
-        if bad:
-            raise ValueError(
-                "incremental_dedup_from_index: probe params disagree "
-                "with the index layout's _META.json (index, probe): "
-                f"{bad} — probing with mismatched params silently "
-                "misses hits; rebuild the index or match its params"
-            )
+    _check_probe_meta(
+        "incremental_dedup_from_index",
+        index_meta,
+        n_shards=n_shards,
+        num_hashes=num_hashes,
+        bands=bands,
+        shingle_k=shingle_k,
+        mode=mode,
+    )
     ch = portable_hash48(F.col(text_col)).alias("__ch")
     batch_h = batch.select(F.col(id_col), ch)
 
-    exact_on = ["__ch"]
-    probe_h = corpus_hashes.select(F.col("content_hash").alias("__ch"))
-    batch_probe_h = batch_h.select("__ch").distinct()
-    if "shard" in corpus_hashes.columns:
-        probe_h = corpus_hashes.select(
-            F.col("content_hash").alias("__ch"), "shard"
-        )
-        batch_probe_h = batch_probe_h.withColumn(
-            "shard", _index_shard(F.col("__ch"), n_shards)
-        )
-        exact_on = ["shard", "__ch"]
+    probe_h, batch_probe_h, exact_on = _shard_probe(
+        corpus_hashes,
+        [F.col("content_hash").alias("__ch")],
+        batch_h.select("__ch").distinct(),
+        ["__ch"],
+        _index_shard(F.col("__ch"), n_shards),
+    )
     hit_hashes = (
         probe_h.join(F.broadcast(batch_probe_h), exact_on, "left_semi")
         .select("__ch")
@@ -1603,26 +1659,16 @@ def incremental_dedup_from_index(
     # one O(batch) shingle recompute. The DPP subquery reuses the
     # broadcast, so the batch pipeline runs twice total, both
     # batch-sized.
-    batch_bands = _band_rows(
-        minhash_signatures(
-            batch, id_col, text_col, num_hashes, shingle_k, mode
-        ),
-        id_col,
-        num_hashes,
-        bands,
+    batch_bands = _batch_band_rows(
+        batch, id_col, text_col, num_hashes, bands, shingle_k, mode
     )
-    near_on = ["band", "key"]
-    probe_b = corpus_bands.select("band", "key")
-    batch_probe_b = batch_bands.select("band", "key").distinct()
-    if "shard" in corpus_bands.columns:
-        probe_b = corpus_bands.select("band", "key", "shard")
-        batch_probe_b = batch_probe_b.withColumn(
-            "shard",
-            _index_shard(
-                F.concat_ws(":", F.col("band"), F.col("key")), n_shards
-            ),
-        )
-        near_on = ["shard", "band", "key"]
+    probe_b, batch_probe_b, near_on = _shard_probe(
+        corpus_bands,
+        ["band", "key"],
+        batch_bands.select("band", "key").distinct(),
+        ["band", "key"],
+        _band_shard(n_shards),
+    )
     hit_keys = (
         probe_b.join(F.broadcast(batch_probe_b), near_on, "left_semi")
         .select("band", "key")
@@ -1681,52 +1727,24 @@ def neardup_collisions_from_index(
     bucket collisions, never the corpus. Validates ``index_meta``
     exactly like the prober (a param drift would silently return the
     wrong colliders)."""
-    if index_meta is not None:
-        expected = {
-            "n_shards": n_shards,
-            "shard_salt": _INDEX_SHARD_SALT,
-            "shard_mode": "fast",
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "shingle_k": shingle_k,
-            "mode": mode,
-        }
-        bad = {
-            k: (index_meta.get(k), v)
-            for k, v in expected.items()
-            if index_meta.get(k) != v
-        }
-        if bad:
-            raise ValueError(
-                "neardup_collisions_from_index: probe params disagree "
-                "with the index layout's _META.json (index, probe): "
-                f"{bad} — probing with mismatched params silently "
-                "returns wrong colliders; rebuild the index or match "
-                "its params"
-            )
-    batch_bands = _band_rows(
-        minhash_signatures(
-            batch, id_col, text_col, num_hashes, shingle_k, mode
+    _check_probe_meta(
+        "neardup_collisions_from_index",
+        index_meta,
+        n_shards=n_shards,
+        num_hashes=num_hashes,
+        bands=bands,
+        shingle_k=shingle_k,
+        mode=mode,
+    )
+    probe, batch_bands, on = _shard_probe(
+        corpus_bands,
+        [F.col(id_col).alias("member_id"), "band", "key"],
+        _batch_band_rows(
+            batch, id_col, text_col, num_hashes, bands, shingle_k, mode
         ),
-        id_col,
-        num_hashes,
-        bands,
+        ["band", "key"],
+        _band_shard(n_shards),
     )
-    on = ["band", "key"]
-    probe = corpus_bands.select(
-        F.col(id_col).alias("member_id"), "band", "key"
-    )
-    if "shard" in corpus_bands.columns:
-        probe = corpus_bands.select(
-            F.col(id_col).alias("member_id"), "band", "key", "shard"
-        )
-        batch_bands = batch_bands.withColumn(
-            "shard",
-            _index_shard(
-                F.concat_ws(":", F.col("band"), F.col("key")), n_shards
-            ),
-        )
-        on = ["shard", "band", "key"]
     return (
         probe.join(F.broadcast(batch_bands), on)
         .select(id_col, "member_id")

@@ -129,22 +129,11 @@ def connected_components(
         # exchanges move at most degree-bounded aggregates of it. At
         # ~500k rows per partition the tasks stay cache-resident; a
         # tiny graph on a wide session otherwise pays (partitions x
-        # rounds) near-empty tasks of pure scheduling latency. The cap
-        # never raises the session setting, and symbolic conf values
-        # ('auto' on some platforms) skip the clamp entirely.
-        from ..session import int_conf, scoped_conf
+        # rounds) near-empty tasks of pure scheduling latency.
+        from ..session import capped_shuffle_partitions
 
-        spark = edges.sparkSession
-        current = int_conf(spark, "spark.sql.shuffle.partitions")
-        sized = (
-            min(current, max(8, n_sym // 500_000))
-            if current is not None
-            else None
-        )
-        if sized is None:
-            return _propagate(sym, max_iter)
-        with scoped_conf(
-            spark, {"spark.sql.shuffle.partitions": str(sized)}
+        with capped_shuffle_partitions(
+            edges.sparkSession, max(8, n_sym // 500_000)
         ):
             return _propagate(sym, max_iter)
     except BaseException:

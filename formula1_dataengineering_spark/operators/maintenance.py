@@ -41,7 +41,7 @@ part of the engine's training-data-pipeline surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import store
@@ -97,11 +97,15 @@ def ann_recall_at_k(
     from O(|queries| · corpus) to O(|queries| · keep/mod · corpus);
     a production loop picks keep/mod per tick as sample_budget /
     corpus_rows, which makes the nightly HOLD tick corpus-FLAT
-    (scripts/maintenance_probe.py --ann-sampled measures it). The
+    (BASELINE.md "Sampled-referee decade probe" measured it). The
     full referee (sample=None) stays the rebuild-confirmation
     measurement. Returns a 1-row frame (n_queries, n_hits,
     recall_at_k)."""
-    from .clustering import ivf_pq_topk_from_index, read_ann_index
+    from .clustering import (
+        exact_l2_topk,
+        ivf_pq_topk_from_index,
+        read_ann_index,
+    )
     from .scalars import broadcast_scalars
 
     codes, codebook, cells, meta = read_ann_index(spark, path)
@@ -128,33 +132,7 @@ def ann_recall_at_k(
         vec_col=vec_col,
     ).select("q_id", F.col(id_col).alias("neighbor_id"))
 
-    sq = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    # Column-derived single-valued key: a literal constant-folds into
-    # BroadcastNestedLoopJoin (catalog hygiene rule).
-    one = lambda c: F.pmod(  # noqa: E731
-        F.crc32(c.cast("string")), F.lit(1)
-    ).cast("int")
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    qe = queries.select(
-        F.col(id_col).alias("q_id"), vec_d.alias("__qv")
-    ).withColumn("__k", one(F.col("q_id")))
-    ce = vectors.select(
-        F.col(id_col).alias("neighbor_id"), vec_d.alias("__cv")
-    ).withColumn("__k", one(F.col("neighbor_id")))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("__d").asc(), F.col("neighbor_id").asc()
-    )
-    exact = (
-        ce.join(F.broadcast(qe), "__k")
-        .select("q_id", "neighbor_id", sq("__qv", "__cv").alias("__d"))
-        .withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= topk)
-        .select("q_id", "neighbor_id")
-    )
+    exact = exact_l2_topk(queries, vectors, topk, id_col, vec_col)
     hits = approx.join(exact, ["q_id", "neighbor_id"], "left_semi").agg(
         F.count("*").alias("n_hits")
     )

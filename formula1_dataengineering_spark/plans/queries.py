@@ -1020,18 +1020,14 @@ def python_stream_source_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         SyntheticStreamDataSource,
     )
 
-    from ..session import int_conf, scoped_conf
+    from ..session import capped_shuffle_partitions
 
     spark.dataSource.register(SyntheticStreamDataSource)
     sink = f"pystream_{uuid.uuid4().hex[:8]}"
     # Cap state partitions at stream START (the run_to_completion
     # idiom): 7 keys through 32 state stores per micro-batch is pure
     # fixed cost — measured 4.3 s -> ~2 s in the bench session.
-    confs = {}
-    cur = int_conf(spark, "spark.sql.shuffle.partitions")
-    if cur is not None:
-        confs["spark.sql.shuffle.partitions"] = str(min(cur, 4))
-    with scoped_conf(spark, confs):
+    with capped_shuffle_partitions(spark, 4):
         q = (
             spark.readStream.format("synthetic_stream")
             .load()
@@ -6321,7 +6317,7 @@ def scd2_two_day_cycle_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..sources.catalog import layout_artifact
 
-    from ..session import int_conf, scoped_conf
+    from ..session import capped_shuffle_partitions
 
     e = load(spark, sf_dir, "events")
     feed0 = e.where(F.col("event_id") % 5 != 0)
@@ -6343,11 +6339,7 @@ def scd2_two_day_cycle_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no pruning here and cost per-partition commit/file overhead in
     # all four mutations (the pruned-refresh gate keeps 16 and its
     # plan-pinned pruning).
-    confs = {}
-    cur = int_conf(spark, "spark.sql.shuffle.partitions")
-    if cur is not None:
-        confs["spark.sql.shuffle.partitions"] = str(min(cur, 8))
-    with scoped_conf(spark, confs):
+    with capped_shuffle_partitions(spark, 8):
         if not ffresh:
             write_scd2_feed(feed0, fpath, *cols, n_shards=4)
         if not hfresh:
@@ -6430,6 +6422,7 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe is the stored-index scorer (broadcast LUT, DPP-pruned code
     scan reading only the probed cells' partitions)."""
     from ..operators.clustering import (
+        exact_l2_topk,
         ivf_pq_topk_from_index,
         read_ann_index,
         write_ann_index,
@@ -6446,33 +6439,7 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_ann_index(e, path, m=8, k=4, iters=2)
     codes, codebook, cells, meta = read_ann_index(spark, path)
 
-    # Exact top-5 by squared L2: ordered folds are bit-exact across
-    # engines, so the rank key needs no quantization (ties on the id).
-    sq = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    one = lambda c: F.pmod(  # noqa: E731
-        F.crc32(c.cast("string")), F.lit(1)
-    ).cast("int")
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    qe = q.select(
-        F.col("vec_id").alias("q_id"), vec_d.alias("__qv")
-    ).withColumn("__k", one(F.col("q_id")))
-    ce = e.select(
-        F.col("vec_id").alias("neighbor_id"), vec_d.alias("__cv")
-    ).withColumn("__k", one(F.col("neighbor_id")))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("__d").asc(), F.col("neighbor_id").asc()
-    )
-    exact = (
-        ce.join(F.broadcast(qe), "__k")
-        .select("q_id", "neighbor_id", sq("__qv", "__cv").alias("__d"))
-        .withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= 5)
-        .select("q_id", "neighbor_id")
-    )
+    exact = exact_l2_topk(q, e, 5)
     # One shared-scan probe at every width (r17, VERDICT r16 item 5):
     # the list form ranks cells once at max(n), scores the codes once
     # with each candidate's cell rank as a passenger column, and
@@ -6577,6 +6544,7 @@ def ann_delta_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     time. Same layout artifact as ann_index_delta_topk (the gates
     share the stored index and its day-1 delta)."""
     from ..operators.clustering import (
+        exact_l2_topk,
         ivf_pq_topk_from_index,
         read_ann_index,
         refresh_ann_index,
@@ -6597,31 +6565,7 @@ def ann_delta_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes, codebook, cells, meta = read_ann_index(spark, path)
     q = batch.select("vec_id", "embedding")
 
-    sq = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    one = lambda c: F.pmod(  # noqa: E731
-        F.crc32(c.cast("string")), F.lit(1)
-    ).cast("int")
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    qe = q.select(
-        F.col("vec_id").alias("q_id"), vec_d.alias("__qv")
-    ).withColumn("__k", one(F.col("q_id")))
-    ce = e.select(
-        F.col("vec_id").alias("neighbor_id"), vec_d.alias("__cv")
-    ).withColumn("__k", one(F.col("neighbor_id")))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("__d").asc(), F.col("neighbor_id").asc()
-    )
-    exact = (
-        ce.join(F.broadcast(qe), "__k")
-        .select("q_id", "neighbor_id", sq("__qv", "__cv").alias("__d"))
-        .withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= 5)
-        .select("q_id", "neighbor_id")
-    )
+    exact = exact_l2_topk(q, e, 5)
     # Shared-scan multiprobe (r17, VERDICT r16 item 5) — same list
     # form as ann_multiprobe_recall: one code scan + LUT join at
     # max(n), per-width slices over the shared aggregate.
@@ -7034,6 +6978,7 @@ def _ann_policy_rows(
     single-row scalar (bounded), rebuild over the full corpus when it
     crosses the threshold, and emit one accounting row per phase."""
     from ..operators.clustering import (
+        exact_l2_topk,
         ivf_pq_topk_from_index,
         read_ann_index,
         refresh_ann_index,
@@ -7066,34 +7011,8 @@ def _ann_policy_rows(
     # would probe (round-13 review).
     _gate_chain(spark, path, fresh, mutate)
 
-    # Exact squared-L2 top-5 over ALL vectors — the recall referee,
-    # shared by both phases (the documented one-pass GEMM baseline:
-    # bounded query set broadcast into one corpus scan).
-    sq = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    one = lambda c: F.pmod(  # noqa: E731
-        F.crc32(c.cast("string")), F.lit(1)
-    ).cast("int")
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    qe = q.select(
-        F.col("vec_id").alias("q_id"), vec_d.alias("__qv")
-    ).withColumn("__k", one(F.col("q_id")))
-    ce = e.select(
-        F.col("vec_id").alias("neighbor_id"), vec_d.alias("__cv")
-    ).withColumn("__k", one(F.col("neighbor_id")))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("__d").asc(), F.col("neighbor_id").asc()
-    )
-    exact = (
-        ce.join(F.broadcast(qe), "__k")
-        .select("q_id", "neighbor_id", sq("__qv", "__cv").alias("__d"))
-        .withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= 5)
-        .select("q_id", "neighbor_id")
-    )
+    # Exact top-5 over ALL vectors, shared by both phases.
+    exact = exact_l2_topk(q, e, 5)
 
     def recall_row(index_path: str) -> DataFrame:
         codes, codebook, cells, meta = read_ann_index(spark, index_path)
@@ -8228,7 +8147,7 @@ def ann_sampled_recall_referee(
     sampled vectors — a well-defined recall over the sampled corpus,
     at keep/mod of the referee cost. A production loop picks keep/mod
     per tick as sample_budget / corpus_rows, making the tick
-    corpus-FLAT (scripts/maintenance_probe.py --ann-sampled measures
+    corpus-FLAT (BASELINE.md "Sampled-referee decade probe" measured
     it); the full referee stays the rebuild-confirmation measurement
     (maintain_ann_index re-measures FULL after a rebuild).
 

@@ -94,11 +94,17 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, v)
 
 
-def int_conf(spark: SparkSession, key: str) -> int | None:
-    """The conf as an int, or None when unset or non-numeric (some
-    platforms use symbolic values like 'auto' — callers must treat
-    that as 'do not reason about the number')."""
+@contextmanager
+def capped_shuffle_partitions(spark: SparkSession, n: int):
+    """Lower ``spark.sql.shuffle.partitions`` to at most ``n`` for the
+    block — never raise it — and restore the prior value on exit. A
+    plan or stream built inside keeps the value it captured. A
+    non-numeric setting (some platforms use symbolic values like
+    'auto') is left alone: there is no number to reason about."""
+    key = "spark.sql.shuffle.partitions"
     try:
-        return int(spark.conf.get(key))
+        confs = {key: str(min(int(spark.conf.get(key)), n))}
     except (ValueError, TypeError):
-        return None
+        confs = {}
+    with scoped_conf(spark, confs):
+        yield

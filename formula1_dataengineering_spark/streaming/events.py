@@ -19,11 +19,13 @@ the source becomes Kafka with the same downstream plan.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 #: (applicationId, sf_dir, events mtime) → (resolved raw ts DataType,
 #: recorded nanosAsLong conf value); see read_events_stream.
@@ -259,45 +261,60 @@ def user_running_totals(
     )
 
 
+#: Shuffle-partition cap for every bounded stream run here. Stateful
+#: operators instantiate one state store per shuffle partition, and
+#: for a bounded run that instantiation is pure fixed cost — measured
+#: 2-4× of the wall-clock at 32 partitions on sf0.1. A real deployment
+#: sizes this to its key cardinality instead.
+_STATE_PARTITIONS = 4
+
+
+def _run_bounded(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    start_conf: dict[str, str] | None = None,
+) -> None:
+    """The one way a bounded stream runs: start the configured
+    ``writer`` with ``availableNow`` under ``start_conf`` and the
+    :data:`_STATE_PARTITIONS` cap (the stream pins the confs it sees
+    at start; the session gets its values back right after), wait
+    until the query terminates on its own (``availableNow`` stops once
+    the data present at start is consumed), and stop it on every exit.
+    A failure inside the query (including one raised from
+    ``foreachBatch``) surfaces as ``StreamingQueryException``."""
+    from ..session import capped_shuffle_partitions, scoped_conf
+
+    with scoped_conf(spark, start_conf or {}), capped_shuffle_partitions(
+        spark, _STATE_PARTITIONS
+    ):
+        q = writer.trigger(availableNow=True).start()
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+
+
 def run_to_completion(
     stream_df: DataFrame,
     query_name: str,
     output_mode: str = "append",
-    state_partitions: int | None = 4,
     start_conf: dict[str, str] | None = None,
 ) -> DataFrame:
     """Drive a (bounded-source) streaming plan to completion via the
-    memory sink; returns the result as a batch DataFrame. Test/dev
-    helper — production uses a real sink with checkpointing.
+    memory sink (:func:`_run_bounded`); returns the result as a batch
+    DataFrame. Test/dev helper — production uses a real sink with
+    checkpointing. ``start_conf`` pins extra confs at stream start
+    (e.g. the RocksDB state-store provider transformWithState needs).
 
     Windowed aggregations over a bounded source should pass
     ``output_mode="complete"``: in append mode a window only emits once
     the watermark passes it, and a static file's final windows never
     finalize before the source is exhausted.
-
-    ``state_partitions`` caps ``spark.sql.shuffle.partitions`` while
-    the query STARTS (the stream pins the value it sees at start; the
-    session conf is restored immediately after). Stateful operators
-    instantiate one state store per shuffle partition, and for a
-    bounded run-to-completion that instantiation is pure fixed cost —
-    measured 2-4× of the wall-clock at 32 partitions on sf0.1. A real
-    deployment sizes this to its key cardinality instead (pass None to
-    leave the session conf alone).
     """
-    from ..session import int_conf, scoped_conf
+    import shutil
+    import uuid
 
     spark = stream_df.sparkSession
-    # Extra confs (e.g. the RocksDB state-store provider
-    # transformWithState requires) pin at stream start alongside the
-    # partition cap; the stream keeps the values it started with.
-    confs = dict(start_conf or {})
-    current = int_conf(spark, "spark.sql.shuffle.partitions")
-    if state_partitions is not None and current is not None:
-        # Only ever LOWER the session setting (and skip entirely on
-        # platforms with symbolic values like 'auto').
-        confs["spark.sql.shuffle.partitions"] = str(
-            min(current, state_partitions)
-        )
     # Throwaway checkpoint on tmpfs when available (VERDICT r8 item 5):
     # this helper's checkpoint is BY DESIGN single-use (memory sink,
     # fresh query each call — no restart semantics to preserve; the
@@ -306,31 +323,22 @@ def run_to_completion(
     # RAM. Measured ~0.15 s/run off the streaming gates at sf0.1. The
     # dir is removed on exit; the default engine-managed temp dir is
     # the fallback.
-    import shutil
-    import uuid
-
     ckpt = None
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         ckpt = f"/dev/shm/f1spark_rtc_{uuid.uuid4().hex}"
+    writer = (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(query_name)
+    )
+    if ckpt is not None:
+        writer = writer.option("checkpointLocation", ckpt)
     # Cleanup must cover every exit: a failing start() has already had
     # its checkpoint dir created by Spark, and a raising stop() must
     # not skip the rmtree (tmpfs dirs eat RAM until reboot —
     # code-review r9).
     try:
-        with scoped_conf(spark, confs):
-            writer = (
-                stream_df.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(query_name)
-                .trigger(availableNow=True)
-            )
-            if ckpt is not None:
-                writer = writer.option("checkpointLocation", ckpt)
-            q = writer.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _run_bounded(spark, writer, start_conf)
     finally:
         if ckpt is not None:
             shutil.rmtree(ckpt, ignore_errors=True)
@@ -750,24 +758,12 @@ def restart_recovery_totals(
         ).parquet(sink)
 
     def run_once() -> None:
-        from ..session import int_conf, scoped_conf
-
-        confs = {}
-        cur = int_conf(spark, "spark.sql.shuffle.partitions")
-        if cur is not None:
-            confs["spark.sql.shuffle.partitions"] = str(min(cur, 4))
-        with scoped_conf(spark, confs):
-            q = (
-                stream.writeStream.outputMode("update")
-                .foreachBatch(write_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _run_bounded(
+            spark,
+            stream.writeStream.outputMode("update")
+            .foreachBatch(write_batch)
+            .option("checkpointLocation", ckpt),
+        )
 
     run_once()  # run 1: half A only, clean stop with checkpoint
     # Run 1 must have emitted batch-0 rows, or the downstream
@@ -793,87 +789,71 @@ def restart_recovery_totals(
     return final
 
 
-def stream_feed_ingest_deltas(
+def _crash_replay_ingest(
     spark: SparkSession,
-    sf_dir: str,
     work_dir: str,
-    feed_path: str,
-    rebuild_base: bool = True,
+    path: str,
+    source: DataFrame,
+    write_base: Callable[[], None],
+    refresh: Callable[[DataFrame, str, str], None],
+    rebuild_base: bool,
 ) -> dict:
-    """Continuous ingest COMPOSED with the stored-layout lifecycle
-    (VERDICT r12 item 4 — the streaming surface and the index
-    lifecycle finally meet): a checkpointed file-source stream over
-    the held-out events lands every micro-batch as an SCD2-feed DELTA
-    via ``refresh_scd2_feed`` inside ``foreachBatch`` — micro-batch =
-    daily batch, the production shape of continuous ingest.
+    """Continuous ingest COMPOSED with a stored layout's delta
+    lifecycle: a checkpointed file-source stream over ``source`` lands
+    every micro-batch as a layout DELTA via ``refresh(batch_df, path,
+    "mb<batch_id>")`` inside ``foreachBatch`` — micro-batch = daily
+    ingest batch, the production Kafka→lakehouse shape.
 
-    Exactly-once comes from COMPOSING the two recovery mechanisms:
+    Exactly-once comes from COMPOSING two recovery mechanisms:
 
     - the stream CRASHES once, deterministically, after batch 1's
-      delta has fully landed but before the micro-batch commits to
-      the checkpoint (the worst-case window: work done, progress not
+      delta has fully landed but before the micro-batch commits to the
+      checkpoint (the worst-case window: work done, progress not
       recorded);
     - on restart the source replays batch 1 under the SAME batch id,
-      and ``refresh_scd2_feed``'s per-(path, batch_id) idempotent
-      overwrite makes the replay land on top of its own delta — no
-      duplicate rows, no lost batch. A sink WITHOUT idempotent-per-
-      batch semantics would double-ingest here.
+      and the refresh verb's per-(path, batch_id) idempotent commit
+      (:func:`operators.store.commit_delta`: the ``_DELTA_<id>``
+      marker lands only after every delta table) makes the replay land
+      on top of its own delta — no duplicate rows, no lost batch, and
+      a crash-killed half-batch stays invisible until its replay
+      completes. A sink WITHOUT idempotent-per-batch semantics would
+      double-ingest here.
 
-    Mechanics: the held-out split lands as 3 parquet files and
+    Mechanics: ``source`` lands as exactly 3 parquet files under
+    ``<path>/_stream_source`` (an "_"-prefixed sibling the layout
+    readers ignore and the base-rebuild purge leaves alone) and
     ``maxFilesPerTrigger=1`` makes each its own micro-batch (which
-    rows ride in which batch is partitioner-dependent; the final feed
-    is their union, so the result is invariant). No aggregation state
-    — the checkpoint's offset log is the replay contract under test.
+    rows ride in which batch is partitioner-dependent; the final
+    layout is their union, so the result is invariant). No
+    aggregation state — the checkpoint's offset log is the replay
+    contract under test. ``rebuild_base=False`` reuses a cached base
+    AND its landed source (the gates' layout artifacts): only the
+    checkpoint/crash scratch under ``work_dir`` is per-drive, and batch
+    ids restart at 0 on a fresh checkpoint, so re-drives overwrite
+    their own deltas deterministically. A genuine failure inside
+    ``foreachBatch`` (e.g. the store refusing a corrupted layout) is
+    re-raised, never reported as a crash that did not fire.
 
     Returns ``{"n_deltas": committed delta count, "crashed_once":
-    the crash fired, "feed_rows": total feed rows after the run}`` —
-    the gate emits all three as hashed proof columns (``feed_rows``
-    equals the full events count iff no batch was lost or doubled).
-
-    Scale: foreachBatch-driven layout maintenance is the standard
-    Kafka→lakehouse shape; everything here transfers verbatim with
-    Kafka offsets instead of file offsets, and the delta markers make
-    the layout itself the idempotence ledger."""
+    True}``; the caller adds its own row count."""
     from pyspark.errors import StreamingQueryException
 
     from .. import fsutil
-    from ..operators.scd import (
-        read_scd2_feed,
-        refresh_scd2_feed,
-        write_scd2_feed,
-    )
     from ..operators.store import committed_delta_batches
-    from ..sources.catalog import load
 
-    src = os.path.join(feed_path, "_stream_source")
+    src = os.path.join(path, "_stream_source")
     ckpt = os.path.join(work_dir, "checkpoint")
     crash_flag = os.path.join(work_dir, "crashed_once")
-    cols = ["user_id", "ts", "event_type"]
-
-    ev = load(spark, sf_dir, "events")
-    base = ev.where(F.col("event_id") % 5 != 0).select(*cols)
-    streamed = ev.where(F.col("event_id") % 5 == 0).select(*cols)
     if rebuild_base:
-        # A finer layout buys nothing here (the stream appends, never
-        # prunes): 4 shards keep every delta write at a handful of
-        # files. Callers with a cached base (the gate's layout
-        # artifact) skip the rebuild — the micro-batch deltas
-        # overwrite their own prior batch_ids per drive. The landed
-        # source files are cached WITH the base (an "_"-prefixed
-        # sibling the feed reader ignores and the rebuild purge
-        # leaves alone); only the checkpoint/crash scratch is
-        # per-drive — batch ids restart at 0 on a fresh checkpoint,
-        # so re-drives overwrite their own deltas deterministically.
-        #
-        # Source FIRST, base SECOND (ADVICE r13, medium): the feed
-        # layout's _SUCCESS — written last by write_scd2_feed — is
-        # the artifact-freshness marker, so it must be the final step
-        # of the two-step rebuild chain. The reverse order left a
-        # crash window (base committed, source missing/partial) that
-        # every later drive would take as fresh and fail against;
-        # with this order any interrupted chain leaves a marker-less
-        # (= stale) layout the next drive rebuilds whole.
-        streamed.repartition(3).write.mode("overwrite").parquet(src)
+        # Source FIRST, base SECOND (ADVICE r13, medium): the layout's
+        # _SUCCESS — written last by the base writer — is the
+        # artifact-freshness marker, so it must be the final step of
+        # the two-step rebuild chain. The reverse order left a crash
+        # window (base committed, source missing/partial) that every
+        # later drive would take as fresh and fail against; with this
+        # order any interrupted chain leaves a marker-less (= stale)
+        # layout the next drive rebuilds whole.
+        source.repartition(3).write.mode("overwrite").parquet(src)
         n_src = sum(
             1
             for n in fsutil.list_names(spark, src)
@@ -881,26 +861,26 @@ def stream_feed_ingest_deltas(
         )
         if n_src != 3:
             # Fail at the write, not after a full stream run: the
-            # 3-micro-batch contract (and the oracle's literal
+            # 3-micro-batch contract (and the oracles' literal
             # n_stream_deltas=3) assumes repartition(3) yields three
             # part files — a tiny sf or an elided empty partition
             # breaks it here with the actual count (ADVICE r13).
             raise ValueError(
                 f"stream source landed {n_src} parquet files, not the "
-                "3 the micro-batch contract requires — scale factor "
-                "too small for 3 non-empty partitions?"
+                "3 the micro-batch contract requires — too few source "
+                "rows at this scale factor for 3 non-empty partitions?"
             )
-        write_scd2_feed(base, feed_path, *cols, n_shards=4)
+        write_base()
 
     stream = (
         spark.readStream.format("parquet")
-        .schema(streamed.schema)
+        .schema(source.schema)
         .option("maxFilesPerTrigger", 1)
         .load(src)
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        refresh_scd2_feed(batch_df, feed_path, f"mb{batch_id}")
+        refresh(batch_df, path, f"mb{batch_id}")
         if batch_id == 1 and not os.path.exists(crash_flag):
             open(crash_flag, "w").close()
             raise RuntimeError(
@@ -909,48 +889,68 @@ def stream_feed_ingest_deltas(
             )
 
     def run() -> None:
-        from ..session import int_conf, scoped_conf
-
-        confs = {}
-        cur = int_conf(spark, "spark.sql.shuffle.partitions")
-        if cur is not None:
-            confs["spark.sql.shuffle.partitions"] = str(min(cur, 4))
-        with scoped_conf(spark, confs):
-            q = (
-                stream.writeStream.foreachBatch(handle)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+        _run_bounded(
+            spark,
+            stream.writeStream.foreachBatch(handle).option(
+                "checkpointLocation", ckpt
+            ),
+        )
 
     try:
         run()  # run 1: dies inside batch 1's commit window
     except StreamingQueryException:
-        # Only the SIMULATED crash is expected here: if the flag was
-        # never written, this is a genuine failure (e.g. a corrupted
-        # feed layout raising through foreachBatch) — surface it
-        # instead of masking it as "crash never fired" (round-13
-        # review).
         if not os.path.exists(crash_flag):
-            raise
+            raise  # a genuine failure, not the simulated crash
     if not os.path.exists(crash_flag):
         raise ValueError(
             "the simulated crash never fired — the replay contract "
             "was not exercised (fewer than 2 micro-batches?)"
         )
     run()  # run 2: replays batch 1 idempotently, finishes the rest
-
-    n_deltas = len(committed_delta_batches(spark, feed_path))
-    feed, _ = read_scd2_feed(spark, feed_path)
     return {
-        "n_deltas": n_deltas,
+        "n_deltas": len(committed_delta_batches(spark, path)),
         "crashed_once": True,
-        "feed_rows": feed.count(),
     }
+
+
+def stream_feed_ingest_deltas(
+    spark: SparkSession,
+    sf_dir: str,
+    work_dir: str,
+    feed_path: str,
+    rebuild_base: bool = True,
+) -> dict:
+    """Continuous ingest into the SCD2 FEED layout (VERDICT r12 item 4
+    — the streaming surface and the index lifecycle meet): the
+    held-out events (``event_id % 5 == 0``) stream through
+    :func:`_crash_replay_ingest`, one ``refresh_scd2_feed`` delta per
+    micro-batch, over a 4-shard base feed of the rest (a finer layout
+    buys the appending stream nothing and costs files per delta).
+
+    Returns ``{"n_deltas", "crashed_once", "feed_rows"}`` — the gate
+    emits all three as hashed proof columns (``feed_rows`` equals the
+    full events count iff no batch was lost or doubled)."""
+    from ..operators.scd import (
+        read_scd2_feed,
+        refresh_scd2_feed,
+        write_scd2_feed,
+    )
+    from ..sources.catalog import load
+
+    cols = ["user_id", "ts", "event_type"]
+    ev = load(spark, sf_dir, "events")
+    base = ev.where(F.col("event_id") % 5 != 0).select(*cols)
+    info = _crash_replay_ingest(
+        spark,
+        work_dir,
+        feed_path,
+        ev.where(F.col("event_id") % 5 == 0).select(*cols),
+        lambda: write_scd2_feed(base, feed_path, *cols, n_shards=4),
+        refresh_scd2_feed,
+        rebuild_base,
+    )
+    feed, _ = read_scd2_feed(spark, feed_path)
+    return {**info, "feed_rows": feed.count()}
 
 
 def salted_stream_docs(batch: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -984,138 +984,40 @@ def stream_dedup_ingest_deltas(
     index_path: str,
     rebuild_base: bool = True,
 ) -> dict:
-    """Continuous ingest COMPOSED with the stored DEDUP INDEX
-    (VERDICT r13 item 4 — round 13 composed the stream with the SCD2
-    feed; the index family still ingested only via batch): a
-    checkpointed file-source stream over the held-out batch ids'
-    :func:`salted_stream_docs` lands every micro-batch as an index
-    delta via ``refresh_dedup_index`` inside ``foreachBatch`` —
-    micro-batch = daily ingest batch, the production Kafka→index
-    shape. The streamed docs are id-salted novel text (replica-
-    invariant — VERDICT r14 item 3; see :func:`salted_stream_docs`),
-    so the same 3-file source contract holds at any replica scale,
-    and the post-stream probe of the streamed docs themselves is the
+    """Continuous ingest into the stored DEDUP INDEX (VERDICT r13
+    item 4): the held-out batch ids' (``doc_id % 97 == 0``)
+    :func:`salted_stream_docs` stream through
+    :func:`_crash_replay_ingest`, one two-table ``refresh_dedup_index``
+    delta per micro-batch, over a 4-shard base index of the rest of
+    the corpus (every delta write pays one file per touched shard
+    twice; HRW assignment is layout-internal, so probe VALUES are
+    shard-count-invariant). The streamed docs are id-salted novel
+    text, so the 3-file source contract holds at any replica scale and
+    the post-stream probe of the streamed docs themselves is the
     exactly-once witness: every one must find its OWN rows in the
     index (a lost micro-batch flips its docs to 'ingest'; a doubled
     one moves ``index_rows``).
 
-    Exactly-once is the same two-mechanism composition as
-    :func:`stream_feed_ingest_deltas` (the template): the stream
-    CRASHES deterministically after batch 1's delta fully landed but
-    before its checkpoint commit; the restart replays batch 1 under
-    the SAME batch id and ``refresh_dedup_index``'s per-(path,
-    batch_id) idempotent overwrite lands the replay on top of its own
-    delta — the TWO-TABLE delta (content_hashes + band_rows) makes
-    the marker protocol matter more here: the commit marker lands
-    only after BOTH tables, so even the crash-killed half-batch is
-    invisible until its replay completes.
-
-    Mechanics mirror the template: the streamed docs land as exactly
-    3 parquet files (asserted at the write — ADVICE r13) under
-    ``<index_path>/_stream_source`` (an "_"-prefixed sibling the
-    index reader ignores and the base-rebuild purge leaves alone),
-    source files land BEFORE the base index write so the layout's
-    ``_SUCCESS`` is the last step of the rebuild chain (ADVICE r13,
-    medium), and ``maxFilesPerTrigger=1`` makes each file its own
-    micro-batch (which docs ride in which batch is
-    partitioner-dependent; the final index is their union, so every
-    probe is invariant).
-
     Returns ``{"n_deltas", "crashed_once", "index_rows"}`` —
     ``index_rows`` is the post-stream content_hashes row count
     (= corpus + streamed; a doubled or lost micro-batch moves it)."""
-    from pyspark.errors import StreamingQueryException
-
-    from .. import fsutil
     from ..operators.dedup import (
         read_dedup_index,
         refresh_dedup_index,
         write_dedup_index,
     )
-    from ..operators.store import committed_delta_batches
     from ..sources.catalog import load
-
-    src = os.path.join(index_path, "_stream_source")
-    ckpt = os.path.join(work_dir, "checkpoint")
-    crash_flag = os.path.join(work_dir, "crashed_once")
 
     d = load(spark, sf_dir, "documents")
     corpus = d.where(F.col("doc_id") % 97 != 0)
-    batch = d.where(F.col("doc_id") % 97 == 0)
-    if rebuild_base:
-        streamed = salted_stream_docs(batch)
-        streamed.repartition(3).write.mode("overwrite").parquet(src)
-        n_src = sum(
-            1
-            for n in fsutil.list_names(spark, src)
-            if n.endswith(".parquet")
-        )
-        if n_src != 3:
-            raise ValueError(
-                f"stream source landed {n_src} parquet files, not the "
-                "3 the micro-batch contract requires — too few batch "
-                "docs at this scale factor?"
-            )
-        # 4 shards, the feed twin's rule: a finer layout buys the
-        # appending stream nothing, and every micro-batch delta write
-        # pays one file per touched shard TWICE (two tables) — at the
-        # default 16 shards that file fan-out dominates the gate's
-        # wall. HRW assignment is layout-internal, so probe VALUES
-        # are shard-count-invariant (tests pin rebuild equivalence).
-        write_dedup_index(corpus, index_path, n_shards=4)
-
-    src_schema = "doc_id long, text string"
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(src_schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    info = _crash_replay_ingest(
+        spark,
+        work_dir,
+        index_path,
+        salted_stream_docs(d.where(F.col("doc_id") % 97 == 0)),
+        lambda: write_dedup_index(corpus, index_path, n_shards=4),
+        refresh_dedup_index,
+        rebuild_base,
     )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        refresh_dedup_index(batch_df, index_path, f"mb{batch_id}")
-        if batch_id == 1 and not os.path.exists(crash_flag):
-            open(crash_flag, "w").close()
-            raise RuntimeError(
-                "simulated crash: index delta landed, checkpoint "
-                "commit pending — restart must replay this batch"
-            )
-
-    def run() -> None:
-        from ..session import int_conf, scoped_conf
-
-        confs = {}
-        cur = int_conf(spark, "spark.sql.shuffle.partitions")
-        if cur is not None:
-            confs["spark.sql.shuffle.partitions"] = str(min(cur, 4))
-        with scoped_conf(spark, confs):
-            q = (
-                stream.writeStream.foreachBatch(handle)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-
-    try:
-        run()  # run 1: dies inside batch 1's commit window
-    except StreamingQueryException:
-        if not os.path.exists(crash_flag):
-            raise  # a genuine failure, not the simulated crash
-    if not os.path.exists(crash_flag):
-        raise ValueError(
-            "the simulated crash never fired — the replay contract "
-            "was not exercised (fewer than 2 micro-batches?)"
-        )
-    run()  # run 2: replays batch 1 idempotently, finishes the rest
-
-    n_deltas = len(committed_delta_batches(spark, index_path))
     hashes, _, _ = read_dedup_index(spark, index_path)
-    return {
-        "n_deltas": n_deltas,
-        "crashed_once": True,
-        "index_rows": hashes.count(),
-    }
+    return {**info, "index_rows": hashes.count()}

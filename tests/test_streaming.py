@@ -751,3 +751,35 @@ def test_stream_dedup_ingest_deltas_exactly_once(spark, tmp_path):
         "left_semi",
     )
     assert streamed_ids.count() == batch_n
+
+
+def test_crash_replay_ingest_reraises_genuine_failure(spark, tmp_path):
+    """A failure inside ``foreachBatch`` that is not the simulated
+    crash (here: the store refusing a feed whose ``_META.json`` is
+    gone) must surface as itself — not be swallowed and reported as
+    "the simulated crash never fired"."""
+    import os
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from formula1_dataengineering_spark.operators.scd import write_scd2_feed
+    from formula1_dataengineering_spark.streaming.events import (
+        stream_feed_ingest_deltas,
+    )
+
+    cols = ["user_id", "ts", "event_type"]
+    ev = load(spark, SF, "events").select(*cols)
+    feed_path = str(tmp_path / "feed")
+    ev.limit(20).coalesce(1).write.parquet(
+        os.path.join(feed_path, "_stream_source")
+    )
+    write_scd2_feed(ev.limit(50), feed_path, *cols, n_shards=4)
+    os.remove(os.path.join(feed_path, "_META.json"))
+    work = tmp_path / "work"
+    work.mkdir()
+    with pytest.raises(StreamingQueryException, match="no _META.json"):
+        stream_feed_ingest_deltas(
+            spark, SF, str(work), feed_path, rebuild_base=False
+        )
+    assert not (work / "crashed_once").exists()
