@@ -16,6 +16,8 @@ per-driver dict disappears into ``Window.partitionBy(driver_number)``.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -31,6 +33,30 @@ from .analytics import (
 )
 
 
+def _hold(method):
+    """Build a facade method's result once and hold it until release(): a
+    held DataFrame keeps its executed plan, so a re-pull skips planning and
+    reuses the shuffle stages it already ran."""
+    @functools.wraps(method)
+    def held(self):
+        if method.__name__ not in self._held:
+            self._held[method.__name__] = method(self)
+        return self._held[method.__name__]
+    return held
+
+
+def _lap_windows(laps: DataFrame) -> DataFrame:
+    """``laps`` with [lap_start, lap_end): lap N ends where lap N+1 starts
+    (keyed on lap_number, fixing so:178's positional bug, SURVEY §3.3),
+    else lap_duration (120 s if NULL or 0) after it starts."""
+    w = Window.partitionBy("session_key", "driver_number").orderBy("lap_number")
+    dur = F.coalesce(F.nullif("lap_duration", F.lit(0.0)), F.lit(120.0))
+    end = F.timestamp_micros(F.unix_micros("date_start") + F.round(dur * 1e6).cast("long"))
+    has_next = F.lead("lap_number").over(w) == F.col("lap_number") + 1
+    end = F.when(has_next, F.lead("date_start").over(w)).otherwise(end)
+    return laps.withColumn("lap_start", F.col("date_start")).withColumn("lap_end", end)
+
+
 class F1Session:
     """Per-session query facade over the F1 entity tables.
 
@@ -44,6 +70,7 @@ class F1Session:
         self.session_key = session_key
         self._tables = tables
         self._laps_enriched: DataFrame | None = None
+        self._held: dict[str, object] = {}
 
     def _t(self, name: str) -> DataFrame:
         df = self._tables[name]
@@ -54,7 +81,12 @@ class F1Session:
     # -- session metadata (so:97-103) ------------------------------------
     def session_info(self) -> dict:
         """Single-row metadata lookup; driver-side scalars like the
-        reference's circuit/session_type attributes."""
+        reference's circuit/session_type attributes, read once per facade
+        (each caller gets its own copy)."""
+        return dict(self._session_info())
+
+    @_hold
+    def _session_info(self) -> dict:
         row = self._t("sessions").first()
         if row is None:
             return {"session_type": "Unknown", "circuit": "Unknown", "name": "Unknown"}
@@ -89,10 +121,11 @@ class F1Session:
         return self._laps_enriched
 
     def release(self) -> None:
-        """Unpersist this facade's memoized laps cache and drop the
-        memo, so the next :meth:`laps` call rebuilds it. The explicit
-        owner-side release point for callers that do not want to drain
-        the whole session registry via ``release_caches``."""
+        """Unpersist the memoized laps cache and drop it with the held
+        session info and chart frames, so the next calls plan them again.
+        The explicit owner-side release point for callers that do not
+        want to drain the whole session registry via ``release_caches``."""
+        self._held.clear()
         if self._laps_enriched is not None:
             try:
                 self._laps_enriched.unpersist(blocking=False)
@@ -107,21 +140,23 @@ class F1Session:
     def position_order(self) -> DataFrame:
         return session_position_order(self.laps())
 
+    @_hold
     def fastest_laps_chart_data(self) -> DataFrame:
         """Chart-ready fastest-lap comparison: the data layer of the
         reference's ``compare_fastest_lap_characteristics`` /
         ``plot_fastest_laps`` figures (K1 — src/session_object.py:259-311,
         src/data_visualization.py:3-49). Per driver: best lap, formatted
         ``M:SS.mmm`` label (F2 as a pure column expression, no UDF),
-        acronym and team colour, ordered by position. Rendering stays at
-        the presentation edge via ``.toPandas()``."""
+        acronym, team colour and the lap's number and window, ordered by
+        position. Rendering stays at the presentation edge via
+        ``.toPandas()``."""
         from ..functions.timefmt import format_lap_time
 
         w = Window.orderBy(
             F.col("actual_lap_time").asc(), F.col("date_start").asc()
         )
         return (
-            self.fastest_laps()
+            fastest_lap_per_driver(_lap_windows(self.laps()))
             .withColumn("position", F.row_number().over(w))
             .withColumn("lap_time_label", format_lap_time(F.col("actual_lap_time")))
             .select(
@@ -131,6 +166,7 @@ class F1Session:
                 "team_colour",
                 "actual_lap_time",
                 "lap_time_label",
+                "lap_number", "lap_start", "lap_end",
             )
         )
 
@@ -148,6 +184,7 @@ class F1Session:
     def avg_lap_by_compound(self) -> DataFrame:
         return avg_lap_time_by_driver_compound(self.laps())
 
+    @_hold
     def avg_lap_by_compound_chart_data(self) -> DataFrame:
         """Chart-ready driver × compound averages: the data layer of the
         reference's ``LapTimePlotByTireAndSession`` figure (K1 —
@@ -171,35 +208,21 @@ class F1Session:
 
     # -- lap bounds + telemetry (so:176-218, so:228-238) ------------------
     def lap_bounds(self, driver_number: int, lap_number: int) -> tuple:
-        """[start, end) of one lap: this lap's date_start → next lap's
-        date_start (fixes the reference's positional-index bug at
-        so:178 by keying on lap_number explicitly, SURVEY §3.3)."""
-        rows = (
-            self._t("laps")
-            .where(
-                (F.col("driver_number") == driver_number)
-                & (F.col("lap_number").isin(lap_number, lap_number + 1))
-            )
-            .select("lap_number", "date_start", "lap_duration")
-            .collect()
-        )
-        by_lap = {r["lap_number"]: r for r in rows}
-        if lap_number not in by_lap:
+        """[start, end) of one lap by the :func:`_lap_windows` rule, over
+        the lap and its successor in one partition (so no shuffle)."""
+        laps = self.laps().where(F.col("driver_number") == driver_number)
+        laps = laps.where(F.col("lap_number").isin(lap_number, lap_number + 1)).coalesce(1)
+        rows = _lap_windows(laps).where(F.col("lap_number") == lap_number).collect()
+        if not rows:
             raise KeyError(f"driver {driver_number} has no lap {lap_number}")
-        start = by_lap[lap_number]["date_start"]
-        nxt = by_lap.get(lap_number + 1)
-        if nxt is not None:
-            return start, nxt["date_start"]
-        dur = by_lap[lap_number]["lap_duration"] or 120.0
-        from datetime import timedelta
+        return rows[0]["lap_start"], rows[0]["lap_end"]
 
-        return start, start + timedelta(seconds=float(dur))
-
-    def lap_telemetry(self, driver_number: int, lap_number: int) -> DataFrame:
+    def lap_telemetry(self, driver_number: int, lap_number: int, window=None) -> DataFrame:
         """Telemetry samples for one lap with seconds_from_lap_start
         (P4/P6/P7 — so:193-218). The date predicate is a pushed-down
-        range filter → partition/row-group pruning at scale."""
-        start, end = self.lap_bounds(driver_number, lap_number)
+        range filter → partition/row-group pruning at scale. A known
+        ``window=(start, end)`` skips the :meth:`lap_bounds` lookup."""
+        start, end = window or self.lap_bounds(driver_number, lap_number)
         car = self._t("car_data").where(F.col("driver_number") == driver_number)
         return car.where(F.col("date").between(F.lit(start), F.lit(end))).withColumn(
             "seconds_from_lap_start",

@@ -61,6 +61,9 @@ window), or re-issue the delete; the verb is idempotent and cheap.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -177,20 +180,16 @@ def delete_from_dedup_index(
     layout = store.open_layout(
         spark, path, "dedup index", "write_dedup_index"
     )
-    # Materialized once: every (table × directory) job re-executes the
-    # ids plan 3-4 times (discovery, count, keep, stage) — for a
-    # computed id set (the retraction gate's corpus-wide twin join)
-    # that re-run would dominate the delete (round-14 review).
-    doc_ids = doc_ids.select(id_col).distinct().localCheckpoint(eager=True)
-    jobs = [
-        (table, rel, schema_key, doc_ids, id_col, "shard", (), None)
-        for table, schema_key in (
-            ("content_hashes", "hashes_schema"),
-            ("band_rows", "bands_schema"),
-        )
-        for rel in _table_rels(layout, table)
-    ]
-    return _run_delete(spark, path, layout, jobs)
+    with _pinned_ids(doc_ids, id_col) as doc_ids:
+        jobs = [
+            (table, rel, schema_key, doc_ids, id_col, "shard", (), None)
+            for table, schema_key in (
+                ("content_hashes", "hashes_schema"),
+                ("band_rows", "bands_schema"),
+            )
+            for rel in _table_rels(layout, table)
+        ]
+        return _run_delete(spark, path, layout, jobs)
 
 
 def delete_from_ann_index(
@@ -211,32 +210,47 @@ def delete_from_ann_index(
             f"ANN index at {path!r}: _META.json records no cell_col — "
             "rebuild with write_ann_index before deleting"
         )
-    vec_ids = vec_ids.select(id_col).distinct().localCheckpoint(eager=True)
-    jobs = [
-        ("codes", rel, "codes_schema", vec_ids, id_col, cell_col, (), None)
-        for rel in _table_rels(layout, "codes")
-    ]
-    return _run_delete(spark, path, layout, jobs)
+    with _pinned_ids(vec_ids, id_col) as vec_ids:
+        jobs = [
+            ("codes", rel, "codes_schema", vec_ids, id_col, cell_col, (), None)
+            for rel in _table_rels(layout, "codes")
+        ]
+        return _run_delete(spark, path, layout, jobs)
 
 
+@contextmanager
+def _pinned_ids(ids: DataFrame, id_col: str) -> Iterator[DataFrame]:
+    """The request's distinct ids, materialized once for the verb and
+    unpinned when it exits. Every (table × directory) job re-executes
+    the ids plan 3-4 times (discovery, count, keep, stage) — for a
+    computed id set (the retraction gate's corpus-wide twin join) that
+    re-run would dominate the delete (round-14 review)."""
+    pinned = ids.select(id_col).distinct().localCheckpoint(eager=True)
+    try:
+        yield pinned
+    finally:
+        pinned._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+@contextmanager
 def _erasure_keys(
     keys: DataFrame, key_col: str, verb: str
-) -> DataFrame:
-    """Validated, materialized erasure-request keys. NULL keys are
+) -> Iterator[DataFrame]:
+    """Validated, pinned erasure-request keys. NULL keys are
     REFUSED (ADVICE r14): a null-key row lands in the
     __HIVE_DEFAULT_PARTITION__ directory like any other, but a NULL
     in the request would silently match nothing through the
     anti-join's three-valued logic — an erasure request that silently
     no-ops is worse than one that fails loudly."""
-    keys = keys.select(key_col).distinct().localCheckpoint(eager=True)
-    if keys.where(F.col(key_col).isNull()).count() > 0:
-        raise ValueError(
-            f"{verb}: the erasure request contains a NULL {key_col!r} "
-            "— NULL never equals anything, so its rows cannot be "
-            "matched by key; drop the NULL from the request (null-key "
-            "rows can only be retired by a filtered rebuild)"
-        )
-    return keys
+    with _pinned_ids(keys, key_col) as keys:
+        if keys.where(F.col(key_col).isNull()).count() > 0:
+            raise ValueError(
+                f"{verb}: the erasure request contains a NULL {key_col!r} "
+                "— NULL never equals anything, so its rows cannot be "
+                "matched by key; drop the NULL from the request (null-key "
+                "rows can only be retired by a filtered rebuild)"
+            )
+        yield keys
 
 
 def _hrw_touched_shards(
@@ -272,22 +286,22 @@ def delete_scd2_feed_keys(
     )
     meta = layout.meta
     key_col = meta["key_col"]
-    keys = _erasure_keys(keys, key_col, "delete_scd2_feed_keys")
-    touched = _hrw_touched_shards(keys, key_col, int(meta["n_shards"]))
-    jobs = [
-        (
-            "feed_rows",
-            rel,
-            "feed_schema",
-            keys,
-            key_col,
-            "shard",
-            (key_col, meta["ts_col"]),
-            touched,
-        )
-        for rel in _table_rels(layout, "feed_rows")
-    ]
-    return _run_delete(spark, path, layout, jobs)
+    with _erasure_keys(keys, key_col, "delete_scd2_feed_keys") as keys:
+        touched = _hrw_touched_shards(keys, key_col, int(meta["n_shards"]))
+        jobs = [
+            (
+                "feed_rows",
+                rel,
+                "feed_schema",
+                keys,
+                key_col,
+                "shard",
+                (key_col, meta["ts_col"]),
+                touched,
+            )
+            for rel in _table_rels(layout, "feed_rows")
+        ]
+        return _run_delete(spark, path, layout, jobs)
 
 
 def delete_scd2_history_keys(
@@ -311,21 +325,21 @@ def delete_scd2_history_keys(
     )
     meta = layout.meta
     key_col = meta["key_col"]
-    keys = _erasure_keys(keys, key_col, "delete_scd2_history_keys")
-    touched = _hrw_touched_shards(keys, key_col, int(meta["n_shards"]))
-    jobs = [
-        (
-            "history_rows",
-            "history_rows",
-            "history_schema",
-            keys,
-            key_col,
-            "shard",
-            (key_col, "effective_from_us"),
-            touched,
-        )
-    ]
-    return _run_delete(spark, path, layout, jobs)
+    with _erasure_keys(keys, key_col, "delete_scd2_history_keys") as keys:
+        touched = _hrw_touched_shards(keys, key_col, int(meta["n_shards"]))
+        jobs = [
+            (
+                "history_rows",
+                "history_rows",
+                "history_schema",
+                keys,
+                key_col,
+                "shard",
+                (key_col, "effective_from_us"),
+                touched,
+            )
+        ]
+        return _run_delete(spark, path, layout, jobs)
 
 
 __all__ = [

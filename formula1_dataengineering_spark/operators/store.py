@@ -226,9 +226,12 @@ def run_concurrently(thunks: list[Callable[[], object]]) -> list:
     finished. Each thunk runs in its own ``cache_scope``: the scope
     stack is thread-local, so a ``managed_cache`` taken in a worker
     would otherwise land in the session fallback registry and outlive
-    the call. A lone thunk runs inline, in the caller's thread and
-    scope."""
+    the call. Each thunk also runs under the caller's job group, job
+    tags and local properties, so its jobs are charged to the caller.
+    A lone thunk runs inline, in the caller's thread and scope."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     from ..caching import cache_scope
 
@@ -239,6 +242,9 @@ def run_concurrently(thunks: list[Callable[[], object]]) -> list:
         with cache_scope():
             return fn()
 
+    session = SparkSession.getActiveSession()
+    if session is not None:
+        scoped = inheritable_thread_target(session)(scoped)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(scoped, fn) for fn in thunks]
         return [f.result() for f in futures]

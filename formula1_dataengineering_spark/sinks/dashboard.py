@@ -183,10 +183,13 @@ def emit_drilldown_site(
             )
             for _, sk in sess:
                 facade = F1Session(spark, sk, tables)
-                emit(
-                    f"session_{sk}.html",
-                    session_report_html(facade, driver_number=driver_number),
-                )
+                try:
+                    emit(
+                        f"session_{sk}.html",
+                        session_report_html(facade, driver_number=driver_number),
+                    )
+                finally:
+                    facade.release()
     return pages
 
 
@@ -205,7 +208,7 @@ def session_report_html(facade, driver_number: int | None = None) -> str:
                 chart,
                 title=f"{info['circuit']} — {info['name']} fastest laps",
             ),
-            chart,
+            chart.drop(columns=["lap_number", "lap_start", "lap_end"]),
         )
     ]
     # Third reference figure (classes.py LapTimePlotByTireAndSession):
@@ -223,24 +226,22 @@ def session_report_html(facade, driver_number: int | None = None) -> str:
                 comp,
             )
         )
-    if driver_number is not None:
-        best = chart[chart["driver_number"] == driver_number]
-        if len(best):
-            laps = facade.fastest_laps().toPandas()
-            rows = laps[laps["driver_number"] == driver_number]
-            # Guard: driver can appear in chart data yet be absent from
-            # fastest_laps() (round-2 ADVICE) — omit the telemetry
-            # section rather than IndexError.
-            if len(rows):
-                lap_no = int(rows["lap_number"].iloc[0])
-                tel = facade.lap_telemetry(driver_number, lap_no).toPandas()
-                sections.append(
-                    (
-                        f"Lap telemetry — driver {driver_number}, lap {lap_no}",
-                        telemetry_svg(tel),
-                        None,
-                    )
-                )
+    best = chart[chart["driver_number"] == driver_number]
+    if driver_number is not None and len(best):
+        # toPandas gave the lap's window as naive session-timezone wall time.
+        row, tz = best.iloc[0], facade.spark.conf.get("spark.sql.session.timeZone")
+        window = [
+            pd.Timestamp(row[c], tz=tz).to_pydatetime() for c in ("lap_start", "lap_end")
+        ]
+        lap_no = int(row["lap_number"])
+        tel = facade.lap_telemetry(driver_number, lap_no, window=window).toPandas()
+        sections.append(
+            (
+                f"Lap telemetry — driver {driver_number}, lap {lap_no}",
+                telemetry_svg(tel),
+                None,
+            )
+        )
     return dashboard_html(
         f"Session {facade.session_key}",
         sections,

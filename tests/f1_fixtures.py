@@ -1,7 +1,9 @@
 """Deterministic F1 fixture tables exercising every FIXTURES.md edge
 case: lap-time ties broken by date_start, pit-out laps with absurdly
 fast times, null sectors, stint gaps, null compounds, zero-lap drivers,
-all-null-lap-time drivers, misaligned telemetry/location timestamps."""
+all-null-lap-time drivers, misaligned telemetry/location timestamps, and
+the lap-window fallbacks: fastest laps that are a driver's last lap, one
+with a NULL lap_duration, and one whose lap N+1 is missing."""
 
 from __future__ import annotations
 
@@ -18,14 +20,14 @@ Q_START = datetime(2024, 5, 1, 14, 0, 0)
 R_START = datetime(2024, 5, 3, 15, 0, 0)
 
 
-def _lap(sk, d, n, ts, total, pit=False, null_sectors=False):
+def _lap(sk, d, n, ts, total, pit=False, null_sectors=False, null_duration=False):
     if null_sectors or total is None:
         s1 = s2 = s3 = None
         dur = None
     else:
         s1, s2 = 30.0, 30.0
         s3 = round(total - 60.0, 3)
-        dur = total
+        dur = None if null_duration else total
     return (sk, d, n, ts, dur, s1, s2, s3, pit)
 
 
@@ -36,7 +38,15 @@ def build_tables(spark: SparkSession) -> dict:
         # Q1 laps (first 18 minutes)
         t0 = Q_START + timedelta(minutes=2, seconds=10 * d)
         laps.append(_lap(QUALI_KEY, d, 1, t0, 95.0 + d * 0.1))
-        laps.append(_lap(QUALI_KEY, d, 2, t0 + timedelta(minutes=4), 90.0 + d * 0.1))
+        # d20's best (and last) lap has no lap_duration: 120 s window
+        laps.append(
+            _lap(QUALI_KEY, d, 2, t0 + timedelta(minutes=4), 90.0 + d * 0.1,
+                 null_duration=d == 20)
+        )
+    # d19 has no lap 3: its best lap 2 ends by lap_duration, not at lap 4
+    laps.append(
+        _lap(QUALI_KEY, 19, 4, Q_START + timedelta(minutes=13), None, null_sectors=True)
+    )
     for d in range(1, 16):
         # Q2 laps (25-40 min window)
         t0 = Q_START + timedelta(minutes=27, seconds=10 * d)
@@ -96,7 +106,7 @@ def build_tables(spark: SparkSession) -> dict:
 
     car_data, location = [], []
     base = R_START  # driver 1 lap 1 starts at R_START + 1s
-    for i in range(0, 1200):  # 250 ms cadence, 5 minutes
+    for i in range(0, 2000):  # 250 ms cadence, 500 s: through lap 5
         ts = base + timedelta(milliseconds=250 * i)
         car_data.append(
             (RACE_KEY, 1, ts, 180.0 + (i % 40) * 2.0, float(i % 100), 0.0, 1 + i % 8, 9000 + (i % 40) * 80)

@@ -52,6 +52,19 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _unpinned(spark, verb, path, ids):
+    """Run a delete verb and check that it leaves no persistent RDD
+    behind: its id-set pin is released on every exit path, a refusal
+    included. A subset check, because the JVM drops collected RDDs
+    from the registry on its own."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    try:
+        return verb(spark, path, ids)
+    finally:
+        assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
 def _snapshot(root):
     out = {}
     for dirpath, _dirs, files in os.walk(root):
@@ -80,7 +93,7 @@ def test_dedup_delete_reaches_base_and_delta(spark, tmp_path):
     h0, b0, _ = read_dedup_index(spark, path)
     want_h = [r for r in _rows(h0) if r[0] not in (3, 4)]
     want_b = [r for r in _rows(b0) if r[0] not in (3, 4)]
-    info = delete_from_dedup_index(spark, path, victims)
+    info = _unpinned(spark, delete_from_dedup_index, path, victims)
     # 1 hash row + 4 band rows per doc, per victim, across both dirs.
     assert info["rows_deleted"] == 2 * 5
     h1, b1, _ = read_dedup_index(spark, path)
@@ -132,7 +145,7 @@ def test_ann_delete_prunes_topk_and_keeps_codebook(spark, tmp_path):
     want_cb = _rows(cb_before)
     want_cells = _rows(cells_before)
     victims = spark.createDataFrame([(5,), (12,)], "vec_id long")
-    info = delete_from_ann_index(spark, path, victims)
+    info = _unpinned(spark, delete_from_ann_index, path, victims)
     assert info["rows_deleted"] == 2 * 4  # m=4 code rows per vector
     codes, cb, cells, _ = read_ann_index(spark, path)
     assert codes.where(F.col("vec_id").isin(5, 12)).count() == 0
@@ -163,11 +176,12 @@ def test_feed_key_delete_static_pruning_and_empty_partitions(
     # NULL keys in the request are REFUSED (ADVICE r14): a silent
     # no-op erasure is worse than a loud failure.
     with pytest.raises(ValueError, match="NULL"):
-        delete_scd2_feed_keys(
-            spark, path, spark.createDataFrame([(2,), (None,)], "k long")
+        _unpinned(
+            spark, delete_scd2_feed_keys, path,
+            spark.createDataFrame([(2,), (None,)], "k long"),
         )
     erased = spark.createDataFrame([(2,)], "k long")
-    info = delete_scd2_feed_keys(spark, path, erased)
+    info = _unpinned(spark, delete_scd2_feed_keys, path, erased)
     assert info["rows_deleted"] == 10  # 40 rows / 4 keys
     after, _ = read_scd2_feed(spark, path)
     got = _rows(after.select("k", "ts", "v"))
@@ -288,11 +302,13 @@ def test_history_key_delete_matches_filtered_rebuild(spark, tmp_path):
     n_victim = hist.where("k = 5").count()
     assert n_victim > 0
     with pytest.raises(ValueError, match="NULL"):
-        delete_scd2_history_keys(
-            spark, path, spark.createDataFrame([(None,)], "k long")
+        _unpinned(
+            spark, delete_scd2_history_keys, path,
+            spark.createDataFrame([(None,)], "k long"),
         )
-    info = delete_scd2_history_keys(
-        spark, path, spark.createDataFrame([(5,)], "k long")
+    info = _unpinned(
+        spark, delete_scd2_history_keys, path,
+        spark.createDataFrame([(5,)], "k long"),
     )
     assert info["rows_deleted"] == n_victim
     assert info["partitions_rewritten"] == 1  # static HRW pruning

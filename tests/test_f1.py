@@ -125,6 +125,34 @@ def test_lap_telemetry_bounds(race):
     assert (tel["seconds_from_lap_start"] <= 95.0).all()
 
 
+def test_chart_lap_windows_follow_lap_bounds(quali, race):
+    """The chart frame's lap window and lap_bounds apply one rule for
+    every driver in both sessions, fallbacks included: a best lap that
+    is the driver's last (its lap_duration), one with a NULL
+    lap_duration (120 s) and one with lap N+1 missing (d19 has a lap 4
+    but no lap 3). Telemetry over the passed window equals the lookup."""
+    from datetime import timedelta
+
+    for sess in (quali, race):
+        rows = sess.fastest_laps_chart_data().collect()
+        assert rows
+        for r in rows:
+            window = (r["lap_start"], r["lap_end"])
+            assert window == sess.lap_bounds(r["driver_number"], r["lap_number"])
+    q = {r["driver_number"]: r for r in quali.fastest_laps_chart_data().collect()}
+    span = {d: q[d]["lap_end"] - q[d]["lap_start"] for d in (11, 19, 20)}
+    assert span == {
+        11: timedelta(seconds=90.1),
+        19: timedelta(seconds=91.9),
+        20: timedelta(seconds=120),
+    }
+    (r,) = [r for r in race.fastest_laps_chart_data().collect() if r["driver_number"] == 1]
+    window = (r["lap_start"], r["lap_end"])
+    passed = race.lap_telemetry(1, r["lap_number"], window=window).collect()
+    looked_up = race.lap_telemetry(1, r["lap_number"]).collect()
+    assert passed and sorted(passed) == sorted(looked_up)
+
+
 def test_nearest_asof_matches_pandas(race):
     got = (
         race.track_position_with_gear(1, 1)

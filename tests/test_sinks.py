@@ -158,7 +158,11 @@ def tables(spark):
 
 def test_session_report_end_to_end(spark, tables):
     """K2 parity: full report for the fixture race session — both
-    figures render from real facade queries (dashboard.py:88-117)."""
+    figures render from real facade queries (dashboard.py:88-117).
+    A second page on the same facade pulls only the chart, compound
+    and telemetry frames: session info and both chart frames are held,
+    so at most 3 Spark jobs run. release() drops the held frames; the
+    next page plans new ones and renders the same bytes."""
     from formula1_dataengineering_spark.f1.session_facade import F1Session
 
     f = F1Session(spark, RACE_KEY, tables)
@@ -168,6 +172,23 @@ def test_session_report_end_to_end(spark, tables):
     assert "Average lap times by compound" in html
     assert html.count("<svg") == 3
     ET.fromstring(html[html.index("<svg") : html.index("</svg>") + 6])
+
+    sc = spark.sparkContext
+    held = (f.fastest_laps_chart_data(), f.avg_lap_by_compound_chart_data())
+    sc.setJobGroup("warm-session-page", "second page on a warm facade")
+    try:
+        warm = session_report_html(f, driver_number=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("warm-session-page")) <= 3
+    assert warm == html
+    assert f.fastest_laps_chart_data() is held[0]
+    assert f.avg_lap_by_compound_chart_data() is held[1]
+    f.release()
+    assert f.fastest_laps_chart_data() is not held[0]
+    assert f.avg_lap_by_compound_chart_data() is not held[1]
+    assert session_report_html(f, driver_number=1) == html
+    f.release()
 
     quali = F1Session(spark, QUALI_KEY, tables)
     html_q = session_report_html(quali)
@@ -273,12 +294,20 @@ def test_fastest_laps_null_compound_has_no_label():
 def test_drilldown_site_navigates_year_weekend_session(spark, tables, tmp_path):
     """K2 drill-down parity (reference dashboard.py:34-99): the static
     site contains every selection state as a page, and every link on
-    every page resolves to an emitted file."""
+    every page resolves to an emitted file. Each session page's facade
+    is released once its page is written, so the site leaves no laps
+    cache behind without a release_caches call."""
     import re
 
+    from formula1_dataengineering_spark.caching import release_caches
     from formula1_dataengineering_spark.sinks import emit_drilldown_site
 
+    from .test_caching import _cache_empty
+
+    spark.catalog.clearCache()
+    release_caches()
     pages = emit_drilldown_site(spark, tables, str(tmp_path), driver_number=1)
+    assert _cache_empty(spark)
     assert "index.html" in pages
     # index → the fixture's one year
     index = (tmp_path / "index.html").read_text()

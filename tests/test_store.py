@@ -418,3 +418,17 @@ def test_concurrent_writes_release_their_thunk_caches(spark):
     assert len(taken) == 2
     for df in taken:
         assert not df.storageLevel.useMemory and not df.storageLevel.useDisk
+
+
+def test_concurrent_thunks_keep_the_callers_job_group(spark):
+    """Jobs started from run_concurrently's pool threads carry the
+    caller's job group, so a traced or cancellable group sees them."""
+    sc = spark.sparkContext
+    sc.setJobGroup("run-concurrently", "pool jobs keep the caller's group")
+    try:
+        store.run_concurrently(
+            [lambda: sc.parallelize([1], 1).count(), lambda: sc.parallelize([2], 1).count()]
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("run-concurrently")) == 2
