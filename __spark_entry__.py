@@ -32,6 +32,42 @@ from formula1_dataengineering_spark.plans import ORACLE_SQL, QUERIES
 #: queue (per round-4 advice). Keep this list current — add any query
 #: whose Spark plan or oracle changed since its last green row.
 _PRIORITY: list[str] = [
+    # Stored-layout gates whose artifact holds a dedup, ANN or SCD2
+    # layout: ingest deltas now commit through the manifest and every
+    # table opens as one Parquet scan, so their plans moved (and their
+    # layout_artifact tags were bumped past the marker format).
+    "ivf_pq_topk_indexed",
+    "ann_multiprobe_recall",
+    "incremental_dedup_indexed",
+    "end_to_end_incremental_ingest",
+    "e2e_ingest_neardup_resolution",
+    "scd2_refresh_pruned_history",
+    "scd2_cow_refresh_history",
+    "scd2_two_day_cycle_history",
+    "ann_index_delta_topk",
+    "ann_delta_recall",
+    "ann_sampled_recall_referee",
+    "ann_rebuild_trigger_policy",
+    "dedup_index_compaction_probe",
+    "ann_index_compaction_topk",
+    "scd2_feed_compaction_history",
+    "stream_feed_ingest_history",
+    "ann_maintenance_policy",
+    "dedup_index_maintenance",
+    "scd2_feed_maintenance",
+    "layout_vacuum_sweep",
+    "scd2_history_retention",
+    "stream_dedup_ingest_probe",
+    "compaction_ingest_interleave",
+    "dedup_index_retraction",
+    "ann_index_retraction",
+    "scd2_feed_key_deletion",
+    "scd2_history_key_deletion",
+    "dedup_maintenance_deletion_drift",
+    "scd2_feed_deletion_drift",
+    "layout_maintenance_umbrella",
+    "scd2_erasure_end_to_end",
+    "snapshot_read_across_commit",
     # round 17 (optimization round 2) — gates whose PLANS changed this
     # round, so their old green rows hashed pre-change execution:
     # - the six LSH pair gates: the hot-bucket guard's window became a
@@ -59,36 +95,12 @@ _PRIORITY: list[str] = [
     "corpus_selection",
     "minhash_lsh_fast_dup_recall",
     "lsh_hot_bucket_guard",
-    "ann_multiprobe_recall",
-    "ann_delta_recall",
-    "ann_sampled_recall_referee",
-    "ann_index_delta_topk",
-    "ann_rebuild_trigger_policy",
     "supplier_pagerank",
-    "stream_dedup_ingest_probe",
-    "end_to_end_incremental_ingest",
-    "e2e_ingest_neardup_resolution",
-    "incremental_dedup_indexed",
     "incremental_dedup_new_batch",
-    "compaction_ingest_interleave",
-    "dedup_index_maintenance",
-    "dedup_index_compaction_probe",
-    "layout_maintenance_umbrella",
     "bm25_topk_docs",
     "hybrid_rrf_fusion",
     "events_stream_psi_drift",
     "scd2_refresh_history",
-    "scd2_refresh_pruned_history",
-    "scd2_cow_refresh_history",
-    "scd2_two_day_cycle_history",
-    "stream_feed_ingest_history",
-    "scd2_erasure_end_to_end",
-    "dedup_index_retraction",
-    "ann_index_retraction",
-    "scd2_feed_key_deletion",
-    "scd2_history_key_deletion",
-    "dedup_maintenance_deletion_drift",
-    "scd2_feed_deletion_drift",
 ]
 
 

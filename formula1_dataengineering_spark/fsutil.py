@@ -17,7 +17,9 @@ exists/not-exists); ``rename`` is the layout-swap primitive (atomic on
 HDFS, best-effort elsewhere — ``operators.store`` orders operations
 so a crash inside a base swap leaves a marker-less, reader-refused
 layout and a crash inside any other commit leaves the previous
-snapshot current, never a half-validated one).
+snapshot current, never a half-validated one), and it refuses an
+existing target, which makes it the manifest publish's
+compare-and-swap.
 """
 
 from __future__ import annotations
@@ -69,11 +71,6 @@ def exists(spark: "SparkSession", path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def is_dir(spark: "SparkSession", path: str) -> bool:
-    fs, p = _fs_path(spark, path)
-    return bool(fs.exists(p) and fs.getFileStatus(p).isDirectory())
-
-
 def delete(spark: "SparkSession", path: str) -> bool:
     """Recursive delete; False if the path did not exist."""
     fs, p = _fs_path(spark, path)
@@ -88,15 +85,39 @@ def mkdirs(spark: "SparkSession", path: str) -> None:
 
 
 def rename(spark: "SparkSession", src: str, dst: str) -> None:
-    """Move ``src`` to ``dst`` (the staged-layout swap primitive).
-    Hadoop rename returns False instead of raising on most failure
-    shapes (dst exists, src missing) — normalize to a loud error, a
-    silent half-swapped index being exactly what the commit protocol
+    """Move ``src`` to ``dst``, refusing an existing ``dst`` with
+    ``FileExistsError`` — the layout-swap primitive and the manifest
+    compare-and-swap. A file (a commit record) moves by
+    ``FileContext.rename`` with ``Rename.NONE``, which refuses the
+    target atomically where the filesystem can (``FileSystem.rename``
+    replaces an existing local file); a directory moves by
+    ``FileSystem.rename`` after an existence check, since the local
+    ``FileContext`` forks a ``readlink`` per path. Hadoop rename
+    returns False on most failure shapes — normalized to a loud error,
+    a silent half-swapped index being exactly what the commit protocol
     must never produce."""
     fs, s = _fs_path(spark, src)
-    _, d = _fs_path(spark, dst)
-    if not fs.rename(s, d):
-        raise OSError(f"rename failed: {src!r} -> {dst!r}")
+    jfs = spark._jvm.org.apache.hadoop.fs
+    d = jfs.Path(dst)
+    if fs.isFile(s):
+        from py4j.protocol import Py4JJavaError
+
+        fc = jfs.FileContext.getFileContext(spark._jsc.hadoopConfiguration())
+        rename_opt = getattr(jfs, "Options$Rename")
+        opts = spark.sparkContext._gateway.new_array(rename_opt, 1)
+        opts[0] = rename_opt.NONE
+        try:
+            fc.rename(s, d, opts)
+            return
+        except Py4JJavaError as e:
+            name = e.java_exception.getClass().getName()
+            if name != "org.apache.hadoop.fs.FileAlreadyExistsException":
+                raise OSError(f"rename failed: {src!r} -> {dst!r}") from e
+    elif not fs.exists(d):
+        if not fs.rename(s, d):
+            raise OSError(f"rename failed: {src!r} -> {dst!r}")
+        return
+    raise FileExistsError(f"rename target exists: {dst!r}")
 
 
 def touch(spark: "SparkSession", path: str) -> None:
@@ -145,8 +166,8 @@ def read_text(spark: "SparkSession", path: str) -> str:
 
 def list_names(spark: "SparkSession", path: str) -> list[str]:
     """Immediate-child basenames of a directory (sorted), [] if the
-    directory does not exist — the glob-free replacement for marker
-    discovery (name filtering happens in Python, so metacharacters in
+    directory does not exist — the glob-free listing a layout open is
+    built on (name filtering happens in Python, so metacharacters in
     names can never re-enter glob syntax)."""
     fs, p = _fs_path(spark, path)
     if not fs.exists(p):
@@ -156,7 +177,7 @@ def list_names(spark: "SparkSession", path: str) -> list[str]:
 
 def committed_delta_batches(spark: "SparkSession", path: str) -> list[str]:
     """Forwards to :func:`operators.store.committed_delta_batches`,
-    which owns the marker names; kept here because
+    which owns the batch record; kept here because
     ``perfbench/workloads.py`` imports it from this module."""
     from .operators.store import committed_delta_batches
 
@@ -172,18 +193,3 @@ def du(spark: "SparkSession", path: str) -> tuple[int, int]:
         return 0, 0
     s = fs.getContentSummary(p)
     return int(s.getFileCount()), int(s.getLength())
-
-
-def has_parquet(spark: "SparkSession", path: str) -> bool:
-    """True if any ``*.parquet`` file exists under ``path``
-    (recursive) — the empty-vs-populated table probe. False for a
-    missing directory (callers distinguish missing-vs-empty BEFORE
-    calling; see ``operators.store.open_table``)."""
-    fs, p = _fs_path(spark, path)
-    if not fs.exists(p):
-        return False
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            return True
-    return False

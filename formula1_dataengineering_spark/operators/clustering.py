@@ -831,12 +831,12 @@ def read_ann_index(
     with the wrong m/k silently returns wrong neighbors, the same
     silent-miss class the dedup index metadata guards against).
 
-    ``codes`` unions every committed ``codes_delta_<batch_id>``
-    directory a :func:`refresh_ann_index` ingest appended; each delta
-    keeps the same cell partition column, so probe-side pruning
-    applies per scan. ``include_deltas=False`` opens the BASE state
-    only (the day-N−1 view a retried ingest must probe);
-    ``exclude_deltas`` drops named committed batches from the union
+    ``codes`` is one scan over the base and every live batch a
+    :func:`refresh_ann_index` ingest appended; each batch's rows sit
+    inside the cell partitions, so probe-side pruning applies to all
+    of it. ``include_deltas=False`` opens the BASE state only (the
+    day-N−1 view a retried ingest must probe); ``exclude_deltas``
+    drops named live batches from the scan
     (the view :func:`refresh_ann_index`'s disjointness guard needs: a
     RETRY of batch N must check its ids against base ∪
     every-other-delta, not against its own about-to-be-overwritten
@@ -844,22 +844,19 @@ def read_ann_index(
     change between rebuilds — see :func:`refresh_ann_index` for the
     recall-drift contract.
 
-    A missing table directory raises (a pre-round-12 layout without
-    ``cells/`` included) instead of returning zero neighbors with no
-    error — :func:`operators.store.open_table`'s missing-vs-empty
-    rule."""
+    A missing table directory raises instead of returning zero
+    neighbors with no error — :func:`operators.store.open_layout`'s
+    missing-vs-empty rule."""
     from . import store
 
     layout = store.open_layout(spark, path, "ANN index", "write_ann_index")
-    deltas = [
-        store.delta_dir("codes", b)
-        for b in (layout.batches if include_deltas else [])
-        if b not in exclude_deltas
-    ]
     return (
-        store.open_table(spark, layout, ["codes"] + deltas, "codes_schema"),
-        store.open_table(spark, layout, ["codebook"], "codebook_schema"),
-        store.open_table(spark, layout, ["cells"], "cells_schema"),
+        store.open_table(
+            spark, layout, "codes", "codes_schema", include_deltas,
+            exclude_deltas,
+        ),
+        store.open_table(spark, layout, "codebook", "codebook_schema"),
+        store.open_table(spark, layout, "cells", "cells_schema"),
         layout.meta,
     )
 
@@ -874,8 +871,8 @@ def refresh_ann_index(
 ) -> None:
     """Append one ingest batch of vectors to a stored IVF-PQ index as
     a DELTA — the production shape that makes the stored index
-    maintainable: ``codes_delta_<batch_id>/`` beside the base codes,
-    encoded with the layout's STORED codebook
+    maintainable: a ``__d<batch_id>.<token>/`` owner inside each
+    ``codes`` cell partition the batch lands in, encoded with the layout's STORED codebook
     (:func:`pq_encode_with_codebook`) and placed in the cell chosen by
     the STORED coarse centroids (:func:`assign_ivf_cells` — the IVF
     insert step), both O(batch): training never re-runs, the base
@@ -893,7 +890,7 @@ def refresh_ann_index(
     dedup refresh: idempotent per (path, batch_id), a folded batch's
     retry a no-op; refuses a
     marker-less base, a metadata-less (pre-v2) layout, and a batch_id
-    that could escape the layout or dodge marker discovery.
+    that could escape the layout or its owner directory names.
 
     INSERT-ONLY semantics (ADVICE r12): the append is NOT an upsert.
     A batch id already present in base ∪ committed deltas would leave
@@ -997,7 +994,7 @@ def refresh_ann_index(
             "check_disjoint=False if disjointness is guaranteed "
             "upstream); the committed index state is untouched"
         )
-    store.commit_delta(spark, path, batch_id, list(tables))
+    store.commit_delta(spark, layout, batch_id, list(tables))
 
 
 def ivf_pq_topk_from_index(

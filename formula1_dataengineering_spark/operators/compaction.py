@@ -1,8 +1,8 @@
 """Delta compaction for the three delta-bearing stored layouts —
 the closing arc of the index lifecycle (VERDICT r12 item 1): the
-dedup index (``content_hashes_delta_*`` / ``band_rows_delta_*``), the
-ANN index (``codes_delta_*``), and the SCD2 feed
-(``feed_rows_delta_*``) all grow a delta directory per ingest and,
+dedup index (``content_hashes`` / ``band_rows``), the ANN index
+(``codes``), and the SCD2 feed (``feed_rows``) all grow one delta
+owner directory per ingest in each partition the batch touched and,
 before this module, shed them only on a FULL rebuild. A 100 TB
 pipeline cannot retrain the world to reclaim a year of daily deltas;
 it folds them into the base partitions.
@@ -16,15 +16,14 @@ the base is exactly ``base[touched partitions] ∪ deltas`` rewritten
 per partition. Untouched base partitions are never read and never
 written — their part files stay byte-identical (tests pin this).
 
-Protocol (shared engine, :func:`_compact_layout`): per table, the live
-deltas' rows are unioned, their touched partition values collected
-(bounded by n_shards / #cells — the same bounded-driver-materialization
-rule as the SCD2 refresh), and ``base[touched] ∪ deltas`` is staged
-into the table's next version directory with the base writer's own
-one-file-per-partition discipline; then one manifest publishes the
-new partitions and the folded batch ids together
+Protocol (shared engine, :func:`_compact_layout`): per table, the
+partitions holding a live delta come from the snapshot's owner map
+(no Spark job), every owner of those partitions is read as one scan
+and staged as the partition's next version with the base writer's own
+one-file-per-partition discipline; then one manifest replaces the
+opened owners by the new versions and marks the batches folded
 (``operators.store``'s partition rewrite), and :func:`store.retire`
-deletes the superseded copies, the folded deltas and their markers.
+deletes the superseded copies and the folded delta dirs.
 The layout stays readable throughout: a reader sees either base ∪
 deltas or the folded base, never both and never neither, and a crash
 at any point is recovered by re-running the call (or by vacuum, for
@@ -33,8 +32,10 @@ a retire cut short).
 Concurrency contract: compaction assumes a SINGLE MAINTAINER (the
 lease enforces it). Concurrent INGEST is the one interleave that is
 supported and proven: a ``refresh_*`` delta landing at any point
-during compaction survives, because the manifest names exactly the
-batches being folded — a delta committed after the open stays live
+during compaction survives, because the commit replaces only the
+owners compaction opened and folds only the batches it read — a
+delta committed after the open stays live, and retire never deletes
+a delta dir no snapshot named yet
 (the ``on_staged`` hook exists so tests and the
 ``compaction_ingest_interleave`` gate can land a delta between stage
 and publish and hash the post-state). A compaction racing a base
@@ -53,7 +54,7 @@ from .lease import maintainer_verb
 
 
 class _TableSpec(NamedTuple):
-    table: str  # base directory name (and delta prefix)
+    table: str  # table directory name
     partition_col: str
     sort_cols: tuple[str, ...]  # () = keep the writer's plain layout
     schema_key: str  # _META.json key holding the table schema
@@ -78,6 +79,8 @@ def _compact_layout(
     interleave gate use it to land a delta mid-compaction (the
     manifest folds exactly the batches opened here, so the injected
     delta must stay live) or to raise and simulate a crash."""
+    from .snapshot import parse_partition_value
+
     layout = store.open_layout(spark, path, what, writer_name)
     specs = specs_of(layout)
     committed = layout.batches
@@ -90,32 +93,22 @@ def _compact_layout(
         }
     jobs = []
     for spec in specs:
-        deltas = store.open_table(
-            spark,
-            layout,
-            [store.delta_dir(spec.table, b) for b in committed],
-            spec.schema_key,
-        )
-        # Bounded driver-side materialization: distinct PARTITION
-        # values of the deltas only (≤ n_shards / #cells rows).
         touched = sorted(
             (
-                r[0]
-                for r in deltas.select(spec.partition_col)
-                .distinct()
-                .collect()
+                parse_partition_value(part)
+                for part, owners in layout.snap["tables"][spec.table].items()
+                if any(o.startswith(store.DELTA_DIR_PREFIX) for o in owners)
             ),
             key=lambda v: (v is None, v),
         )
         touched_values[spec.table] = touched
         if not touched:
             # Every delta of this table was a zero-row day: nothing
-            # to merge; the fold only retires the empty dirs.
+            # to merge; the fold only marks the batches folded.
             continue
-        base = store.open_table(spark, layout, [spec.table], spec.schema_key)
-        merged = base.where(
-            store.partition_filter(spec.partition_col, touched)
-        ).unionByName(deltas)
+        merged = store.open_table(
+            spark, layout, spec.table, spec.schema_key
+        ).where(store.partition_filter(spec.partition_col, touched))
         jobs.append(
             store.stage_rewrite(
                 spark, layout, spec.table, merged, spec.partition_col,
@@ -124,8 +117,8 @@ def _compact_layout(
         )
     if on_staged is not None:
         on_staged()
-    store.commit_rewrite(spark, layout, jobs, folded=committed)
-    store.retire(spark, path, [s.table for s in specs])
+    store.commit_rewrite(spark, layout, jobs, fold=committed)
+    store.retire(spark, path)
     return {
         "n_deltas_folded": len(committed),
         "batch_ids": committed,

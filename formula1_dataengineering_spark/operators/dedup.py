@@ -1413,18 +1413,18 @@ def read_dedup_index(
     spark, path: str, include_deltas: bool = True
 ) -> tuple[DataFrame, DataFrame, dict]:
     """Open a :func:`write_dedup_index` layout: returns
-    ``(content_hashes, band_rows, meta)``. Base tables are unioned
-    with every committed ``*_delta_<batch_id>`` directory a
-    :func:`refresh_dedup_index` ingest appended (each delta keeps the
-    same shard partition column, so probe-side pruning still applies
-    per scan); ``include_deltas=False`` opens the BASE state only —
+    ``(content_hashes, band_rows, meta)``, each one scan over the base
+    and every live batch a :func:`refresh_dedup_index` ingest
+    appended (the store's owner map keeps every batch inside the
+    shard partitions, so probe-side pruning applies to all of it);
+    ``include_deltas=False`` opens the BASE state only —
     the day-N−1 view a re-run of day N's ingest must probe, so a
     retried ingest recomputes the same flags instead of seeing its own
     previous delta and rejecting everything (the e2e gate's
     idempotence depends on this).
 
     Refusals and the missing-vs-empty rule are the store's
-    (:func:`operators.store.open_table`): a missing table directory
+    (:func:`operators.store.open_layout`): a missing table directory
     raises instead of probing as 'no rows' and silently flagging
     every duplicate as 'ingest'."""
     from . import store
@@ -1432,15 +1432,13 @@ def read_dedup_index(
     layout = store.open_layout(
         spark, path, "dedup index", "write_dedup_index"
     )
-    batches = layout.batches if include_deltas else []
-
-    def _open(table: str, schema_key: str) -> DataFrame:
-        rels = [table] + [store.delta_dir(table, b) for b in batches]
-        return store.open_table(spark, layout, rels, schema_key)
-
     return (
-        _open("content_hashes", "hashes_schema"),
-        _open("band_rows", "bands_schema"),
+        store.open_table(
+            spark, layout, "content_hashes", "hashes_schema", include_deltas
+        ),
+        store.open_table(
+            spark, layout, "band_rows", "bands_schema", include_deltas
+        ),
         layout.meta,
     )
 
@@ -1453,8 +1451,8 @@ def refresh_dedup_index(
     text_col: str = "text",
 ) -> None:
     """Append one accepted ingest batch to a stored dedup index as a
-    DELTA: ``content_hashes_delta_<batch_id>/`` and
-    ``band_rows_delta_<batch_id>/`` beside the base tables, sharded
+    DELTA: a ``__d<batch_id>.<token>/`` owner inside each
+    ``content_hashes`` and ``band_rows`` shard it touches, sharded
     with the layout's own ``_META.json`` params (never the caller's —
     a param drift here is exactly the silent-miss bug the metadata
     exists to prevent). Per-doc MinHash signatures are
@@ -1462,9 +1460,9 @@ def refresh_dedup_index(
     scratch over the grown corpus (tests assert it).
 
     Committed through :func:`operators.store.commit_delta`: idempotent
-    per (path, batch_id) — a batch a compaction already folded is a
-    no-op — and the two delta tables become visible together or not
-    at all. Reader handles opened BEFORE a re-run of
+    per (path, batch_id) — a retry replaces the batch in one manifest
+    publish, and a batch a compaction already folded is a no-op — and
+    the two delta tables become visible together or not at all. Reader handles opened BEFORE a re-run of
     the same batch_id are invalidated by it — re-open via
     :func:`read_dedup_index` after a refresh. Cost is O(batch): the
     base tables are not read or rewritten (at 100 TB that asymmetry —
@@ -1514,7 +1512,7 @@ def refresh_dedup_index(
     # The two delta tables are independent writes over the same small
     # batch and stage side by side (r17: 1.04 s → 0.69 s per refresh).
     store.stage_delta(spark, path, batch_id, tables)
-    store.commit_delta(spark, path, batch_id, list(tables))
+    store.commit_delta(spark, layout, batch_id, list(tables))
 
 
 def _check_probe_meta(caller: str, index_meta: dict | None, **params) -> None:

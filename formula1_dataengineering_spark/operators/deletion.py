@@ -33,11 +33,13 @@ the ids' rows:
   window, so the post-delete layout equals the full rebuild over the
   surviving keys (the gate hashes exactly that).
 
-Shared discipline (:func:`_stage_delete`): per table directory, find
-touched partitions (bounded driver collect, ≤ n_shards / #cells),
-stage the kept rows into the directory's next version, then publish
-one manifest for every directory (``operators.store``'s partition
-rewrite). Untouched partitions are never read and never written —
+Shared discipline (:func:`_stage_delete`): per table, find touched
+partitions in one scan over every owner (bounded driver collect,
+≤ n_shards / #cells), stage the kept rows as each touched partition's
+next version, then publish one manifest for every table
+(``operators.store``'s partition rewrite). The new version replaces
+all of a touched partition's owners, so a live delta's rows there
+join the base view; the batch stays live for compaction. Untouched partitions are never read and never written —
 their part files stay byte-identical (tests pin this). A partition
 whose every row was deleted is dropped, including the NULL default
 partition (its bystander rows re-stage).
@@ -54,9 +56,10 @@ same delete is idempotent (already-removed rows match nothing). The
 pre-erasure snapshot stays readable for time travel until vacuum.
 
 Replay caveat (documented, by design): a crashed INGEST of batch N
-replayed AFTER a delete of ids that rode in batch N resurrects them
-— sequence deletes after ingest settles (the single-maintainer
-window), or re-issue the delete; the verb is idempotent and cheap.
+replayed AFTER a delete that rewrote partitions batch N touched
+re-lands its rows there beside the delete's copy (and resurrects
+deleted ids) — sequence deletes after ingest settles (the
+single-maintainer window), or re-issue the delete.
 """
 
 from __future__ import annotations
@@ -71,15 +74,10 @@ from . import store
 from .lease import maintainer_verb
 
 
-def _table_rels(layout: store.Layout, table: str) -> list[str]:
-    """The base table + every COMMITTED delta of ``table``."""
-    return [table] + [store.delta_dir(table, b) for b in layout.batches]
-
-
 def _stage_delete(
     spark: SparkSession,
     layout: store.Layout,
-    rel: str,
+    table: str,
     schema_key: str,
     ids: DataFrame,
     id_col: str,
@@ -88,14 +86,15 @@ def _stage_delete(
     touched_hint: list | None = None,
 ) -> tuple[dict | None, int, int]:
     """Stage the copy-on-write delete of ``ids``' rows from one table
-    directory: returns (manifest job | None, rows_deleted,
+    (every owner — base, versions and live deltas — in one scan):
+    returns (manifest job | None, rows_deleted,
     partitions_touched). Nothing a reader lists is modified here.
     ``touched_hint`` statically prunes the discovery scan when the
     caller can bound the partition set from the ids alone (the
     key-sharded feed/history) — the scan then reads only those
-    partitions; the per-directory refinement keeps the rewrite and
+    partitions; the per-partition refinement keeps the rewrite and
     the accounting exact."""
-    rows = store.open_table(spark, layout, [rel], schema_key)
+    rows = store.open_table(spark, layout, table, schema_key)
     bids = F.broadcast(ids.select(id_col).distinct())
     scope = (
         rows.where(store.partition_filter(partition_col, touched_hint))
@@ -121,7 +120,7 @@ def _stage_delete(
     slice_ = rows.where(store.partition_filter(partition_col, touched))
     keep = slice_.join(bids, id_col, "left_anti")
     job = store.stage_rewrite(
-        spark, layout, rel, keep, partition_col, touched, sort_cols
+        spark, layout, table, keep, partition_col, touched, sort_cols
     )
     return job, n_del, len(touched)
 
@@ -131,20 +130,20 @@ def _run_delete(
     spark: SparkSession,
     path: str,
     layout: store.Layout,
-    jobs: list[tuple[str, str, str, DataFrame, str, str, tuple, list | None]],
+    jobs: list[tuple[str, str, DataFrame, str, str, tuple, list | None]],
 ) -> dict:
     """Stage every job, then publish one manifest that also carries
-    the cumulative deletion accounting. Jobs are (table, rel,
-    schema_key, ids, id_col, partition_col, sort_cols, touched_hint).
+    the cumulative deletion accounting. Jobs are (table, schema_key,
+    ids, id_col, partition_col, sort_cols, touched_hint).
     A no-match delete publishes nothing. A second concurrent
     maintainer is refused loudly mid-stage."""
     staged: list[dict] = []
     rows_deleted = 0
     partitions = 0
     per_table: dict[str, int] = {}
-    for table, rel, schema_key, ids, id_col, pcol, sort_cols, hint in jobs:
+    for table, schema_key, ids, id_col, pcol, sort_cols, hint in jobs:
         job, n, p = _stage_delete(
-            spark, layout, rel, schema_key, ids, id_col, pcol, sort_cols,
+            spark, layout, table, schema_key, ids, id_col, pcol, sort_cols,
             hint,
         )
         if job is None:
@@ -182,12 +181,11 @@ def delete_from_dedup_index(
     )
     with _pinned_ids(doc_ids, id_col) as doc_ids:
         jobs = [
-            (table, rel, schema_key, doc_ids, id_col, "shard", (), None)
+            (table, schema_key, doc_ids, id_col, "shard", (), None)
             for table, schema_key in (
                 ("content_hashes", "hashes_schema"),
                 ("band_rows", "bands_schema"),
             )
-            for rel in _table_rels(layout, table)
         ]
         return _run_delete(spark, path, layout, jobs)
 
@@ -211,10 +209,7 @@ def delete_from_ann_index(
             "rebuild with write_ann_index before deleting"
         )
     with _pinned_ids(vec_ids, id_col) as vec_ids:
-        jobs = [
-            ("codes", rel, "codes_schema", vec_ids, id_col, cell_col, (), None)
-            for rel in _table_rels(layout, "codes")
-        ]
+        jobs = [("codes", "codes_schema", vec_ids, id_col, cell_col, (), None)]
         return _run_delete(spark, path, layout, jobs)
 
 
@@ -279,8 +274,8 @@ def delete_scd2_feed_keys(
     and every committed daily delta. The feed shards BY the key, so
     the candidate-shard set comes from the keys alone (static HRW
     pruning): a handful of erasure requests against a 100 TB feed
-    reads only the shards those keys live in, in every directory
-    generation."""
+    reads only the shards those keys live in, across every owner of
+    those shards."""
     layout = store.open_layout(
         spark, path, "scd2 feed layout", "write_scd2_feed"
     )
@@ -291,7 +286,6 @@ def delete_scd2_feed_keys(
         jobs = [
             (
                 "feed_rows",
-                rel,
                 "feed_schema",
                 keys,
                 key_col,
@@ -299,7 +293,6 @@ def delete_scd2_feed_keys(
                 (key_col, meta["ts_col"]),
                 touched,
             )
-            for rel in _table_rels(layout, "feed_rows")
         ]
         return _run_delete(spark, path, layout, jobs)
 
@@ -329,7 +322,6 @@ def delete_scd2_history_keys(
         touched = _hrw_touched_shards(keys, key_col, int(meta["n_shards"]))
         jobs = [
             (
-                "history_rows",
                 "history_rows",
                 "history_schema",
                 keys,

@@ -32,7 +32,7 @@ are columnar metadata scans), compacting rewrites only touched
 partitions, and rebuilding — the only corpus-sized verb — runs
 exactly when the measured drift says the cheap verbs no longer
 suffice. Single-maintainer assumption per ``operators.compaction``;
-concurrent INGEST is safe throughout (delta markers).
+concurrent INGEST is safe throughout (manifest compare-and-swap).
 
 No reference analog: the reference (pandas, eager, in-memory —
 src/session_object.py) has no stored layouts to maintain; this is
@@ -256,14 +256,13 @@ def _delta_base_rows(
     """(base_rows, delta_rows) of one layout table at its current
     snapshot — columnar count scans (parquet row-group metadata), not
     data reads, and never pricing superseded partition copies."""
-    deltas = [store.delta_dir(table, b) for b in layout.batches]
-    base_rows = store.open_table(spark, layout, [table], schema_key).count()
-    delta_rows = (
-        store.open_table(spark, layout, deltas, schema_key).count()
-        if deltas
-        else 0
-    )
-    return base_rows, delta_rows
+    base_rows = store.open_table(
+        spark, layout, table, schema_key, include_deltas=False
+    ).count()
+    if not layout.batches:
+        return base_rows, 0
+    total = store.open_table(spark, layout, table, schema_key).count()
+    return base_rows, total - base_rows
 
 
 @maintainer_verb

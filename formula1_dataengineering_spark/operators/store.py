@@ -1,96 +1,69 @@
 """The stored-layout commit protocol — the one module that knows how
 the dedup index, the ANN index and the SCD2 feed/history layouts
-commit, and the names they commit under.
+commit, where each batch's rows live, and the names they commit
+under.
 
-A layout root holds:
+A layout root holds ``_SUCCESS`` (the base commit marker: readers
+refuse a layout without it; only a crashed base rebuild leaves one),
+``_META.json`` (the base writer's params, recorded table schemas and
+``parts``, the partition directories each base table was written
+with — probing with guessed params silently returns wrong answers, so
+every open requires it), ``_MANIFEST_v<N>.json`` (published snapshots,
+the highest N current), the maintainer lease, and one directory per
+table as Spark wrote it. Each partition directory ``<table>/<col>=<v>/``
+holds its base files and hidden owner directories (Spark's file index
+never lists ``_``/``.``-prefixed names): ``__d<batch_id>.<token>/`` —
+one ingest batch's rows of that partition — and ``__v<N>/`` — a
+partition rewrite's copy. Staging is ``_staging/`` for a rebuild and
+``.spark-staging-delta_<batch_id>/`` / ``.spark-staging-v<N>/`` for a
+refresh or a rewrite.
 
-- ``_SUCCESS`` — the base commit marker. Public readers refuse a
-  layout without it: only a crashed base rebuild leaves one, and
-  re-running the writer recovers it.
-- ``_META.json`` — the base writer's params and recorded table
-  schemas. Probing with guessed params silently returns wrong
-  answers, so every open requires it.
-- ``<table>/`` — the base tables, one file per partition, and inside
-  each table directory the hidden version directories
-  ``__v<N>/`` that partition rewrites stage into.
-- ``<table>_delta_<batch_id>/`` plus ``_DELTA_<batch_id>._SUCCESS``
-  — one ingest batch and its commit marker.
-- ``_MANIFEST_v<N>.json`` — published snapshots; the highest N is
-  the current one.
-- ``_staging/`` — a base rebuild's staged tables and metadata;
-  ``.spark-staging-delta_<batch_id>/`` — a refresh's staged delta
-  tables (hidden: Spark's file index never lists dot- or
-  underscore-prefixed dirs); ``_MAINTAINER_LEASE.json`` — the
-  maintainer lease (``operators.lease``).
+**The owner map.** A snapshot names, per table and partition, the
+owners holding its live rows (``""`` = the base files), and maps
+every batch committed since the base to its live token, or to None
+once a rewrite folded it (a retry of a folded batch is then a no-op,
+never a second copy of its rows). Version 0 is the base as written,
+its map from ``_META.json``; every later one is a manifest. An open is
+one root listing plus one manifest read, and each table opens as one
+Parquet scan over the leaves the map names (:func:`open_table`).
 
-**Partition rewrite** (:func:`stage_rewrite`, :func:`commit_rewrite`,
-:func:`retire`) — the only way any verb rewrites partitions:
-compaction, the four ``delete_*`` verbs, ``expire_scd2_history`` and
-``scd2_refresh_in_place``. Each touched table directory's new
-partitions are written into ``<table>/__v<N>/`` (N = current + 1),
-which no reader lists. The commit point is the publish of
-``_MANIFEST_v<N>.json``: a temp-file write plus a rename. The
-manifest records, per table directory, which partitions version N
-owns (``assign``) or empties (``dropped``), the full post-commit
-layout metadata (so erasure accounting lands atomically with the
-rows) and the cumulative list of batch ids a compaction folded into
-the base (``folded``). Readers resolve one manifest: base partitions
-the manifest does not shadow, plus each owning version directory
-filtered to its partitions (``operators.snapshot``). A crash before
-the rename leaves the old snapshot current and an unreferenced
-version directory; a crash after it leaves the new snapshot current.
-``_SUCCESS`` is never touched, so no reader is refused during
-maintenance, and a snapshot resolved before a commit stays readable
-after it.
+**The commit** (:func:`_publish`) is a compare-and-swap on the
+manifest name. Every verb stages first, moves each staged partition
+into an owner directory no snapshot names yet, then applies its owner
+edit to the snapshot it read and renames a temp file to
+``_MANIFEST_v<N+1>`` with a rename that refuses an existing target. A
+loser re-reads the current manifest, re-applies its edit and
+publishes one version later, never re-staging data; the local
+filesystem's refusing rename checks, then renames, so a per-layout
+in-process lock also serialises read → publish. A crash before the
+publish leaves the old snapshot current, one after it the new one;
+``_SUCCESS`` is never touched, and a snapshot resolved before a
+commit stays readable after it.
 
-- Why compaction and the in-place SCD2 refresh :func:`retire` after
-  publishing and erasure and expiry do not: the first two are the
-  routine daily verbs, so their superseded bytes (older manifests,
-  unreferenced version dirs, shadowed base partitions, folded deltas
-  and their markers) go at once; an erasure's old snapshot stays
-  readable for time travel until ``vacuum_layout`` runs the same
-  :func:`retire`.
-- Why ingest deltas stay on markers: concurrent ingest during
-  maintenance is the supported interleave. Moving batches into the
-  manifest would need a compare-and-swap on the manifest name, and
-  Hadoop's local-FS rename does not give one. Live batches are the
-  markers minus the manifest's ``folded`` ids, so a retry of a folded
-  batch is a no-op instead of a double count.
+- Delta commit (:func:`stage_delta`, :func:`commit_delta`): the edit
+  adds the batch's owners and drops its previous token's, so a retry
+  of a committed batch replaces it in one step.
+- Partition rewrite (:func:`stage_rewrite`, :func:`commit_rewrite`) —
+  compaction, the ``delete_*`` verbs, ``expire_scd2_history`` and
+  ``scd2_refresh_in_place``: the edit replaces the owners the verb
+  opened in each touched partition by its ``__v<N>`` copy, so an owner
+  that landed after the open (concurrent ingest) survives.
+  Compaction and the in-place refresh :func:`retire` right after
+  publishing; erasure and expiry keep the old snapshot for time travel
+  until ``vacuum_layout`` runs the same retire.
+- Base swap (:func:`stage_base`, :func:`swap_base`): the new tables
+  build under ``_staging/`` while the old layout serves; the commit
+  window stages ``_META.json``, drops ``_SUCCESS``, deletes what the
+  rebuild supersedes (old tables with every owner, every manifest,
+  dead staging, old metadata), renames the staged tables and metadata
+  in, refreshes the session's listing and touches ``_SUCCESS``. A
+  crash inside it leaves a marker-less layout every reader refuses;
+  re-running the writer completes it. The lease survives: the
+  maintenance verbs' rebuild arm calls the writers while holding it.
 
-**Base swap** (:func:`stage_base` then :func:`swap_base`). The new
-tables build under ``_staging/`` while the previous layout stays
-fully readable. The commit window is a handful of metadata ops:
-stage ``_META.json`` beside the tables, drop ``_SUCCESS``, delete
-what the rebuild supersedes (the old tables with their version dirs,
-every delta and marker, every manifest, dead staging and the old
-metadata), rename the staged tables and then the staged metadata in,
-refresh the session's file listing, touch ``_SUCCESS``. A crash
-inside the window leaves a marker-less layout every reader refuses;
-re-running the writer completes it. The new base supersedes all
-prior ingests and rewrites, so a surviving delta or manifest would
-union removed rows back in. The lease survives: the maintenance
-verbs' rebuild arm calls the writers while holding it.
-
-**Delta commit** (:func:`stage_delta` then :func:`commit_delta`).
-A refresh writes its tables under the batch's hidden staging dir,
-touching nothing committed. The commit drops the batch's marker,
-replaces each delta directory with its staged copy, and touches the
-marker last. So a failed or rejected retry of a committed batch
-never loses it, and a crash inside the commit leaves the batch
-invisible until the retry lands. Idempotent per (path, batch_id).
-
-**Open** (:func:`open_layout` then :func:`open_table`). One root
-listing plus one manifest read yields the snapshot, the metadata
-(the manifest's, else ``_META.json``) and the live batches. A table
-directory that is missing is corruption — writers always create it —
-while one that exists but holds no part files is a legitimately
-empty table, opened from the schema the writer recorded.
-
-Single maintainer, as everywhere in the stored-layout family: one
-process rebuilds, compacts, erases or vacuums a layout at a time
-(``operators.lease`` enforces it for the maintenance verbs). All IO
-goes through the Hadoop FileSystem API (``fsutil``), so the same
-protocol serves local paths and cluster filesystems.
+Single maintainer (``operators.lease``); ingest may run beside it.
+All IO goes through the Hadoop FileSystem API (``fsutil``), so the
+same protocol serves local paths and cluster filesystems.
 """
 
 from __future__ import annotations
@@ -98,6 +71,8 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
+import uuid
 from collections.abc import Callable, Iterable
 from typing import NamedTuple
 
@@ -111,44 +86,14 @@ META = "_META.json"
 STAGING = "_staging"
 MANIFEST_PREFIX = "_MANIFEST_v"
 VERSION_DIR_PREFIX = "__v"
+DELTA_DIR_PREFIX = "__d"
 #: Staging dirs of retired commit protocols: dead by definition, swept
 #: by base rebuilds and by vacuum.
 DEAD_STAGING = ("_compact", "_cow_staging")
 
 _BATCH_ID = re.compile(r"[A-Za-z0-9][A-Za-z0-9._-]*")
-
-
-def delta_dir(table: str, batch_id: str) -> str:
-    return f"{table}_delta_{batch_id}"
-
-
-def delta_marker(batch_id: str) -> str:
-    return f"_DELTA_{batch_id}._SUCCESS"
-
-
-def batches_in(names: Iterable[str]) -> list[str]:
-    """The batch ids with a commit marker among a layout root's child
-    names (folded ones included)."""
-    return sorted(
-        name[len("_DELTA_") : -len("._SUCCESS")]
-        for name in names
-        if name.startswith("_DELTA_") and name.endswith("._SUCCESS")
-    )
-
-
-def committed_delta_batches(spark: SparkSession, path: str) -> list[str]:
-    """The live delta batch ids of a stored layout: committed and not
-    yet folded into the base."""
-    from . import snapshot
-
-    names = fsutil.list_names(spark, path)
-    snap = snapshot.resolve_snapshot(spark, path, snapshot.versions_in(names))
-    return _live(names, snap)
-
-
-def _live(names: list[str], snap: dict) -> list[str]:
-    folded = set(snap.get("folded", ()))
-    return [b for b in batches_in(names) if b not in folded]
+_LOCKS: dict[str, threading.Lock] = {}
+_LOCKS_GUARD = threading.Lock()
 
 
 def check_batch_id(verb: str, batch_id: str) -> None:
@@ -190,6 +135,21 @@ def partition_dir_name(partition_col: str, value) -> str:
             "the layout with an integral partition column"
         )
     return f"{partition_col}={value}"
+
+
+def _parts_in(names: Iterable[str]) -> list[str]:
+    """The leaf partitions of a freshly written table directory's
+    child names: its ``col=value`` directories, or ``""`` (the
+    directory itself) for an unpartitioned table holding part files."""
+    visible = [n for n in names if not n.startswith(("_", "."))]
+    parts = sorted(n for n in visible if "=" in n)
+    if not parts and any(n.endswith(".parquet") for n in visible):
+        return [""]
+    return parts
+
+
+def _leaf(*names: str) -> str:
+    return "/".join(n for n in names if n)
 
 
 # -- writing ---------------------------------------------------------------
@@ -273,8 +233,7 @@ def stage_base(
 def _superseded(name: str, tables: list[str]) -> bool:
     return (
         name in tables
-        or name.startswith(tuple(f"{t}_delta_" for t in tables))
-        or name.startswith(("_DELTA_", MANIFEST_PREFIX) + DEAD_STAGING)
+        or name.startswith((MANIFEST_PREFIX,) + DEAD_STAGING)
         or name == META
     )
 
@@ -282,9 +241,17 @@ def _superseded(name: str, tables: list[str]) -> bool:
 def swap_base(
     spark: SparkSession, path: str, tables: list[str], meta: dict
 ) -> None:
-    """The base writers' one commit window (module docstring)."""
+    """The base writers' one commit window (module docstring).
+    ``meta`` gains ``parts``, the base's owner map, read once here
+    from the staged tables."""
     staging = os.path.join(path, STAGING)
-    fsutil.write_text(spark, os.path.join(staging, META), json.dumps(meta))
+    parts = {
+        t: _parts_in(fsutil.list_names(spark, os.path.join(staging, t)))
+        for t in tables
+    }
+    fsutil.write_text(
+        spark, os.path.join(staging, META), json.dumps({**meta, "parts": parts})
+    )
     fsutil.delete(spark, os.path.join(path, SUCCESS))
     for name in fsutil.list_names(spark, path):
         if _superseded(name, tables):
@@ -300,44 +267,6 @@ def swap_base(
     fsutil.touch(spark, os.path.join(path, SUCCESS))
 
 
-def _delta_staging(path: str, batch_id: str) -> str:
-    return os.path.join(path, f".spark-staging-delta_{batch_id}")
-
-
-def stage_delta(
-    spark: SparkSession, path: str, batch_id: str, tables: dict[str, Table]
-) -> None:
-    """Write one batch's delta tables under its hidden staging dir;
-    nothing committed is touched."""
-    staging = _delta_staging(path, batch_id)
-    fsutil.delete(spark, staging)
-    _write_all(
-        staging, {delta_dir(t, batch_id): tab for t, tab in tables.items()}
-    )
-
-
-def discard_delta(spark: SparkSession, path: str, batch_id: str) -> None:
-    """Drop a staged batch that will not be committed."""
-    fsutil.delete(spark, _delta_staging(path, batch_id))
-
-
-def commit_delta(
-    spark: SparkSession, path: str, batch_id: str, tables: list[str]
-) -> None:
-    """Swap a staged batch in and mark it committed (module
-    docstring)."""
-    staging = _delta_staging(path, batch_id)
-    marker = os.path.join(path, delta_marker(batch_id))
-    fsutil.delete(spark, marker)
-    for t in tables:
-        d = delta_dir(t, batch_id)
-        fsutil.delete(spark, os.path.join(path, d))
-        fsutil.rename(spark, os.path.join(staging, d), os.path.join(path, d))
-    fsutil.delete(spark, staging)
-    spark.catalog.refreshByPath(path)
-    fsutil.touch(spark, marker)
-
-
 # -- opening ---------------------------------------------------------------
 
 
@@ -349,7 +278,23 @@ class Layout(NamedTuple):
     rebuild_hint: str
     meta: dict
     snap: dict
-    batches: list[str]  # live: committed and not folded
+
+    @property
+    def batches(self) -> list[str]:
+        """Live batch ids: committed and not folded into the base."""
+        return _live(self.snap)
+
+
+def _live(snap: dict) -> list[str]:
+    return sorted(b for b, tok in snap.get("batches", {}).items() if tok)
+
+
+def committed_delta_batches(spark: SparkSession, path: str) -> list[str]:
+    """The live delta batch ids of a stored layout: committed and not
+    yet folded into the base."""
+    from . import snapshot
+
+    return _live(snapshot.read_snapshot(spark, path))
 
 
 def open_layout(
@@ -360,8 +305,11 @@ def open_layout(
     snapshot_version: int | None = None,
 ) -> Layout:
     """Resolve the snapshot (``snapshot_version``, else the current
-    one), its metadata and live batches from one root listing. Refuses
-    a layout without ``_SUCCESS`` or ``_META.json``."""
+    one) from one root listing and one manifest (or ``_META.json``)
+    read. Refuses a layout without ``_SUCCESS`` or ``_META.json``, one
+    written before manifests owned every live file, and one missing a
+    table directory the snapshot names (a partial delete, not an empty
+    table — writers always create every table directory)."""
     from . import snapshot
 
     fsutil.validate_layout_path(path, what)
@@ -379,11 +327,21 @@ def open_layout(
     snap = snapshot.resolve_snapshot(
         spark, path, snapshot.versions_in(names), snapshot_version
     )
-    # Manifests published before they carried metadata have none.
-    meta = snap.get("meta") or json.loads(
-        fsutil.read_text(spark, os.path.join(path, META))
-    )
-    return Layout(path, what, rebuild_hint, meta, snap, _live(names, snap))
+    if "tables" not in snap:
+        raise ValueError(
+            f"{what} at {path!r} predates manifest-owned layouts (root "
+            "_DELTA_ markers, no partition owner map) — rebuild with "
+            f"{rebuild_hint}"
+        )
+    missing = sorted(set(snap["tables"]) - set(names))
+    if missing:
+        raise ValueError(
+            f"{what} at {path!r} is corrupt: {', '.join(missing)} is "
+            "missing — the writer always creates every table "
+            "directory, so this is a partial delete, not an empty "
+            f"table; rebuild with {rebuild_hint}"
+        )
+    return Layout(path, what, rebuild_hint, snap["meta"], snap)
 
 
 def open_for_delta(
@@ -395,103 +353,269 @@ def open_for_delta(
     rebuild_hint: str,
 ) -> Layout | None:
     """A refresher's open: validate ``batch_id`` and open the layout,
-    or return None when a compaction already folded that batch into
-    the base — a retry is then a no-op, never a second copy of its
-    rows."""
+    or return None when a rewrite already folded that batch into the
+    base — a retry is then a no-op, never a second copy of its rows."""
     check_batch_id(verb, batch_id)
     layout = open_layout(spark, path, what, rebuild_hint)
-    if batch_id in layout.snap.get("folded", ()):
+    if _folded(layout.snap, batch_id):
         return None
     return layout
 
 
-def open_table(
-    spark: SparkSession, layout: Layout, rels: list[str], schema_key: str
-) -> DataFrame:
-    """The union of table directories ``rels`` (relative to the
-    layout root) at the layout's snapshot.
+def _folded(snap: dict, batch_id: str) -> bool:
+    batches = snap["batches"]
+    return batch_id in batches and batches[batch_id] is None
 
-    Each directory must exist. Directories without part files (an
-    empty base, a zero-row delta day) carry no schema for parquet
-    inference and are skipped; when none holds rows the result is the
-    empty frame of the recorded schema. The recorded schema is also
-    supplied to every read, which skips a footer-reading driver job
-    per directory per open."""
+
+def _delta_owner(batch_id: str, token: str) -> str:
+    return f"{DELTA_DIR_PREFIX}{batch_id}.{token}"
+
+
+def open_table(
+    spark: SparkSession,
+    layout: Layout,
+    table: str,
+    schema_key: str,
+    include_deltas: bool = True,
+    exclude_batches: Iterable[str] = (),
+) -> DataFrame:
+    """``table``'s rows at the layout's snapshot: ONE Parquet scan
+    over the leaf directories its owner map names, with the table
+    directory as ``basePath`` so the partition column parses from the
+    path and prunes. ``include_deltas=False`` leaves out every live
+    batch's owners (the base view a retried ingest probes);
+    ``exclude_batches`` leaves out the named ones. The recorded
+    schema is supplied to the read (no footer-reading inference job),
+    and a table without leaves is the empty frame of that schema.
+
+    More than 32 leaves make Spark list them with one job
+    (``parallelPartitionDiscovery.threshold``); compaction keeps the
+    count near the partition count."""
+    from pyspark.errors import AnalysisException
     from pyspark.sql.types import StructType
 
-    from . import snapshot
-
-    path = layout.path
-    recorded = layout.meta.get(schema_key)
-    schema = StructType.fromJson(recorded) if recorded is not None else None
-    frames = []
-    for rel in rels:
-        d = os.path.join(path, rel)
-        if not fsutil.is_dir(spark, d):
-            raise ValueError(
-                f"{layout.what} at {path!r} is corrupt: {rel!r} is "
-                "missing — the writer always creates every table "
-                "directory, so this is a partial delete, not an empty "
-                f"table; rebuild with {layout.rebuild_hint}"
-            )
-        if fsutil.has_parquet(spark, d):
-            df = snapshot.snapshot_dir_read(
-                spark, path, rel, layout.snap, schema=schema
-            )
-            if df is not None:
-                frames.append(df)
-    if not frames:
-        if schema is None:
-            raise ValueError(
-                f"{layout.what} at {path!r}: {', '.join(rels)} holds no "
-                "rows and its _META.json predates recorded schemas — "
-                f"rebuild with {layout.rebuild_hint}"
-            )
+    schema = StructType.fromJson(layout.meta[schema_key])
+    excluded = set(exclude_batches)
+    skip = {
+        _delta_owner(b, tok)
+        for b, tok in layout.snap["batches"].items()
+        if tok and (not include_deltas or b in excluded)
+    }
+    base = _leaf(layout.path, table)
+    leaves = [
+        _leaf(base, part, owner)
+        for part, owners in sorted(layout.snap["tables"][table].items())
+        for owner in owners
+        if owner not in skip
+    ]
+    if not leaves:
         return spark.createDataFrame([], schema)
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
+    try:
+        return (
+            spark.read.schema(schema)
+            .option("basePath", base)
+            .parquet(*leaves)
+        )
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" not in str(e):
+            raise
+        raise ValueError(
+            f"{layout.what} at {layout.path!r} is corrupt: an owner "
+            f"directory of {table!r} the snapshot names is missing "
+            f"({e}); rebuild with {layout.rebuild_hint}"
+        ) from None
+
+
+def unreferenced_owners(spark: SparkSession, layout: Layout) -> list[str]:
+    """Owner directories on disk that the layout's snapshot does not
+    name and no retire will reach: a crashed (or, under concurrent
+    ingest, an in-flight) delta commit's ``__d…`` dirs, and a crashed
+    rewrite's ``__v<K>`` dirs with K at or below the snapshot version.
+    One listing per table and per partition directory."""
+    out = []
+    version = int(layout.snap["version"])
+    for table, parts in sorted(layout.snap["tables"].items()):
+        tdir = os.path.join(layout.path, table)
+        for part in _parts_in(fsutil.list_names(spark, tdir)):
+            named = set(parts.get(part, ()))
+            for child in fsutil.list_names(spark, _leaf(tdir, part)):
+                if child in named:
+                    continue
+                if child.startswith(DELTA_DIR_PREFIX) or (
+                    child.startswith(VERSION_DIR_PREFIX)
+                    and child[len(VERSION_DIR_PREFIX) :].isdigit()
+                    and int(child[len(VERSION_DIR_PREFIX) :]) <= version
+                ):
+                    out.append(_leaf(tdir, part, child))
     return out
 
 
-# -- partition rewrites ----------------------------------------------------
+# -- staging and committing --------------------------------------------------
+
+
+def _move_in(
+    spark: SparkSession,
+    layout: Layout,
+    staged: str,
+    table: str,
+    owner: str,
+) -> list[str]:
+    """Move each partition of the staged table directory ``staged``
+    into ``<table>/<part>/<owner>`` — invisible until a snapshot names
+    it. Returns the partitions moved. A rewrite's ``__v<N>`` may be
+    left over from a crashed attempt at the same N: it is replaced."""
+    known = layout.snap["tables"].get(table, {})
+    parts = [p for p in _parts_in(fsutil.list_names(spark, staged)) if p]
+    for part in parts:
+        src, dst = _leaf(staged, part), _leaf(layout.path, table, part, owner)
+        if part not in known:
+            fsutil.mkdirs(spark, _leaf(layout.path, table, part))
+        try:
+            fsutil.rename(spark, src, dst)
+        except FileExistsError:
+            fsutil.delete(spark, dst)
+            fsutil.rename(spark, src, dst)
+    return parts
+
+
+def _layout_lock(path: str) -> threading.Lock:
+    with _LOCKS_GUARD:
+        return _LOCKS.setdefault(path, threading.Lock())
+
+
+def _publish(
+    spark: SparkSession, layout: Layout, edit: Callable[[dict], dict | None]
+) -> dict | None:
+    """Compare-and-swap the next manifest (module docstring): apply
+    ``edit`` to the opened snapshot and publish at its version + 1;
+    on a lost race re-read the current snapshot and re-apply. An edit
+    returning None publishes nothing. Returns the published body."""
+    from . import snapshot
+
+    snap = layout.snap
+    with _layout_lock(layout.path):
+        while True:
+            body = edit(snap)
+            if body is None:
+                return None
+            body = {**body, "version": int(snap["version"]) + 1}
+            if snapshot.publish_snapshot(spark, layout.path, body):
+                spark.catalog.refreshByPath(layout.path)
+                return body
+            snap = snapshot.read_snapshot(spark, layout.path)
+
+
+def _delta_staging(path: str, batch_id: str) -> str:
+    return os.path.join(path, f".spark-staging-delta_{batch_id}")
+
+
+def stage_delta(
+    spark: SparkSession, path: str, batch_id: str, tables: dict[str, Table]
+) -> None:
+    """Write one batch's tables under its hidden staging dir; nothing
+    committed is touched."""
+    staging = _delta_staging(path, batch_id)
+    fsutil.delete(spark, staging)
+    _write_all(staging, tables)
+
+
+def discard_delta(spark: SparkSession, path: str, batch_id: str) -> None:
+    """Drop a staged batch that will not be committed."""
+    fsutil.delete(spark, _delta_staging(path, batch_id))
+
+
+def commit_delta(
+    spark: SparkSession, layout: Layout, batch_id: str, tables: list[str]
+) -> None:
+    """Move a staged batch into fresh ``__d<batch_id>.<token>`` owners
+    and publish them, replacing the batch's previous owners (module
+    docstring). A batch folded while it staged is not published; its
+    moved dirs are left for vacuum."""
+    staging = _delta_staging(layout.path, batch_id)
+    token = uuid.uuid4().hex[:8]
+    owner = _delta_owner(batch_id, token)
+    added = {
+        (t, p, owner)
+        for t in tables
+        for p in _move_in(spark, layout, os.path.join(staging, t), t, owner)
+    }
+    fsutil.delete(spark, staging)
+
+    def edit(snap: dict) -> dict | None:
+        if _folded(snap, batch_id):
+            return None
+        prev = snap["batches"].get(batch_id)
+        old = _delta_owner(batch_id, prev) if prev else None
+        return {
+            "meta": snap["meta"],
+            "tables": _edited(
+                snap["tables"], {x for x in _owned(snap) if x[2] == old}, added
+            ),
+            "batches": {**snap["batches"], batch_id: token},
+        }
+
+    _publish(spark, layout, edit)
+
+
+def _owned(snap: dict) -> set[tuple[str, str, str]]:
+    """The snapshot's owner map as (table, partition, owner) triples."""
+    return {
+        (t, p, o)
+        for t, parts in snap["tables"].items()
+        for p, owners in parts.items()
+        for o in owners
+    }
+
+
+def _edited(tables: dict, gone: set, added: set) -> dict:
+    """The owner map ``tables`` with the ``gone`` owner triples removed
+    and the ``added`` ones joined; a partition left without owners
+    leaves the map, a table never does."""
+    out: dict = {t: {} for t in tables}
+    for t, p, o in sorted((_owned({"tables": tables}) - gone) | added):
+        out.setdefault(t, {}).setdefault(p, []).append(o)
+    return out
 
 
 def _next_version(layout: Layout) -> int:
     return int(layout.snap["version"]) + 1
 
 
+def _rewrite_staging(layout: Layout) -> str:
+    return os.path.join(layout.path, f".spark-staging-v{_next_version(layout)}")
+
+
 def stage_rewrite(
     spark: SparkSession,
     layout: Layout,
-    rel: str,
+    table: str,
     keep: DataFrame,
     partition_col: str,
     touched: list,
     sort_cols: tuple[str, ...] = (),
 ) -> dict:
     """Write ``keep`` — the new rows of the ``touched`` partitions of
-    table directory ``rel`` — into its next version directory and
-    return the manifest job. Nothing a reader lists is modified.
-    Touched partitions left without rows are ``drop``-ped."""
-    vd = os.path.join(
-        layout.path, rel, f"{VERSION_DIR_PREFIX}{_next_version(layout)}"
-    )
-    write_table(Table(keep, partition_col, sort_cols), vd)
-    staged = {n for n in fsutil.list_names(spark, vd) if "=" in n}
+    ``table`` — and move each staged partition into its ``__v<N>``
+    owner (N = snapshot version + 1). Returns the manifest job: the
+    owners opened in the touched partitions go, the new copies join (a
+    partition left without rows gets none). Nothing a reader lists is
+    modified."""
+    staged = os.path.join(_rewrite_staging(layout), table)
+    write_table(Table(keep, partition_col, sort_cols), staged)
+    owner = f"{VERSION_DIR_PREFIX}{_next_version(layout)}"
     touched_names = {partition_dir_name(partition_col, v) for v in touched}
-    stray = staged - touched_names
+    stray = set(_parts_in(fsutil.list_names(spark, staged))) - touched_names
     if stray:
         raise AssertionError(
-            f"partition rewrite of {rel!r}: staged partitions {stray} "
+            f"partition rewrite of {table!r}: staged partitions {stray} "
             "are outside the touched set — keep frame wider than the "
             "touched slice"
         )
+    moved = _move_in(spark, layout, staged, table, owner)
+    opened = layout.snap["tables"].get(table, {})
     return {
-        "dir": rel,
-        "partition_col": partition_col,
-        "swap": sorted(touched_names & staged),
-        "drop": sorted(touched_names - staged),
+        "gone": {(table, p, o) for p in touched_names for o in opened.get(p, ())},
+        "added": {(table, p, owner) for p in moved},
     }
 
 
@@ -500,46 +624,56 @@ def commit_rewrite(
     layout: Layout,
     jobs: list[dict],
     meta: dict | None = None,
-    folded: Iterable[str] = (),
+    fold: Iterable[str] = (),
 ) -> dict:
-    """Publish the next manifest over the staged ``jobs`` — the one
-    commit point (module docstring). ``meta`` is the post-commit
-    metadata (None keeps the layout's), ``folded`` the batch ids this
-    commit folds into the base. Returns the published body."""
+    """Publish the staged ``jobs`` — the one commit point (module
+    docstring). ``meta`` is the post-commit metadata (None keeps the
+    layout's), ``fold`` the live batch ids this commit folds into the
+    base. A folded batch re-committed since the open fails the
+    commit: its new copy would sit beside the fold's. Returns the
+    published body."""
+    opened = {b: layout.snap["batches"][b] for b in fold}
+    fsutil.delete(spark, _rewrite_staging(layout))
+
+    def edit(snap: dict) -> dict:
+        moved = [b for b, tok in opened.items() if snap["batches"].get(b) != tok]
+        if moved:
+            raise RuntimeError(
+                f"{layout.what} at {layout.path!r}: batches {moved} were "
+                "re-committed while this rewrite ran — re-run it"
+            )
+        return {
+            "meta": layout.meta if meta is None else meta,
+            "tables": _edited(
+                snap["tables"],
+                set().union(*(j["gone"] for j in jobs)),
+                set().union(*(j["added"] for j in jobs)),
+            ),
+            "batches": {**snap["batches"], **dict.fromkeys(opened)},
+        }
+
+    return _publish(spark, layout, edit)
+
+
+def retire(spark: SparkSession, path: str) -> dict:
+    """Delete what the current snapshot superseded: manifests below
+    it and every owner an older snapshot named that it does not —
+    folded or replaced delta dirs, superseded version dirs, shadowed
+    base files. A delta dir no snapshot ever named, or a version dir
+    above the current version, may belong to a commit still in flight
+    and is left alone. Idempotent. Returns ``{"files_removed",
+    "bytes_reclaimed", "snapshots_retired", "version_dirs_removed"}``."""
     from . import snapshot
 
-    body = snapshot.next_snapshot(
-        layout.snap,
-        jobs,
-        _next_version(layout),
-        layout.meta if meta is None else meta,
-        folded,
-    )
-    snapshot.publish_snapshot(spark, layout.path, body)
-    spark.catalog.refreshByPath(layout.path)
-    return body
-
-
-def retire(spark: SparkSession, path: str, tables: Iterable[str]) -> dict:
-    """Delete what the current snapshot no longer references:
-    manifests below it, version dirs it does not name, base
-    partitions it shadows, and folded delta dirs with their markers.
-    ``tables`` are the layout's own table directories; their delta
-    dirs are found from the root listing. Idempotent. Returns
-    ``{"files_removed", "bytes_reclaimed", "snapshots_retired",
-    "version_dirs_removed"}``."""
-    from . import snapshot
-
-    names = fsutil.list_names(spark, path)
-    versions = snapshot.versions_in(names)
-    snap = snapshot.resolve_snapshot(spark, path, versions)
-    folded = set(snap.get("folded", ()))
+    versions = snapshot.manifest_versions(spark, path)
     out = {
         "files_removed": 0,
         "bytes_reclaimed": 0,
         "snapshots_retired": 0,
         "version_dirs_removed": 0,
     }
+    if not versions:
+        return out
 
     def sweep(p: str, key: str | None = None) -> None:
         n, b = fsutil.du(spark, p)
@@ -549,33 +683,25 @@ def retire(spark: SparkSession, path: str, tables: Iterable[str]) -> dict:
         if key is not None:
             out[key] += 1
 
+    current = snapshot.resolve_snapshot(spark, path, versions)
+    older = [snapshot.resolve_snapshot(spark, path, versions, v) for v in versions[:-1]]
+    if versions[0] == 1:
+        older.append(snapshot.base_snapshot(current["meta"]))
+    gone = set().union(*map(_owned, older)) - _owned(current)
+    for t, p, o in sorted(gone):
+        if o:
+            sweep(_leaf(path, t, p, o), "version_dirs_removed")
+            continue
+        files = [
+            c
+            for c in fsutil.list_names(spark, _leaf(path, t, p))
+            if not c.startswith("__")
+        ]
+        for c in files:
+            sweep(_leaf(path, t, p, c))
+        out["version_dirs_removed"] += bool(files)
     for v in versions[:-1]:
-        manifest = os.path.join(path, f"{MANIFEST_PREFIX}{v}.json")
-        sweep(manifest, "snapshots_retired")
-    tables = set(tables)
-    rels = sorted(tables) + [
-        n
-        for n in names
-        if "_delta_" in n and n.partition("_delta_")[0] in tables
-    ]
-    for rel in rels:
-        d = os.path.join(path, rel)
-        if rel.partition("_delta_")[2] in folded:
-            sweep(d)
-            continue
-        if not fsutil.is_dir(spark, d):
-            continue
-        entry = snap.get("dirs", {}).get(rel, {})
-        assign = entry.get("assign", {})
-        keep = {f"{VERSION_DIR_PREFIX}{int(t)}" for t in assign.values()}
-        shadowed = set(assign) | set(entry.get("dropped", ()))
-        for child in fsutil.list_names(spark, d):
-            if (
-                child.startswith(VERSION_DIR_PREFIX) and child not in keep
-            ) or child in shadowed:
-                sweep(os.path.join(d, child), "version_dirs_removed")
-    for b in folded & set(batches_in(names)):
-        sweep(os.path.join(path, delta_marker(b)))
+        sweep(os.path.join(path, f"{MANIFEST_PREFIX}{v}.json"), "snapshots_retired")
     if out["files_removed"]:
         spark.catalog.refreshByPath(path)
     return out
@@ -583,6 +709,7 @@ def retire(spark: SparkSession, path: str, tables: Iterable[str]) -> dict:
 
 __all__ = [
     "DEAD_STAGING",
+    "DELTA_DIR_PREFIX",
     "Layout",
     "MANIFEST_PREFIX",
     "META",
@@ -590,13 +717,10 @@ __all__ = [
     "SUCCESS",
     "Table",
     "VERSION_DIR_PREFIX",
-    "batches_in",
     "check_batch_id",
     "commit_delta",
     "commit_rewrite",
     "committed_delta_batches",
-    "delta_dir",
-    "delta_marker",
     "discard_delta",
     "open_for_delta",
     "open_layout",
@@ -609,5 +733,6 @@ __all__ = [
     "stage_delta",
     "stage_rewrite",
     "swap_base",
+    "unreferenced_owners",
     "write_table",
 ]

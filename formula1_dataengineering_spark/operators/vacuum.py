@@ -1,19 +1,21 @@
 """Retention / vacuum — the reclamation verbs: a year-long deployment
 accumulates garbage no other verb reclaims — staging left by crashed
-writers, delta directories whose refresh died before the commit
-marker, superseded snapshots — plus, for the SCD2 history layout,
-superseded closed versions that retention policy says to expire.
+writers, owner directories of deltas whose refresh died before its
+manifest publish, superseded snapshots — plus, for the SCD2 history
+layout, superseded closed versions that retention policy says to
+expire.
 
 Two verbs:
 
 - :func:`vacuum_layout` removes PHYSICAL garbage only — the layout's
   current logical content (what any reader returns) is before==after
   by contract, because everything swept is already invisible: readers
-  union deltas via commit markers (an unmarked delta dir is a crashed
-  refresh), staging belongs to a writer that will recreate it or to
-  a retired protocol, ``.spark-staging-*`` residue is a killed Spark
-  write job's own scratch, and superseded snapshot state is what
-  :func:`operators.store.retire` deletes after compaction.
+  read only the owners the current manifest names (an unnamed delta
+  dir is a crashed refresh), staging belongs to a writer that will
+  recreate it or to a retired protocol, ``.spark-staging-*`` residue
+  is a killed Spark write job's own scratch, and superseded snapshot
+  state is what :func:`operators.store.retire` deletes after
+  compaction.
 - :func:`expire_scd2_history` changes logical content BY POLICY:
   per key it keeps the current row plus the ``retain_versions`` most
   recent closed versions and deletes older ones, copy-on-write over
@@ -21,9 +23,10 @@ Two verbs:
 
 Concurrency: single maintainer, same as ``operators.compaction``.
 Concurrent INGEST during :func:`vacuum_layout` is NOT safe for the
-unmarked-delta sweep (a refresh mid-write looks exactly like a
-crashed one) — run vacuum in the maintenance window, after the
-ingest tick. All IO through the Hadoop FileSystem API (``fsutil``).
+orphan-delta sweep (a refresh between its move-in and its publish
+looks exactly like a crashed one) — run vacuum in the maintenance
+window, after the ingest tick. All IO through the Hadoop FileSystem
+API (``fsutil``).
 
 100 TB story: the sweep is pure filesystem metadata (list + content
 summaries + recursive deletes — no data read); history expiry reads
@@ -48,71 +51,40 @@ def vacuum_layout(
     spark: SparkSession, path: str, what: str = "stored layout"
 ) -> dict:
     """Sweep a stored layout's physical garbage. Only four classes
-    are removed — anything else under the root (live deltas and their
-    markers, base tables, metadata, gate sentinels, cached
-    "_"-prefixed siblings like a stream source) is left untouched,
-    deliberately: vacuum deletes only what the layout's own protocols
-    define as dead.
+    are removed — anything else under the root (live owners, base
+    tables, metadata, gate sentinels, cached "_"-prefixed siblings
+    like a stream source) is left untouched, deliberately: vacuum
+    deletes only what the layout's own protocols define as dead.
 
     1. staging — ``_staging/`` (a crashed base rebuild's residue; the
-       next writer would sweep it anyway) and the ``_compact/`` /
-       ``_cow_staging/`` dirs of retired commit protocols;
-    2. ``<table>_delta_<bid>/`` directories whose
-       ``_DELTA_<bid>._SUCCESS`` commit marker is missing — a
-       refresh that died between the delta write and the marker
-       (readers already ignore them). The ``<table>`` prefix must
-       name an existing table directory of THIS layout, so an
-       unrelated sibling like ``notes_delta_old`` survives;
+       next writer would sweep it anyway), the ``_compact/`` /
+       ``_cow_staging/`` dirs of retired commit protocols, and (not
+       counted as staging) a crashed publish's manifest temp file;
+    2. orphan deltas — owner dirs ``<table>/<part>/__d<batch>.<token>``
+       no manifest names (a refresh that died before its publish;
+       counted once per batch attempt across its partitions), and the
+       root-level ``<table>_delta_<bid>/`` dirs of the retired
+       marker protocol. ``<table>`` must be a table of THIS layout's
+       owner map, so an unrelated sibling like ``notes_delta_old``
+       survives;
     3. ``.spark-staging-*`` residue — a killed Spark write job's own
        scratch, at the layout root and one level down inside each
-       table/delta directory (where partitioned writers put it);
+       table directory (where partitioned writers put it);
     4. superseded snapshot state — :func:`operators.store.retire`:
-       manifests below the current version, version directories the
-       current snapshot does not reference (a crashed rewrite's
-       staging included), base partitions it shadows, and folded
-       deltas with their markers. Time-travel reads of old snapshots
-       work until this sweep, never after.
+       manifests below the current version and the owners only older
+       snapshots name (shadowed base files, superseded version dirs,
+       folded deltas) — plus a crashed rewrite's unnamed version
+       dirs. Time-travel reads of old snapshots work until this
+       sweep, never after.
 
     Requires a readable layout (``_SUCCESS`` present): vacuuming
     under a rebuild's commit window would race the swap. Returns
     ``{"files_removed", "bytes_reclaimed", "orphan_deltas_removed",
     "staging_removed", "spark_staging_removed", "snapshots_retired",
     "version_dirs_removed"}``."""
-    fsutil.validate_layout_path(path, what)
+    layout = store.open_layout(spark, path, what, "its layout writer")
     names = fsutil.list_names(spark, path)
-    if store.SUCCESS not in names:
-        raise ValueError(
-            f"{what} at {path!r} has no _SUCCESS marker — a crashed "
-            "or in-flight rebuild; re-run the writer before vacuuming"
-        )
-    marked = set(store.batches_in(names))
-
-    def _spark_written(d: str) -> bool:
-        # A directory belongs to the layout only if its DIRECT
-        # children look like a Spark-written table: its own _SUCCESS
-        # marker, a *.parquet part file, or an '='-partition dir
-        # (ADVICE r15: the bare name heuristic treated user scratch
-        # like notes/ as a table). A hidden child (.spark-staging
-        # residue INSIDE scratch) is deliberately not evidence of
-        # ownership.
-        return any(
-            c == store.SUCCESS or c.endswith(".parquet") or "=" in c
-            for c in fsutil.list_names(spark, d)
-            if not c.startswith(".")
-        )
-
-    # The layout's own table directories: non-hidden dirs that are
-    # neither deltas nor partition dirs AND carry Spark-written
-    # content — the anchor classes 2 and 3 require.
-    tables = {
-        n
-        for n in names
-        if not n.startswith(("_", "."))
-        and "_delta_" not in n
-        and "=" not in n
-        and fsutil.is_dir(spark, os.path.join(path, n))
-        and _spark_written(os.path.join(path, n))
-    }
+    tables = set(layout.snap["tables"])
     out = {
         "files_removed": 0,
         "bytes_reclaimed": 0,
@@ -121,40 +93,42 @@ def vacuum_layout(
         "spark_staging_removed": 0,
     }
 
-    def sweep(d: str, key: str) -> None:
+    def sweep(d: str, key: str | None) -> None:
         n, b = fsutil.du(spark, d)
         fsutil.delete(spark, d)
         out["files_removed"] += n
         out["bytes_reclaimed"] += b
-        out[key] += 1
+        if key is not None:
+            out[key] += 1
 
     for name in names:
         if name in (store.STAGING,) + store.DEAD_STAGING:
             sweep(os.path.join(path, name), "staging_removed")
+        elif name.startswith(store.MANIFEST_PREFIX) and name.endswith(".tmp"):
+            sweep(os.path.join(path, name), None)
         elif name.startswith(".spark-staging"):
             sweep(os.path.join(path, name), "spark_staging_removed")
-        elif "_delta_" in name:
-            table, _, bid = name.partition("_delta_")
-            if table in tables and bid not in marked:
-                sweep(os.path.join(path, name), "orphan_deltas_removed")
+        elif "_delta_" in name and name.partition("_delta_")[0] in tables:
+            sweep(os.path.join(path, name), "orphan_deltas_removed")
     # Class 3, one level down: partitioned writers create their job
-    # scratch INSIDE the output directory. Same anchor as class 2:
-    # descend only into the layout's OWN table and delta directories.
-    own_deltas = {
-        n
-        for n in names
-        if "_delta_" in n and n.partition("_delta_")[0] in tables
-    }
-    for name in sorted(tables | own_deltas):
-        d = os.path.join(path, name)
-        if not fsutil.is_dir(spark, d):
-            continue
+    # scratch INSIDE the output directory.
+    for table in sorted(tables):
+        d = os.path.join(path, table)
         for child in fsutil.list_names(spark, d):
             if child.startswith(".spark-staging"):
                 sweep(os.path.join(d, child), "spark_staging_removed")
+    retired = store.retire(spark, path)
+    orphans = set()
+    for d in store.unreferenced_owners(spark, layout):
+        sweep(d, None)
+        owner = os.path.basename(d)
+        if owner.startswith(store.DELTA_DIR_PREFIX):
+            orphans.add(owner)
+        else:
+            retired["version_dirs_removed"] += 1
+    out["orphan_deltas_removed"] += len(orphans)
     if out["files_removed"]:
         spark.catalog.refreshByPath(path)
-    retired = store.retire(spark, path, tables)
     out["files_removed"] += retired.pop("files_removed")
     out["bytes_reclaimed"] += retired.pop("bytes_reclaimed")
     return {**out, **retired}
@@ -189,9 +163,7 @@ def expire_scd2_history(
     layout = store.open_layout(
         spark, path, "scd2 history layout", "write_scd2_history"
     )
-    hist = store.open_table(
-        spark, layout, ["history_rows"], "history_schema"
-    )
+    hist = store.open_table(spark, layout, "history_rows", "history_schema")
     key_col = layout.meta["key_col"]
     w = Window.partitionBy(key_col).orderBy(
         F.col("effective_from_us").desc()

@@ -3491,7 +3491,7 @@ def ivf_pq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v2: round-12 layouts add the cells/ coarse-centroid table
     # (multiprobe) — a cached v1 artifact must not pass freshness.
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_ann_index_v2", "embeddings"
+        sf_dir, "spark_graft_ann_index_v3", "embeddings"
     )
     if not fresh:
         write_ann_index(e, path, m=8, k=4, iters=2)
@@ -6043,7 +6043,7 @@ def incremental_dedup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v2: layouts carry _META.json (+ pre-removed _SUCCESS); v1 dirs
     # predate the metadata contract and must not pass freshness.
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_dedup_index_v2", "documents"
+        sf_dir, "spark_graft_dedup_index_v3", "documents"
     )
     if not fresh:
         write_dedup_index(d.where(F.col("doc_id") % 97 != 0), path)
@@ -6124,7 +6124,7 @@ def end_to_end_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     corpus = d.where(F.col("doc_id") % 97 != 0)
     batch = d.where(F.col("doc_id") % 97 == 0)
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_ingest_e2e_v1", "documents"
+        sf_dir, "spark_graft_ingest_e2e_v2", "documents"
     )
     if not fresh:
         write_dedup_index(corpus, path)
@@ -6229,7 +6229,7 @@ def scd2_refresh_pruned_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = e.where(F.col("event_id") % 5 != 0)
     new = e.where(F.col("event_id") % 5 == 0)
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_scd2_feed_v1", "events"
+        sf_dir, "spark_graft_scd2_feed_v2", "events"
     )
     if not fresh:
         write_scd2_feed(feed, path, "user_id", "ts", "event_type")
@@ -6272,7 +6272,7 @@ def scd2_cow_refresh_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = e.where(F.col("event_id") % 5 != 0)
     new = e.where(F.col("event_id") % 5 == 0)
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_scd2_hist_v1", "events"
+        sf_dir, "spark_graft_scd2_hist_v2", "events"
     )
     if not fresh:
         write_scd2_history(
@@ -6325,10 +6325,10 @@ def scd2_two_day_cycle_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     day2 = e.where(F.col("event_id") % 10 == 0)
     cols = ("user_id", "ts", "event_type")
     fpath, ffresh = layout_artifact(
-        sf_dir, "spark_graft_scd2_cycle_feed_v1", "events"
+        sf_dir, "spark_graft_scd2_cycle_feed_v2", "events"
     )
     hpath, hfresh = layout_artifact(
-        sf_dir, "spark_graft_scd2_cycle_hist_v1", "events"
+        sf_dir, "spark_graft_scd2_cycle_hist_v2", "events"
     )
     # Overhead discipline (VERDICT r12 item 5): every job in the
     # cycle is a window/shuffle over ≤ the history's row count, so 32
@@ -6433,7 +6433,7 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 10).select("vec_id", "embedding")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_ann_index_v2", "embeddings"
+        sf_dir, "spark_graft_ann_index_v3", "embeddings"
     )
     if not fresh:
         write_ann_index(e, path, m=8, k=4, iters=2)
@@ -6509,7 +6509,7 @@ def ann_index_delta_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = e.where(F.col("vec_id") % 97 != 0)
     batch = e.where(F.col("vec_id") % 97 == 0)
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_ann_delta_v1", "embeddings"
+        sf_dir, "spark_graft_ann_delta_v2", "embeddings"
     )
     if not fresh:
         write_ann_index(corpus, path, m=8, k=4, iters=2)
@@ -6557,7 +6557,7 @@ def ann_delta_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = e.where(F.col("vec_id") % 97 != 0)
     batch = e.where(F.col("vec_id") % 97 == 0)
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_ann_delta_v1", "embeddings"
+        sf_dir, "spark_graft_ann_delta_v2", "embeddings"
     )
     if not fresh:
         write_ann_index(corpus, path, m=8, k=4, iters=2)
@@ -6624,7 +6624,7 @@ def e2e_ingest_neardup_resolution(
     corpus = d.where(F.col("doc_id") % 97 != 0)
     batch = d.where(F.col("doc_id") % 97 == 0)
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_ingest_e2e_v1", "documents"
+        sf_dir, "spark_graft_ingest_e2e_v2", "documents"
     )
     if not fresh:
         write_dedup_index(corpus, path)
@@ -6729,15 +6729,18 @@ def _gate_chain(
 
 
 def _layout_delta_residue(spark: SparkSession, path: str) -> int:
-    """How many delta directories / commit markers remain under a
-    stored layout — the compaction gates emit this as a hashed proof
-    column (0 after a successful fold)."""
-    from .. import fsutil
+    """How many delta batches a stored layout still holds: live
+    batches plus delta commits no snapshot names (one per owner name)
+    — the compaction gates emit this as a hashed proof column (0 after
+    a successful fold)."""
+    from ..operators import store
 
-    return sum(
-        1
-        for n in fsutil.list_names(spark, path)
-        if "_delta_" in n or n.startswith("_DELTA_")
+    layout = store.open_layout(spark, path, "stored layout", "its writer")
+    orphans = {
+        os.path.basename(d) for d in store.unreferenced_owners(spark, layout)
+    }
+    return len(layout.batches) + sum(
+        o.startswith(store.DELTA_DIR_PREFIX) for o in orphans
     )
 
 
@@ -6766,7 +6769,7 @@ def dedup_index_compaction_probe(
     base) must replay the pre-compaction base ∪ deltas probe the
     DuckDB oracle computes; ``n_diff_rows`` is the measured
     |before △ after| of the full flag tables across the fold (0);
-    ``deltas_remaining`` counts surviving delta dirs/markers (0).
+    ``deltas_remaining`` counts live and orphaned delta batches (0).
 
     100 TB story: a year of daily ingests is 365 delta directories —
     365 extra scans unioned into every probe. Compaction reclaims
@@ -6787,7 +6790,7 @@ def dedup_index_compaction_probe(
     corpus = d.where(F.col("doc_id") % 97 != 0)
     batch = d.where(F.col("doc_id") % 97 == 0)
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_dedup_compact_v1", "documents"
+        sf_dir, "spark_graft_dedup_compact_v2", "documents"
     )
     state = {"n_diff": 0}
 
@@ -6874,7 +6877,7 @@ def ann_index_compaction_topk(
     batch = e.where(F.col("vec_id") % 97 == 0)
     q = batch.select("vec_id", "embedding")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_ann_compact_v1", "embeddings"
+        sf_dir, "spark_graft_ann_compact_v2", "embeddings"
     )
 
     def _probe():
@@ -6935,7 +6938,7 @@ def scd2_feed_compaction_history(
     e = load(spark, sf_dir, "events")
     cols = ("user_id", "ts", "event_type")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_scd2_compact_feed_v1", "events"
+        sf_dir, "spark_graft_scd2_compact_feed_v2", "events"
     )
     state = {"n_diff": 0}
 
@@ -6992,7 +6995,7 @@ def _ann_policy_rows(
     batch = e.where(F.col("vec_id") % 97 == 0)
     q = batch.select("vec_id", "embedding")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_ann_policy_v1", "embeddings"
+        sf_dir, "spark_graft_ann_policy_v2", "embeddings"
     )
     def mutate() -> None:
         write_ann_index(corpus, path, m=8, k=4, iters=2)
@@ -7039,7 +7042,7 @@ def _ann_policy_rows(
     rows = delta_row.select(F.lit("delta").alias("phase"), "*")
     if delta_recall < threshold:
         rpath, rfresh = layout_artifact(
-            sf_dir, "spark_graft_ann_policy_rebuilt_v1", "embeddings"
+            sf_dir, "spark_graft_ann_policy_rebuilt_v2", "embeddings"
         )
         if not rfresh:
             # Retrain over base ∪ deltas' VECTORS (the raw corpus —
@@ -7121,7 +7124,7 @@ def stream_feed_ingest_history(
 
     cols = ("user_id", "ts", "event_type")
     feed_path, fresh = layout_artifact(
-        sf_dir, "spark_graft_stream_feed_v1", "events"
+        sf_dir, "spark_graft_stream_feed_v2", "events"
     )
     work = tempfile.mkdtemp(prefix="spark_graft_stream_ingest_")
     try:
@@ -7206,7 +7209,7 @@ def ann_maintenance_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     day2 = batch.where(F.expr("vec_id div 97") % 2 == 1)
     q = batch.select("vec_id", "embedding")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_ann_maint_v1", "embeddings"
+        sf_dir, "spark_graft_ann_maint_v2", "embeddings"
     )
     state: dict = {"rows": []}
 
@@ -7297,7 +7300,7 @@ def dedup_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = d.where(F.col("doc_id") % 97 != 0)
     batch = d.where(F.col("doc_id") % 97 == 0)
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_dedup_maint_v1", "documents"
+        sf_dir, "spark_graft_dedup_maint_v2", "documents"
     )
     state: dict = {"decisions": [], "d3": {}}
 
@@ -7383,7 +7386,7 @@ def scd2_feed_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     cols = ("user_id", "ts", "event_type")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_scd2_maint_feed_v1", "events"
+        sf_dir, "spark_graft_scd2_maint_feed_v2", "events"
     )
     state: dict = {"decisions": [], "final": {}}
 
@@ -7436,8 +7439,8 @@ def layout_vacuum_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VACUUM of a stored layout's physical garbage
     (operators/vacuum.py): the gate builds a feed layout whose base ∪
     one COMMITTED delta = all events, plants the three garbage
-    classes a year of crashes accumulates — an UNMARKED delta
-    directory (refresh died before its commit marker), stale
+    classes a year of crashes accumulates — a root-level delta
+    directory of the retired marker protocol (dead residue), stale
     ``_staging`` (crashed base rebuild), stale ``_compact`` with no
     manifest (compaction died during STAGE) — with DECLARED byte
     sizes (synthetic files, so the oracle can assert the exact
@@ -7467,7 +7470,7 @@ def layout_vacuum_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     cols = ("user_id", "ts", "event_type")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_vacuum_v3", "events"
+        sf_dir, "spark_graft_vacuum_v4", "events"
     )
     state: dict = {}
 
@@ -7558,7 +7561,7 @@ def scd2_history_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load(spark, sf_dir, "events")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_scd2_retention_v2", "events"
+        sf_dir, "spark_graft_scd2_retention_v3", "events"
     )
     state: dict = {"rows_expired": 0}
 
@@ -7589,7 +7592,7 @@ def stream_dedup_ingest_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     refresh_dedup_index, crash-restarts ONCE deterministically in the
     worst window (two-table delta landed, checkpoint commit pending),
     and replays the batch idempotently under the same batch_id — the
-    delta commit-marker protocol IS the exactly-once ledger
+    manifest's batch record IS the exactly-once ledger
     (streaming/events.py stream_dedup_ingest_deltas; the SCD2-feed
     composition is the r13 template). The round-14 form streamed the
     ACCEPTED batch docs, which a replica-scaled corpus collapses to
@@ -7623,7 +7626,7 @@ def stream_dedup_ingest_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_stream_dedup_v2", "documents"
+        sf_dir, "spark_graft_stream_dedup_v3", "documents"
     )
     work = tempfile.mkdtemp(prefix="spark_graft_stream_dedup_")
     try:
@@ -7684,7 +7687,7 @@ def compaction_ingest_interleave(
     corpus = d.where(F.col("doc_id") % 97 != 0)
     batch = d.where(F.col("doc_id") % 97 == 0)
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_interleave_v1", "documents"
+        sf_dir, "spark_graft_interleave_v2", "documents"
     )
     state: dict = {"n_folded": 0}
 
@@ -7764,7 +7767,7 @@ def dedup_index_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = d.where(F.col("doc_id") % 97 != 0)
     batch = d.where(F.col("doc_id") % 97 == 0)
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_dedup_retract_v2", "documents"
+        sf_dir, "spark_graft_dedup_retract_v3", "documents"
     )
     state: dict = {"rows_deleted": 0}
 
@@ -7833,7 +7836,7 @@ def ann_index_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     day2 = batch.where(F.expr("vec_id div 97") % 2 == 1)
     q = batch.select("vec_id", "embedding")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_ann_retract_v2", "embeddings"
+        sf_dir, "spark_graft_ann_retract_v3", "embeddings"
     )
     state: dict = {"rows_deleted": 0}
 
@@ -7884,7 +7887,7 @@ def scd2_feed_key_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     cols = ("user_id", "ts", "event_type")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_scd2_delete_v2", "events"
+        sf_dir, "spark_graft_scd2_delete_v3", "events"
     )
     state: dict = {"rows_deleted": 0}
 
@@ -7945,7 +7948,7 @@ def scd2_history_key_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load(spark, sf_dir, "events")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_scd2_hist_delete_v2", "events"
+        sf_dir, "spark_graft_scd2_hist_delete_v3", "events"
     )
     state: dict = {"rows_deleted": 0}
 
@@ -8011,7 +8014,7 @@ def dedup_maintenance_deletion_drift(
     victims = corpus.where(F.col("doc_id") % 13 == 1).select("doc_id")
     live = corpus.join(victims, "doc_id", "left_anti")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_dedup_del_drift_v2", "documents"
+        sf_dir, "spark_graft_dedup_del_drift_v3", "documents"
     )
     state: dict = {"decisions": [], "t2": {}}
 
@@ -8079,7 +8082,7 @@ def scd2_feed_deletion_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     cols = ("user_id", "ts", "event_type")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_scd2_del_drift_v2", "events"
+        sf_dir, "spark_graft_scd2_del_drift_v3", "events"
     )
     state: dict = {"decisions": [], "t2": {}}
 
@@ -8173,7 +8176,7 @@ def ann_sampled_recall_referee(
     batch = e.where(F.col("vec_id") % 97 == 0)
     q = batch.select("vec_id", "embedding")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_ann_delta_v1", "embeddings"
+        sf_dir, "spark_graft_ann_delta_v2", "embeddings"
     )
     if not fresh:
         write_ann_index(corpus, path, m=8, k=4, iters=2)
@@ -8260,7 +8263,7 @@ def layout_maintenance_umbrella(
     batch = d.where(F.col("doc_id") % 97 == 0)
     e = load(spark, sf_dir, "events")
     root, fresh = layout_artifact(
-        sf_dir, "spark_graft_maint_umbrella_v2", "documents"
+        sf_dir, "spark_graft_maint_umbrella_v3", "documents"
     )
     idx = os.path.join(root, "idx")
     fp = os.path.join(root, "feed")
@@ -8394,7 +8397,7 @@ def scd2_erasure_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     cols = ("user_id", "ts", "event_type")
     root, fresh = layout_artifact(
-        sf_dir, "spark_graft_erasure_e2e_v2", "events"
+        sf_dir, "spark_graft_erasure_e2e_v3", "events"
     )
     fp = os.path.join(root, "feed")
     hp = os.path.join(root, "hist")
@@ -8487,7 +8490,7 @@ def snapshot_read_across_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     cols = ("user_id", "ts", "event_type")
     path, fresh = layout_artifact(
-        sf_dir, "spark_graft_snapread_v1", "events"
+        sf_dir, "spark_graft_snapread_v2", "events"
     )
     state: dict = {}
 

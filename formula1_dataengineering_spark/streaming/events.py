@@ -812,11 +812,11 @@ def _crash_replay_ingest(
       recorded);
     - on restart the source replays batch 1 under the SAME batch id,
       and the refresh verb's per-(path, batch_id) idempotent commit
-      (:func:`operators.store.commit_delta`: the ``_DELTA_<id>``
-      marker lands only after every delta table) makes the replay land
-      on top of its own delta — no duplicate rows, no lost batch, and
-      a crash-killed half-batch stays invisible until its replay
-      completes. A sink WITHOUT idempotent-per-batch semantics would
+      (:func:`operators.store.commit_delta`: one manifest publish
+      names every delta table's owners, replacing the batch's earlier
+      copy) makes the replay land on top of its own delta — no
+      duplicate rows, no lost batch, and a crash-killed half-batch
+      stays invisible until its replay completes. A sink WITHOUT idempotent-per-batch semantics would
       double-ingest here.
 
     Mechanics: ``source`` lands as exactly 3 parquet files under

@@ -28,3 +28,43 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_CORRECTNESS
+
+
+@pytest.fixture()
+def crash_at_publish(monkeypatch):
+    """Run a stored-layout verb that dies at its manifest publish — the
+    commit point — leaving its staged owner dirs on disk, unnamed."""
+    from formula1_dataengineering_spark import fsutil
+
+    real = fsutil.rename
+
+    def dying(spark_, src, dst):
+        if "_MANIFEST_v" in dst:
+            raise RuntimeError("simulated crash before the publish")
+        return real(spark_, src, dst)
+
+    def run(verb, *args, **kwargs):
+        with monkeypatch.context() as m:
+            m.setattr(fsutil, "rename", dying)
+            with pytest.raises(RuntimeError, match="simulated crash"):
+                verb(*args, **kwargs)
+
+    return run
+
+
+def delta_owners(path: str) -> list[str]:
+    """Every ingest delta owner dir (``<table>/<part>/__d<batch>.<token>``)
+    on disk under a stored layout, relative to its root."""
+    out = []
+    for t in sorted(os.listdir(path)):
+        tdir = os.path.join(path, t)
+        if t.startswith(("_", ".")) or not os.path.isdir(tdir):
+            continue
+        for p in sorted(os.listdir(tdir)):
+            if "=" in p and os.path.isdir(os.path.join(tdir, p)):
+                out += [
+                    f"{t}/{p}/{o}"
+                    for o in sorted(os.listdir(os.path.join(tdir, p)))
+                    if o.startswith("__d")
+                ]
+    return out

@@ -11,6 +11,10 @@ import random
 
 import pytest
 
+from formula1_dataengineering_spark.operators.store import (
+    committed_delta_batches,
+)
+
 _D = 16  # divisible by m=4
 
 
@@ -462,9 +466,9 @@ def test_stored_codebook_reencode_reproduces_base_codes(spark, tmp_path):
     )
 
 
-def test_refresh_idempotent_and_markerless_delta_ignored(spark, tmp_path):
-    import os as _os
-
+def test_refresh_idempotent_and_markerless_delta_ignored(
+    spark, tmp_path, crash_at_publish
+):
     from pyspark.sql import functions as F
 
     from formula1_dataengineering_spark.operators.clustering import (
@@ -478,17 +482,18 @@ def test_refresh_idempotent_and_markerless_delta_ignored(spark, tmp_path):
     batch = e.where(F.col("vec_id") % 5 == 0)
     path = str(tmp_path / "ann")
     write_ann_index(corpus, path, m=4, k=3, iters=2)
+    n0 = read_ann_index(spark, path)[0].count()
+    # A delta whose commit never published (crash between the table
+    # write and the manifest) is invisible to readers.
+    crash_at_publish(refresh_ann_index, batch, path, "day1")
+    codes_unpublished, _, _, _ = read_ann_index(spark, path)
+    assert codes_unpublished.count() == n0
     refresh_ann_index(batch, path, "day1")
     n1 = read_ann_index(spark, path)[0].count()
-    # Re-running the same batch_id overwrites its own delta.
+    assert n1 == n0 + batch.count() * 4
+    # Re-running the same batch_id replaces its own delta.
     refresh_ann_index(batch, path, "day1")
     assert read_ann_index(spark, path)[0].count() == n1
-    # A delta whose commit marker is missing (crash between the table
-    # write and the marker) is invisible to readers.
-    _os.remove(_os.path.join(path, "_DELTA_day1._SUCCESS"))
-    spark.catalog.refreshByPath(path)
-    codes_nomarker, _, _, _ = read_ann_index(spark, path)
-    assert codes_nomarker.count() == n1 - batch.count() * 4
 
 
 def test_rebuild_purges_deltas_and_bad_batch_ids_refused(spark, tmp_path):
@@ -514,9 +519,12 @@ def test_rebuild_purges_deltas_and_bad_batch_ids_refused(spark, tmp_path):
     # A base REBUILD supersedes every prior ingest.
     write_ann_index(e, path, m=4, k=3, iters=2)
     assert not any(
-        n.startswith(("codes_delta_", "_DELTA_"))
-        for n in os.listdir(path)
+        o.startswith("__d")
+        for p in os.listdir(os.path.join(path, "codes"))
+        if "=" in p
+        for o in os.listdir(os.path.join(path, "codes", p))
     )
+    assert committed_delta_batches(spark, path) == []
     codes, _, _, _ = read_ann_index(spark, path)
     assert codes.count() == e.count() * 4
 
@@ -647,14 +655,17 @@ def test_refresh_clash_leaves_delta_uncommitted(spark, tmp_path):
     write_ann_index(corpus, path, m=4, k=3, iters=2)
     with _pytest.raises(ValueError, match="insert-only"):
         refresh_ann_index(e.where("vec_id = 1"), path, "day9")
-    assert not _os.path.exists(
-        _os.path.join(path, "_DELTA_day9._SUCCESS")
+    assert (
+        committed_delta_batches(spark, path) == []
     ), "a clashing refresh must never commit its delta"
     assert not _os.path.exists(
         _os.path.join(path, ".spark-staging-delta_day9")
     ), "a rejected refresh must clean up its staging"
-    assert not _os.path.exists(
-        _os.path.join(path, "codes_delta_day9")
+    assert not any(
+        o.startswith("__dday9")
+        for p in _os.listdir(_os.path.join(path, "codes"))
+        if "=" in p
+        for o in _os.listdir(_os.path.join(path, "codes", p))
     ), "a rejected refresh must never materialize a delta directory"
     codes, _, _, _ = read_ann_index(spark, path)
     assert codes.count() == corpus.count() * 4  # base only, m=4 rows/vec
@@ -690,9 +701,9 @@ def test_refresh_clash_retry_preserves_committed_batch(spark, tmp_path):
     # base-resident; the check only excludes day1's own prior delta).
     with _pytest.raises(ValueError, match="insert-only"):
         refresh_ann_index(e.where("vec_id = 1"), path, "day1")
-    assert _os.path.exists(
-        _os.path.join(path, "_DELTA_day1._SUCCESS")
-    ), "the committed batch's marker must survive a rejected retry"
+    assert committed_delta_batches(spark, path) == [
+        "day1"
+    ], "the committed batch must survive a rejected retry"
     assert (
         read_ann_index(spark, path)[0].count() == n_committed
     ), "a rejected retry must not lose the committed batch's code rows"

@@ -13,6 +13,9 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from formula1_dataengineering_spark.operators import store
+from tests.conftest import delta_owners
+
 _D = 8
 
 
@@ -63,11 +66,19 @@ def _rows(df):
 
 
 def _delta_residue(path):
-    return [
-        n
-        for n in os.listdir(path)
-        if "_delta_" in n or n.startswith("_DELTA_")
-    ]
+    return delta_owners(path)
+
+
+def _version_dirs(path, table):
+    """The ``__v<N>`` owner dir names inside ``table``'s partitions."""
+    t = os.path.join(path, table)
+    return {
+        o
+        for p in os.listdir(t)
+        if "=" in p
+        for o in os.listdir(os.path.join(t, p))
+        if o.startswith("__v")
+    }
 
 
 def test_compact_dedup_index_folds_deltas(spark, tmp_path):
@@ -455,13 +466,13 @@ def test_base_rebuild_purges_crashed_compaction_state(
 
     with pytest.raises(RuntimeError, match="simulated crash"):
         compact_dedup_index(spark, path, on_staged=crash)
-    assert "__v1" in os.listdir(os.path.join(path, "content_hashes"))
+    assert "__v2" in _version_dirs(path, "content_hashes")
 
     # Recovery path B: full base rebuild over the corrected corpus.
     corpus2 = d.where("doc_id % 5 != 0").unionByName(day1)
     write_dedup_index(corpus2, path, n_shards=8)
     for t in ("content_hashes", "band_rows"):
-        assert "__v1" not in os.listdir(os.path.join(path, t))
+        assert _version_dirs(path, t) == set()
     want_h, want_b, _ = read_dedup_index(spark, path)
     want_h, want_b = _rows(want_h), _rows(want_b)
     summary = compact_dedup_index(spark, path)
@@ -504,13 +515,11 @@ def test_compact_interleaved_ingest_survives_commit(spark, tmp_path):
 
     summary = compact_dedup_index(spark, path, on_staged=land_day3)
     assert summary["batch_ids"] == ["day1", "day2"]
-    # day3's delta dirs + marker survive the commit's sweep.
+    # day3's delta dirs survive the commit and its retire.
     residue = _delta_residue(path)
-    assert sorted(residue) == [
-        "_DELTA_day3._SUCCESS",
-        "band_rows_delta_day3",
-        "content_hashes_delta_day3",
-    ]
+    assert residue and all("/__dday3." in r for r in residue)
+    assert {r.split("/")[0] for r in residue} == {"band_rows", "content_hashes"}
+    assert store.committed_delta_batches(spark, path) == ["day3"]
     h, b, _ = read_dedup_index(spark, path)
     assert _rows(h) == landed["want_h"]
     assert _rows(b) == landed["want_b"]
@@ -528,9 +537,9 @@ def test_compact_crash_after_manifest_with_interleaved_delta(
     """Crash after the manifest publish, before retire, WITH a
     concurrent delta landed inside the fold: readers already see the
     folded base plus the interleaved delta — the folded batches'
-    markers are still on disk but no longer live — and the next
+    dirs are still on disk but no longer live — and the next
     compaction folds the interleaved delta and retires everything."""
-    from formula1_dataengineering_spark.operators import compaction, store
+    from formula1_dataengineering_spark.operators import compaction
     from formula1_dataengineering_spark.operators.dedup import (
         read_dedup_index,
         refresh_dedup_index,
@@ -560,7 +569,7 @@ def test_compact_crash_after_manifest_with_interleaved_delta(
         m.setattr(store, "retire", crash)
         with pytest.raises(RuntimeError, match="crash between"):
             compaction.compact_dedup_index(spark, path, on_staged=land)
-    assert "_DELTA_day1._SUCCESS" in os.listdir(path)
+    assert any("/__dday1." in r for r in _delta_residue(path))
     assert store.committed_delta_batches(spark, path) == ["day3"]
     assert _rows(read_dedup_index(spark, path)[0]) == want_all
     summary = compaction.compact_dedup_index(spark, path)

@@ -9,6 +9,11 @@ import os
 
 from pyspark.sql import functions as F
 
+from formula1_dataengineering_spark.operators.store import (
+    committed_delta_batches,
+)
+from tests.conftest import delta_owners
+
 TEXT = [
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet",
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet",
@@ -345,16 +350,18 @@ def test_rebuild_removes_stale_deltas(spark, tmp_path):
     h, b, _ = read_dedup_index(spark, path)
     ids = {r["doc_id"] for r in h.select("doc_id").distinct().collect()}
     assert ids == {0, 1, 2}, ids
-    left = os.listdir(path)
-    assert not [f for f in left if "_delta_" in f]
-    assert not [f for f in left if f.startswith("_DELTA_")]
+    assert delta_owners(path) == []
+    assert committed_delta_batches(spark, path) == []
 
 
-def test_delta_without_commit_marker_is_ignored(spark, tmp_path):
-    """read_dedup_index unions only marker-committed deltas: a crash
-    between the two delta-table writes leaves a marker-less pair the
-    reader must skip (hashes containing a batch its band rows lack is
-    the inconsistent view the marker exists to prevent)."""
+def test_delta_without_commit_marker_is_ignored(
+    spark, tmp_path, crash_at_publish
+):
+    """read_dedup_index reads only manifest-committed deltas: a crash
+    before the publish leaves the batch's moved-in owner dirs unnamed
+    and the reader must skip them (hashes containing a batch its band
+    rows lack is the inconsistent view the commit exists to
+    prevent)."""
     from formula1_dataengineering_spark.operators.dedup import (
         read_dedup_index,
         refresh_dedup_index,
@@ -364,16 +371,15 @@ def test_delta_without_commit_marker_is_ignored(spark, tmp_path):
     d = _docs(spark)
     path = str(tmp_path / "idx")
     write_dedup_index(d.where(F.col("doc_id") < 3), path, n_shards=4)
-    refresh_dedup_index(
-        d.where(F.col("doc_id") >= 3), path, batch_id="day1"
+    crash_at_publish(
+        refresh_dedup_index, d.where(F.col("doc_id") >= 3), path, "day1"
     )
-    marker = os.path.join(path, "_DELTA_day1._SUCCESS")
-    assert os.path.exists(marker)
-    os.remove(marker)  # simulate a crash before the marker landed
+    assert delta_owners(path)  # moved in, never published
     h, b, _ = read_dedup_index(spark, path)
     ids = {r["doc_id"] for r in h.select("doc_id").distinct().collect()}
     assert ids == {0, 1, 2}, ids
-    open(marker, "w").close()  # marker restored -> delta visible again
+    # The re-run publishes -> the batch is visible.
+    refresh_dedup_index(d.where(F.col("doc_id") >= 3), path, "day1")
     h2, _b2, _ = read_dedup_index(spark, path)
     ids2 = {r["doc_id"] for r in h2.select("doc_id").distinct().collect()}
     assert ids2 == set(range(len(TEXT))), ids2
@@ -531,7 +537,9 @@ def test_missing_table_dir_is_corruption_not_bootstrap(spark, tmp_path):
     refresh_dedup_index(
         d.where(F.col("doc_id") >= 3), path, batch_id="day1"
     )
-    shutil.rmtree(os.path.join(path, "band_rows_delta_day1"))
+    for rel in delta_owners(path):
+        if rel.startswith("band_rows/"):
+            shutil.rmtree(os.path.join(path, rel))
     with pytest.raises(ValueError, match="corrupt"):
         read_dedup_index(spark, path)[1].collect()
     # Base-only view is unaffected by the broken delta...

@@ -25,6 +25,7 @@ from formula1_dataengineering_spark.operators.maintenance import (
 from formula1_dataengineering_spark.operators.store import (
     committed_delta_batches,
 )
+from tests.conftest import delta_owners
 
 _D = 8
 
@@ -59,11 +60,7 @@ def _rows(df):
 
 
 def _delta_residue(path):
-    return [
-        n
-        for n in os.listdir(path)
-        if "_delta_" in n or n.startswith("_DELTA_")
-    ]
+    return delta_owners(path)
 
 
 @pytest.fixture()
@@ -223,9 +220,9 @@ def test_committed_delta_batches_ignores_markerless(spark, tmp_path):
     path = str(tmp_path / "feed")
     write_scd2_feed(feed, path, "k", "ts", "v", n_shards=2)
     refresh_scd2_feed(feed.limit(2), path, "day1")
-    # An orphan delta dir without its commit marker (crashed refresh)
-    # is invisible to the policy — only committed batches count.
-    os.makedirs(os.path.join(path, "feed_rows_delta_orphan"))
+    # An orphan delta dir no manifest names (crashed refresh) is
+    # invisible to the policy — only committed batches count.
+    os.makedirs(os.path.join(path, "feed_rows", "shard=0", "__dorphan.0"))
     assert committed_delta_batches(spark, path) == ["day1"]
     r = maintain_scd2_feed(spark, path, compact_after=2)
     assert r["decision"] == "hold" and r["n_deltas"] == 1

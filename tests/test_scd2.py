@@ -13,6 +13,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from tests.conftest import delta_owners
+
 _SETTINGS = settings(
     max_examples=8,
     deadline=None,
@@ -563,7 +565,9 @@ def test_scd2_cow_refresh_through_keyed_feed_layout(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_scd2_feed_delta_append_and_base_only_view(spark, tmp_path):
+def test_scd2_feed_delta_append_and_base_only_view(
+    spark, tmp_path, crash_at_publish
+):
     from formula1_dataengineering_spark.operators.scd import (
         read_scd2_feed,
         refresh_scd2_feed,
@@ -578,22 +582,15 @@ def test_scd2_feed_delta_append_and_base_only_view(spark, tmp_path):
     with_deltas, _ = read_scd2_feed(spark, path)
     base_only, _ = read_scd2_feed(spark, path, include_deltas=False)
     assert with_deltas.count() == 3 and base_only.count() == 2
-    # Idempotent re-append; marker-less delta invisible.
+    # Idempotent re-append; an unpublished delta is invisible.
     refresh_scd2_feed(day1, path, "day1")
     assert read_scd2_feed(spark, path)[0].count() == 3
-    import os
-
-    os.remove(os.path.join(path, "_DELTA_day1._SUCCESS"))
-    spark.catalog.refreshByPath(path)
-    assert read_scd2_feed(spark, path)[0].count() == 2
+    crash_at_publish(refresh_scd2_feed, day1, path, "day2")
+    assert read_scd2_feed(spark, path)[0].count() == 3
     # A base rebuild purges deltas.
-    refresh_scd2_feed(day1, path, "day1")
     write_scd2_feed(feed, path, "k", "ts", "v", n_shards=2)
     assert read_scd2_feed(spark, path)[0].count() == 2
-    assert not any(
-        n.startswith(("feed_rows_delta_", "_DELTA_"))
-        for n in os.listdir(path)
-    )
+    assert delta_owners(path) == []
 
 
 def test_scd2_two_day_cycle_retouched_key_keeps_day1(spark, tmp_path):

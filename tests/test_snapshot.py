@@ -116,18 +116,26 @@ def test_read_snapshot_raises_on_vacuumed_version(spark, tmp_path):
 
 
 def test_publish_is_idempotent(spark, tmp_path):
+    """A published manifest is never overwritten: the first body is
+    kept and a second publish at the same version reports the
+    conflict (the compare-and-swap a losing committer rebases on)."""
     path = str(tmp_path / "feed")
     _feed(spark, path)
-    body = {"version": 1, "dirs": {}}
-    snapshot.publish_snapshot(spark, path, body)
-    snapshot.publish_snapshot(spark, path, {"version": 1, "dirs": {"x": 1}})
+    body = {"version": 1, "tables": {}}
+    assert snapshot.publish_snapshot(spark, path, body)
+    assert not snapshot.publish_snapshot(
+        spark, path, {"version": 1, "tables": {"x": {}}}
+    )
     assert snapshot.read_snapshot(spark, path, 1) == body
+    assert not [n for n in os.listdir(path) if n.endswith(".tmp")]
 
 
 def test_null_partition_rows_survive_versioning(spark, tmp_path):
     """The NULL shard arm: rows in the default partition keep reading
     when OTHER partitions are versioned, and a versioned rewrite OF
     the default partition resolves to the version copy."""
+    import json
+
     from formula1_dataengineering_spark.operators import store
 
     path = str(tmp_path / "lay")
@@ -136,12 +144,13 @@ def test_null_partition_rows_survive_versioning(spark, tmp_path):
     df.repartition("shard").write.partitionBy("shard").parquet(
         os.path.join(path, "t")
     )
-    for name in ("_SUCCESS", "_META.json"):
-        with open(os.path.join(path, name), "w") as fh:
-            fh.write("{}")
+    parts = sorted(n for n in os.listdir(os.path.join(path, "t")) if "=" in n)
+    meta = {"parts": {"t": parts}, "t_schema": df.schema.jsonValue()}
+    with open(os.path.join(path, "_META.json"), "w") as fh:
+        json.dump(meta, fh)
+    open(os.path.join(path, "_SUCCESS"), "w").close()
     layout = store.open_layout(spark, path, "test layout", "a writer")
-    snap0 = layout.snap
-    base = snapshot.snapshot_dir_read(spark, path, "t", snap0)
+    base = store.open_table(spark, layout, "t", "t_schema")
     assert base.count() == 20
     # Rewrite shard 0 (all even ids), keeping multiples of 4.
     keep = base.where(
@@ -149,38 +158,37 @@ def test_null_partition_rows_survive_versioning(spark, tmp_path):
     )
     job = store.stage_rewrite(spark, layout, "t", keep, "shard", [0])
     store.commit_rewrite(spark, layout, [job])
-    snap1 = snapshot.read_snapshot(spark, path)
-    out = snapshot.snapshot_dir_read(spark, path, "t", snap1)
+    layout1 = store.open_layout(spark, path, "test layout", "a writer")
+    out = store.open_table(spark, layout1, "t", "t_schema")
     assert out.where("shard is null").count() == 4  # untouched NULLs
     assert out.where("shard = 0").count() == 4  # ids 4,8,12,16
     assert out.where("shard = 1").count() == 8  # untouched
 
 
-def test_manifest_without_meta_or_folded_still_reads(spark, tmp_path):
-    """Manifests published before they carried the layout metadata
-    and the folded batch ids: the open falls back to _META.json and
-    every marked batch is live."""
+def test_layout_in_the_marker_format_is_refused(spark, tmp_path):
+    """A layout written before manifests owned every live file — root
+    ``_DELTA_`` markers, a ``_META.json`` without the base partition
+    record, manifests without an owner map — is refused loudly with
+    the rebuild hint instead of being read by a second reader."""
     import json
 
     from formula1_dataengineering_spark.operators import store
-    from formula1_dataengineering_spark.operators.scd import refresh_scd2_feed
 
     path = str(tmp_path / "feed")
     _feed(spark, path)
-    refresh_scd2_feed(
-        spark.createDataFrame([(9, 5000, "y")], "k long, ts long, v string"),
-        path,
-        "day1",
-    )
-    delete_scd2_feed_keys(spark, path, _keys(spark, 1))
-    manifest = os.path.join(path, "_MANIFEST_v1.json")
-    with open(manifest) as fh:
-        body = json.load(fh)
-    assert body["meta"]["rows_deleted"] == {"feed_rows": 8}
-    with open(manifest, "w") as fh:
-        json.dump({"version": 1, "dirs": body["dirs"]}, fh)
-    layout = store.open_layout(spark, path, "scd2 feed layout", "writer")
-    assert layout.batches == ["day1"]
-    assert "rows_deleted" not in layout.meta
-    after, _ = read_scd2_feed(spark, path)
-    assert after.count() == 25 and after.where("k = 1").count() == 0
+    meta_path = os.path.join(path, "_META.json")
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    del meta["parts"]
+    with open(meta_path, "w") as fh:
+        json.dump(meta, fh)
+    os.makedirs(os.path.join(path, "feed_rows_delta_day1"))
+    open(os.path.join(path, "_DELTA_day1._SUCCESS"), "w").close()
+    with pytest.raises(ValueError, match="predates.*write_scd2_feed"):
+        read_scd2_feed(spark, path)
+    # Its manifests carried per-directory version tags and folded ids.
+    old = {"version": 1, "dirs": {}, "meta": meta, "folded": []}
+    with open(os.path.join(path, "_MANIFEST_v1.json"), "w") as fh:
+        json.dump(old, fh)
+    with pytest.raises(ValueError, match="predates.*write_scd2_feed"):
+        store.open_layout(spark, path, "scd2 feed layout", "write_scd2_feed")

@@ -5,10 +5,14 @@ rebuild may leave the old rows or a marker-less layout the public
 reader refuses; every other verb leaves the reader serving exactly
 the old or the new rows (a multiset: a fold keeps the row set, so
 only counts catch a double-counted delta) with ``_SUCCESS`` untouched.
-Re-running the verb always lands the new rows. Also pins that a
-failed retry of a committed batch keeps that batch, that a retry of
-a folded batch is a no-op, and that caches taken inside the store's
-concurrent writes are released with them."""
+Re-running the verb always lands the new rows. A retry of a
+committed batch is crashed the same way: readers keep the batch's old
+copy or get the new one, never neither. Also pins that a failed retry
+of a committed batch keeps that batch, that a retry of a folded batch
+is a no-op, that a lost manifest race rebases without losing either
+edit, that an open is one root listing plus one manifest read, and
+that caches taken inside the store's concurrent writes are released
+with them."""
 
 from __future__ import annotations
 
@@ -50,7 +54,7 @@ from formula1_dataengineering_spark.operators.scd import (
 )
 from formula1_dataengineering_spark.operators.vacuum import expire_scd2_history
 
-_MUTATORS = ("rename", "delete", "touch", "write_text")
+_MUTATORS = ("rename", "delete", "touch", "write_text", "mkdirs")
 _WORDS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta"]
 
 
@@ -207,6 +211,17 @@ _CASES = {
         lambda s, p: refresh_scd2_feed(_feed_rows(s, 8, 11), p, "d1"),
         _feed_set,
     ),
+    # Retries of a committed batch: one publish replaces its copy.
+    "dedup_retry": (
+        _one_day_index,
+        lambda s, p: refresh_dedup_index(_docs(s, 8, 12), p, "d1"),
+        _dedup_rows,
+    ),
+    "feed_retry": (
+        _two_day_feed,
+        lambda s, p: refresh_scd2_feed(_feed_rows(s, 8, 13), p, "d1"),
+        _feed_rows_all,
+    ),
     # Partition rewrites: one manifest publish each.
     "dedup_compact": (
         _one_day_index,
@@ -249,10 +264,9 @@ _FOLDS = {"dedup_compact", "feed_compact"}
 
 def _instrument(monkeypatch, layout: str, replay: dict, crash_at=None) -> list:
     """Count the filesystem mutations a verb makes on ``layout`` and
-    raise at call ``crash_at``. Mutations are the fsutil mutators plus
-    the table writes into version dirs, which are written in place;
-    a write into a staging dir only becomes visible through a later
-    rename, which is counted.
+    raise at call ``crash_at``. Mutations are the fsutil mutators:
+    every table write lands in a staging dir and reaches the layout
+    only through a later rename, which is counted.
 
     The verb's Spark outputs — its table writes and the index builds —
     run for real once and are recorded in ``replay``; later runs
@@ -276,8 +290,6 @@ def _instrument(monkeypatch, layout: str, replay: dict, crash_at=None) -> list:
     real_write = store.write_table
 
     def write(table, d):
-        if os.path.basename(d).startswith(store.VERSION_DIR_PREFIX):
-            count("write_table", (d,))
         copy = os.path.join(replay["dir"], os.path.relpath(d, layout))
         if not os.path.isdir(copy):
             real_write(table, d)
@@ -432,3 +444,65 @@ def test_concurrent_thunks_keep_the_callers_job_group(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup("run-concurrently")) == 2
+
+
+def test_lost_manifest_race_rebases_and_keeps_both_edits(
+    spark, tmp_path, monkeypatch
+):
+    """Two delta commits target the same next version: the loser's
+    publish is refused, it re-reads the current manifest, re-applies
+    its owner edit and publishes one version later — both batches
+    land, neither re-stages."""
+    from formula1_dataengineering_spark.operators import snapshot
+
+    path = str(tmp_path / "layout")
+    write_dedup_index(_docs(spark, 0, 8), path, n_shards=2)
+    stale = store.open_layout(spark, path, "dedup index", "write_dedup_index")
+    refresh_dedup_index(_docs(spark, 8, 10), path, "d1")  # takes v1
+    published = []
+    real_publish = snapshot.publish_snapshot
+
+    def publish(spark_, path_, body):
+        published.append((body["version"], real_publish(spark_, path_, body)))
+        return published[-1][1]
+
+    with monkeypatch.context() as m:
+        m.setattr(store, "open_for_delta", lambda *a, **k: stale)
+        m.setattr(snapshot, "publish_snapshot", publish)
+        refresh_dedup_index(_docs(spark, 10, 12), path, "d2")
+    assert published == [(1, False), (2, True)]
+    assert store.committed_delta_batches(spark, path) == ["d1", "d2"]
+    assert _dedup_ids(spark, path) == set(range(12))
+
+
+def test_open_is_one_listing_one_manifest_read_and_one_scan_per_table(
+    spark, tmp_path, monkeypatch
+):
+    """After 5 deltas, 2 compactions and an erasure, opening the index
+    lists the root once, reads one manifest, and each table plans as
+    exactly one Parquet FileScan."""
+    path = str(tmp_path / "layout")
+    write_dedup_index(_docs(spark, 0, 8), path, n_shards=2)
+    for i, day in enumerate(("d1", "d2", "d3", "d4", "d5")):
+        refresh_dedup_index(_docs(spark, 8 + 2 * i, 10 + 2 * i), path, day)
+        if day in ("d2", "d4"):
+            compact_dedup_index(spark, path)
+        if day == "d3":
+            delete_from_dedup_index(spark, path, _ids(spark, 3, 9))
+    calls: dict[str, int] = {}
+    for name in ("list_names", "read_text", "exists", "du", "mkdirs") + _MUTATORS:
+        real = getattr(fsutil, name)
+
+        def counted(*args, _real=real, _name=name):
+            calls[_name] = calls.get(_name, 0) + 1
+            return _real(*args)
+
+        monkeypatch.setattr(fsutil, name, counted)
+    hashes, bands, _ = read_dedup_index(spark, path)
+    assert calls == {"list_names": 1, "read_text": 1}
+    for df in (hashes, bands):
+        plan = df._jdf.queryExecution().sparkPlan().toString()
+        assert plan.count("FileScan parquet") == 1, plan
+    assert store.committed_delta_batches(spark, path) == ["d5"]
+    want = set(range(18)) - {3, 9}
+    assert {r[0] for r in hashes.select("doc_id").collect()} == want

@@ -5,6 +5,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from formula1_dataengineering_spark.operators.store import (
+    committed_delta_batches,
+)
 from formula1_dataengineering_spark.sources.catalog import load
 from formula1_dataengineering_spark.streaming import (
     read_events_stream,
@@ -675,14 +678,7 @@ def test_stream_feed_ingest_deltas_exactly_once(spark, tmp_path):
     info = stream_feed_ingest_deltas(spark, sf, work, feed_path)
     assert info["crashed_once"]
     assert info["n_deltas"] == 3
-    markers = sorted(
-        n for n in os.listdir(feed_path) if n.startswith("_DELTA_")
-    )
-    assert markers == [
-        "_DELTA_mb0._SUCCESS",
-        "_DELTA_mb1._SUCCESS",
-        "_DELTA_mb2._SUCCESS",
-    ]
+    assert committed_delta_batches(spark, feed_path) == ["mb0", "mb1", "mb2"]
     ev = load(spark, sf, "events")
     assert info["feed_rows"] == ev.count()
     feed, _ = read_scd2_feed(spark, feed_path)
@@ -725,14 +721,7 @@ def test_stream_dedup_ingest_deltas_exactly_once(spark, tmp_path):
     info = stream_dedup_ingest_deltas(spark, sf, work, idx_path)
     assert info["crashed_once"]
     assert info["n_deltas"] == 3
-    markers = sorted(
-        n for n in os.listdir(idx_path) if n.startswith("_DELTA_")
-    )
-    assert markers == [
-        "_DELTA_mb0._SUCCESS",
-        "_DELTA_mb1._SUCCESS",
-        "_DELTA_mb2._SUCCESS",
-    ]
+    assert committed_delta_batches(spark, idx_path) == ["mb0", "mb1", "mb2"]
     d = load(spark, sf, "documents")
     corpus_n = d.where(F.col("doc_id") % 97 != 0).count()
     hashes, bands, _ = read_dedup_index(spark, idx_path)

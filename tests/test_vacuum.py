@@ -20,10 +20,14 @@ from formula1_dataengineering_spark.operators.scd import (
     write_scd2_feed,
     write_scd2_history,
 )
+from formula1_dataengineering_spark.operators.store import (
+    committed_delta_batches,
+)
 from formula1_dataengineering_spark.operators.vacuum import (
     expire_scd2_history,
     vacuum_layout,
 )
+from tests.conftest import delta_owners
 
 
 def _feed(spark, n=48):
@@ -46,14 +50,21 @@ def feed_layout(spark, tmp_path):
     return path, f
 
 
-def test_vacuum_sweeps_garbage_keeps_content(spark, feed_layout):
+def test_vacuum_sweeps_garbage_keeps_content(
+    spark, feed_layout, crash_at_publish
+):
     path, f = feed_layout
     before = _rows(read_scd2_feed(spark, path)[0].select("k", "ts", "v"))
 
-    # A REALISTIC orphan: a second refresh whose commit marker is
-    # lost (crash between delta write and marker).
-    refresh_scd2_feed(_feed(spark, 50).where(F.unix_seconds(F.col("ts")) >= 1048), path, "day2")
-    os.remove(os.path.join(path, "_DELTA_day2._SUCCESS"))
+    # A REALISTIC orphan: a second refresh whose manifest publish is
+    # lost (crash between moving its delta in and the commit).
+    crash_at_publish(
+        refresh_scd2_feed,
+        _feed(spark, 50).where(F.unix_seconds(F.col("ts")) >= 1048),
+        path,
+        "day2",
+    )
+    assert any("/__dday2." in r for r in delta_owners(path))
     # Stale writer staging + staging of the retired compaction and
     # copy-on-write protocols.
     for rel, size in (("_staging", 10), ("_compact", 20), ("_cow_staging", 5)):
@@ -68,9 +79,10 @@ def test_vacuum_sweeps_garbage_keeps_content(spark, feed_layout):
     assert info["bytes_reclaimed"] >= 35
     names = os.listdir(path)
     assert not {"_staging", "_compact", "_cow_staging"} & set(names)
-    assert not any("day2" in n for n in names)
+    assert not any("day2" in n for n in names + delta_owners(path))
     # Committed delta and logical content untouched.
-    assert "_DELTA_day1._SUCCESS" in names
+    assert committed_delta_batches(spark, path) == ["day1"]
+    assert any("/__dday1." in r for r in delta_owners(path))
     assert _rows(read_scd2_feed(spark, path)[0].select("k", "ts", "v")) == before
 
 
