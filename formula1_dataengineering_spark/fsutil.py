@@ -13,12 +13,12 @@ irrelevant next to the table scans they guard.
 
 Atomicity notes: Hadoop ``create(path, overwrite=True)``
 truncates-then-writes (markers are zero-byte, so the visible state is
-exists/not-exists); ``rename`` is the layout-swap primitive (atomic on
+exists/not-exists); ``move`` is the layout-swap primitive (atomic on
 HDFS, best-effort elsewhere — ``operators.store`` orders operations
 so a crash inside a base swap leaves a marker-less, reader-refused
 layout and a crash inside any other commit leaves the previous
-snapshot current, never a half-validated one), and it refuses an
-existing target, which makes it the manifest publish's
+snapshot current, never a half-validated one); ``rename`` moves a
+file but refuses an existing target, the manifest publish's
 compare-and-swap.
 """
 
@@ -84,40 +84,36 @@ def mkdirs(spark: "SparkSession", path: str) -> None:
     fs.mkdirs(p)
 
 
-def rename(spark: "SparkSession", src: str, dst: str) -> None:
-    """Move ``src`` to ``dst``, refusing an existing ``dst`` with
-    ``FileExistsError`` — the layout-swap primitive and the manifest
-    compare-and-swap. A file (a commit record) moves by
-    ``FileContext.rename`` with ``Rename.NONE``, which refuses the
-    target atomically where the filesystem can (``FileSystem.rename``
-    replaces an existing local file); a directory moves by
-    ``FileSystem.rename`` after an existence check, since the local
-    ``FileContext`` forks a ``readlink`` per path. Hadoop rename
-    returns False on most failure shapes — normalized to a loud error,
-    a silent half-swapped index being exactly what the commit protocol
+def move(spark: "SparkSession", src: str, dst: str) -> None:
+    """Move ``src`` to ``dst`` (the staged-layout swap primitive).
+    Hadoop rename returns False instead of raising on most failure
+    shapes (dst exists, src missing) — normalize to a loud error, a
+    silent half-swapped index being exactly what the commit protocol
     must never produce."""
     fs, s = _fs_path(spark, src)
-    jfs = spark._jvm.org.apache.hadoop.fs
-    d = jfs.Path(dst)
-    if fs.isFile(s):
-        from py4j.protocol import Py4JJavaError
+    _, d = _fs_path(spark, dst)
+    if not fs.rename(s, d):
+        raise OSError(f"rename failed: {src!r} -> {dst!r}")
 
-        fc = jfs.FileContext.getFileContext(spark._jsc.hadoopConfiguration())
-        rename_opt = getattr(jfs, "Options$Rename")
-        opts = spark.sparkContext._gateway.new_array(rename_opt, 1)
-        opts[0] = rename_opt.NONE
-        try:
-            fc.rename(s, d, opts)
-            return
-        except Py4JJavaError as e:
-            name = e.java_exception.getClass().getName()
-            if name != "org.apache.hadoop.fs.FileAlreadyExistsException":
-                raise OSError(f"rename failed: {src!r} -> {dst!r}") from e
-    elif not fs.exists(d):
-        if not fs.rename(s, d):
-            raise OSError(f"rename failed: {src!r} -> {dst!r}")
-        return
-    raise FileExistsError(f"rename target exists: {dst!r}")
+
+def rename(spark: "SparkSession", src: str, dst: str) -> None:
+    """Rename the file ``src`` to ``dst``, refusing an existing ``dst``
+    with ``FileExistsError`` — the manifest publish's compare-and-swap
+    (``FileContext.rename`` with ``Rename.NONE``; ``FileSystem.rename``
+    would replace an existing local file)."""
+    from py4j.protocol import Py4JJavaError
+
+    jfs = spark._jvm.org.apache.hadoop.fs
+    opt = getattr(jfs, "Options$Rename")
+    opts = spark.sparkContext._gateway.new_array(opt, 1)
+    opts[0] = opt.NONE
+    fc = jfs.FileContext.getFileContext(spark._jsc.hadoopConfiguration())
+    try:
+        fc.rename(_fs_path(spark, src)[1], jfs.Path(dst), opts)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getSimpleName() == "FileAlreadyExistsException":
+            raise FileExistsError(f"rename target exists: {dst!r}") from None
+        raise OSError(f"rename failed: {src!r} -> {dst!r}") from e
 
 
 def touch(spark: "SparkSession", path: str) -> None:

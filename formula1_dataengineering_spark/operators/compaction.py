@@ -1,9 +1,7 @@
-"""Delta compaction for the three delta-bearing stored layouts —
-the closing arc of the index lifecycle (VERDICT r12 item 1): the
+"""Delta compaction for the three delta-bearing stored layouts: the
 dedup index (``content_hashes`` / ``band_rows``), the ANN index
-(``codes``), and the SCD2 feed (``feed_rows``) all grow one delta
-owner directory per ingest in each partition the batch touched and,
-before this module, shed them only on a FULL rebuild. A 100 TB
+(``codes``) and the SCD2 feed (``feed_rows``) grow one delta owner
+directory per ingest in each partition the batch touched. A 100 TB
 pipeline cannot retrain the world to reclaim a year of daily deltas;
 it folds them into the base partitions.
 

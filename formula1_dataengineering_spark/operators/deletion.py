@@ -1,12 +1,9 @@
 """Targeted deletion (retraction) from stored layouts — the
-right-to-be-forgotten verb (rounds 14-15, beyond-reference extension).
-
-A 100 TB corpus gets retraction requests: a licensing takedown, a
-GDPR erasure, a poisoned-document purge. Rebuilding the world per
-request is the one answer that cannot work; these verbs remove the
-named ids' rows COPY-ON-WRITE from a stored layout — base AND every
-committed delta — rewriting only the partitions that actually hold
-the ids' rows:
+right-to-be-forgotten verb. A licensing takedown, a GDPR erasure or a
+poisoned-document purge cannot rebuild a 100 TB corpus per request;
+these verbs remove the named ids' rows COPY-ON-WRITE from a stored
+layout — base AND every committed delta — rewriting only the
+partitions that actually hold the ids' rows:
 
 - :func:`delete_from_dedup_index` — drop ``doc_ids`` from
   ``content_hashes`` + ``band_rows``. Both tables shard by HRW of a
@@ -24,25 +21,24 @@ the ids' rows:
   feed layout. The feed shards BY the key, so the touched-shard set
   is computed from the keys alone (static HRW pruning — no scan at
   all); only those shard directories are read or written.
-- :func:`delete_scd2_history_keys` (round 15, VERDICT r14 item 1) —
-  the feed verb's twin over the PERSISTED history layout, the thing
-  a serving deployment actually reads: same static HRW pruning from
-  the keys alone (``write_scd2_history`` shards by HRW(key)), one
-  ``history_rows`` directory (the history is COW-maintained — no
-  deltas to reach). Whole-key erasure commutes with the per-key SCD2
-  window, so the post-delete layout equals the full rebuild over the
-  surviving keys (the gate hashes exactly that).
+- :func:`delete_scd2_history_keys` — the feed verb's twin over the
+  PERSISTED history layout, the one a serving deployment reads: same
+  static HRW pruning from the keys alone, one ``history_rows``
+  directory (the history is COW-maintained — no deltas to reach).
+  Whole-key erasure commutes with the per-key SCD2 window, so the
+  post-delete layout equals the full rebuild over the surviving keys
+  (the gate hashes exactly that).
 
 Shared discipline (:func:`_stage_delete`): per table, find touched
 partitions in one scan over every owner (bounded driver collect,
-≤ n_shards / #cells), stage the kept rows as each touched partition's
-next version, then publish one manifest for every table
-(``operators.store``'s partition rewrite). The new version replaces
-all of a touched partition's owners, so a live delta's rows there
-join the base view; the batch stays live for compaction. Untouched partitions are never read and never written —
-their part files stay byte-identical (tests pin this). A partition
-whose every row was deleted is dropped, including the NULL default
-partition (its bystander rows re-stage).
+≤ n_shards / #cells), stage the base view's kept rows as each touched
+partition's next version and each live batch's as a fresh owner of
+that batch — so the base view a retry probes still leaves the batch
+out, and the retry still replaces all its rows — then publish one
+manifest for every table (``operators.store``'s partition rewrite).
+Untouched partitions are never read and never written (their part
+files stay byte-identical). A partition whose every row was deleted
+is dropped, including the NULL default partition.
 
 Deletion accounting: every commit's manifest carries the layout
 metadata with cumulative per-table ``rows_deleted`` counters — the
@@ -55,11 +51,11 @@ before the publish leaves the old snapshot current; re-running the
 same delete is idempotent (already-removed rows match nothing). The
 pre-erasure snapshot stays readable for time travel until vacuum.
 
-Replay caveat (documented, by design): a crashed INGEST of batch N
-replayed AFTER a delete that rewrote partitions batch N touched
-re-lands its rows there beside the delete's copy (and resurrects
-deleted ids) — sequence deletes after ingest settles (the
-single-maintainer window), or re-issue the delete.
+Replay caveat (by design): an ingest of batch N retried AFTER a
+delete replaces batch N's rows with the replayed ones, resurrecting
+deleted ids the batch held — sequence deletes after ingest settles,
+or re-issue the delete. A batch re-committed while a delete stages
+fails the delete's publish; re-run the delete.
 """
 
 from __future__ import annotations
@@ -84,16 +80,12 @@ def _stage_delete(
     partition_col: str,
     sort_cols: tuple[str, ...] = (),
     touched_hint: list | None = None,
-) -> tuple[dict | None, int, int]:
-    """Stage the copy-on-write delete of ``ids``' rows from one table
-    (every owner — base, versions and live deltas — in one scan):
-    returns (manifest job | None, rows_deleted,
-    partitions_touched). Nothing a reader lists is modified here.
-    ``touched_hint`` statically prunes the discovery scan when the
-    caller can bound the partition set from the ids alone (the
-    key-sharded feed/history) — the scan then reads only those
-    partitions; the per-partition refinement keeps the rewrite and
-    the accounting exact."""
+) -> tuple[list[dict], int, int]:
+    """Stage the copy-on-write delete of ``ids``' rows from one table:
+    returns (manifest jobs, rows_deleted, partitions_touched). Nothing
+    a reader lists is modified here. ``touched_hint`` prunes the
+    discovery scan to the partitions the caller bounded from the ids
+    alone (the key-sharded feed/history)."""
     rows = store.open_table(spark, layout, table, schema_key)
     bids = F.broadcast(ids.select(id_col).distinct())
     scope = (
@@ -101,12 +93,9 @@ def _stage_delete(
         if touched_hint is not None
         else rows
     )
-    # One column-pruned pass: only (id, partition) columns decode —
-    # and ONE job yields both the touched-partition set and the
-    # deleted-row count (previously two scans of the slice; every
-    # deleted row lives in a touched partition by definition, so the
-    # per-partition counts carry both answers — guide §2.4, fewer
-    # jobs per lifecycle verb).
+    # One column-pruned pass: only (id, partition) columns decode, and
+    # ONE job yields both the touched partitions and the deleted-row
+    # count (every deleted row lives in a touched partition).
     per_part = (
         scope.join(bids, id_col, "left_semi")
         .groupBy(partition_col)
@@ -115,14 +104,20 @@ def _stage_delete(
     )
     touched = [r[0] for r in per_part]
     if not touched:
-        return None, 0, 0
+        return [], 0, 0
     n_del = int(sum(r[1] for r in per_part))
-    slice_ = rows.where(store.partition_filter(partition_col, touched))
-    keep = slice_.join(bids, id_col, "left_anti")
-    job = store.stage_rewrite(
-        spark, layout, table, keep, partition_col, touched, sort_cols
-    )
-    return job, n_del, len(touched)
+    jobs = []
+    for batch, view in store.batch_views(
+        spark, layout, table, schema_key, partition_col, touched
+    ):
+        keep = view.where(store.partition_filter(partition_col, touched))
+        jobs.append(
+            store.stage_rewrite(
+                spark, layout, table, keep.join(bids, id_col, "left_anti"),
+                partition_col, touched, sort_cols, batch,
+            )
+        )
+    return jobs, n_del, len(touched)
 
 
 @maintainer_verb
@@ -138,20 +133,17 @@ def _run_delete(
     A no-match delete publishes nothing. A second concurrent
     maintainer is refused loudly mid-stage."""
     staged: list[dict] = []
-    rows_deleted = 0
     partitions = 0
     per_table: dict[str, int] = {}
     for table, schema_key, ids, id_col, pcol, sort_cols, hint in jobs:
-        job, n, p = _stage_delete(
+        table_jobs, n, p = _stage_delete(
             spark, layout, table, schema_key, ids, id_col, pcol, sort_cols,
             hint,
         )
-        if job is None:
-            continue
-        staged.append(job)
-        rows_deleted += n
+        staged += table_jobs
         partitions += p
-        per_table[table] = per_table.get(table, 0) + n
+        if n:
+            per_table[table] = per_table.get(table, 0) + n
     if not staged:
         return {"rows_deleted": 0, "partitions_rewritten": 0}
     meta = layout.meta
@@ -160,7 +152,7 @@ def _run_delete(
         acc[table] = int(acc.get(table, 0)) + n
     store.commit_rewrite(spark, layout, staged, {**meta, "rows_deleted": acc})
     return {
-        "rows_deleted": rows_deleted,
+        "rows_deleted": sum(per_table.values()),
         "partitions_rewritten": partitions,
     }
 
@@ -216,10 +208,9 @@ def delete_from_ann_index(
 @contextmanager
 def _pinned_ids(ids: DataFrame, id_col: str) -> Iterator[DataFrame]:
     """The request's distinct ids, materialized once for the verb and
-    unpinned when it exits. Every (table × directory) job re-executes
-    the ids plan 3-4 times (discovery, count, keep, stage) — for a
-    computed id set (the retraction gate's corpus-wide twin join) that
-    re-run would dominate the delete (round-14 review)."""
+    unpinned when it exits: each staged copy re-executes the ids plan,
+    which for a computed id set (a corpus-wide twin join) would
+    dominate the delete."""
     pinned = ids.select(id_col).distinct().localCheckpoint(eager=True)
     try:
         yield pinned
@@ -231,11 +222,9 @@ def _pinned_ids(ids: DataFrame, id_col: str) -> Iterator[DataFrame]:
 def _erasure_keys(
     keys: DataFrame, key_col: str, verb: str
 ) -> Iterator[DataFrame]:
-    """Validated, pinned erasure-request keys. NULL keys are
-    REFUSED (ADVICE r14): a null-key row lands in the
-    __HIVE_DEFAULT_PARTITION__ directory like any other, but a NULL
-    in the request would silently match nothing through the
-    anti-join's three-valued logic — an erasure request that silently
+    """Validated, pinned erasure-request keys. NULL keys are REFUSED:
+    a NULL in the request would silently match nothing through the
+    anti-join's three-valued logic, and an erasure that silently
     no-ops is worse than one that fails loudly."""
     with _pinned_ids(keys, key_col) as keys:
         if keys.where(F.col(key_col).isNull()).count() > 0:
@@ -301,17 +290,11 @@ def delete_scd2_history_keys(
     spark: SparkSession, path: str, keys: DataFrame
 ) -> dict:
     """Remove every row of ``keys`` from a stored SCD2 HISTORY layout
-    (``write_scd2_history`` / ``scd2_refresh_in_place``'s) — the
-    serving-side half of the erasure story (VERDICT r14 item 1: the
-    feed verb alone left the layout a deployment actually reads
-    holding the erased keys' versions). Whole-key erasure commutes
-    with the per-key SCD2 window, so the result equals the full
-    rebuild over the surviving keys — no window recomputation needed,
-    just the partition rewrite.
-
-    Same static HRW pruning as the feed twin (the layout shards by
-    HRW(key)); one ``history_rows`` directory — the history is
-    maintained copy-on-write, so there are no deltas to reach.
+    (``write_scd2_history`` / ``scd2_refresh_in_place``'s), the layout
+    a deployment serves. Whole-key erasure commutes with the per-key
+    SCD2 window, so the result equals the full rebuild over the
+    surviving keys with no window recomputation. Same static HRW
+    pruning as the feed twin; the history has no deltas to reach.
     Returns ``{"rows_deleted", "partitions_rewritten"}``."""
     layout = store.open_layout(
         spark, path, "scd2 history layout", "write_scd2_history"

@@ -4,62 +4,57 @@ commit, where each batch's rows live, and the names they commit
 under.
 
 A layout root holds ``_SUCCESS`` (the base commit marker: readers
-refuse a layout without it; only a crashed base rebuild leaves one),
-``_META.json`` (the base writer's params, recorded table schemas and
-``parts``, the partition directories each base table was written
-with — probing with guessed params silently returns wrong answers, so
-every open requires it), ``_MANIFEST_v<N>.json`` (published snapshots,
-the highest N current), the maintainer lease, and one directory per
-table as Spark wrote it. Each partition directory ``<table>/<col>=<v>/``
-holds its base files and hidden owner directories (Spark's file index
-never lists ``_``/``.``-prefixed names): ``__d<batch_id>.<token>/`` —
-one ingest batch's rows of that partition — and ``__v<N>/`` — a
-partition rewrite's copy. Staging is ``_staging/`` for a rebuild and
-``.spark-staging-delta_<batch_id>/`` / ``.spark-staging-v<N>/`` for a
-refresh or a rewrite.
+refuse a layout without it), ``_META.json`` (the base writer's params,
+recorded table schemas and ``parts``, each base table's partition
+directories — every open requires it, since probing with guessed
+params silently returns wrong answers), ``_MANIFEST_v<N>.json``
+(published snapshots, the highest N current), the maintainer lease,
+and one directory per table. Each partition directory
+``<table>/<col>=<v>/`` holds its base files and hidden owner
+directories, which Spark's file index never lists:
+``__d<batch_id>.<token>/`` holds one ingest batch's rows of that
+partition, ``__v<N>/`` a partition rewrite's copy. Staging is
+``_staging/`` for a rebuild and ``.spark-staging-delta_<batch_id>/`` /
+``.spark-staging-v<N>/`` for a refresh or a rewrite.
 
 **The owner map.** A snapshot names, per table and partition, the
-owners holding its live rows (``""`` = the base files), and maps
-every batch committed since the base to its live token, or to None
-once a rewrite folded it (a retry of a folded batch is then a no-op,
-never a second copy of its rows). Version 0 is the base as written,
-its map from ``_META.json``; every later one is a manifest. An open is
-one root listing plus one manifest read, and each table opens as one
-Parquet scan over the leaves the map names (:func:`open_table`).
+owners holding its live rows (``""`` = the base files), and maps each
+batch committed since the base to its live token, or to None once a
+compaction folded it (a retry is then a no-op). Version 0 is the base
+as written, its map from ``_META.json``; every later one is a
+manifest. An open is one root listing plus one manifest read, and
+each table opens as one Parquet scan over the leaves the map names.
 
 **The commit** (:func:`_publish`) is a compare-and-swap on the
 manifest name. Every verb stages first, moves each staged partition
-into an owner directory no snapshot names yet, then applies its owner
-edit to the snapshot it read and renames a temp file to
-``_MANIFEST_v<N+1>`` with a rename that refuses an existing target. A
-loser re-reads the current manifest, re-applies its edit and
-publishes one version later, never re-staging data; the local
-filesystem's refusing rename checks, then renames, so a per-layout
-in-process lock also serialises read → publish. A crash before the
-publish leaves the old snapshot current, one after it the new one;
-``_SUCCESS`` is never touched, and a snapshot resolved before a
-commit stays readable after it.
+into an owner directory no snapshot names yet, applies its owner edit
+to the snapshot it read and renames a temp file to
+``_MANIFEST_v<N+1>``, refusing an existing target. A loser re-reads
+the current manifest and re-applies its edit one version later,
+never re-staging data; the local filesystem's refusing rename checks,
+then renames, so a per-layout in-process lock also serialises read →
+publish. A crash before the publish leaves the old snapshot current,
+one after it the new one; a resolved snapshot stays readable.
 
 - Delta commit (:func:`stage_delta`, :func:`commit_delta`): the edit
-  adds the batch's owners and drops its previous token's, so a retry
-  of a committed batch replaces it in one step.
-- Partition rewrite (:func:`stage_rewrite`, :func:`commit_rewrite`) —
-  compaction, the ``delete_*`` verbs, ``expire_scd2_history`` and
-  ``scd2_refresh_in_place``: the edit replaces the owners the verb
-  opened in each touched partition by its ``__v<N>`` copy, so an owner
-  that landed after the open (concurrent ingest) survives.
-  Compaction and the in-place refresh :func:`retire` right after
-  publishing; erasure and expiry keep the old snapshot for time travel
-  until ``vacuum_layout`` runs the same retire.
+  adds the batch's owners and drops every owner it had (a ``__d``
+  name carries its batch id), so a retry replaces it in one step.
+- Partition rewrite (:func:`stage_rewrite`, :func:`commit_rewrite`):
+  the edit replaces the owners the verb opened in each touched
+  partition by its new copies, so an owner that landed after the open
+  survives. Compaction merges them into one ``__v<N>`` and folds the
+  batches; erasure stages the base view as ``__v<N>`` and each live
+  batch's rows as a fresh owner of that batch (:func:`batch_views`).
+  Compaction and the in-place SCD2 refresh :func:`retire` right after
+  publishing; erasure and expiry keep the old snapshot for time
+  travel until ``vacuum_layout``.
 - Base swap (:func:`stage_base`, :func:`swap_base`): the new tables
   build under ``_staging/`` while the old layout serves; the commit
   window stages ``_META.json``, drops ``_SUCCESS``, deletes what the
-  rebuild supersedes (old tables with every owner, every manifest,
-  dead staging, old metadata), renames the staged tables and metadata
-  in, refreshes the session's listing and touches ``_SUCCESS``. A
-  crash inside it leaves a marker-less layout every reader refuses;
-  re-running the writer completes it. The lease survives: the
-  maintenance verbs' rebuild arm calls the writers while holding it.
+  rebuild supersedes, moves the staged tables and metadata in and
+  touches ``_SUCCESS``. A crash inside it leaves a marker-less layout
+  every reader refuses; re-running the writer completes it. The lease
+  survives: the maintenance rebuild arm calls the writers holding it.
 
 Single maintainer (``operators.lease``); ingest may run beside it.
 All IO goes through the Hadoop FileSystem API (``fsutil``), so the
@@ -231,9 +226,13 @@ def stage_base(
 
 
 def _superseded(name: str, tables: list[str]) -> bool:
+    """Root names a base swap deletes — old tables and commit records,
+    the retired marker protocol's ``_DELTA_<batch>._SUCCESS`` markers
+    and ``<table>_delta_<batch>/`` dirs included."""
     return (
         name in tables
-        or name.startswith((MANIFEST_PREFIX,) + DEAD_STAGING)
+        or name.startswith((MANIFEST_PREFIX, "_DELTA_") + DEAD_STAGING)
+        or name.startswith(tuple(f"{t}_delta_" for t in tables))
         or name == META
     )
 
@@ -257,7 +256,7 @@ def swap_base(
         if _superseded(name, tables):
             fsutil.delete(spark, os.path.join(path, name))
     for name in tables + [META]:
-        fsutil.rename(
+        fsutil.move(
             spark, os.path.join(staging, name), os.path.join(path, name)
         )
     fsutil.delete(spark, staging)
@@ -282,19 +281,13 @@ class Layout(NamedTuple):
     @property
     def batches(self) -> list[str]:
         """Live batch ids: committed and not folded into the base."""
-        return _live(self.snap)
-
-
-def _live(snap: dict) -> list[str]:
-    return sorted(b for b, tok in snap.get("batches", {}).items() if tok)
+        return sorted(b for b, tok in self.snap["batches"].items() if tok)
 
 
 def committed_delta_batches(spark: SparkSession, path: str) -> list[str]:
     """The live delta batch ids of a stored layout: committed and not
     yet folded into the base."""
-    from . import snapshot
-
-    return _live(snapshot.read_snapshot(spark, path))
+    return open_layout(spark, path, "stored layout", "its writer").batches
 
 
 def open_layout(
@@ -371,6 +364,14 @@ def _delta_owner(batch_id: str, token: str) -> str:
     return f"{DELTA_DIR_PREFIX}{batch_id}.{token}"
 
 
+def _owner_batch(owner: str) -> str | None:
+    """The batch whose rows the owner ``__d<batch>.<token>`` holds (the
+    token has no dot), None for the base files or a ``__v`` copy."""
+    if not owner.startswith(DELTA_DIR_PREFIX):
+        return None
+    return owner[len(DELTA_DIR_PREFIX) :].rsplit(".", 1)[0]
+
+
 def open_table(
     spark: SparkSession,
     layout: Layout,
@@ -386,27 +387,61 @@ def open_table(
     batch's owners (the base view a retried ingest probes);
     ``exclude_batches`` leaves out the named ones. The recorded
     schema is supplied to the read (no footer-reading inference job),
-    and a table without leaves is the empty frame of that schema.
+    and a table without leaves is the empty frame of that schema."""
+    live = set(layout.batches)
+    skip = live & set(exclude_batches) if include_deltas else live
+    return _scan(
+        spark, layout, table, schema_key, lambda o: _owner_batch(o) not in skip
+    )
 
-    More than 32 leaves make Spark list them with one job
-    (``parallelPartitionDiscovery.threshold``); compaction keeps the
-    count near the partition count."""
+
+def batch_views(
+    spark: SparkSession,
+    layout: Layout,
+    table: str,
+    schema_key: str,
+    partition_col: str,
+    touched: list,
+) -> list[tuple[str | None, DataFrame]]:
+    """``table``'s rows split by owner for a rewrite of the ``touched``
+    partitions: ``(None, the base view)``, then ``(batch, its rows)``
+    for each live batch owning one of those partitions. Staging each
+    as its own copy (:func:`stage_rewrite`'s ``batch``) keeps a live
+    batch's rows apart from the base: the base view still leaves them
+    out and a retry of the batch still replaces them."""
+    names = {partition_dir_name(partition_col, v) for v in touched}
+    owning = {
+        _owner_batch(o)
+        for part, owners in layout.snap["tables"][table].items()
+        if part in names
+        for o in owners
+    }
+    return [(None, open_table(spark, layout, table, schema_key, False))] + [
+        (b, _scan(spark, layout, table, schema_key,
+                  lambda o, b=b: _owner_batch(o) == b))
+        for b in layout.batches
+        if b in owning
+    ]
+
+
+def _scan(
+    spark: SparkSession,
+    layout: Layout,
+    table: str,
+    schema_key: str,
+    keep: Callable[[str], bool],
+) -> DataFrame:
+    """One Parquet scan over the ``keep`` owners of ``table``."""
     from pyspark.errors import AnalysisException
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(layout.meta[schema_key])
-    excluded = set(exclude_batches)
-    skip = {
-        _delta_owner(b, tok)
-        for b, tok in layout.snap["batches"].items()
-        if tok and (not include_deltas or b in excluded)
-    }
     base = _leaf(layout.path, table)
     leaves = [
         _leaf(base, part, owner)
         for part, owners in sorted(layout.snap["tables"][table].items())
         for owner in owners
-        if owner not in skip
+        if keep(owner)
     ]
     if not leaves:
         return spark.createDataFrame([], schema)
@@ -462,19 +497,18 @@ def _move_in(
 ) -> list[str]:
     """Move each partition of the staged table directory ``staged``
     into ``<table>/<part>/<owner>`` — invisible until a snapshot names
-    it. Returns the partitions moved. A rewrite's ``__v<N>`` may be
-    left over from a crashed attempt at the same N: it is replaced."""
+    it. Returns the partitions moved. A delta owner's name is fresh;
+    a rewrite's ``__v<N>`` may be left over from a crashed attempt at
+    the same N, so it is deleted first."""
     known = layout.snap["tables"].get(table, {})
     parts = [p for p in _parts_in(fsutil.list_names(spark, staged)) if p]
     for part in parts:
         src, dst = _leaf(staged, part), _leaf(layout.path, table, part, owner)
         if part not in known:
             fsutil.mkdirs(spark, _leaf(layout.path, table, part))
-        try:
-            fsutil.rename(spark, src, dst)
-        except FileExistsError:
+        if owner.startswith(VERSION_DIR_PREFIX) and fsutil.exists(spark, dst):
             fsutil.delete(spark, dst)
-            fsutil.rename(spark, src, dst)
+        fsutil.move(spark, src, dst)
     return parts
 
 
@@ -544,13 +578,10 @@ def commit_delta(
     def edit(snap: dict) -> dict | None:
         if _folded(snap, batch_id):
             return None
-        prev = snap["batches"].get(batch_id)
-        old = _delta_owner(batch_id, prev) if prev else None
+        gone = {x for x in _owned(snap) if _owner_batch(x[2]) == batch_id}
         return {
             "meta": snap["meta"],
-            "tables": _edited(
-                snap["tables"], {x for x in _owned(snap) if x[2] == old}, added
-            ),
+            "tables": _edited(snap["tables"], gone, added),
             "batches": {**snap["batches"], batch_id: token},
         }
 
@@ -593,16 +624,26 @@ def stage_rewrite(
     partition_col: str,
     touched: list,
     sort_cols: tuple[str, ...] = (),
+    batch: str | None = None,
 ) -> dict:
     """Write ``keep`` — the new rows of the ``touched`` partitions of
-    ``table`` — and move each staged partition into its ``__v<N>``
-    owner (N = snapshot version + 1). Returns the manifest job: the
-    owners opened in the touched partitions go, the new copies join (a
-    partition left without rows gets none). Nothing a reader lists is
-    modified."""
-    staged = os.path.join(_rewrite_staging(layout), table)
+    ``table`` — and move each staged partition into a new owner: the
+    ``__v<N>`` copy (N = snapshot version + 1), or with a live
+    ``batch`` a fresh owner of that batch (:func:`batch_views`).
+    Returns the manifest job: the owners opened in the touched
+    partitions go, the new copies join (a partition left without rows
+    gets none). Nothing a reader lists is modified."""
+    staged = _leaf(
+        _rewrite_staging(layout),
+        f"{DELTA_DIR_PREFIX}{batch}" if batch else "",
+        table,
+    )
     write_table(Table(keep, partition_col, sort_cols), staged)
-    owner = f"{VERSION_DIR_PREFIX}{_next_version(layout)}"
+    owner = (
+        _delta_owner(batch, uuid.uuid4().hex[:8])
+        if batch
+        else f"{VERSION_DIR_PREFIX}{_next_version(layout)}"
+    )
     touched_names = {partition_dir_name(partition_col, v) for v in touched}
     stray = set(_parts_in(fsutil.list_names(spark, staged))) - touched_names
     if stray:
@@ -629,10 +670,13 @@ def commit_rewrite(
     """Publish the staged ``jobs`` — the one commit point (module
     docstring). ``meta`` is the post-commit metadata (None keeps the
     layout's), ``fold`` the live batch ids this commit folds into the
-    base. A folded batch re-committed since the open fails the
-    commit: its new copy would sit beside the fold's. Returns the
-    published body."""
-    opened = {b: layout.snap["batches"][b] for b in fold}
+    base. A batch folded here, or one whose owners the jobs replace,
+    that was re-committed since the open fails the commit: its new
+    copy would sit beside this commit's. Returns the published body."""
+    fold = set(fold)
+    gone = set().union(*(j["gone"] for j in jobs))
+    replaced = {_owner_batch(o) for _, _, o in gone} - {None}
+    opened = {b: layout.snap["batches"][b] for b in fold | replaced}
     fsutil.delete(spark, _rewrite_staging(layout))
 
     def edit(snap: dict) -> dict:
@@ -645,11 +689,9 @@ def commit_rewrite(
         return {
             "meta": layout.meta if meta is None else meta,
             "tables": _edited(
-                snap["tables"],
-                set().union(*(j["gone"] for j in jobs)),
-                set().union(*(j["added"] for j in jobs)),
+                snap["tables"], gone, set().union(*(j["added"] for j in jobs))
             ),
-            "batches": {**snap["batches"], **dict.fromkeys(opened)},
+            "batches": {**snap["batches"], **dict.fromkeys(fold)},
         }
 
     return _publish(spark, layout, edit)
@@ -666,12 +708,10 @@ def retire(spark: SparkSession, path: str) -> dict:
     from . import snapshot
 
     versions = snapshot.manifest_versions(spark, path)
-    out = {
-        "files_removed": 0,
-        "bytes_reclaimed": 0,
-        "snapshots_retired": 0,
-        "version_dirs_removed": 0,
-    }
+    out = dict.fromkeys(
+        ("files_removed", "bytes_reclaimed", "snapshots_retired",
+         "version_dirs_removed"), 0
+    )
     if not versions:
         return out
 
@@ -717,6 +757,7 @@ __all__ = [
     "SUCCESS",
     "Table",
     "VERSION_DIR_PREFIX",
+    "batch_views",
     "check_batch_id",
     "commit_delta",
     "commit_rewrite",

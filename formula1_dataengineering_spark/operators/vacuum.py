@@ -172,10 +172,8 @@ def expire_scd2_history(
         "__rk", F.row_number().over(w)
     )
     expirable = closed.where(F.col("__rk") > retain_versions)
-    # ONE aggregated pass yields both the touched-shard set and the
-    # expired-row count (bounded: ≤ n_shards rows) — the find phase
-    # is the dominant read of this verb's 100 TB story, so it runs
-    # the full window plan exactly once (round-14 review).
+    # ONE aggregated pass (≤ n_shards rows) yields both the touched
+    # shards and the expired-row count: the window plan runs once.
     per_shard = expirable.groupBy("shard").count().collect()
     touched = sorted(
         (r["shard"] for r in per_shard), key=lambda v: (v is None, v)

@@ -147,11 +147,30 @@ def test_ann_delete_prunes_topk_and_keeps_codebook(spark, tmp_path):
     victims = spark.createDataFrame([(5,), (12,)], "vec_id long")
     info = _unpinned(spark, delete_from_ann_index, path, victims)
     assert info["rows_deleted"] == 2 * 4  # m=4 code rows per vector
-    codes, cb, cells, _ = read_ann_index(spark, path)
+    codes, cb, cells, meta = read_ann_index(spark, path)
     assert codes.where(F.col("vec_id").isin(5, 12)).count() == 0
     # Training statistics untouched byte-for-byte at the value level.
     assert _rows(cb) == want_cb
     assert _rows(cells) == want_cells
+    # An erasure in a cell day1 still owns keeps day1 apart from the
+    # base: 7 day1 vectors in 4 cells, so one cell holds two of them.
+    by_cell: dict = {}
+    for cell, vec in codes.where("vec_id % 5 = 0").select(
+        meta["cell_col"], "vec_id"
+    ).collect():
+        by_cell.setdefault(cell, set()).add(vec)
+    victim = min(v for vs in by_cell.values() if len(vs) > 1 for v in vs)
+    delete_from_ann_index(
+        spark, path, spark.createDataFrame([(victim,)], "vec_id long")
+    )
+    base = read_ann_index(spark, path, include_deltas=False)[0]
+    want = {i for i in range(40) if i % 5 != 0} - {12}
+    assert {r[0] for r in base.select("vec_id").collect()} == want
+    # A retry of day1 is no insert-only clash with its own rows, and
+    # re-lands day1 whole (its erased vectors too); 12 stays gone.
+    refresh_ann_index(e.where("vec_id % 5 = 0"), path, "day1")
+    codes = read_ann_index(spark, path)[0]
+    assert codes.count() == 4 * 39
 
 
 def test_feed_key_delete_static_pruning_and_empty_partitions(
@@ -173,6 +192,7 @@ def test_feed_key_delete_static_pruning_and_empty_partitions(
     )
     refresh_scd2_feed(feed.where("ts % 2 = 1"), path, "day1")
     all_rows = _rows(read_scd2_feed(spark, path)[0].select("k", "ts", "v"))
+    feed_shards = read_scd2_feed(spark, path)[0].select("shard", "k").collect()
     # NULL keys in the request are REFUSED (ADVICE r14): a silent
     # no-op erasure is worse than a loud failure.
     with pytest.raises(ValueError, match="NULL"):
@@ -190,6 +210,20 @@ def test_feed_key_delete_static_pruning_and_empty_partitions(
     assert delete_scd2_feed_keys(spark, path, erased)["rows_deleted"] == 0
     # Marker restored; external reader path works.
     assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    # Key 2 (base rows only) shares its shard with day1's key 1, so the
+    # erasure rewrote a partition day1 owns. Day1 stays a live batch
+    # apart from the base: the base view leaves it out, and a retry
+    # replaces its rows instead of adding a second copy beside the
+    # erasure's.
+    shard_keys: dict = {}
+    for shard, k in feed_shards:
+        shard_keys.setdefault(shard, set()).add(k)
+    assert any({1, 2} <= ks for ks in shard_keys.values())
+    base = read_scd2_feed(spark, path, include_deltas=False)[0]
+    assert base.count() == sum(r[1] % 2 == 0 and r[0] != 2 for r in rows)
+    refresh_scd2_feed(feed.where("ts % 2 = 1"), path, "day1")
+    got = _rows(read_scd2_feed(spark, path)[0].select("k", "ts", "v"))
+    assert got == [r for r in all_rows if r[0] != 2]
 
 
 def test_delete_refuses_markerless_layout(spark, tmp_path):

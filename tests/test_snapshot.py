@@ -192,3 +192,8 @@ def test_layout_in_the_marker_format_is_refused(spark, tmp_path):
         json.dump(old, fh)
     with pytest.raises(ValueError, match="predates.*write_scd2_feed"):
         store.open_layout(spark, path, "scd2 feed layout", "write_scd2_feed")
+    # The hinted rebuild leaves a clean layout: the base swap deletes
+    # the retired protocol's markers and root delta dirs.
+    _feed(spark, path)
+    assert [n for n in os.listdir(path) if "delta_" in n.lower()] == []
+    assert read_scd2_feed(spark, path)[0].count() == 32

@@ -54,7 +54,7 @@ from formula1_dataengineering_spark.operators.scd import (
 )
 from formula1_dataengineering_spark.operators.vacuum import expire_scd2_history
 
-_MUTATORS = ("rename", "delete", "touch", "write_text", "mkdirs")
+_MUTATORS = ("move", "rename", "delete", "touch", "write_text", "mkdirs")
 _WORDS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta"]
 
 
@@ -238,6 +238,13 @@ _CASES = {
         lambda s, p: delete_from_dedup_index(s, p, _ids(s, 3, 5)),
         _dedup_rows,
     ),
+    # An erasure in partitions a live batch owns: the base view's copy
+    # and the batch's own copy publish together.
+    "dedup_delete_live": (
+        _one_day_index,
+        lambda s, p: delete_from_dedup_index(s, p, _ids(s, 3, 8)),
+        _dedup_rows,
+    ),
     "history_delete": (
         _history_layout,
         lambda s, p: delete_scd2_history_keys(
@@ -389,10 +396,10 @@ def test_failed_retry_keeps_committed_batch(spark, tmp_path, case):
 
 @pytest.mark.parametrize("case", ["dedup", "feed"])
 def test_retry_of_folded_batch_is_a_noop(spark, tmp_path, case):
-    """Compaction retires a folded batch's marker; the manifest's
-    folded list keeps a retry of that batch from committing its rows a
-    second time (the per-(path, batch_id) idempotence the stream
-    replay relies on)."""
+    """Compaction maps a folded batch to None in the manifest, which
+    keeps a retry of that batch from committing its rows a second time
+    (the per-(path, batch_id) idempotence the stream replay relies
+    on)."""
     build, compact, refresh, batch, read = {
         "dedup": (
             _one_day_index, compact_dedup_index, refresh_dedup_index,
